@@ -172,13 +172,15 @@ ORACLE_SIMHASH128 = SimHashConfig(
 
 
 def _q_minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The m-band prefilter dedup path (dedup_pairs(keep_sim=False)): a
-    pair matching m bands has >= m*r equal positions, so m >= ceil(t*k/r)
-    skips the exact verify. The oracle computes the fully-verified pair
-    set — the two must be identical."""
+    """The m-band prefilter dedup path (dedup_pairs(keep_sim=False,
+    numpy_verify=False) — the JVM route; by default a table this small
+    would take the numpy kernels): a pair matching m bands has >= m*r
+    equal positions, so m >= ceil(t*k/r) skips the exact verify. The
+    oracle computes the fully-verified pair set — the two must be
+    identical."""
     lsh = MinHashLSH(ORACLE_MINHASH)
     sigs = _minhash_sigs_oracle(spark, sf_dir)
-    return lsh.dedup_pairs(sigs, keep_sim=False)
+    return lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False)
 
 
 def _q_minhash_dedup_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:

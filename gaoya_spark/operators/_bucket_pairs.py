@@ -197,10 +197,12 @@ def sid_pairs_from_buckets(
       - > drop_cap: excluded; callers record the count via their stats
         helpers (band_stats / gram_stats), never silently.
     """
+    # buckets over drop_cap are excluded from every tier, including the
+    # small one when drop_cap < array_bucket_limit
     buckets = (
         members.groupBy("bk")
         .agg(F.array_sort(F.collect_list("sid")).alias("ids"))
-        .where(F.size("ids") >= 2)
+        .where(F.size("ids").between(2, drop_cap))
     )
     if persist:
         # buckets feed the small path and (maybe) the upper tiers; the
@@ -229,8 +231,8 @@ def sid_pairs_from_buckets(
         sz = F.size("ids")
         tri_lim = max(medium_bucket_limit, array_bucket_limit)
         st = buckets.agg(
-            F.sum(((sz > array_bucket_limit) & (sz <= drop_cap)).cast("int")).alias("n_over"),
-            F.sum(((sz > tri_lim) & (sz <= drop_cap)).cast("int")).alias("n_tri"),
+            F.sum((sz > array_bucket_limit).cast("int")).alias("n_over"),
+            F.sum((sz > tri_lim).cast("int")).alias("n_tri"),
         ).collect()[0]
         has_hot = (st["n_over"] or 0) > 0
         has_huge = (st["n_tri"] or 0) > 0
@@ -245,9 +247,7 @@ def sid_pairs_from_buckets(
         # lower bound), so it gets the same 128-bit treatment as the
         # substring gram fingerprints rather than a single 64-bit word.
         collapsed = (
-            buckets.where(
-                (F.size("ids") > array_bucket_limit) & (F.size("ids") <= drop_cap)
-            )
+            buckets.where(F.size("ids") > array_bucket_limit)
             .groupBy("ids")
             .agg(F.count("*").alias("nb"))
         )

@@ -54,8 +54,10 @@ def minhash_dedup(
     sigs = lsh.signatures(df, id_col, text_col, phash_col=phash_col)
     if keep == "pairs":
         return lsh.dedup_pairs(sigs)
-    # labels/first never read sim: keep_sim=False lets above-threshold-by-
-    # m-bound pairs skip the signature verify join
+    # labels/first never read sim: keep_sim=False lets dedup_pairs route
+    # by size (numpy kernels for a broadcast-fit table, else the JVM
+    # verify, whose m-band prefilter skips the signature join for
+    # above-threshold-by-m-bound pairs)
     pairs = lsh.dedup_pairs(sigs, keep_sim=False)
     labels = connected_components(
         pairs.select("src", "dst"), nodes=df.select(id_col)

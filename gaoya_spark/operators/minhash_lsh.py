@@ -237,7 +237,7 @@ def _bucket_verify_fn(bc, need, max_pairs: int = 4_000_000):
 _SET_ID_SALT = 0x51C3_9A7B_42D8_11E5
 
 
-def _replicated_dedup_fn(bc, need, b, r, n_parts, max_pairs: int = 4_000_000):
+def _replicated_dedup_fn(bc, need, b, r, n_parts, cap, max_pairs: int = 4_000_000):
     """mapInPandas kernel over a 1-row-per-partition range frame: the
     FULLY-REPLICATED dedup. Every task recomputes the corpus's band keys
     from the broadcast signature matrix (the same splitmix64 fold as
@@ -258,9 +258,10 @@ def _replicated_dedup_fn(bc, need, b, r, n_parts, max_pairs: int = 4_000_000):
     distinct set is verified exactly once cluster-wide (assignment is by
     set identity, so cross-band repeats of a family collapse for free),
     and pairs shared by overlapping sets are deduped by the caller's
-    dropDuplicates. Members arrive row-index-sorted (rows are sid-sorted
-    in the broadcast), so emitted pairs are (least, greatest) in sid
-    order like every other path."""
+    dropDuplicates. Buckets larger than cap (bucket_cap_hard) are
+    excluded, exactly like the JVM and fused routes. Members arrive
+    row-index-sorted (rows are sid-sorted in the broadcast), so emitted
+    pairs are (least, greatest) in sid order like every other path."""
     import numpy as np
     import pandas as pd
 
@@ -271,7 +272,7 @@ def _replicated_dedup_fn(bc, need, b, r, n_parts, max_pairs: int = 4_000_000):
 
     def segments():
         """(memb, lens, seg_starts, h1, h2): flat member row indices of
-        every kept (size >= 2) bucket across all bands, per-segment
+        every kept (2 <= size <= cap) bucket across all bands, per-segment
         lengths/starts, and the 128-bit set-identity words."""
         sids_b, mat_b, _ = bc.value
         n = len(sids_b)
@@ -299,7 +300,7 @@ def _replicated_dedup_fn(bc, need, b, r, n_parts, max_pairs: int = 4_000_000):
                 starts = np.concatenate([np.zeros(1, np.int64), cut])
                 ends = np.concatenate([cut, np.full(1, n, np.int64)])
                 sizes = ends - starts
-                keep = sizes >= 2
+                keep = (sizes >= 2) & (sizes <= cap)
                 ks, kl = starts[keep], sizes[keep]
                 if not len(ks):
                     continue
@@ -397,6 +398,9 @@ class BandStats:
 class MinHashLSH:
     def __init__(self, cfg: MinHashConfig | None = None):
         self.cfg = cfg or MinHashConfig()
+        # (route, reason) of the last dedup_pairs call, e.g.
+        # ("replicated", "fits broadcast") or ("jvm", "over row bound")
+        self.last_route: tuple[str, str] | None = None
 
     # ------------------------------------------------------------------ sigs
     def signatures(
@@ -619,15 +623,92 @@ class MinHashLSH:
             .select("src", "dst", "sim")
         )
 
-    def _build_sig_broadcast(self, sig_df: DataFrame, max_rows: int):
-        """Broadcast of (sids_sorted, signature matrix, ids_sorted) for the
-        numpy verify kernels, or None when a guard trips: row count over
-        the broadcast-safe bound, or an xxhash64(id) sid collision (the
-        sorted-adjacency check is free on the already-sorted array;
-        searchsorted would silently resolve a collided sid to its first
-        occurrence, substituting one doc's signature for another, where
-        the JVM join path fans out both rows — None routes collisions to
-        the JVM path so the two verify paths never diverge).
+    # byte budget for the numpy routes' broadcast signature matrix:
+    # bytes-aware, not just rows — k varies 128..512 across configs, so a
+    # fixed row cap alone would admit a ~1.6GB matrix at k=512/int64.
+    # 512MB keeps the collected table + per-worker copy comfortably
+    # inside a few-GB pool.
+    _BROADCAST_BYTES = 512 << 20
+
+    # auto routing skips the broadcast build when the trusted size
+    # estimate (see _size_estimate) is over this many budgets. Measured
+    # estimate / actual Arrow bytes of the collected (sid, sig, id) table,
+    # 20k- and 40k-row signature tables at k=200, 32- and 64-bit:
+    # 0.29-1.37 from a parquet scan (compression only lowers it),
+    # 1.36-1.46 from a filled cache. 2 keeps every measured fit table on
+    # the broadcast side; a table between one and two budgets pays the
+    # row-count probe instead.
+    _ESTIMATE_SLACK = 2
+
+    # plan leaves whose statistics are measured sizes: file and table
+    # scans (file sizes) and local relations. An RDD leaf (createDataFrame,
+    # checkpoints) reports spark.sql.defaultSizeInBytes or an estimate
+    # carried over from the plan it replaced — a placeholder, not a size.
+    _SIZED_LEAVES = frozenset({
+        "LogicalRelation", "HiveTableRelation", "DataSourceV2Relation",
+        "DataSourceV2ScanRelation", "LocalRelation",
+    })
+
+    def _size_estimate(self, df: DataFrame) -> int | None:
+        """The optimized plan's sizeInBytes estimate when it measures the
+        rows df yields, else None. Trusted only for a chain of projections
+        over one sized leaf or filled cache whose every column is read.
+        Anything else can be off by an unbounded factor: a filter keeps
+        its input's size (measured 2.9-5.4x over at 10% selectivity),
+        unread columns count in full, python-computed signatures carry the
+        size of the text they are computed from, and an unfilled cache
+        reports the estimate of the plan it caches. None too where the
+        session exposes no JVM plan."""
+        from py4j.protocol import Py4JError
+
+        try:
+            plan = df._jdf.queryExecution().optimizedPlan()
+            node, refs = plan, None
+            while node.getClass().getSimpleName() == "Project":
+                refs = node.references()
+                node = node.child()
+            name = node.getClass().getSimpleName()
+            if name == "InMemoryRelation":
+                if not node.cacheBuilder().isCachedColumnBuffersLoaded():
+                    return None
+            elif name not in self._SIZED_LEAVES:
+                return None
+            if refs is not None and refs.size() < node.outputSet().size():
+                return None
+            return int(plan.stats().sizeInBytes())
+        except (AttributeError, Py4JError):
+            return None
+
+    def _build_sig_broadcast(
+        self,
+        sig_df: DataFrame,
+        max_rows: int,
+        auto: bool = False,
+        persist: bool = False,
+    ):
+        """(broadcast, None) of (sids_sorted, signature matrix, ids_sorted)
+        for the numpy verify kernels, or (None, reason) when a guard trips:
+        - "over size estimate" (auto only): the trusted size estimate is
+          over _ESTIMATE_SLACK budgets, so no Spark job runs at all;
+        - "over row bound": more rows than max_rows or the byte budget;
+        - "sid collision": an xxhash64(id) collision (the sorted-adjacency
+          check is free on the already-sorted array; searchsorted would
+          silently resolve a collided sid to its first occurrence,
+          substituting one doc's signature for another, where the JVM
+          join path fans out both rows — routing collisions to the JVM
+          path keeps the two verify paths from diverging).
+        A trip warns unless auto: there the JVM fallback is the expected
+        large-corpus path, not a surprise.
+
+        The row bound costs one bounded collect when the trusted estimate
+        is within budget. Otherwise (no trusted estimate, or one between
+        the budget and the slack) a row count runs first, so a table over
+        the bound ships nothing to the driver. persist=True caches a
+        sig_df that has no trusted estimate (computed signatures: costly
+        to compute again; a stored or cached table is cheap to read
+        again), after the estimate is read (a cache that is not yet
+        filled hides it) and before the first job, so the count or
+        collect fills the cache that the later readers of sig_df use.
 
         Lifecycle: the broadcast must outlive the returned (lazy)
         DataFrames; like the persisted buckets, it is dropped by the
@@ -638,42 +719,50 @@ class MinHashLSH:
 
         k = self.cfg.num_hashes
         dt = np.int64 if self.cfg.hash_size >= 64 else np.int32
-        # bytes-aware bound, not just rows: k varies 128..512 across
-        # configs, so a fixed row cap alone would admit a ~1.6GB matrix at
-        # k=512/int64. 512MB keeps the driver collect + per-worker copy
-        # comfortably inside a few-GB pool.
         row_bytes = k * (8 if self.cfg.hash_size >= 64 else 4) + 24
-        eff_rows = min(max_rows, (512 << 20) // row_bytes)
-        # ONE bounded job instead of count-then-collect: limit(bound+1)
-        # caps the driver transfer exactly like the count guard did (at
-        # most bound+1 rows ever reach the driver), and when the table is
-        # within bound the collected batch IS the broadcast payload — the
-        # former full count() pass over the (possibly uncached) table is
-        # gone (r6: one Spark job saved per numpy/fused dedup call).
-        tbl = (
-            sig_df.select(F.xxhash64("id").alias("sid"), "sig", "id")
-            .limit(eff_rows + 1)
-            .toArrow()
+        budget = self._BROADCAST_BYTES
+        eff_rows = min(max_rows, budget // row_bytes)
+
+        def collected():
+            return sig_df.select(F.xxhash64("id").alias("sid"), "sig", "id")
+
+        est = self._size_estimate(collected())
+        if auto and est is not None and est > self._ESTIMATE_SLACK * budget:
+            return None, "over size estimate"
+        if persist and est is None:
+            sig_df.persist()
+        sel = collected()
+        # limit(bound+1) caps the driver transfer (at most bound+1 rows
+        # ever reach the driver); within bound the collected batch IS the
+        # broadcast payload, so a table the estimate already fits costs
+        # one job, no count() pass
+        over = (est is None or est > budget) and (
+            sel.limit(eff_rows + 1).count() > eff_rows
         )
-        if tbl.num_rows > eff_rows:
-            warnings.warn(
-                f"numpy_verify: signature table exceeds the broadcast-safe "
-                f"bound {eff_rows} rows (max_rows={max_rows}, 512MB / "
-                f"{row_bytes}B rows); falling back to the JVM shuffle verify",
-                stacklevel=4,
-            )
-            return None
+        if not over:
+            tbl = sel.limit(eff_rows + 1).toArrow()
+            over = tbl.num_rows > eff_rows
+        if over:
+            if not auto:
+                warnings.warn(
+                    f"numpy_verify: signature table exceeds the broadcast-safe "
+                    f"bound {eff_rows} rows (max_rows={max_rows}, {budget}B / "
+                    f"{row_bytes}B rows); falling back to the JVM shuffle verify",
+                    stacklevel=4,
+                )
+            return None, "over row bound"
         sids = tbl.column("sid").to_numpy()
         order = np.argsort(sids)
         sids_sorted = sids[order]
         if len(sids) > 1 and (sids_sorted[1:] == sids_sorted[:-1]).any():
-            warnings.warn(
-                "numpy_verify: xxhash64(id) sid collision detected; falling "
-                "back to the JVM shuffle verify (which fans out collided "
-                "rows instead of substituting one for the other)",
-                stacklevel=4,
-            )
-            return None
+            if not auto:
+                warnings.warn(
+                    "numpy_verify: xxhash64(id) sid collision detected; falling "
+                    "back to the JVM shuffle verify (which fans out collided "
+                    "rows instead of substituting one for the other)",
+                    stacklevel=4,
+                )
+            return None, "sid collision"
         if len(sids):
             flat = tbl.column("sig").combine_chunks().flatten().to_numpy(
                 zero_copy_only=False
@@ -682,9 +771,10 @@ class MinHashLSH:
         else:
             mat = np.zeros((0, k), dtype=dt)
         ids_sorted = tbl.column("id").to_numpy(zero_copy_only=False)[order]
-        return sig_df.sparkSession.sparkContext.broadcast(
+        bc = sig_df.sparkSession.sparkContext.broadcast(
             (sids_sorted, mat, ids_sorted)
         )
+        return bc, None
 
     def _numpy_verify(
         self,
@@ -753,7 +843,7 @@ class MinHashLSH:
         m_sure = _m_sure_bands(threshold, k, self.cfg.band_width)
         id_sql = sig_df.schema["id"].dataType.simpleString()
         if bc is None:
-            bc = self._build_sig_broadcast(sig_df, max_rows)
+            bc, _ = self._build_sig_broadcast(sig_df, max_rows)
         if bc is None:
             return None
 
@@ -799,50 +889,6 @@ class MinHashLSH:
             .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}")
         )
 
-    def _emissions_per_doc(self, mat, sample: int = 32768) -> float:
-        """Exact-family density probe (diagnostic; the r6 adaptive
-        default routes on key count alone — see _REPL_PREFER_KEYS):
-        band keys of a (strided, deterministic) row sample are computed
-        driver-side with the SAME splitmix64 fold as _sid_bands_arrow, and
-        the per-bucket pair-slot count E_s = sum C(c, 2) is scaled by the
-        inverse squared sampling fraction (a pair of rows survives an
-        f-fraction sample with probability ~f^2). Returns estimated raw
-        band-pair emissions per document — the signal that separates
-        sparse corpora (img bench: ~68/doc, mostly size-2 buckets, where
-        the raw pipeline wins) from dense ones (doc bench: ~3500/doc,
-        large repeating families, where the fused path's identical-set
-        collapse wins). Cost: one numpy sort of sample*num_bands keys
-        (~0.1s at the 32k default) — driver-side, but only on the numpy
-        paths, which have already collected the signature table anyway."""
-        import numpy as np
-
-        from gaoya_spark import hashing
-
-        n = len(mat)
-        if n < 2:
-            return 0.0
-        b, r = self.cfg.num_bands, self.cfg.band_width
-        step = max(1, (n + sample - 1) // sample)
-        sub = np.ascontiguousarray(mat[::step])
-        m = len(sub)
-        tiles = sub.astype(np.uint64)[:, : b * r].reshape(m, b, r)
-        acc = np.broadcast_to(
-            hashing.splitmix64(np.arange(b, dtype=np.int64)), (m, b)
-        ).copy()
-        for j in range(r):
-            acc = hashing.splitmix64((acc ^ tiles[:, :, j]).view(np.int64))
-        _, counts = np.unique(acc.ravel(), return_counts=True)
-        e_s = float((counts * (counts - 1) // 2).sum())
-        f = m / n
-        return (e_s / (f * f)) / n
-
-    # dense-corpus cutover for the adaptive numpy strategy (see
-    # dedup_pairs): estimated raw emissions per document above which the
-    # fused path's identical-set collapse beats the raw pipeline. The two
-    # bench corpora sit ~50x apart (img ~68, doc ~3500), so the exact
-    # value is uncritical; 512 splits the decades.
-    _DENSE_EMISSIONS_PER_DOC = 512.0
-
     # adaptive-default cutover: prefer the replicated kernel only while
     # the per-task replication work (full key fold + b argsorts, run
     # concurrently in EVERY task slot) is trivial. Past this bound the
@@ -859,17 +905,18 @@ class MinHashLSH:
     # kept buckets (up to another 8B/key), and transient fold/sort
     # buffers — peak per-task memory is roughly 3-4x keys*8B, i.e. ~1GB
     # at this 32M-key cap. Real executors must budget that per task
-    # slot; beyond the cap the adaptive chooser falls back to raw/fused,
-    # whose per-task memory does not scale with the corpus.
+    # slot; beyond the cap an explicit numpy_verify="replicated" falls
+    # back to the JVM shuffle verify (the adaptive chooser has switched to
+    # fused long before), whose per-task memory does not scale with the
+    # corpus.
     _REPL_MAX_KEYS = 32_000_000
 
     def _replicated_dedup(
         self,
         sig_df: DataFrame,
         threshold: float,
-        max_rows: int = 2_000_000,
-        persist: bool = True,
-        bc=None,
+        bc,
+        bucket_cap_hard: int = 100_000,
         parallelism: int | None = None,
     ) -> DataFrame | None:
         """Fully-replicated dedup (see _replicated_dedup_fn): every task
@@ -881,16 +928,11 @@ class MinHashLSH:
         (assignment is by 128-bit set identity), so it subsumes both the
         raw pipeline's minimal machinery and the fused path's collapse.
 
-        Same guards as every numpy strategy (broadcast bound, sid
-        collision) plus its own key-count bound (_REPL_MAX_KEYS); returns
-        None when any guard trips. parallelism defaults to the session's
-        defaultParallelism — scale-adaptive, never a local constant."""
-        if persist and not _is_materialized(sig_df):
-            sig_df = sig_df.persist()
-        if bc is None:
-            bc = self._build_sig_broadcast(sig_df, max_rows)
-        if bc is None:
-            return None
+        bc is the guarded broadcast from _build_sig_broadcast — the plan
+        never reads sig_df again (dedup_pairs drops its cache). Returns None
+        when the key count exceeds _REPL_MAX_KEYS. parallelism defaults to
+        the session's defaultParallelism — scale-adaptive, never a local
+        constant."""
         n = len(bc.value[0])
         b, r = self.cfg.num_bands, self.cfg.band_width
         if n * b > self._REPL_MAX_KEYS:
@@ -901,7 +943,8 @@ class MinHashLSH:
         id_sql = sig_df.schema["id"].dataType.simpleString()
         base = spark.range(0, p, 1, p)
         survivors = base.mapInPandas(
-            _replicated_dedup_fn(bc, need, b, r, p), "src long, dst long"
+            _replicated_dedup_fn(bc, need, b, r, p, bucket_cap_hard),
+            "src long, dst long",
         )
         # explicit p-partition hash repartition on the dedup key: the
         # dropDuplicates groupBy reuses it (no second exchange), and the
@@ -919,14 +962,13 @@ class MinHashLSH:
         self,
         sig_df: DataFrame,
         threshold: float,
-        max_rows: int = 2_000_000,
+        bc,
         max_bucket_size: int = 16,
         medium_bucket_size: int = 1024,
         bucket_cap_hard: int = 100_000,
         block_groups: int = 16,
         persist: bool = True,
-        bc=None,
-    ) -> DataFrame | None:
+    ) -> DataFrame:
         """Fused bucket -> pair-gen -> verify: one Arrow kernel generates
         each bucket's pairs in numpy AND verifies them against the
         broadcast signature matrix in the same pass, so only SURVIVORS
@@ -953,8 +995,9 @@ class MinHashLSH:
         The m-band prefilter does not apply (no m without the aggregation
         this path exists to delete); pairs above threshold by band count
         are simply verified — measured cheaper than aggregating to learn
-        m. Same guards as _numpy_verify: None (caller falls back to the
-        JVM shuffle verify) on a too-large table or sid collision.
+        m. bc is the guarded broadcast from _build_sig_broadcast; the
+        banding below reads sig_df a second time, from the cache
+        dedup_pairs put on it before that collect.
 
         Trade-off vs the aggregated path: survivors replace candidates in
         the one remaining exchange, so this wins when true-pair density is
@@ -964,17 +1007,11 @@ class MinHashLSH:
         k = self.cfg.num_hashes
         need = _min_eq_count(threshold, k)
         id_sql = sig_df.schema["id"].dataType.simpleString()
-        if persist and not _is_materialized(sig_df):
-            sig_df = sig_df.persist()
-        if bc is None:
-            bc = self._build_sig_broadcast(sig_df, max_rows)
-        if bc is None:
-            return None
         buckets = (
             self._sid_bands_arrow(sig_df)
             .groupBy("bk")
             .agg(F.array_sort(F.collect_list("sid")).alias("ids"))
-            .where(F.size("ids") >= 2)
+            .where(F.size("ids").between(2, bucket_cap_hard))
         )
         if persist:
             buckets = buckets.persist()
@@ -985,7 +1022,7 @@ class MinHashLSH:
         # instead of b), medium sets to the fused kernel, huge ones to the
         # JVM triangle block join + rowwise verify
         collapsed = (
-            buckets.where((sz > max_bucket_size) & (sz <= bucket_cap_hard))
+            buckets.where(sz > max_bucket_size)
             .select("ids")
             .distinct()
         )
@@ -1038,6 +1075,83 @@ class MinHashLSH:
             .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}")
         )
 
+    def _broadcast_dedup(
+        self,
+        sig_df: DataFrame,
+        threshold: float,
+        numpy_verify: bool | str | None,
+        raw_candidates: bool,
+        max_rows: int,
+        kw: dict,
+    ) -> DataFrame | None:
+        """The broadcast-fit routes of dedup_pairs(keep_sim=False), or None
+        when the JVM shuffle verify must run instead. Records
+        self.last_route either way.
+
+        Computed signatures are persisted before the first job of the
+        broadcast build (see _build_sig_broadcast): the JVM, fused, agg
+        and raw routes read sig_df again, and without the cache they would
+        be computed twice. The replicated route never reads it again, so
+        there the cache is dropped as soon as the route is known."""
+        # True is the same size-based routing as None (kept for existing
+        # callers); raw_candidates=True keeps meaning the "raw" strategy
+        auto = numpy_verify is None or numpy_verify is True
+        nv = ("raw" if raw_candidates else None) if auto else numpy_verify
+        if nv not in (None, "agg", "raw", "fused", "replicated"):
+            raise ValueError(
+                f"numpy_verify must be None | bool | 'agg' | 'raw' | 'fused' "
+                f"| 'replicated', got {numpy_verify!r}"
+            )
+        may_cache = kw.get("persist", True) and not _is_materialized(sig_df)
+        # ALL numpy strategies share the same broadcast + guards, built
+        # once here; a guard trip goes STRAIGHT to the JVM shuffle verify
+        bc, why = self._build_sig_broadcast(
+            sig_df, max_rows, auto=auto, persist=may_cache
+        )
+        if bc is None:
+            self.last_route = ("jvm", why)
+            return None
+        why = "fits broadcast" if nv is None else "requested"
+        if nv is None:
+            # adaptive: the replicated kernel while replication is trivial
+            # (250k keys: ~10ms/task) — it deletes the whole bucket
+            # dataflow; measured best (2.7s vs fused 5.2) to tied (6.5 vs
+            # 6.6) on the 5k-doc bench corpus. Past _REPL_PREFER_KEYS the
+            # concurrent replicas contend for one memory bus (5M keys:
+            # min 5.3/med 5.9s vs fused min 2.7/med 3.5 interleaved), so
+            # the fused kernel takes over.
+            keys = len(bc.value[0]) * self.cfg.num_bands
+            nv = "replicated" if keys <= self._REPL_PREFER_KEYS else "fused"
+        cap = kw.get("bucket_cap_hard", 100_000)
+        if nv == "replicated":
+            out = self._replicated_dedup(sig_df, threshold, bc, bucket_cap_hard=cap)
+            if out is None:
+                self.last_route = ("jvm", "over key bound")
+                return None
+            if may_cache and _is_materialized(sig_df):
+                sig_df.unpersist()
+            self.last_route = ("replicated", why)
+            return out
+        self.last_route = (nv, why)
+        if nv == "fused":
+            # fused bucket->pair-gen->verify kernel (see _fused_dedup): no
+            # candidate materialization at all — only survivors shuffle
+            return self._fused_dedup(
+                sig_df,
+                threshold,
+                bc,
+                max_bucket_size=kw.get("max_bucket_size", 16),
+                medium_bucket_size=kw.get("medium_bucket_size", 1024),
+                bucket_cap_hard=cap,
+                block_groups=kw.get("block_groups", 16),
+                persist=kw.get("persist", True),
+            )
+        # numpy broadcast verify over JVM candidates (see _numpy_verify):
+        # the kernel attaches original ids itself; raw mode skips the
+        # candidate m-aggregation (survivors dedupe at the end)
+        cand = self.sid_candidates(sig_df, aggregate=(nv == "agg"), **kw)
+        return self._numpy_verify(cand, sig_df, threshold, with_m=(nv == "agg"), bc=bc)
+
     def dedup_pairs(
         self,
         sig_df: DataFrame,
@@ -1045,7 +1159,7 @@ class MinHashLSH:
         keep_sim: bool = True,
         broadcast_sigs: bool = False,
         raw_candidates: bool = False,
-        numpy_verify: bool = False,
+        numpy_verify: bool | str | None = None,
         sketch_prefilter: bool = False,
         numpy_max_rows: int = 2_000_000,
         **kw,
@@ -1055,14 +1169,30 @@ class MinHashLSH:
         ids are attached in the same join that brings the signatures, so the
         only shuffles carrying ids/signatures are over final candidates.
 
-        keep_sim=False drops the sim column and enables the m-band verify
-        prefilter: bands are disjoint signature slices, so a pair matching
-        m bands has >= m*r equal positions, i.e. sim >= m*r/k exactly.
-        Pairs with m >= ceil(t*k/r) are therefore above threshold by
-        construction and skip the signature-verify join entirely (they only
-        touch the 16-byte sid->id map); the full zip_with verify runs on
-        the unsure remainder. On dup-dense corpora (the web-crawl case) a
-        large share of true pairs clear the bound.
+        ROUTING (keep_sim=False): the route is picked by data size, not by
+        a flag. With the default numpy_verify=None, a signature table that
+        fits one broadcast (numpy_max_rows rows and the 512MB byte budget,
+        no sid collision) runs the exact numpy broadcast kernels — the
+        replicated kernel up to _REPL_PREFER_KEYS band keys, the fused
+        kernel above. Any other table runs the JVM shuffle verify below,
+        silently: that is the expected large-corpus path. A table whose
+        trusted size estimate is already over twice the budget goes to the
+        JVM route without a Spark job, and one the estimate cannot place
+        is row-counted before anything is collected, so an over-bound
+        table never ships rows to the driver. numpy_verify=False forces
+        the JVM route at any size; keep_sim=True always takes it (the numpy
+        kernels return pairs only). Every route returns the same pair set.
+        The choice is recorded as self.last_route = (route, reason), e.g.
+        ("replicated", "fits broadcast") or ("jvm", "over row bound").
+
+        keep_sim=False drops the sim column and, on the JVM route, enables
+        the m-band verify prefilter: bands are disjoint signature slices,
+        so a pair matching m bands has >= m*r equal positions, i.e. sim >=
+        m*r/k exactly. Pairs with m >= ceil(t*k/r) are therefore above
+        threshold by construction and skip the signature-verify join
+        entirely (they only touch the 16-byte sid->id map); the full
+        zip_with verify runs on the unsure remainder. On dup-dense corpora
+        (the web-crawl case) a large share of true pairs clear the bound.
 
         raw_candidates=True (keep_sim=False only; ignored otherwise)
         skips the candidate-set aggregation entirely: raw per-band pair
@@ -1070,7 +1200,8 @@ class MinHashLSH:
         are deduped at the end. Trades ~sum(m) extra (cheap, map-side)
         verify evaluations for the multi-million-row candidate shuffle
         and forfeits the m-band prefilter — the win on corpora where
-        candidates are mostly singletons (m=1).
+        candidates are mostly singletons (m=1). On a broadcast-fit table
+        it selects the numpy "raw" strategy.
 
         broadcast_sigs=True hints the verify joins to broadcast the PACKED
         SIGNATURE side. The candidate set usually has more ROWS but fewer
@@ -1082,17 +1213,17 @@ class MinHashLSH:
         is known to fit a broadcast (~<=150k rows at k=200); at 10^12 rows
         leave it False and both joins become shuffle joins.
 
-        numpy_verify (keep_sim=False only; raises otherwise) replaces
-        the signature verify joins with the vectorized numpy broadcast
-        kernel — same small-table scale guard as broadcast_sigs. Values:
-          True    — ADAPTIVE (r6): the "replicated" kernel while the
-                    per-task replication work is trivial (rows *
-                    num_bands <= _REPL_PREFER_KEYS), the "fused" kernel
-                    past that bound — fused measured fastest or tied on
-                    both bench densities once replication starts
-                    contending for memory bandwidth (see
-                    _REPL_PREFER_KEYS comment). Results identical
-                    across all strategies.
+        numpy_verify (keep_sim=False only; a truthy value raises
+        otherwise) picks the route explicitly. Values:
+          None    — AUTO (default): size-based routing as above. Among the
+                    numpy kernels, "replicated" while the per-task
+                    replication work is trivial (rows * num_bands <=
+                    _REPL_PREFER_KEYS), "fused" past that bound — fused
+                    measured fastest or tied on both bench densities once
+                    replication starts contending for memory bandwidth
+                    (see _REPL_PREFER_KEYS comment).
+          True    — the same as None (kept for existing callers).
+          False   — the JVM shuffle verify at any size.
           "replicated" — every task rebuilds the corpus's bucket
                     structure from the broadcast matrix and verifies its
                     hash-partition of DISTINCT member sets
@@ -1102,18 +1233,24 @@ class MinHashLSH:
           "agg"   — aggregated candidates + m-band prefilter kernel (the
                     pre-r6 numpy_verify=True plan).
           "raw"   — raw band emissions stream into the verify kernel,
-                    survivors dedupe at the end (= numpy_verify=True with
+                    survivors dedupe at the end (= the default with
                     raw_candidates=True, kept for back-compat).
           "fused" — pair generation and verify fuse into one kernel over
                     the bucket arrays (_fused_dedup); no candidate set is
                     ever materialized.
         NOTE: building the broadcast runs a Spark job and driver collect
         of the signature table IMMEDIATELY (at plan-construction time),
-        unlike every other path, which stays lazy until an action.
-        Guarded: when the table exceeds the broadcast-safe row bound, or
-        a sid collision is detected, every numpy strategy falls back to
-        the JVM shuffle verify with a warning (same results, scalable
-        plan).
+        unlike the JVM route, which stays lazy until an action; a row
+        count runs first unless the size estimate already fits the budget
+        (_build_sig_broadcast). Guarded: when the table exceeds the
+        broadcast-safe row bound, or a sid collision is detected, every
+        numpy strategy falls back to the JVM shuffle verify (same
+        results, scalable plan) — with a warning when a strategy was
+        named explicitly. Computed signatures (no trusted size estimate)
+        are persisted before that collect, so they are computed once on
+        every route; the replicated route, which never reads sig_df
+        again, drops the cache. A stored or cached table is read again
+        instead; the JVM route caches it as before.
 
         sketch_prefilter=True (OPT-IN; JVM shuffle-verify path only —
         the numpy/fused kernels already verify map-side) prunes
@@ -1138,96 +1275,18 @@ class MinHashLSH:
                 "pairs only; pass keep_sim=False or drop numpy_verify)"
             )
         t = self.cfg.threshold if threshold is None else threshold
+        if keep_sim:
+            self.last_route = ("jvm", "keep_sim")
+        elif numpy_verify is False:
+            self.last_route = ("jvm", "requested")
+        else:
+            out = self._broadcast_dedup(
+                sig_df, t, numpy_verify, raw_candidates, numpy_max_rows, kw
+            )
+            if out is not None:
+                return out
         if kw.get("persist", True) and not _is_materialized(sig_df):
             sig_df = sig_df.persist()
-        if numpy_verify and not keep_sim:
-            # strategy resolution: True = ADAPTIVE (raw for sparse
-            # corpora, fused for dense — decided by the driver-side
-            # density probe on the broadcast matrix, exact results either
-            # way); "agg" | "raw" | "fused" force a specific plan.
-            # raw_candidates=True with numpy_verify=True keeps meaning
-            # "raw" (back-compat with existing callers).
-            nv = numpy_verify
-            if nv is True:
-                nv = "raw" if raw_candidates else None
-            if nv not in (None, "agg", "raw", "fused", "replicated"):
-                raise ValueError(
-                    f"numpy_verify must be True | 'agg' | 'raw' | 'fused' "
-                    f"| 'replicated', got {numpy_verify!r}"
-                )
-            # ALL numpy strategies share the same broadcast + guards:
-            # build it once here; a guard trip (table over the broadcast
-            # bound, or a sid collision) goes STRAIGHT to the JVM shuffle
-            # verify below — re-running the identical guards per strategy
-            # would just repeat the bounded collect and the warning.
-            bc = self._build_sig_broadcast(sig_df, numpy_max_rows)
-            if bc is None:
-                numpy_verify = False
-            else:
-                if nv is None and (
-                    len(bc.value[0]) * self.cfg.num_bands
-                    > self._REPL_PREFER_KEYS
-                ):
-                    # adaptive default, large-corpus branch: the fused
-                    # bucket->pair-gen->verify kernel. The replicated
-                    # kernel's per-task cost is the FULL key fold + b
-                    # argsorts, concurrently in every task slot — at 5M
-                    # keys (100k imgs x 50 bands) that contends for one
-                    # memory bus and measured min 5.3/med 5.9s vs fused
-                    # min 2.7/med 3.5 interleaved (raw 3.3/3.7, agg
-                    # 4.1/4.6), where a quieter earlier session had it
-                    # at parity — the contended ranking is the one to
-                    # plan for. Fused also won or tied raw/agg on BOTH
-                    # densities with the r6 single-invocation kernel +
-                    # keyed finisher, so the density probe no longer
-                    # gates the default (it remains for explicit use).
-                    nv = "fused"
-                if nv in (None, "replicated"):
-                    # small-corpus branch (keys <= _REPL_PREFER_KEYS) or
-                    # explicit ask: the replicated kernel — replication
-                    # is trivial at this size (250k keys: ~10ms/task)
-                    # and it deletes the whole bucket dataflow; measured
-                    # best (2.7s vs fused 5.2) to tied (6.5 vs 6.6) on
-                    # the 5k-doc bench corpus across sessions.
-                    out = self._replicated_dedup(
-                        sig_df, t, max_rows=numpy_max_rows,
-                        persist=kw.get("persist", True), bc=bc,
-                    )
-                    if out is not None:
-                        return out
-                    if numpy_verify == "replicated":
-                        numpy_verify = False  # explicit ask, guard tripped
-                    else:
-                        nv = "fused"
-                if numpy_verify is not False and nv == "fused":
-                    # fused bucket->pair-gen->verify kernel (see
-                    # _fused_dedup): no candidate materialization at all —
-                    # only survivors shuffle.
-                    return self._fused_dedup(
-                        sig_df,
-                        t,
-                        max_rows=numpy_max_rows,
-                        max_bucket_size=kw.get("max_bucket_size", 16),
-                        medium_bucket_size=kw.get("medium_bucket_size", 1024),
-                        bucket_cap_hard=kw.get("bucket_cap_hard", 100_000),
-                        block_groups=kw.get("block_groups", 16),
-                        persist=kw.get("persist", True),
-                        bc=bc,
-                    )
-                if numpy_verify is not False:
-                    # numpy broadcast verify (see _numpy_verify): exact
-                    # same semantics as the JVM kernel path below; the
-                    # kernel attaches original ids itself — no extra
-                    # joins. raw mode skips the candidate m-aggregation
-                    # (no full-candidate exchange; survivors dedupe at
-                    # the end).
-                    cand = self.sid_candidates(
-                        sig_df, aggregate=(nv == "agg"), **kw
-                    )
-                    return self._numpy_verify(
-                        cand, sig_df, t, with_m=(nv == "agg"),
-                        max_rows=numpy_max_rows, bc=bc,
-                    )
         aggregated = not (raw_candidates and not keep_sim)
         cand = self.sid_candidates(sig_df, aggregate=aggregated, **kw)
         k = self.cfg.num_hashes

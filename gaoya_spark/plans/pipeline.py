@@ -16,6 +16,12 @@ Stages (each a checkpointed warehouse table; any run resumes mid-pipeline):
 Scale design: signatures read only (id, caption, phash) — image bytes are
 never shuffled (column pruning at the parquet/Iceberg scan). Edges are the
 only quadratic-risk stage and are guarded by hot-bucket triangle blocking.
+minhash_edges takes its route by size (MinHashLSH.dedup_pairs with
+keep_sim=False): a signature table that fits one broadcast runs the exact
+numpy kernels (replicated, or fused past ~2M band keys), any larger table
+the JVM shuffle verify; both drop buckets over bucket_cap_hard and return
+the same pairs. Passing numpy_verify=False to dedup_pairs forces the JVM
+route.
 Labels iterate over edges only (bytes untouched). The optional PSNR/caption
 invariant check (verify_invariants) decodes pixels for a sampled fraction.
 """
@@ -94,9 +100,10 @@ class DedupPipeline:
             "minhash_edges",
             lambda: mh.dedup_pairs(
                 mh_sigs,
+                keep_sim=False,
                 max_bucket_size=c.max_bucket_size,
                 bucket_cap_hard=c.bucket_cap_hard,
-            ).select("src", "dst"),
+            ),
             force,
         )
         edge_frames = [mh_edges]

@@ -128,8 +128,9 @@ class StreamingDedup:
                 F.col("batch_id") != batch_id
             )
 
-        # edges inside the batch
-        edges = self.lsh.dedup_pairs(new_sigs).select("src", "dst")
+        # edges inside the batch; dedup_pairs routes by size, so a
+        # micro-batch that fits one broadcast takes the numpy kernels
+        edges = self.lsh.dedup_pairs(new_sigs, keep_sim=False)
         if index is not None:
             # edges between batch and the standing index (probe = new rows)
             vs_index = (

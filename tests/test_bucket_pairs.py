@@ -58,6 +58,20 @@ def test_sid_pairs_match_naive_enumeration(spark, seed, medium):
     assert got == _expected(members, drop_cap=25)
 
 
+def test_sid_pairs_drop_cap_below_array_limit(spark):
+    """drop_cap binds in every tier: with drop_cap under
+    array_bucket_limit, a bucket between the two is excluded too."""
+    members = sorted({(0, s) for s in range(6)} | {(1, 0), (1, 1)})
+    df = spark.createDataFrame(members, "bk long, sid long")
+    got = {
+        (r["src"], r["dst"]): r["m"]
+        for r in sid_pairs_from_buckets(
+            df, array_bucket_limit=8, drop_cap=4, block_groups=4
+        ).collect()
+    }
+    assert got == _expected(members, drop_cap=4) == {(0, 1): 1}
+
+
 def _expected_cross(probes, index, drop_cap, limit_sq):
     by_bk_p, by_bk_i = {}, {}
     for bk, sid in probes:

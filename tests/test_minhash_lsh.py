@@ -80,7 +80,7 @@ def test_dedup_pairs_raw_candidates_identical(spark, corpus5):
     raw = {
         (r["src"], r["dst"])
         for r in lsh.dedup_pairs(
-            sigs, keep_sim=False, raw_candidates=True
+            sigs, keep_sim=False, raw_candidates=True, numpy_verify=False
         ).collect()
     }
     assert raw == base
@@ -346,7 +346,7 @@ def test_dedup_pairs_keep_sim_false_same_pairs(spark):
     docs = spark.createDataFrame(pdf[["image_id", "caption"]])
     sigs = lsh.signatures(docs, "image_id", "caption").cache()
     with_sim = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sigs).collect()}
-    fast = lsh.dedup_pairs(sigs, keep_sim=False)
+    fast = lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False)
     assert fast.columns == ["src", "dst"]
     assert {(r["src"], r["dst"]) for r in fast.collect()} == with_sim
     assert len(with_sim) > 0
@@ -461,8 +461,9 @@ def test_min_eq_count_float_boundaries():
 def test_numpy_verify_guards_fall_back_to_jvm(spark, corpus5):
     """_numpy_verify returns None (-> dedup_pairs takes the JVM shuffle
     verify) when the signature table exceeds the broadcast-safe row bound;
-    dedup_pairs with numpy_verify=True must still yield the exact JVM-path
-    pair set in that case (the guard changes the PLAN, never the result)."""
+    dedup_pairs with the numpy kernels, fitting or guarded, must still
+    yield the exact JVM-path pair set (the guard changes the PLAN, never
+    the result)."""
     import warnings
 
     lsh, sigs = corpus5
@@ -474,13 +475,22 @@ def test_numpy_verify_guards_fall_back_to_jvm(spark, corpus5):
     assert any("max_rows" in str(x.message) for x in w)
     jvm = {
         (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False).collect()
+        for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False).collect()
     }
     np_pairs = {
         (r["src"], r["dst"])
         for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=True).collect()
     }
-    assert jvm == np_pairs and jvm
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        guarded = {
+            (r["src"], r["dst"])
+            for r in lsh.dedup_pairs(
+                sigs, keep_sim=False, numpy_verify="agg", numpy_max_rows=2
+            ).collect()
+        }
+    assert any("max_rows" in str(x.message) for x in w)
+    assert jvm == np_pairs == guarded and jvm
 
 
 def test_arrow_bands_jvm_bands_same_pairs(spark, corpus5):
@@ -514,7 +524,7 @@ def test_fused_dedup_matches_jvm_all_tiers(spark):
     sigs.count()
     jvm = {
         (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False).collect()
+        for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False).collect()
     }
     fused = {
         (r["src"], r["dst"])
@@ -532,8 +542,8 @@ def test_fused_dedup_matches_jvm_all_tiers(spark):
 
 
 @pytest.mark.parametrize("strategy", [
-    {}, {"numpy_verify": True}, {"numpy_verify": "fused"},
-    {"numpy_verify": True, "raw_candidates": True},
+    {"numpy_verify": False}, {"numpy_verify": True}, {"numpy_verify": "fused"},
+    {"numpy_verify": True, "raw_candidates": True}, {},
 ])
 def test_dedup_strategies_empty_and_singleton(spark, strategy):
     """Every dedup strategy must return an empty (src, dst) frame — with
@@ -580,16 +590,24 @@ def test_query_with_precomputed_index_bands(spark, corpus5):
     {"numpy_verify": True},
     {"numpy_verify": "fused"},
     {"numpy_verify": True, "raw_candidates": True},
+    {"numpy_verify": "replicated"},
+    {"numpy_verify": "agg"},
 ])
 def test_broadcast_guard_boundary_identical_pairs(spark, corpus5, strategy):
     """Pin the broadcast row bound below the corpus size THROUGH THE
     PUBLIC API (numpy_max_rows): every numpy/fused strategy must trip its
-    guard, warn, fall back to the JVM shuffle verify, and produce the
+    guard, fall back to the JVM shuffle verify, and produce the
     IDENTICAL pair set — the silent-divergence class the guards exist to
-    prevent, now boundary-tested, not just warning-tested."""
+    prevent, now boundary-tested, not just warning-tested. A named
+    strategy warns on the fallback; numpy_verify=True is the size-based
+    default, whose fallback is quiet."""
     import warnings
 
     lsh, sigs = corpus5
+    jvm = {
+        (r["src"], r["dst"])
+        for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False).collect()
+    }
     normal = {
         (r["src"], r["dst"])
         for r in lsh.dedup_pairs(sigs, keep_sim=False, **strategy).collect()
@@ -602,8 +620,9 @@ def test_broadcast_guard_boundary_identical_pairs(spark, corpus5, strategy):
                 sigs, keep_sim=False, numpy_max_rows=1, **strategy
             ).collect()
         }
-    assert any("broadcast-safe" in str(x.message) for x in w)
-    assert guarded == normal and normal
+    warned = any("broadcast-safe" in str(x.message) for x in w)
+    assert warned == isinstance(strategy["numpy_verify"], str)
+    assert guarded == normal == jvm and normal
 
 
 def test_sketch_prefilter_identical_results(spark, corpus5):
@@ -674,8 +693,8 @@ def test_sketch_eq_upper_bound_expression():
 
 
 def test_numpy_strategy_values_identical(spark, corpus5):
-    """r6: numpy_verify accepts True (adaptive raw/fused via the
-    driver-side density probe) and explicit "agg" | "raw" | "fused" —
+    """numpy_verify accepts True (adaptive replicated/fused by band-key
+    count) and explicit "agg" | "raw" | "fused" —
     every value must yield the exact JVM-path pair set, and an unknown
     value must raise."""
     import pytest
@@ -692,29 +711,139 @@ def test_numpy_strategy_values_identical(spark, corpus5):
         lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify="bogus")
 
 
-def test_emissions_per_doc_density_probe(spark):
-    """The adaptive-strategy density probe must rank a dense corpus
-    (every doc in one near-identical family -> every band bucket holds
-    all docs) far above a sparse one (distinct random docs -> singleton
-    buckets), and be deterministic across calls (strided sampling, no
-    RNG)."""
-    import numpy as np
+def _pair_set(df):
+    return {(r["src"], r["dst"]) for r in df.collect()}
 
-    from gaoya_spark.config import MinHashConfig
-    from gaoya_spark.operators.minhash_lsh import MinHashLSH
 
-    lsh = MinHashLSH(MinHashConfig(num_bands=8, band_width=4, threshold=0.5))
-    rng = np.random.default_rng(11)
-    n, k = 200, 32
-    dense = np.broadcast_to(
-        rng.integers(0, 2**31, size=k, dtype=np.int64), (n, k)
-    ).copy()
-    sparse = rng.integers(0, 2**31, size=(n, k), dtype=np.int64)
-    e_dense = lsh._emissions_per_doc(dense)
-    e_sparse = lsh._emissions_per_doc(sparse)
-    # identical signatures: every band bucket holds all n docs ->
-    # exactly b * C(n, 2) / n emissions per doc
-    assert e_dense == 8 * (n * (n - 1) // 2) / n
-    assert e_sparse < 1.0
-    assert lsh._emissions_per_doc(dense) == e_dense
-    assert lsh._emissions_per_doc(np.zeros((1, k), dtype=np.int64)) == 0.0
+def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
+    """The default numpy_verify=None routes by size: a broadcast-fit
+    table takes the replicated kernel; a table over the row bound
+    (numpy_max_rows) or far over the optimizer's size estimate takes the
+    JVM shuffle verify WITHOUT a warning. Every route returns the same
+    pairs, and last_route names the route and the reason."""
+    import warnings
+
+    lsh, sigs = corpus5
+    jvm = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
+    assert lsh.last_route == ("jvm", "requested")
+    lsh.dedup_pairs(sigs)
+    assert lsh.last_route == ("jvm", "keep_sim")
+    auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
+    assert lsh.last_route == ("replicated", "fits broadcast")
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        over_rows = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_max_rows=1))
+        assert lsh.last_route == ("jvm", "over row bound")
+        # a byte budget far below the cached table's size estimate: the
+        # estimate alone routes to the JVM verify, before any collect
+        monkeypatch.setattr(MinHashLSH, "_BROADCAST_BYTES", 64)
+        over_est = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
+        assert lsh.last_route == ("jvm", "over size estimate")
+    assert not [x for x in w if "numpy_verify" in str(x.message)]
+    assert auto == over_rows == over_est == jvm and jvm
+
+
+def test_replicated_drops_buckets_over_hard_cap(spark):
+    """bucket_cap_hard parity: a family of 10 identical docs fills every
+    band bucket with 10 members. With bucket_cap_hard=5 (under the
+    default max_bucket_size, so the cap must bind in the small tier too)
+    the JVM, fused and replicated routes all drop those buckets —
+    identical pair sets, the other pairs kept."""
+    cfg = MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
+    lsh = MinHashLSH(cfg)
+    rows = [(i, "same boilerplate caption for every family member here")
+            for i in range(10)]
+    rows += [
+        (100, "a quick brown fox jumps over the lazy dog"),
+        (101, "a quick brown fox jumps over the lazy cat"),
+        (102, "completely different words about database engines"),
+    ]
+    sigs = lsh.signatures(
+        spark.createDataFrame(rows, "id long, text string"), "id", "text"
+    ).cache()
+    jvm = _pair_set(lsh.dedup_pairs(
+        sigs, keep_sim=False, numpy_verify=False, bucket_cap_hard=5
+    ))
+    auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, bucket_cap_hard=5))
+    assert lsh.last_route == ("replicated", "fits broadcast")
+    fused = _pair_set(lsh.dedup_pairs(
+        sigs, keep_sim=False, numpy_verify="fused", bucket_cap_hard=5
+    ))
+    assert auto == jvm == fused
+    assert (100, 101) in jvm
+    assert not any(a < 10 and b < 10 for a, b in jvm)
+    # without the cap the family's 45 pairs come back on every route
+    uncapped = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
+    assert len(uncapped - jvm) == 45
+
+
+def _counted_sigs(spark, sigs):
+    """An UNCACHED copy of sigs whose sig column passes through a python
+    UDF that counts its rows, so a test can see how often the signature
+    table is computed."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf(returnType=sigs.schema["sig"].dataType)
+    def touch(sig):
+        acc.add(1)
+        return sig
+
+    rows = [(r["id"], list(r["sig"])) for r in sigs.collect()]
+    base = spark.createDataFrame(rows, sigs.schema)
+    return base.select("id", touch("sig").alias("sig")), acc
+
+
+@pytest.mark.parametrize("strategy,route", [
+    ({}, "replicated"),
+    ({"numpy_verify": "fused"}, "fused"),
+    ({"numpy_verify": "raw"}, "raw"),
+    ({"numpy_max_rows": 1}, "jvm"),
+])
+def test_uncached_signatures_computed_once(spark, corpus5, strategy, route):
+    """dedup_pairs on an uncached signature table computes each row's
+    signature once on every route: the broadcast collect (and the row
+    count before it, which runs because a python-computed table has no
+    trusted size estimate) fills the cache that the fused, raw and JVM
+    routes read again. The replicated route reads only the broadcast and
+    drops the cache."""
+    lsh, sigs = corpus5
+    n = sigs.count()
+    counted, acc = _counted_sigs(spark, sigs)
+    want = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
+    got = _pair_set(lsh.dedup_pairs(counted, keep_sim=False, **strategy))
+    assert lsh.last_route[0] == route
+    assert got == want and want
+    assert acc.value == n
+    assert counted.storageLevel.useMemory == (route != "replicated")
+    counted.unpersist()
+
+
+def test_size_estimate_trusted_only_where_it_measures(
+    spark, corpus5, tmp_path, monkeypatch
+):
+    """The size estimate is used only where it measures the collected
+    rows: every column of a filled cache or a file scan read through
+    projections. A filter, an unread column or python-computed signatures
+    give None, and so the row-count probe decides. An uncached scan over
+    the budget routes on the estimate alone (dedup_pairs caches sig_df
+    only after reading it)."""
+    lsh, sigs = corpus5
+
+    def est(df):
+        return lsh._size_estimate(df.select(F.xxhash64("id").alias("sid"), "sig", "id"))
+
+    sigs.write.parquet(str(tmp_path / "sigs"))
+    sigs.withColumn("pad", F.lit("x")).write.parquet(str(tmp_path / "padded"))
+    scan = spark.read.parquet(str(tmp_path / "sigs"))
+    assert est(sigs) > 0
+    assert est(scan) > 0
+    assert est(spark.read.parquet(str(tmp_path / "padded"))) is None
+    assert est(scan.where("id > 2")) is None
+    assert est(_counted_sigs(spark, sigs)[0]) is None
+    assert est(sigs.where("id > 2")) is None
+    want = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
+    monkeypatch.setattr(MinHashLSH, "_BROADCAST_BYTES", 64)
+    got = _pair_set(lsh.dedup_pairs(scan, keep_sim=False))
+    assert lsh.last_route == ("jvm", "over size estimate")
+    assert got == want and want
+    scan.unpersist()

@@ -141,3 +141,42 @@ def test_pipeline_with_substring_stage(spark, images, tmp_path_factory):
     assert pipe.wh.exists("substring_edges")
     stages = {m["stage"] for m in pipe._stage_meta}
     assert "substring_edges" in stages
+
+
+def test_pipeline_minhash_edges_match_jvm_route_string_ids(
+    spark, images, tmp_path_factory, monkeypatch
+):
+    """minhash_edges is dedup_pairs routed by size — the replicated numpy
+    kernel at this scale. On a string-id corpus it must equal the pair set
+    of the JVM route (numpy_verify=False) over the same signatures."""
+    from gaoya_spark.operators.minhash_lsh import MinHashLSH
+
+    routes = []
+    orig = MinHashLSH.dedup_pairs
+
+    def spy(self, *a, **kw):
+        out = orig(self, *a, **kw)
+        routes.append(self.last_route)
+        return out
+
+    monkeypatch.setattr(MinHashLSH, "dedup_pairs", spy)
+    df, _ = images
+    sdf = df.withColumn(
+        "image_id", F.concat(F.lit("img-"), F.col("image_id").cast("string"))
+    )
+    cfg = PipelineConfig(use_simhash=False)
+    pipe = DedupPipeline(spark, str(tmp_path_factory.mktemp("wh_str")), cfg)
+    pipe.run(sdf)
+    assert routes == [("replicated", "fits broadcast")]
+    edges = pipe.wh.read("minhash_edges")
+    assert dict(edges.dtypes)["src"] == "string"
+    got = {(r["src"], r["dst"]) for r in edges.collect()}
+    jvm = orig(
+        MinHashLSH(cfg.minhash),
+        pipe.wh.read("minhash_signatures"),
+        keep_sim=False,
+        numpy_verify=False,
+        max_bucket_size=cfg.max_bucket_size,
+        bucket_cap_hard=cfg.bucket_cap_hard,
+    )
+    assert got == {(r["src"], r["dst"]) for r in jvm.collect()} and got

@@ -398,3 +398,25 @@ def test_bands_coverage_guard_backfills_missing_batches(spark, tmp_path):
     assert got == want
     # the backfill repaired the index: batch 0's partition exists again
     assert "0" in wh.partition_values("stream_bands", "batch_id")
+
+
+def test_in_batch_edges_match_jvm_route(spark, tmp_path):
+    """process_batch's in-batch dedup takes the numpy route by size; the
+    batch's edges must be exactly the JVM route's pair set."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    sd = StreamingDedup(spark, wh, CFG)
+    b0 = spark.createDataFrame(
+        _img_rows([(1, "the quick brown fox jumps over the lazy dog"),
+                   (2, "the quick brown fox jumps over the lazy cat"),
+                   (3, "the quick brown fox leaps over the lazy dog"),
+                   (4, "columnar storage engines scan compressed pages fast"),
+                   (5, "columnar storage engines scan compressed pages quickly"),
+                   (6, "totally unrelated words about mountain weather")]),
+        SCHEMA,
+    )
+    sd.process_batch(b0, 0)
+    assert sd.lsh.last_route == ("replicated", "fits broadcast")
+    got = {(r["src"], r["dst"]) for r in wh.read("stream_edges").collect()}
+    sigs = sd.lsh.signatures(b0, "image_id", "caption", phash_col="phash")
+    jvm = sd.lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False)
+    assert got == {(r["src"], r["dst"]) for r in jvm.collect()} and got

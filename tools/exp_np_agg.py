@@ -77,7 +77,7 @@ def main() -> None:
             sigs, keep_sim=False, numpy_verify=True, raw_candidates=True
         ).count(),
         "jvm_agg": lambda: mh.dedup_pairs(
-            sigs, keep_sim=False, broadcast_sigs=True
+            sigs, keep_sim=False, broadcast_sigs=True, numpy_verify=False
         ).count(),
     }
     res: dict[str, float] = {}

@@ -58,9 +58,11 @@ def main() -> None:
 
     variants = {
         "jvm_nosketch": lambda: mh.dedup_pairs(
-            sigs, keep_sim=False, sketch_prefilter=False
+            sigs, keep_sim=False, sketch_prefilter=False, numpy_verify=False
         ).count(),
-        "jvm_sketch": lambda: mh.dedup_pairs(sigs, keep_sim=False).count(),
+        "jvm_sketch": lambda: mh.dedup_pairs(
+            sigs, keep_sim=False, numpy_verify=False
+        ).count(),
         "np_agg": lambda: mh.dedup_pairs(
             sigs, keep_sim=False, numpy_verify=True
         ).count(),

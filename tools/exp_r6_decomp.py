@@ -77,7 +77,7 @@ def main() -> None:
         return mh.sid_candidates(sigs).count()
 
     def bcast():
-        bc = mh._build_sig_broadcast(sigs, 2_000_000)
+        bc, _ = mh._build_sig_broadcast(sigs, 2_000_000)
         n = len(bc.value[0])
         bc.destroy()
         return n
@@ -93,7 +93,9 @@ def main() -> None:
         "fused": lambda: mh.dedup_pairs(
             sigs, keep_sim=False, numpy_verify="fused"
         ).count(),
-        "jvm_sketch": lambda: mh.dedup_pairs(sigs, keep_sim=False).count(),
+        "jvm_sketch": lambda: mh.dedup_pairs(
+            sigs, keep_sim=False, numpy_verify=False
+        ).count(),
     }
     if only:
         stages = {k: v for k, v in stages.items() if k in only}

@@ -51,10 +51,11 @@ cfg = MinHashConfig(num_bands=50, band_width=4, threshold=0.5,
 mh = MinHashLSH(cfg)
 sigs = mh.signatures(images, "image_id", "caption", phash_col="phash").cache()
 sigs.count()
-# DEFAULT path: aggregated candidates, JVM packed-XOR verify via
-# shuffle joins — no broadcast_sigs, no numpy kernel
+# JVM shuffle-verify route (numpy_verify=False: by default a
+# broadcast-fit table takes the numpy kernels): aggregated candidates,
+# JVM packed-XOR verify via shuffle joins — no broadcast_sigs
 t0 = time.time()
-n = mh.dedup_pairs(sigs, keep_sim=False).count()
+n = mh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False).count()
 print("RESULT", time.time() - t0, n, flush=True)
 spark.stop()
 """.format(

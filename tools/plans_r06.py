@@ -75,9 +75,9 @@ def main() -> None:
         "img_minhash_dedup": lambda: img_mh.dedup_pairs(
             img_sigs, keep_sim=False, numpy_verify=True
         ),
-        # the default JVM shuffle-verify (the 10^12-row configuration)
+        # the JVM shuffle-verify (the route of over-broadcast tables)
         "jvm_shuffle_verify_dedup": lambda: img_mh.dedup_pairs(
-            img_sigs, keep_sim=False
+            img_sigs, keep_sim=False, numpy_verify=False
         ),
         # query path (streaming's maintained-index probe shares it)
         "minhash_query": lambda: mh.query(doc_sigs, doc_sigs.limit(100)),

@@ -112,7 +112,9 @@ def main() -> None:
     t_sig = time.time() - t0
 
     t0 = time.time()
-    pairs = mh.dedup_pairs(sigs, keep_sim=False).persist()
+    # the JVM shuffle-verify route, as recorded in BENCH/STRESS_1M.md (a
+    # 1M-row table is over the broadcast bound either way)
+    pairs = mh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False).persist()
     n_pairs = pairs.count()
     t_dedup = time.time() - t0
 
@@ -187,7 +189,7 @@ def main() -> None:
         images.unionByName(patho), "image_id", "caption", phash_col="phash"
     ).persist()
     sigs_p.count()
-    pairs_p = mh.dedup_pairs(sigs_p, keep_sim=False).persist()
+    pairs_p = mh.dedup_pairs(sigs_p, keep_sim=False, numpy_verify=False).persist()
     n_pairs_patho = pairs_p.count()
     t_patho = time.time() - t0
     st = (
