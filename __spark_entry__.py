@@ -184,27 +184,29 @@ def _q_minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_minhash_dedup_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The numpy broadcast-verify dedup path (dedup_pairs(numpy_verify=
-    True, raw_candidates=True)): raw band emissions stream into a
-    vectorized kernel that gathers both signature rows per pair from one
-    broadcast matrix, counts equal positions, and attaches original ids —
-    exactly the fully-verified pair set the oracle computes."""
+    """The default size-routed dedup path (dedup_pairs(keep_sim=False)):
+    a table this small fits one broadcast, so the replicated numpy kernel
+    runs — every task rebuilds the bucket structure from the broadcast
+    signature matrix, verifies its share of the distinct member sets,
+    and attaches original ids — exactly the fully-verified pair set the
+    oracle computes."""
     lsh = MinHashLSH(ORACLE_MINHASH)
     sigs = _minhash_sigs_oracle(spark, sf_dir)
-    return lsh.dedup_pairs(
-        sigs, keep_sim=False, numpy_verify=True, raw_candidates=True
-    )
+    return lsh.dedup_pairs(sigs, keep_sim=False)
 
 
 def _q_minhash_dedup_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fused bucket->pair-gen->verify dedup path (dedup_pairs(
-    numpy_verify="fused")): one Arrow kernel generates each bucket's
-    pairs in numpy and verifies them against the broadcast signature
-    matrix in the same pass; only survivors shuffle. Same fully-verified
-    pair set as every other dedup strategy — the oracle is identical."""
+    """The fused bucket->pair-gen->verify dedup path, pinned by setting
+    the instance's replicated-kernel key bound (_REPL_PREFER_KEYS) to 0 so
+    no table is small enough to replicate: one Arrow kernel generates each
+    bucket's pairs in numpy and verifies them against the broadcast
+    signature matrix in the same pass; only survivors shuffle. Same
+    fully-verified pair set as every other dedup route — the oracle is
+    identical."""
     lsh = MinHashLSH(ORACLE_MINHASH)
+    lsh._REPL_PREFER_KEYS = 0
     sigs = _minhash_sigs_oracle(spark, sf_dir)
-    return lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify="fused")
+    return lsh.dedup_pairs(sigs, keep_sim=False)
 
 
 def _q_simhash_hamming_angle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -101,7 +101,7 @@ def minhash_eq_count_packed(
     # boolean->int casts instead of when/otherwise: identical values
     # (true casts to 1), but ~half the generated bytecode per word —
     # headroom that keeps big fused stages (broadcast-join plans chain
-    # this tree after the m-agg and the sketch prefilter) under janino's
+    # this tree after the m-agg) under janino's
     # 64KB method limit where the when/otherwise form overflowed (r6).
     if hash_size > 32:
         if num_hashes > _FLAT_KERNEL_MAX_WORDS:
@@ -139,66 +139,6 @@ def minhash_similarity_packed(
     return minhash_eq_count_packed(pa, pb, num_hashes, hash_size).cast(
         "double"
     ) / F.lit(float(num_hashes))
-
-
-_NIB_ONES = 0x1111111111111111  # bit0 of every nibble
-
-
-def sketch_signature_col(sig, num_hashes: int) -> Column:
-    """4-bit-per-position signature sketch: the low nibble of each of the
-    k positions packed 16 per long — ceil(k/16) longs, an 8x byte
-    reduction over the two-per-long packed signature. Value-equal
-    positions are always nibble-equal, so nibble-equality COUNTS are an
-    upper bound on exact equal-position counts: the shuffle-verify path
-    prunes candidates whose sketch bound already fails the threshold
-    BEFORE the full-signature joins (guide §2.3/§3.2 — shuffle a
-    lightweight proxy, move the heavy bytes only for survivors). Unequal
-    positions collide at 1/16 per position, so the bound stays sharp
-    enough to prune essentially all false candidates at practical
-    thresholds."""
-    n_words = (num_hashes + 15) // 16
-
-    def word(i):
-        w = None
-        for j in range(16):
-            pos = i * 16 + j + 1
-            if pos > num_hashes:
-                break
-            nib = F.element_at(sig, pos).cast("long").bitwiseAND(F.lit(15))
-            t = F.shiftleft(nib, 4 * j) if j else nib
-            w = t if w is None else w.bitwiseOR(t)
-        return w
-
-    return F.array(*[word(i) for i in range(n_words)])
-
-
-def sketch_eq_upper_bound(sa, sb, num_hashes: int) -> Column:
-    """Number of nibble-equal positions between two sketches — an exact
-    UPPER bound on the equal-position count (see sketch_signature_col).
-    Per word of the XOR: OR-fold each nibble's four bits into its bit 0
-    (y = x | x>>2; y |= y>>1 — cross-nibble contamination only touches
-    unread bits), mask bit 0 of every nibble, popcount = NON-zero nibble
-    count; the bound is then k minus the total non-zero count (padding
-    nibbles XOR to zero and drop out). Pure shift/or/popcount — no
-    addition, so ANSI overflow semantics can never fire. Flat balanced
-    tree like minhash_eq_count_packed; beyond _FLAT_KERNEL_MAX_WORDS
-    falls back to the aggregate fold."""
-    n_words = (num_hashes + 15) // 16
-
-    def nonzero_nibbles(x):
-        y = x.bitwiseOR(F.shiftrightunsigned(x, 2))
-        y = y.bitwiseOR(F.shiftrightunsigned(y, 1))
-        return F.bit_count(y.bitwiseAND(F.lit(_NIB_ONES)))
-
-    if n_words > _FLAT_KERNEL_MAX_WORDS:
-        x = F.zip_with(sa, sb, lambda a, b: a.bitwiseXOR(b))
-        nz = F.aggregate(x, F.lit(0), lambda acc, w: acc + nonzero_nibbles(w))
-    else:
-        nz = _balanced_sum([
-            nonzero_nibbles(F.element_at(sa, i).bitwiseXOR(F.element_at(sb, i)))
-            for i in range(1, n_words + 1)
-        ])
-    return F.lit(num_hashes) - nz
 
 
 def hamming_distance_col(a, b) -> Column:

@@ -168,17 +168,8 @@ def sid_pairs_from_buckets(
     persist: bool = True,
     medium_bucket_limit: int = 1024,
     gate: bool = False,
-    aggregate: bool = True,
 ) -> DataFrame:
     """(src, dst, m) candidate pairs from (bk, sid) membership rows.
-
-    aggregate=False skips the final (src, dst) groupBy and returns the
-    raw emissions — (src, dst) with one row per bucket INSTANCE for the
-    small tier and per distinct member set for the collapsed tiers, so a
-    pair may repeat (up to once per band). Callers that only FILTER
-    per-pair (e.g. an exact verify whose survivors are then deduped)
-    save the full-candidate-set shuffle this way; callers that need the
-    exact band-match multiplicity m must aggregate.
 
     Three size tiers (measured on the dense sf0.1 document corpus, whose
     52 over-256 buckets emit 13.7M raw pairs):
@@ -264,8 +255,6 @@ def sid_pairs_from_buckets(
             .select("p.src", "p.dst", "nb")
         )
         if not has_huge:
-            if not aggregate:
-                return raw.select("src", "dst")
             return raw.groupBy("src", "dst").agg(F.sum("nb").alias("m"))
         hot = (
             collapsed.where(F.size("ids") > medium_bucket_limit)
@@ -302,6 +291,4 @@ def sid_pairs_from_buckets(
             )
         )
         raw = raw.unionByName(pairs_hot)
-    if not aggregate:
-        return raw.select("src", "dst")
     return raw.groupBy("src", "dst").agg(F.sum("nb").alias("m"))

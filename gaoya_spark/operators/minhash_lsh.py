@@ -57,8 +57,6 @@ from gaoya_spark.functions.signatures import (
 from gaoya_spark.functions.similarity import (
     minhash_similarity_packed,
     pack_signature_col,
-    sketch_eq_upper_bound,
-    sketch_signature_col,
 )
 
 
@@ -472,10 +470,9 @@ class MinHashLSH:
 
     # ----------------------------------------------------------- dedup pairs
     def _sid_bands(self, sig_df: DataFrame) -> DataFrame:
-        """(sid, bk): 8-byte id surrogate + 8-byte band key. The band index
-        seeds xxhash64, so one long key separates per-band key spaces (a
-        cross-band collision behaves exactly like an in-band collision:
-        removed by verify)."""
+        """(sid, bk) via JVM xxhash64 of each band slice, seeded by the band
+        index. No route uses it: it is the independent reference the
+        Arrow banding (_sid_bands_arrow) is tested against."""
         b, r = self.cfg.num_bands, self.cfg.band_width
         hashes = F.transform(
             F.sequence(F.lit(0), F.lit(b - 1)),
@@ -491,7 +488,7 @@ class MinHashLSH:
         matrix, reshape to (n, b, r), and each band slice folds through
         splitmix64 seeded by the band index — no per-band JVM array slices,
         no explode of array-valued columns. Measured ~1.5x the JVM banding
-        on the 100k-image corpus (tools/exp_band.py: 1.01s vs 1.54s MIN).
+        on the 100k-image corpus (1.01s vs 1.54s MIN, EXPERIMENTS.md).
 
         The key FUNCTION differs from _sid_bands (splitmix64 fold vs
         xxhash64) — both are internal bucket keys whose only contract is
@@ -556,32 +553,22 @@ class MinHashLSH:
         persist: bool = True,
         medium_bucket_size: int = 1024,
         gate: bool = False,
-        aggregate: bool = True,
-        arrow_bands: bool = True,
     ) -> DataFrame:
         """(src, dst, m) candidate pairs in sid space, m = #matching bands
-        (shared machinery: operators/_bucket_pairs.py). Buckets >
+        (shared machinery: operators/_bucket_pairs.py), banded by the
+        vectorized Arrow kernel (_sid_bands_arrow). Buckets >
         bucket_cap_hard are excluded — band_stats records hot/dropped
         counts. medium_bucket_size bounds the collapse+array middle tier
         (set equal to max_bucket_size to route everything hot through the
-        triangle block join). aggregate=False returns raw (src, dst)
-        emissions that may repeat across bands — no m column, no
-        candidate-set shuffle (see _bucket_pairs.py). arrow_bands uses the
-        vectorized Arrow band kernel (_sid_bands_arrow, ~1.5x the JVM
-        banding); band keys are internal, so candidate sets agree either
-        way up to hash collisions that the verify removes."""
-        bands = (
-            self._sid_bands_arrow(sig_df) if arrow_bands else self._sid_bands(sig_df)
-        )
+        triangle block join)."""
         return sid_pairs_from_buckets(
-            bands,
+            self._sid_bands_arrow(sig_df),
             array_bucket_limit=max_bucket_size,
             drop_cap=bucket_cap_hard,
             block_groups=block_groups,
             persist=persist,
             medium_bucket_limit=medium_bucket_size,
             gate=gate,
-            aggregate=aggregate,
         )
 
     def candidate_pairs(
@@ -683,13 +670,13 @@ class MinHashLSH:
         self,
         sig_df: DataFrame,
         max_rows: int,
-        auto: bool = False,
         persist: bool = False,
     ):
         """(broadcast, None) of (sids_sorted, signature matrix, ids_sorted)
-        for the numpy verify kernels, or (None, reason) when a guard trips:
-        - "over size estimate" (auto only): the trusted size estimate is
-          over _ESTIMATE_SLACK budgets, so no Spark job runs at all;
+        for the numpy kernels, or (None, reason) when a guard trips and the
+        JVM shuffle verify runs instead:
+        - "over size estimate": the trusted size estimate is over
+          _ESTIMATE_SLACK budgets, so no Spark job runs at all;
         - "over row bound": more rows than max_rows or the byte budget;
         - "sid collision": an xxhash64(id) collision (the sorted-adjacency
           check is free on the already-sorted array; searchsorted would
@@ -697,8 +684,6 @@ class MinHashLSH:
           substituting one doc's signature for another, where the JVM
           join path fans out both rows — routing collisions to the JVM
           path keeps the two verify paths from diverging).
-        A trip warns unless auto: there the JVM fallback is the expected
-        large-corpus path, not a surprise.
 
         The row bound costs one bounded collect when the trusted estimate
         is within budget. Otherwise (no trusted estimate, or one between
@@ -710,11 +695,15 @@ class MinHashLSH:
         filled hides it) and before the first job, so the count or
         collect fills the cache that the later readers of sig_df use.
 
+        Null-id rows count against the row bound but are dropped from the
+        payload: a null id names no document, so it joins no pair on any
+        route (every null hashes to one sid, which would also trip the
+        collision guard). sig_df itself is not filtered — a filter hides
+        the size estimate.
+
         Lifecycle: the broadcast must outlive the returned (lazy)
         DataFrames; like the persisted buckets, it is dropped by the
         ContextCleaner once the plan is no longer referenced."""
-        import warnings
-
         import numpy as np
 
         k = self.cfg.num_hashes
@@ -727,7 +716,7 @@ class MinHashLSH:
             return sig_df.select(F.xxhash64("id").alias("sid"), "sig", "id")
 
         est = self._size_estimate(collected())
-        if auto and est is not None and est > self._ESTIMATE_SLACK * budget:
+        if est is not None and est > self._ESTIMATE_SLACK * budget:
             return None, "over size estimate"
         if persist and est is None:
             sig_df.persist()
@@ -743,25 +732,13 @@ class MinHashLSH:
             tbl = sel.limit(eff_rows + 1).toArrow()
             over = tbl.num_rows > eff_rows
         if over:
-            if not auto:
-                warnings.warn(
-                    f"numpy_verify: signature table exceeds the broadcast-safe "
-                    f"bound {eff_rows} rows (max_rows={max_rows}, {budget}B / "
-                    f"{row_bytes}B rows); falling back to the JVM shuffle verify",
-                    stacklevel=4,
-                )
             return None, "over row bound"
+        if tbl.column("id").null_count:
+            tbl = tbl.filter(tbl.column("id").is_valid())
         sids = tbl.column("sid").to_numpy()
         order = np.argsort(sids)
         sids_sorted = sids[order]
         if len(sids) > 1 and (sids_sorted[1:] == sids_sorted[:-1]).any():
-            if not auto:
-                warnings.warn(
-                    "numpy_verify: xxhash64(id) sid collision detected; falling "
-                    "back to the JVM shuffle verify (which fans out collided "
-                    "rows instead of substituting one for the other)",
-                    stacklevel=4,
-                )
             return None, "sid collision"
         if len(sids):
             flat = tbl.column("sig").combine_chunks().flatten().to_numpy(
@@ -776,140 +753,17 @@ class MinHashLSH:
         )
         return bc, None
 
-    def _numpy_verify(
-        self,
-        cand: DataFrame,
-        sig_df: DataFrame,
-        threshold: float,
-        with_m: bool,
-        max_rows: int = 2_000_000,
-        bc=None,
-    ) -> DataFrame | None:
-        """EAGER + SMALL-TABLE-ONLY: collects the whole signature table to
-        the driver AT PLAN-CONSTRUCTION TIME and broadcasts it. Returns
-        None (caller falls back to the JVM shuffle verify) when the table
-        exceeds `max_rows` or a sid collision is detected — both checked
-        programmatically, not just documented.
-
-        (src, dst) sid-space pairs with exact sim >= threshold, verified
-        by a vectorized numpy kernel against a broadcast signature matrix
-        (input_hint: pandas/Arrow UDFs, no per-row Python).
-
-        The signature matrix (n x k ints, sorted by sid) ships once as a
-        SparkContext broadcast; each Arrow batch of candidates gathers both
-        rows per pair (np.searchsorted on the sorted sid column — exact,
-        every candidate sid exists by construction) and counts equal
-        positions in one vectorized compare. Versus the two broadcast hash
-        joins this (a) builds ONE broadcast payload instead of two
-        non-reused 85MB hash relations (AQE does not reuse the exchange —
-        measured), and (b) moves only 24-byte candidate rows through Arrow
-        instead of materializing 2x800B signature arrays per candidate in
-        the join output — measured 1.6x faster on the 100k-image bench
-        (np 3.59s vs jvm 5.68s MIN, counts equal; EXPERIMENTS.md ledger).
-
-        SCALE GUARD: like broadcast_sigs, this requires the signature
-        table to fit in one broadcast. max_rows (default 2M ~ 1.6 GB at
-        k=200/int32) is enforced with a count on the (persisted) table;
-        over the bound the caller's JVM shuffle verify takes over, so a
-        10^12-row caller gets the scalable plan, not a driver OOM.
-
-        SID-COLLISION GUARD: np.searchsorted resolves a duplicated sid
-        (xxhash64(id) collision, ~n^2/2^65) to its first occurrence, which
-        would silently substitute one doc's signature for another — the
-        JVM join path instead fans out both rows. Sorted-adjacency check
-        (free on the already-sorted array) routes collisions to the JVM
-        path so the two verify paths never diverge.
-
-        with_m: cand carries the exact band-match multiplicity m — pairs
-        with m >= ceil(t*k/r) are above threshold by construction (bands
-        are disjoint slices) and skip the matrix gather entirely.
-
-        The broadcast also carries the sid-sorted original-id array, so
-        survivors get their (least, greatest) original ids attached inside
-        the kernel — no separate sid->id broadcast joins. Python id
-        comparison is code-point order, which equals Spark's binary UTF8
-        ordering (UTF-8 is order-preserving), so least/greatest agree.
-        When with_m=False (raw emissions) the kernel emits sid pairs, the
-        narrow 16-byte dropDuplicates exchange runs, and a second tiny
-        kernel reusing the SAME broadcast attaches ids. Matrix build is
-        Arrow-native: toArrow + ListArray.flatten + reshape — no per-row
-        Python list materialization.
-        """
-        import numpy as np
-        import pandas as pd
-
-        k = self.cfg.num_hashes
-        need = _min_eq_count(threshold, k)
-        m_sure = _m_sure_bands(threshold, k, self.cfg.band_width)
-        id_sql = sig_df.schema["id"].dataType.simpleString()
-        if bc is None:
-            bc, _ = self._build_sig_broadcast(sig_df, max_rows)
-        if bc is None:
-            return None
-
-        def attach(ids_b, si, di):
-            a, b = ids_b[si], ids_b[di]
-            lo = np.minimum(a, b)
-            hi = np.maximum(a, b)
-            return pd.DataFrame({"src": lo, "dst": hi})
-
-        if with_m:
-            # aggregated candidates: verify + id attach in ONE kernel pass
-            def fn(it):
-                sids_b, mat_b, ids_b = bc.value
-                for b in it:
-                    src = b["src"].to_numpy(dtype=np.int64)
-                    dst = b["dst"].to_numpy(dtype=np.int64)
-                    sure = b["m"].to_numpy(dtype=np.int64) >= m_sure
-                    idx = np.nonzero(~sure)[0]
-                    si = np.searchsorted(sids_b, src[idx])
-                    di = np.searchsorted(sids_b, dst[idx])
-                    eq = _eq_counts_chunked(mat_b, si, di)
-                    keep = sure.copy()
-                    keep[idx] = eq >= need
-                    yield attach(
-                        ids_b,
-                        np.searchsorted(sids_b, src[keep]),
-                        np.searchsorted(sids_b, dst[keep]),
-                    )
-
-            return cand.mapInPandas(fn, f"src {id_sql}, dst {id_sql}")
-
-        # raw emissions: verify in sid space, dedupe the narrow 16-byte
-        # survivors, then attach ids in a second kernel on the same
-        # (already-shipped) broadcast. Explicit p-partition repartition
-        # on the dedup key (reused by the groupBy) keeps the attach
-        # kernel at p python tasks under cached/non-AQE compilation —
-        # see _replicated_dedup.
-        p = sig_df.sparkSession.sparkContext.defaultParallelism or 8
-        return (
-            cand.mapInPandas(_pair_verify_fn(bc, need), "src long, dst long")
-            .repartition(p, "src", "dst")
-            .dropDuplicates(["src", "dst"])
-            .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}")
-        )
-
-    # adaptive-default cutover: prefer the replicated kernel only while
+    # replicated/fused cutover: prefer the replicated kernel only while
     # the per-task replication work (full key fold + b argsorts, run
     # concurrently in EVERY task slot) is trivial. Past this bound the
     # concurrent replicas contend for the one memory bus of a task slot's
     # host and the kernel's wall time becomes load-dependent (measured on
     # the 5M-key img corpus: min 2.9s on a quiet box, min 5.3/med 5.9 on
     # a contended one, vs fused's stable 2.7-3.5) — the fused kernel
-    # takes over there. Explicit numpy_verify="replicated" still runs up
-    # to _REPL_MAX_KEYS.
+    # takes over there. It also bounds the replicated kernel's per-task
+    # memory: the (rows x num_bands) key matrix, the flat member index and
+    # the fold/sort buffers peak at roughly 3-4x keys*8B (~64MB here).
     _REPL_PREFER_KEYS = 2_000_000
-
-    # replicated-kernel bound: every task materializes the full (rows x
-    # num_bands) band-key matrix (8B/key), the flat member index of all
-    # kept buckets (up to another 8B/key), and transient fold/sort
-    # buffers — peak per-task memory is roughly 3-4x keys*8B, i.e. ~1GB
-    # at this 32M-key cap. Real executors must budget that per task
-    # slot; beyond the cap an explicit numpy_verify="replicated" falls
-    # back to the JVM shuffle verify (the adaptive chooser has switched to
-    # fused long before), whose per-task memory does not scale with the
-    # corpus.
-    _REPL_MAX_KEYS = 32_000_000
 
     def _replicated_dedup(
         self,
@@ -917,28 +771,23 @@ class MinHashLSH:
         threshold: float,
         bc,
         bucket_cap_hard: int = 100_000,
-        parallelism: int | None = None,
-    ) -> DataFrame | None:
+    ) -> DataFrame:
         """Fully-replicated dedup (see _replicated_dedup_fn): every task
         rebuilds the corpus's bucket structure from the broadcast matrix
         and verifies its hash-partition of DISTINCT member sets; the only
         exchanges in the whole plan are the survivor dropDuplicates and
         nothing else (guide §2.4 — the shuffle-free extreme of the
         broadcast-verify family). Identical-set collapse is free
-        (assignment is by 128-bit set identity), so it subsumes both the
-        raw pipeline's minimal machinery and the fused path's collapse.
+        (assignment is by 128-bit set identity), so it subsumes the fused
+        path's collapse.
 
         bc is the guarded broadcast from _build_sig_broadcast — the plan
-        never reads sig_df again (dedup_pairs drops its cache). Returns None
-        when the key count exceeds _REPL_MAX_KEYS. parallelism defaults to
-        the session's defaultParallelism — scale-adaptive, never a local
-        constant."""
-        n = len(bc.value[0])
+        never reads sig_df again (dedup_pairs drops its cache). The task
+        count is the session's defaultParallelism — scale-adaptive, never
+        a local constant."""
         b, r = self.cfg.num_bands, self.cfg.band_width
-        if n * b > self._REPL_MAX_KEYS:
-            return None
         spark = sig_df.sparkSession
-        p = parallelism or spark.sparkContext.defaultParallelism or 8
+        p = spark.sparkContext.defaultParallelism or 8
         need = _min_eq_count(threshold, self.cfg.num_hashes)
         id_sql = sig_df.schema["id"].dataType.simpleString()
         base = spark.range(0, p, 1, p)
@@ -997,18 +846,19 @@ class MinHashLSH:
         are simply verified — measured cheaper than aggregating to learn
         m. bc is the guarded broadcast from _build_sig_broadcast; the
         banding below reads sig_df a second time, from the cache
-        dedup_pairs put on it before that collect.
+        dedup_pairs put on it before that collect, without the null-id
+        rows the broadcast leaves out.
 
-        Trade-off vs the aggregated path: survivors replace candidates in
-        the one remaining exchange, so this wins when true-pair density is
-        low-to-moderate (web-crawl dedup); a corpus that is mostly one
+        Trade-off vs aggregated candidates: survivors replace candidates
+        in the one remaining exchange, so this wins when true-pair density
+        is low-to-moderate (web-crawl dedup); a corpus that is mostly one
         giant near-dup family (survivor emissions >> candidates after
-        collapse) would prefer aggregated mode."""
+        collapse) would prefer the JVM route's aggregation."""
         k = self.cfg.num_hashes
         need = _min_eq_count(threshold, k)
         id_sql = sig_df.schema["id"].dataType.simpleString()
         buckets = (
-            self._sid_bands_arrow(sig_df)
+            self._sid_bands_arrow(sig_df.where(F.col("id").isNotNull()))
             .groupBy("bk")
             .agg(F.array_sort(F.collect_list("sid")).alias("ids"))
             .where(F.size("ids").between(2, bucket_cap_hard))
@@ -1075,12 +925,17 @@ class MinHashLSH:
             .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}")
         )
 
+    # the bucket-tier keywords dedup_pairs accepts through **kw: the
+    # sid_candidates knobs, which the numpy kernels read where they apply
+    _TIER_KW = frozenset({
+        "max_bucket_size", "medium_bucket_size", "bucket_cap_hard",
+        "block_groups", "persist", "gate",
+    })
+
     def _broadcast_dedup(
         self,
         sig_df: DataFrame,
         threshold: float,
-        numpy_verify: bool | str | None,
-        raw_candidates: bool,
         max_rows: int,
         kw: dict,
     ) -> DataFrame | None:
@@ -1089,78 +944,41 @@ class MinHashLSH:
         self.last_route either way.
 
         Computed signatures are persisted before the first job of the
-        broadcast build (see _build_sig_broadcast): the JVM, fused, agg
-        and raw routes read sig_df again, and without the cache they would
-        be computed twice. The replicated route never reads it again, so
+        broadcast build (see _build_sig_broadcast): the JVM and fused
+        routes read sig_df again, and without the cache they would be
+        computed twice. The replicated route never reads it again, so
         there the cache is dropped as soon as the route is known."""
-        # True is the same size-based routing as None (kept for existing
-        # callers); raw_candidates=True keeps meaning the "raw" strategy
-        auto = numpy_verify is None or numpy_verify is True
-        nv = ("raw" if raw_candidates else None) if auto else numpy_verify
-        if nv not in (None, "agg", "raw", "fused", "replicated"):
-            raise ValueError(
-                f"numpy_verify must be None | bool | 'agg' | 'raw' | 'fused' "
-                f"| 'replicated', got {numpy_verify!r}"
-            )
         may_cache = kw.get("persist", True) and not _is_materialized(sig_df)
-        # ALL numpy strategies share the same broadcast + guards, built
-        # once here; a guard trip goes STRAIGHT to the JVM shuffle verify
-        bc, why = self._build_sig_broadcast(
-            sig_df, max_rows, auto=auto, persist=may_cache
-        )
+        bc, why = self._build_sig_broadcast(sig_df, max_rows, persist=may_cache)
         if bc is None:
             self.last_route = ("jvm", why)
             return None
-        why = "fits broadcast" if nv is None else "requested"
-        if nv is None:
-            # adaptive: the replicated kernel while replication is trivial
-            # (250k keys: ~10ms/task) — it deletes the whole bucket
-            # dataflow; measured best (2.7s vs fused 5.2) to tied (6.5 vs
-            # 6.6) on the 5k-doc bench corpus. Past _REPL_PREFER_KEYS the
-            # concurrent replicas contend for one memory bus (5M keys:
-            # min 5.3/med 5.9s vs fused min 2.7/med 3.5 interleaved), so
-            # the fused kernel takes over.
-            keys = len(bc.value[0]) * self.cfg.num_bands
-            nv = "replicated" if keys <= self._REPL_PREFER_KEYS else "fused"
-        cap = kw.get("bucket_cap_hard", 100_000)
-        if nv == "replicated":
-            out = self._replicated_dedup(sig_df, threshold, bc, bucket_cap_hard=cap)
-            if out is None:
-                self.last_route = ("jvm", "over key bound")
-                return None
+        if len(bc.value[0]) * self.cfg.num_bands <= self._REPL_PREFER_KEYS:
+            # the replicated kernel while replication is trivial (250k
+            # keys: ~10ms/task) — it deletes the whole bucket dataflow;
+            # measured best (2.7s vs fused 5.2) to tied (6.5 vs 6.6) on
+            # the 5k-doc bench corpus
             if may_cache and _is_materialized(sig_df):
                 sig_df.unpersist()
-            self.last_route = ("replicated", why)
-            return out
-        self.last_route = (nv, why)
-        if nv == "fused":
-            # fused bucket->pair-gen->verify kernel (see _fused_dedup): no
-            # candidate materialization at all — only survivors shuffle
-            return self._fused_dedup(
-                sig_df,
-                threshold,
-                bc,
-                max_bucket_size=kw.get("max_bucket_size", 16),
-                medium_bucket_size=kw.get("medium_bucket_size", 1024),
-                bucket_cap_hard=cap,
-                block_groups=kw.get("block_groups", 16),
-                persist=kw.get("persist", True),
+            self.last_route = ("replicated", "fits broadcast")
+            return self._replicated_dedup(
+                sig_df, threshold, bc,
+                bucket_cap_hard=kw.get("bucket_cap_hard", 100_000),
             )
-        # numpy broadcast verify over JVM candidates (see _numpy_verify):
-        # the kernel attaches original ids itself; raw mode skips the
-        # candidate m-aggregation (survivors dedupe at the end)
-        cand = self.sid_candidates(sig_df, aggregate=(nv == "agg"), **kw)
-        return self._numpy_verify(cand, sig_df, threshold, with_m=(nv == "agg"), bc=bc)
+        # fused bucket->pair-gen->verify kernel (see _fused_dedup): no
+        # candidate materialization at all — only survivors shuffle
+        self.last_route = ("fused", "fits broadcast")
+        return self._fused_dedup(
+            sig_df, threshold, bc,
+            **{key: v for key, v in kw.items() if key != "gate"},
+        )
 
     def dedup_pairs(
         self,
         sig_df: DataFrame,
         threshold: float | None = None,
         keep_sim: bool = True,
-        broadcast_sigs: bool = False,
-        raw_candidates: bool = False,
-        numpy_verify: bool | str | None = None,
-        sketch_prefilter: bool = False,
+        numpy_verify: bool = True,
         numpy_max_rows: int = 2_000_000,
         **kw,
     ) -> DataFrame:
@@ -1169,21 +987,31 @@ class MinHashLSH:
         ids are attached in the same join that brings the signatures, so the
         only shuffles carrying ids/signatures are over final candidates.
 
-        ROUTING (keep_sim=False): the route is picked by data size, not by
-        a flag. With the default numpy_verify=None, a signature table that
-        fits one broadcast (numpy_max_rows rows and the 512MB byte budget,
-        no sid collision) runs the exact numpy broadcast kernels — the
-        replicated kernel up to _REPL_PREFER_KEYS band keys, the fused
-        kernel above. Any other table runs the JVM shuffle verify below,
-        silently: that is the expected large-corpus path. A table whose
-        trusted size estimate is already over twice the budget goes to the
-        JVM route without a Spark job, and one the estimate cannot place
-        is row-counted before anything is collected, so an over-bound
-        table never ships rows to the driver. numpy_verify=False forces
-        the JVM route at any size; keep_sim=True always takes it (the numpy
-        kernels return pairs only). Every route returns the same pair set.
-        The choice is recorded as self.last_route = (route, reason), e.g.
-        ("replicated", "fits broadcast") or ("jvm", "over row bound").
+        ROUTING is by data size, not by a flag. With keep_sim=False and
+        the default numpy_verify=True, a signature table that fits one
+        broadcast (numpy_max_rows rows and the 512MB byte budget, no sid
+        collision) runs an exact numpy kernel against the broadcast
+        signature matrix: the replicated kernel up to _REPL_PREFER_KEYS
+        band keys, the fused kernel above. Any other table runs the JVM
+        shuffle verify below, the expected large-corpus path. A table
+        whose trusted size estimate is already over twice the budget goes
+        to the JVM route without a Spark job, and one the estimate cannot
+        place is row-counted before anything is collected, so an
+        over-bound table never ships rows to the driver.
+        numpy_verify=False forces the JVM route at any size; keep_sim=True
+        always takes it (the numpy kernels return pairs only). Every route
+        returns the same pair set, and a row with a null id is in no pair
+        on any route. The choice is recorded as self.last_route = (route,
+        reason), e.g. ("replicated", "fits broadcast") or ("jvm", "over
+        row bound").
+
+        NOTE: building the broadcast runs a Spark job and a driver collect
+        of the signature table IMMEDIATELY (at plan-construction time),
+        unlike the JVM route, which stays lazy until an action. Computed
+        signatures (no trusted size estimate) are persisted before that
+        collect, so they are computed once on every route; the replicated
+        route, which never reads sig_df again, drops the cache. A stored
+        or cached table is read again instead; the JVM route caches it.
 
         keep_sim=False drops the sim column and, on the JVM route, enables
         the m-band verify prefilter: bands are disjoint signature slices,
@@ -1194,135 +1022,33 @@ class MinHashLSH:
         zip_with verify runs on the unsure remainder. On dup-dense corpora
         (the web-crawl case) a large share of true pairs clear the bound.
 
-        raw_candidates=True (keep_sim=False only; ignored otherwise)
-        skips the candidate-set aggregation entirely: raw per-band pair
-        emissions stream straight into the broadcast verify and survivors
-        are deduped at the end. Trades ~sum(m) extra (cheap, map-side)
-        verify evaluations for the multi-million-row candidate shuffle
-        and forfeits the m-band prefilter — the win on corpora where
-        candidates are mostly singletons (m=1). On a broadcast-fit table
-        it selects the numpy "raw" strategy.
-
-        broadcast_sigs=True hints the verify joins to broadcast the PACKED
-        SIGNATURE side. The candidate set usually has more ROWS but fewer
-        BYTES than the signature maps, so AQE's byte-based choice can
-        broadcast the candidates — a serial multi-million-entry hash build
-        on the driver — instead of the small-row-count signature maps
-        (measured on the 100k-image bench: AQE built a 6.5M-entry relation
-        to probe it with 100k rows). Only set it when the signature table
-        is known to fit a broadcast (~<=150k rows at k=200); at 10^12 rows
-        leave it False and both joins become shuffle joins.
-
-        numpy_verify (keep_sim=False only; a truthy value raises
-        otherwise) picks the route explicitly. Values:
-          None    — AUTO (default): size-based routing as above. Among the
-                    numpy kernels, "replicated" while the per-task
-                    replication work is trivial (rows * num_bands <=
-                    _REPL_PREFER_KEYS), "fused" past that bound — fused
-                    measured fastest or tied on both bench densities once
-                    replication starts contending for memory bandwidth
-                    (see _REPL_PREFER_KEYS comment).
-          True    — the same as None (kept for existing callers).
-          False   — the JVM shuffle verify at any size.
-          "replicated" — every task rebuilds the corpus's bucket
-                    structure from the broadcast matrix and verifies its
-                    hash-partition of DISTINCT member sets
-                    (_replicated_dedup): the only exchange in the plan
-                    is the survivor dropDuplicates. Bounded by
-                    _REPL_MAX_KEYS on top of the broadcast guards.
-          "agg"   — aggregated candidates + m-band prefilter kernel (the
-                    pre-r6 numpy_verify=True plan).
-          "raw"   — raw band emissions stream into the verify kernel,
-                    survivors dedupe at the end (= the default with
-                    raw_candidates=True, kept for back-compat).
-          "fused" — pair generation and verify fuse into one kernel over
-                    the bucket arrays (_fused_dedup); no candidate set is
-                    ever materialized.
-        NOTE: building the broadcast runs a Spark job and driver collect
-        of the signature table IMMEDIATELY (at plan-construction time),
-        unlike the JVM route, which stays lazy until an action; a row
-        count runs first unless the size estimate already fits the budget
-        (_build_sig_broadcast). Guarded: when the table exceeds the
-        broadcast-safe row bound, or a sid collision is detected, every
-        numpy strategy falls back to the JVM shuffle verify (same
-        results, scalable plan) — with a warning when a strategy was
-        named explicitly. Computed signatures (no trusted size estimate)
-        are persisted before that collect, so they are computed once on
-        every route; the replicated route, which never reads sig_df
-        again, drops the cache. A stored or cached table is read again
-        instead; the JVM route caches it as before.
-
-        sketch_prefilter=True (OPT-IN; JVM shuffle-verify path only —
-        the numpy/fused kernels already verify map-side) prunes
-        candidates with a 4-bit-per-position signature sketch join
-        (ceil(k/16) longs vs the ~k/2-long packed signatures) before the
-        full-signature verify joins. The nibble-equality count is an
-        exact upper bound on the equal-position count, so no pair at or
-        above threshold can be pruned — results are identical either
-        way. WHEN TO TURN IT ON: only in a genuinely shuffle-join
-        regime, i.e. when the signature tables are too big to broadcast
-        and the verify joins shuffle ~800B/candidate — there the sketch
-        cuts the dominant shuffle bytes ~8x. Default OFF because in the
-        broadcast regime (every size a single box can hold: AQE
-        broadcasts the signature relations, candidates never shuffle)
-        the sketch is pure per-candidate overhead plus two extra
-        broadcast builds — measured 2-3x SLOWER at 400k images,
-        interleaved MIN 258s (off) vs 833s (on) at local[8], pairs
-        identical (EXPERIMENTS.md round 6)."""
-        if numpy_verify and keep_sim:
-            raise ValueError(
-                "numpy_verify requires keep_sim=False (the kernel returns "
-                "pairs only; pass keep_sim=False or drop numpy_verify)"
-            )
+        **kw takes the bucket-tier knobs of sid_candidates
+        (max_bucket_size, medium_bucket_size, bucket_cap_hard,
+        block_groups, persist, gate); any other keyword raises TypeError
+        on every route."""
+        unknown = sorted(set(kw) - self._TIER_KW)
+        if unknown:
+            raise TypeError(f"dedup_pairs() got unexpected keyword arguments {unknown}")
+        if not isinstance(numpy_verify, bool):
+            raise TypeError(f"numpy_verify must be a bool, got {numpy_verify!r}")
         t = self.cfg.threshold if threshold is None else threshold
         if keep_sim:
             self.last_route = ("jvm", "keep_sim")
-        elif numpy_verify is False:
+        elif not numpy_verify:
             self.last_route = ("jvm", "requested")
         else:
-            out = self._broadcast_dedup(
-                sig_df, t, numpy_verify, raw_candidates, numpy_max_rows, kw
-            )
+            out = self._broadcast_dedup(sig_df, t, numpy_max_rows, kw)
             if out is not None:
                 return out
         if kw.get("persist", True) and not _is_materialized(sig_df):
             sig_df = sig_df.persist()
-        aggregated = not (raw_candidates and not keep_sim)
-        cand = self.sid_candidates(sig_df, aggregate=aggregated, **kw)
+        # a null id names no document: xxhash64 maps every null to one
+        # sid, and least/greatest would pair the other id with itself
+        sig_df = sig_df.where(F.col("id").isNotNull())
+        cand = self.sid_candidates(sig_df, **kw)
         k = self.cfg.num_hashes
         r = self.cfg.band_width
         m_sure = _m_sure_bands(t, k, r)  # m >= m_sure  =>  sim >= m*r/k >= t
-        need = _min_eq_count(t, k)
-        if sketch_prefilter and need > 0:
-            # SKETCH PREFILTER (guide §2.3/§3.2 — shuffle a lightweight
-            # proxy first): candidates join 4-bit-per-position sketches
-            # (ceil(k/16) longs, 8x fewer bytes than the packed
-            # signatures) and pairs whose nibble-equality UPPER BOUND
-            # already fails the threshold are dropped before the
-            # full-signature joins — at 1/16 collision per unequal
-            # position the bound prunes essentially every false
-            # candidate, so the 800B/row signature joins below run over
-            # survivors (~true pairs) instead of the full candidate set.
-            # Exact: value-equal positions are always nibble-equal, so
-            # bound < need implies eq < need implies sim < t (and a pair
-            # with m matching bands has eq >= m*r, so no sure pair can
-            # be dropped). Semantics of every branch unchanged.
-            sk = sig_df.select(
-                F.xxhash64("id").alias("sid"),
-                sketch_signature_col(F.col("sig"), k).alias("sk"),
-            )
-            ka = sk.select(F.col("sid").alias("src"), F.col("sk").alias("ska"))
-            kb = sk.select(F.col("sid").alias("dst"), F.col("sk").alias("skb"))
-            bound_ok = sketch_eq_upper_bound(F.col("ska"), F.col("skb"), k) >= need
-            if aggregated:
-                # short-circuit: provably-above-threshold pairs skip the
-                # sketch compare (they could never be pruned anyway)
-                bound_ok = (F.col("m") >= m_sure) | bound_ok
-            cand = (
-                cand.join(ka, "src").join(kb, "dst")
-                .where(bound_ok)
-                .drop("ska", "skb")
-            )
         # signatures ride the verify joins packed two-per-long: half the
         # broadcast build bytes, half the kernel elements (similarity.py)
         s = sig_df.select(
@@ -1335,8 +1061,6 @@ class MinHashLSH:
         vb = s.select(
             F.col("sid").alias("dst"), F.col("id").alias("dst_id"), F.col("psig").alias("pb")
         )
-        if broadcast_sigs:
-            va, vb = F.broadcast(va), F.broadcast(vb)
         pair_ids = [
             F.least("src_id", "dst_id").alias("src"),
             F.greatest("src_id", "dst_id").alias("dst"),
@@ -1348,21 +1072,6 @@ class MinHashLSH:
                 .withColumn("sim", minhash_similarity_packed("pa", "pb", k, self.cfg.hash_size))
                 .where(F.col("sim") >= t)
                 .select(*pair_ids, "sim")
-            )
-        if raw_candidates:
-            # raw mode: candidates arrive unaggregated (a pair repeats up
-            # to once per matching band), so there is no m column and no
-            # full-candidate-set shuffle — every raw emission streams the
-            # map-side broadcast verify, and only SURVIVORS (a few % of
-            # candidates) pay a shuffle in the final dropDuplicates. The
-            # extra verify work is sum(m)-over-true-pairs, cheap under the
-            # flat kernel; the saved shuffle is the whole candidate set.
-            return (
-                cand.join(va, "src")
-                .join(vb, "dst")
-                .where(minhash_similarity_packed("pa", "pb", k, self.cfg.hash_size) >= t)
-                .select(*pair_ids)
-                .dropDuplicates(["src", "dst"])
             )
         # single pass, short-circuit OR: the packed verify evaluates only
         # for rows failing the m bound (a two-branch union would recompute
@@ -1384,15 +1093,8 @@ class MinHashLSH:
         keep_sim: bool = False,
         sorted_by_similarity: bool = False,
         index_bands: DataFrame | None = None,
-        sketch_prefilter: bool = False,
     ) -> DataFrame:
         """Q2/Q4: (qid, id[, sim]) matches above threshold.
-
-        sketch_prefilter: opt-in 4-bit sketch candidate pruning before
-        the signature joins — same exact-bound contract and the same
-        regime advice as dedup_pairs (only worth it when the signature
-        tables cannot broadcast; measured 3.31s off vs 5.14s on for a
-        500-probe query against the 5k-doc index, results identical).
 
         probe_sigs: (id, sig) — renamed internally to qid. The probe side is
         banded and equi-joined against the index bands; when the probe set
@@ -1418,17 +1120,7 @@ class MinHashLSH:
         rows lose recall).
         """
         t = self.cfg.threshold if threshold is None else threshold
-        # the >= bound is valid for strict '>' too (a weaker prefilter
-        # than the final sim comparison can only keep extra candidates,
-        # which the exact filter below then drops)
-        out = self._query_scored(
-            index_sigs, probe_sigs, index_bands,
-            min_eq=(
-                _min_eq_count(t, self.cfg.num_hashes)
-                if sketch_prefilter
-                else None
-            ),
-        )
+        out = self._query_scored(index_sigs, probe_sigs, index_bands)
         cond = F.col("sim") > t if strict else F.col("sim") >= t
         out = out.where(cond)
         cols = (
@@ -1446,20 +1138,13 @@ class MinHashLSH:
         index_sigs: DataFrame,
         probe_sigs: DataFrame,
         index_bands: DataFrame | None = None,
-        min_eq: int | None = None,
     ) -> DataFrame:
         """(qid, id, sim) for all probe-vs-index band candidates — the
         bipartite variant of the dedup candidate machinery (one side-tagged
         groupBy, cross pairs in sid space, ids/signatures attached only to
         candidates). index_bands: precomputed (sid, bk) index banding
         (see query); must use the same band-key function, so pass
-        sid_bands() output, never a hand-rolled table.
-
-        min_eq: when the caller will discard sim below min_eq/k (query's
-        threshold filter), candidates are pruned with the 4-bit sketch
-        upper bound BEFORE the full-signature joins — same exact-bound
-        argument as dedup_pairs' sketch prefilter; callers that keep every
-        score (query_top_k) pass None."""
+        sid_bands() output, never a hand-rolled table."""
         ib = (
             index_bands.select("sid", "bk")
             if index_bands is not None
@@ -1467,23 +1152,6 @@ class MinHashLSH:
         )
         cand = sid_cross_pairs_from_buckets(self._sid_bands_arrow(probe_sigs), ib)
         k = self.cfg.num_hashes
-        if min_eq is not None and min_eq > 0:
-            kq = probe_sigs.select(
-                F.xxhash64("id").alias("qid"),
-                sketch_signature_col(F.col("sig"), k).alias("skq"),
-            )
-            ki = index_sigs.select(
-                F.xxhash64("id").alias("id"),
-                sketch_signature_col(F.col("sig"), k).alias("ski"),
-            )
-            cand = (
-                cand.join(kq, "qid")
-                .join(ki, "id")
-                .where(
-                    sketch_eq_upper_bound(F.col("skq"), F.col("ski"), k) >= min_eq
-                )
-                .drop("skq", "ski")
-            )
         qs = probe_sigs.select(
             F.xxhash64("id").alias("qid"),
             F.col("id").alias("qid_orig"),

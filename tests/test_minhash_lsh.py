@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from gaoya_spark.config import MinHashConfig, TokenizerSpec
 from gaoya_spark.fixtures import corpus5_df, token_vectors_pdf
+from gaoya_spark.operators._bucket_pairs import sid_pairs_from_buckets
 from gaoya_spark.operators.minhash_lsh import MinHashLSH
 from gaoya_spark.params import calculate_b_and_r
 
@@ -19,6 +20,42 @@ def corpus5(spark):
     sigs = lsh.signatures(corpus5_df(spark), "id", "text").cache()
     sigs.count()
     return lsh, sigs
+
+
+# Every dedup_pairs(keep_sim=False) route as (options, route name). Options
+# are dedup_pairs keywords; a leading "_" names a MinHashLSH class constant
+# pinned for the call. In order: the forced JVM shuffle verify, the
+# replicated kernel (the size-routed default at test sizes), the fused
+# kernel (no table is small enough to replicate), the fused kernel with
+# its medium and triangle tiers forced, and the guarded JVM fallback (the
+# row bound trips).
+ROUTES = [
+    ({"numpy_verify": False}, "jvm"),
+    ({}, "replicated"),
+    ({"_REPL_PREFER_KEYS": 0}, "fused"),
+    ({"_REPL_PREFER_KEYS": 0, "max_bucket_size": 2, "medium_bucket_size": 3}, "fused"),
+    ({"numpy_max_rows": 1}, "jvm"),
+]
+
+
+@pytest.fixture(params=ROUTES)
+def strategy(request):
+    return request.param
+
+
+def _dedup(lsh, sigs, opts, monkeypatch, **kw):
+    """lsh.dedup_pairs(sigs, keep_sim=False) on the route that opts names
+    (a ROUTES entry's options), plus extra dedup_pairs keywords. The route
+    is chosen inside the call, so the pins are undone on return."""
+    opts = dict(opts, **kw)
+    with monkeypatch.context() as mp:
+        for name in [o for o in opts if o.startswith("_")]:
+            mp.setattr(MinHashLSH, name, opts.pop(name))
+        return lsh.dedup_pairs(sigs, keep_sim=False, **opts)
+
+
+def _pair_set(df):
+    return {(r["src"], r["dst"]) for r in df.collect()}
 
 
 def _matches(df, qid):
@@ -53,67 +90,25 @@ def test_corpus5_dedup_pairs(spark, corpus5):
     assert got == expected
 
 
-def test_dedup_pairs_broadcast_sigs_identical(spark, corpus5):
-    """broadcast_sigs is a pure plan hint (build side of the verify
-    joins); the pair set must be identical with and without it, for both
-    keep_sim settings."""
+def test_dedup_pairs_numpy_verify_identical(spark, corpus5, monkeypatch):
+    """Every route — the numpy broadcast kernels (exact same eq-count
+    semantics as the packed JVM verify), the forced JVM route and the
+    guarded fallback — returns the verified keep_sim=True pair set, and
+    last_route names the route that ran."""
     lsh, sigs = corpus5
-    base = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sigs).collect()}
-    hinted = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, broadcast_sigs=True).collect()
-    }
-    assert hinted == base
-    fast = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False, broadcast_sigs=True).collect()
-    }
-    assert fast == base
+    base = _pair_set(lsh.dedup_pairs(sigs))
+    for opts, route in ROUTES:
+        assert _pair_set(_dedup(lsh, sigs, opts, monkeypatch)) == base, opts
+        assert lsh.last_route[0] == route
 
 
-def test_dedup_pairs_raw_candidates_identical(spark, corpus5):
-    """raw_candidates skips the candidate aggregation (pairs repeat per
-    band, verified map-side, deduped at the end) — the pair set must be
-    identical to the aggregated + m-prefilter path."""
-    lsh, sigs = corpus5
-    base = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sigs).collect()}
-    raw = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(
-            sigs, keep_sim=False, raw_candidates=True, numpy_verify=False
-        ).collect()
-    }
-    assert raw == base
-
-
-def test_dedup_pairs_numpy_verify_identical(spark, corpus5):
-    """numpy_verify replaces the signature-verify joins with the
-    vectorized broadcast kernel — exact same eq-count semantics, so the
-    pair set must be identical in both aggregated (m-prefilter) and
-    raw-candidates modes."""
-    lsh, sigs = corpus5
-    base = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sigs).collect()}
-    np_agg = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=True).collect()
-    }
-    assert np_agg == base
-    np_raw = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(
-            sigs, keep_sim=False, numpy_verify=True, raw_candidates=True
-        ).collect()
-    }
-    assert np_raw == base
-
-
-def test_dedup_pairs_numpy_verify_nonascii_ids(spark):
-    """The numpy kernel orders each output pair by comparing original ids
+def test_dedup_pairs_numpy_verify_nonascii_ids(spark, monkeypatch):
+    """The numpy kernels order each output pair by comparing original ids
     in Python (code-point order), claiming equality with Spark's binary
     UTF8 least/greatest — UTF-8 is order-preserving, so the claim must
     hold beyond ASCII. Clone docs carry ids mixing accents, CJK, and
     astral-plane emoji (surrogate-pair territory in UTF-16, where naive
-    orderings diverge), and the numpy pair set must equal the default
+    orderings diverge), and every route's pair set must equal the default
     JVM path's exactly."""
     ids = ["zz~ascii", "é-accent", "中文-cjk", "\U0001f600-emoji", "Zupper"]
     rows = [(i, "common shared near duplicate text body here") for i in ids]
@@ -121,22 +116,16 @@ def test_dedup_pairs_numpy_verify_nonascii_ids(spark):
     cfg = MinHashConfig(num_bands=42, band_width=3, threshold=0.5, tokenizer=WORD)
     lsh = MinHashLSH(cfg)
     sigs = lsh.signatures(df, "id", "text").cache()
-    base = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sigs).collect()}
+    base = _pair_set(lsh.dedup_pairs(sigs))
     assert len(base) == 10  # all 5 clones pair up
-    for raw in (False, True):
-        got = {
-            (r["src"], r["dst"])
-            for r in lsh.dedup_pairs(
-                sigs, keep_sim=False, numpy_verify=True, raw_candidates=raw
-            ).collect()
-        }
-        assert got == base
+    for opts, _ in ROUTES:
+        assert _pair_set(_dedup(lsh, sigs, opts, monkeypatch)) == base, opts
 
 
 @pytest.mark.parametrize("hash_size", [32, 64])
-def test_dedup_pairs_numpy_verify_random_corpus(spark, hash_size):
-    """Seeded random corpus equivalence: the numpy kernel must produce
-    the default JVM path's exact pair set for BOTH matrix dtypes —
+def test_dedup_pairs_numpy_verify_random_corpus(spark, hash_size, monkeypatch):
+    """Seeded random corpus equivalence: every route must produce the
+    default JVM path's exact pair set for BOTH matrix dtypes —
     hash_size<64 runs the int32 branch, hash_size=64 the int64 branch
     (the 2^61-1 MinHasher64V1 formula, values above 2^32) — and for
     long (non-string) ids, over a graph with partial overlaps around
@@ -161,16 +150,46 @@ def test_dedup_pairs_numpy_verify_random_corpus(spark, hash_size):
     )
     lsh = MinHashLSH(cfg)
     sigs = lsh.signatures(df, "id", "text").cache()
-    base = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sigs).collect()}
+    base = _pair_set(lsh.dedup_pairs(sigs))
     assert base  # the mutation chain must create some near-dup pairs
-    for raw in (False, True):
-        got = {
-            (r["src"], r["dst"])
-            for r in lsh.dedup_pairs(
-                sigs, keep_sim=False, numpy_verify=True, raw_candidates=raw
-            ).collect()
-        }
-        assert got == base
+    for opts, _ in ROUTES:
+        assert _pair_set(_dedup(lsh, sigs, opts, monkeypatch)) == base, opts
+
+
+def test_null_ids_in_no_pair(spark, strategy, monkeypatch):
+    """A row with a null id names no document, so it is in no pair on any
+    route, for long and string ids alike: three identical texts, one with
+    a null id, give exactly the one pair of the other two. (xxhash64 maps
+    every null to one sid; least/greatest skip nulls, so the JVM route
+    would emit self-pairs, and the numpy kernels would compare ids with
+    None.)"""
+    opts, _ = strategy
+    cfg = MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
+    lsh = MinHashLSH(cfg)
+    text = "the same caption text for all three rows"
+    for ids, dtype in (((1, None, 2), "long"), (("a", None, "b"), "string")):
+        df = spark.createDataFrame(
+            [(i, text) for i in ids], f"id {dtype}, text string"
+        )
+        sigs = lsh.signatures(df, "id", "text").cache()
+        want = {(ids[0], ids[2])}
+        assert _pair_set(_dedup(lsh, sigs, opts, monkeypatch)) == want, dtype
+        assert _pair_set(lsh.dedup_pairs(sigs).select("src", "dst")) == want
+        sigs.unpersist()
+
+
+def test_dedup_pairs_rejects_unknown_keywords(spark, corpus5, strategy, monkeypatch):
+    """dedup_pairs accepts only the bucket-tier knobs through **kw: a
+    misspelled knob, or an option this operator no longer has, raises
+    TypeError on every route instead of being silently ignored."""
+    lsh, sigs = corpus5
+    opts, _ = strategy
+    for bad in ({"max_bucket_sise": 8}, {"raw_candidates": True},
+                {"sketch_prefilter": True}):
+        with pytest.raises(TypeError, match=next(iter(bad))):
+            _dedup(lsh, sigs, opts, monkeypatch, **bad)
+        with pytest.raises(TypeError, match=next(iter(bad))):
+            lsh.dedup_pairs(sigs, **bad)
 
 
 def test_upsert_overwrites(spark, corpus5):
@@ -458,95 +477,66 @@ def test_min_eq_count_float_boundaries():
         assert m == 0 or ((m - 1) * r) / k < t
 
 
-def test_numpy_verify_guards_fall_back_to_jvm(spark, corpus5):
-    """_numpy_verify returns None (-> dedup_pairs takes the JVM shuffle
-    verify) when the signature table exceeds the broadcast-safe row bound;
-    dedup_pairs with the numpy kernels, fitting or guarded, must still
-    yield the exact JVM-path pair set (the guard changes the PLAN, never
-    the result)."""
-    import warnings
-
-    lsh, sigs = corpus5
-    cand = lsh.sid_candidates(sigs)
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        out = lsh._numpy_verify(cand, sigs, 0.5, with_m=True, max_rows=2)
-    assert out is None
-    assert any("max_rows" in str(x.message) for x in w)
-    jvm = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False).collect()
-    }
-    np_pairs = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=True).collect()
-    }
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        guarded = {
-            (r["src"], r["dst"])
-            for r in lsh.dedup_pairs(
-                sigs, keep_sim=False, numpy_verify="agg", numpy_max_rows=2
-            ).collect()
-        }
-    assert any("max_rows" in str(x.message) for x in w)
-    assert jvm == np_pairs == guarded and jvm
+def test_numpy_verify_guards_fall_back_to_jvm(spark):
+    """A duplicated id gives two rows one sid. The numpy kernels look rows
+    up by sid, so they would substitute one row's signature for the
+    other; the sid-collision guard sends the table to the JVM shuffle
+    verify instead, which fans out both rows — the default route returns
+    exactly the forced JVM route's pairs."""
+    cfg = MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
+    lsh = MinHashLSH(cfg)
+    rows = [(1, "a quick brown fox jumps over the lazy dog"),
+            (1, "a quick brown fox jumps over the lazy cat"),
+            (2, "a quick brown fox jumps over the lazy dog")]
+    sigs = lsh.signatures(
+        spark.createDataFrame(rows, "id long, text string"), "id", "text"
+    ).cache()
+    jvm = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
+    auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
+    assert lsh.last_route == ("jvm", "sid collision")
+    assert auto == jvm and (1, 2) in jvm
 
 
 def test_arrow_bands_jvm_bands_same_pairs(spark, corpus5):
-    """The Arrow band kernel (splitmix64 fold) and the JVM banding
-    (xxhash64 of slices) use different key functions but identical
+    """The Arrow band kernel (splitmix64 fold) and the JVM reference
+    banding (xxhash64 of slices) use different key functions but identical
     semantics: equal slices in the same band collide. Candidate sets —
     and therefore verified pair sets AND m multiplicities — must agree
     (a divergence would mean a key collision, ~2^-64)."""
     lsh, sigs = corpus5
     arrow = {
         (r["src"], r["dst"], r["m"])
-        for r in lsh.sid_candidates(sigs, arrow_bands=True).collect()
+        for r in lsh.sid_candidates(sigs).collect()
     }
     jvm = {
         (r["src"], r["dst"], r["m"])
-        for r in lsh.sid_candidates(sigs, arrow_bands=False).collect()
+        for r in sid_pairs_from_buckets(lsh._sid_bands(sigs)).collect()
     }
     assert arrow == jvm and arrow
 
 
-def test_fused_dedup_matches_jvm_all_tiers(spark):
-    """numpy_verify='fused' (bucket -> pair-gen -> verify in one kernel)
-    must produce the exact JVM-path pair set, including when tiny tier
-    limits force buckets through the medium (collapsed) and triangle
-    (block join + rowwise verify) tiers."""
-    from gaoya_spark.fixtures import corpus5_df
-
+def test_fused_dedup_matches_jvm_all_tiers(spark, monkeypatch):
+    """The fused kernel (bucket -> pair-gen -> verify in one kernel,
+    pinned by _REPL_PREFER_KEYS=0) must produce the exact JVM-path pair
+    set, including when tiny tier limits force buckets through the
+    medium (collapsed) and triangle (block join + rowwise verify) tiers."""
     cfg = MinHashConfig(num_bands=42, band_width=3, threshold=0.5, tokenizer=WORD)
     lsh = MinHashLSH(cfg)
     sigs = lsh.signatures(corpus5_df(spark), "id", "text").cache()
     sigs.count()
-    jvm = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False).collect()
-    }
-    fused = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify="fused").collect()
-    }
+    jvm = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
+    monkeypatch.setattr(MinHashLSH, "_REPL_PREFER_KEYS", 0)
+    fused = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
+    assert lsh.last_route == ("fused", "fits broadcast")
     assert fused == jvm and jvm
-    forced = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(
-            sigs, keep_sim=False, numpy_verify="fused",
-            max_bucket_size=2, medium_bucket_size=3,
-        ).collect()
-    }
+    forced = _pair_set(lsh.dedup_pairs(
+        sigs, keep_sim=False, max_bucket_size=2, medium_bucket_size=3,
+    ))
     assert forced == jvm
 
 
-@pytest.mark.parametrize("strategy", [
-    {"numpy_verify": False}, {"numpy_verify": True}, {"numpy_verify": "fused"},
-    {"numpy_verify": True, "raw_candidates": True}, {},
-])
-def test_dedup_strategies_empty_and_singleton(spark, strategy):
-    """Every dedup strategy must return an empty (src, dst) frame — with
+def test_dedup_strategies_empty_and_singleton(spark, strategy, monkeypatch):
+    """Every dedup route must return an empty (src, dst) frame — with
     the id-typed schema — on an empty corpus and on a single-doc corpus
     (no pair can exist), without erroring in broadcast build, banding,
     bucket kernels, or verify."""
@@ -556,7 +546,7 @@ def test_dedup_strategies_empty_and_singleton(spark, strategy):
     one = spark.createDataFrame([("a", "lone document text")], "id string, text string")
     for df in (empty, one):
         sigs = lsh.signatures(df, "id", "text")
-        out = lsh.dedup_pairs(sigs, keep_sim=False, **strategy)
+        out = _dedup(lsh, sigs, strategy[0], monkeypatch)
         assert out.count() == 0
         assert [f.name for f in out.schema.fields][:2] == ["src", "dst"]
         assert dict(out.dtypes)["src"] == "string"
@@ -586,143 +576,42 @@ def test_query_with_precomputed_index_bands(spark, corpus5):
     assert after_rm == want_rm
 
 
-@pytest.mark.parametrize("strategy", [
-    {"numpy_verify": True},
-    {"numpy_verify": "fused"},
-    {"numpy_verify": True, "raw_candidates": True},
-    {"numpy_verify": "replicated"},
-    {"numpy_verify": "agg"},
-])
-def test_broadcast_guard_boundary_identical_pairs(spark, corpus5, strategy):
+def test_broadcast_guard_boundary_identical_pairs(
+    spark, corpus5, strategy, monkeypatch
+):
     """Pin the broadcast row bound below the corpus size THROUGH THE
-    PUBLIC API (numpy_max_rows): every numpy/fused strategy must trip its
-    guard, fall back to the JVM shuffle verify, and produce the
-    IDENTICAL pair set — the silent-divergence class the guards exist to
-    prevent, now boundary-tested, not just warning-tested. A named
-    strategy warns on the fallback; numpy_verify=True is the size-based
-    default, whose fallback is quiet."""
-    import warnings
-
+    PUBLIC API (numpy_max_rows): every route must fall back to (or stay
+    on) the JVM shuffle verify and produce the IDENTICAL pair set — the
+    silent-divergence class the guards exist to prevent."""
     lsh, sigs = corpus5
-    jvm = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False).collect()
-    }
-    normal = {
-        (r["src"], r["dst"])
-        for r in lsh.dedup_pairs(sigs, keep_sim=False, **strategy).collect()
-    }
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        guarded = {
-            (r["src"], r["dst"])
-            for r in lsh.dedup_pairs(
-                sigs, keep_sim=False, numpy_max_rows=1, **strategy
-            ).collect()
-        }
-    warned = any("broadcast-safe" in str(x.message) for x in w)
-    assert warned == isinstance(strategy["numpy_verify"], str)
+    opts, _ = strategy
+    jvm = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
+    normal = _pair_set(_dedup(lsh, sigs, opts, monkeypatch))
+    guarded = _pair_set(_dedup(lsh, sigs, opts, monkeypatch, numpy_max_rows=1))
+    assert lsh.last_route[0] == "jvm"
     assert guarded == normal == jvm and normal
 
 
-def test_sketch_prefilter_identical_results(spark, corpus5):
-    """The 4-bit sketch prefilter changes the JVM verify PLAN, never the
-    results — pairs, sims, and the query path must all be identical with
-    it on and off."""
-    lsh, sigs = corpus5
-    on = {
-        (r["src"], r["dst"], round(r["sim"], 9))
-        for r in lsh.dedup_pairs(sigs, sketch_prefilter=True).collect()
-    }
-    off = {
-        (r["src"], r["dst"], round(r["sim"], 9))
-        for r in lsh.dedup_pairs(sigs, sketch_prefilter=False).collect()
-    }
-    assert on == off and on
-    q_on = {(r["qid"], r["id"]) for r in lsh.query(sigs, sigs).collect()}
-    q_off = {
-        (r["qid"], r["id"])
-        for r in lsh._query_scored(sigs, sigs)
-        .where(F.col("sim") >= 0.5)
-        .select("qid", "id")
-        .collect()
-    }
-    assert q_on == q_off and q_on
-
-
-def test_sketch_eq_upper_bound_expression():
-    """sketch_eq_upper_bound must be >= the exact equal count for random
-    arrays and == k for identical arrays (the exact-bound property the
-    prefilter's correctness rests on), across odd/even k and both int
-    widths."""
-    import numpy as np
-
-    from gaoya_spark.functions.similarity import (
-        sketch_eq_upper_bound,
-        sketch_signature_col,
-    )
-    from gaoya_spark.session import get_spark
-
-    spark = get_spark("sketch_test", cores=2, shuffle_partitions=2)
-    rng = np.random.default_rng(7)
-    for k, width in [(16, 31), (33, 31), (200, 31), (50, 60)]:
-        rows = []
-        for _ in range(50):
-            a = rng.integers(0, 2 ** width, size=k).tolist()
-            b = [
-                x if rng.random() < 0.4 else int(y)
-                for x, y in zip(a, rng.integers(0, 2 ** width, size=k))
-            ]
-            rows.append((a, b, sum(1 for x, y in zip(a, b) if x == y)))
-        rows.append((rows[0][0], rows[0][0], k))  # identical arrays
-        df = spark.createDataFrame(
-            rows, "a array<long>, b array<long>, exact int"
-        )
-        out = df.select(
-            sketch_eq_upper_bound(
-                sketch_signature_col(F.col("a"), k),
-                sketch_signature_col(F.col("b"), k),
-                k,
-            ).alias("bound"),
-            "exact",
-        ).collect()
-        for r in out:
-            assert r["bound"] >= r["exact"], (k, width, r)
-            assert r["bound"] <= k
-        assert out[-1]["bound"] == k
-
-
 def test_numpy_strategy_values_identical(spark, corpus5):
-    """numpy_verify accepts True (adaptive replicated/fused by band-key
-    count) and explicit "agg" | "raw" | "fused" —
-    every value must yield the exact JVM-path pair set, and an unknown
-    value must raise."""
-    import pytest
-
+    """numpy_verify is a bool: True routes by size, False forces the JVM
+    route, and both yield the exact keep_sim=True pair set. Anything else
+    — such as a kernel name the option once took — raises."""
     lsh, sigs = corpus5
-    base = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sigs).collect()}
-    for nv in (True, "agg", "raw", "fused"):
-        got = {
-            (r["src"], r["dst"])
-            for r in lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=nv).collect()
-        }
+    base = _pair_set(lsh.dedup_pairs(sigs))
+    for nv in (True, False):
+        got = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=nv))
         assert got == base, nv
-    with pytest.raises(ValueError, match="numpy_verify"):
-        lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify="bogus")
-
-
-def _pair_set(df):
-    return {(r["src"], r["dst"]) for r in df.collect()}
+    for nv in (None, "fused", "agg"):
+        with pytest.raises(TypeError, match="numpy_verify"):
+            lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=nv)
 
 
 def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
-    """The default numpy_verify=None routes by size: a broadcast-fit
+    """The default numpy_verify=True routes by size: a broadcast-fit
     table takes the replicated kernel; a table over the row bound
     (numpy_max_rows) or far over the optimizer's size estimate takes the
-    JVM shuffle verify WITHOUT a warning. Every route returns the same
-    pairs, and last_route names the route and the reason."""
-    import warnings
-
+    JVM shuffle verify. Every route returns the same pairs, and
+    last_route names the route and the reason."""
     lsh, sigs = corpus5
     jvm = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
     assert lsh.last_route == ("jvm", "requested")
@@ -730,20 +619,17 @@ def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
     assert lsh.last_route == ("jvm", "keep_sim")
     auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
     assert lsh.last_route == ("replicated", "fits broadcast")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        over_rows = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_max_rows=1))
-        assert lsh.last_route == ("jvm", "over row bound")
-        # a byte budget far below the cached table's size estimate: the
-        # estimate alone routes to the JVM verify, before any collect
-        monkeypatch.setattr(MinHashLSH, "_BROADCAST_BYTES", 64)
-        over_est = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
-        assert lsh.last_route == ("jvm", "over size estimate")
-    assert not [x for x in w if "numpy_verify" in str(x.message)]
+    over_rows = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_max_rows=1))
+    assert lsh.last_route == ("jvm", "over row bound")
+    # a byte budget far below the cached table's size estimate: the
+    # estimate alone routes to the JVM verify, before any collect
+    monkeypatch.setattr(MinHashLSH, "_BROADCAST_BYTES", 64)
+    over_est = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
+    assert lsh.last_route == ("jvm", "over size estimate")
     assert auto == over_rows == over_est == jvm and jvm
 
 
-def test_replicated_drops_buckets_over_hard_cap(spark):
+def test_replicated_drops_buckets_over_hard_cap(spark, monkeypatch):
     """bucket_cap_hard parity: a family of 10 identical docs fills every
     band bucket with 10 members. With bucket_cap_hard=5 (under the
     default max_bucket_size, so the cap must bind in the small tier too)
@@ -766,9 +652,9 @@ def test_replicated_drops_buckets_over_hard_cap(spark):
     ))
     auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, bucket_cap_hard=5))
     assert lsh.last_route == ("replicated", "fits broadcast")
-    fused = _pair_set(lsh.dedup_pairs(
-        sigs, keep_sim=False, numpy_verify="fused", bucket_cap_hard=5
-    ))
+    monkeypatch.setattr(MinHashLSH, "_REPL_PREFER_KEYS", 0)
+    fused = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, bucket_cap_hard=5))
+    assert lsh.last_route == ("fused", "fits broadcast")
     assert auto == jvm == fused
     assert (100, 101) in jvm
     assert not any(a < 10 and b < 10 for a, b in jvm)
@@ -795,22 +681,25 @@ def _counted_sigs(spark, sigs):
 
 @pytest.mark.parametrize("strategy,route", [
     ({}, "replicated"),
-    ({"numpy_verify": "fused"}, "fused"),
-    ({"numpy_verify": "raw"}, "raw"),
+    ({"_REPL_PREFER_KEYS": 0}, "fused"),
+    ({"numpy_verify": False}, "jvm"),
     ({"numpy_max_rows": 1}, "jvm"),
 ])
-def test_uncached_signatures_computed_once(spark, corpus5, strategy, route):
+def test_uncached_signatures_computed_once(
+    spark, corpus5, strategy, route, monkeypatch
+):
     """dedup_pairs on an uncached signature table computes each row's
     signature once on every route: the broadcast collect (and the row
     count before it, which runs because a python-computed table has no
-    trusted size estimate) fills the cache that the fused, raw and JVM
-    routes read again. The replicated route reads only the broadcast and
-    drops the cache."""
+    trusted size estimate) fills the cache that the fused and guarded
+    JVM routes read again, and the forced JVM route caches the table
+    before its first read. The replicated route reads only the broadcast
+    and drops the cache."""
     lsh, sigs = corpus5
     n = sigs.count()
     counted, acc = _counted_sigs(spark, sigs)
     want = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
-    got = _pair_set(lsh.dedup_pairs(counted, keep_sim=False, **strategy))
+    got = _pair_set(_dedup(lsh, counted, strategy, monkeypatch))
     assert lsh.last_route[0] == route
     assert got == want and want
     assert acc.value == n

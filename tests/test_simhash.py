@@ -278,3 +278,23 @@ def test_query_with_precomputed_index_tables(spark):
         for r in lsh.query(kept, kept, index_tables=tables).collect()
     }
     assert after_rm == {(q, i) for q, i in base if q != 0 and i != 0}
+
+
+def test_dedup_pairs_string_ids_match_long_id_fast_path(spark, perturbed):
+    """Long ids take the fast path (the ids are their own surrogates);
+    string ids go through the xxhash64 surrogate and the sid->id attach
+    joins. Over the same signatures both must give the same pairs and
+    distances, each pair in (least, greatest) order of its own id type."""
+    lsh, sigs, _ = perturbed
+    fast = {(r["src"], r["dst"], r["dist"]) for r in lsh.dedup_pairs(sigs).collect()}
+    assert fast
+    named = sigs.select(
+        F.concat(F.lit("doc-"), F.col("id").cast("string")).alias("id"), "sig"
+    )
+    rows = lsh.dedup_pairs(named).collect()
+    assert all(r["src"] < r["dst"] for r in rows)
+    back = {
+        tuple(sorted((int(r["src"][4:]), int(r["dst"][4:])))) + (r["dist"],)
+        for r in rows
+    }
+    assert back == fast and len(rows) == len(fast)

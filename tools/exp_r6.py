@@ -3,15 +3,12 @@ optimization decisions of this round (host drifts across minutes, so only
 interleaved comparisons are valid — EXPERIMENTS.md protocol).
 
 Variants:
-  jvm_nosketch : default JVM shuffle-verify, sketch prefilter OFF
-                 (the round-5 shipped plan)
-  jvm_sketch   : default JVM shuffle-verify, 4-bit sketch prefilter ON
-                 (round-6 candidate for the 10^12-row path)
-  np_agg       : aggregated numpy broadcast verify (the bench path)
-  np_agg_mb32  : same, array_bucket_limit lowered 256 -> 32 (routes
-                 mid-size repeating families through the identical-set
-                 collapse BEFORE pair explosion)
-  np_agg_mb16  : same, limit 16
+  jvm      : JVM shuffle-verify route (numpy_verify=False)
+  np       : size-routed numpy route (the bench path)
+  np_mb32  : same, max_bucket_size 32 (a fused-kernel tier knob: routes
+             mid-size repeating families through the identical-set
+             collapse BEFORE pair explosion)
+  np_mb16  : same, limit 16
 
 Counts are asserted identical across variants (same semantics, different
 plans). Usage: python tools/exp_r6.py [corpus: doc|img] [reps] [variants]
@@ -57,19 +54,16 @@ def main() -> None:
     sigs.count()
 
     variants = {
-        "jvm_nosketch": lambda: mh.dedup_pairs(
-            sigs, keep_sim=False, sketch_prefilter=False, numpy_verify=False
-        ).count(),
-        "jvm_sketch": lambda: mh.dedup_pairs(
+        "jvm": lambda: mh.dedup_pairs(
             sigs, keep_sim=False, numpy_verify=False
         ).count(),
-        "np_agg": lambda: mh.dedup_pairs(
+        "np": lambda: mh.dedup_pairs(
             sigs, keep_sim=False, numpy_verify=True
         ).count(),
-        "np_agg_mb32": lambda: mh.dedup_pairs(
+        "np_mb32": lambda: mh.dedup_pairs(
             sigs, keep_sim=False, numpy_verify=True, max_bucket_size=32
         ).count(),
-        "np_agg_mb16": lambda: mh.dedup_pairs(
+        "np_mb16": lambda: mh.dedup_pairs(
             sigs, keep_sim=False, numpy_verify=True, max_bucket_size=16
         ).count(),
     }

@@ -53,7 +53,7 @@ sigs = mh.signatures(images, "image_id", "caption", phash_col="phash").cache()
 sigs.count()
 # JVM shuffle-verify route (numpy_verify=False: by default a
 # broadcast-fit table takes the numpy kernels): aggregated candidates,
-# JVM packed-XOR verify via shuffle joins — no broadcast_sigs
+# JVM packed-XOR verify via shuffle joins
 t0 = time.time()
 n = mh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False).count()
 print("RESULT", time.time() - t0, n, flush=True)

@@ -101,6 +101,7 @@ def main() -> None:
             res[name] = min(res.get(name, 1e9), dt)
             print(f"  {name}: {dt:6.2f}s n={n}", flush=True)
     assert counts["cand_sortfilter"] == counts["full_old_distinct"]
+    assert counts["full_current"] == counts["cand_sortfilter"]
     print("MIN:", {k: round(v, 2) for k, v in res.items()}, flush=True)
     spark.stop()
 

@@ -41,6 +41,9 @@ def main():
 
     char34 = TokenizerSpec(kind="char", n_from=3, n_to=4, lowercase=True)
     mh = MinHashLSH(MinHashConfig(tokenizer=char34, phash_token_weight=1))
+    # the fused kernel, pinned: no table is small enough to replicate
+    fused_mh = MinHashLSH(mh.cfg)
+    fused_mh._REPL_PREFER_KEYS = 0
     sh = SimHashLSH(SimHashConfig())
 
     from gaoya_spark.operators.substring import candidate_gram_pairs
@@ -57,23 +60,20 @@ def main():
         "key into an ObjectHashAggregate collect_list, pair explosion as "
         "pure project/generate — no self-join, no dropDuplicates — then "
         "the (src,dst) count aggregate)": mh.sid_candidates(sigs),
-        "sid candidates, JVM banding variant (EXPECT: the same plan with "
-        "the band keys as xxhash64-of-slice projections instead of the "
-        "Python node — kept for contexts without Arrow workers)":
-            mh.sid_candidates(sigs, arrow_bands=False),
         "dedup pairs end-to-end (EXPECT: the candidate plan above, then "
         "the equal-count as a FLAT balanced tree of per-word packed-XOR "
         "terms inside WholeStageCodegen (no higher-order aggregate — HOFs "
         "evaluate interpreted) in the signature joins — broadcast when "
         "sigs are small — and original ids attached only to verified "
         "pairs)": mh.dedup_pairs(sigs),
-        "dedup pairs, numpy broadcast verify + raw candidates (EXPECT: "
-        "band emissions flow straight into a MapInPandas verify kernel "
-        "against the broadcast signature matrix — no candidate-set "
-        "aggregate, no signature joins — then ONE narrow 16-byte-sid "
-        "dropDuplicates exchange and a second tiny MapInPandas attaching "
-        "original ids from the same already-shipped broadcast)": mh.dedup_pairs(
-            sigs, keep_sim=False, numpy_verify=True, raw_candidates=True
+        "dedup pairs, size-routed default on a broadcast-fit table "
+        "(EXPECT: a one-row-per-task range feeds ONE MapInPandas kernel "
+        "that rebuilds the buckets from the broadcast signature matrix "
+        "and verifies them — no band explode, no bucket exchange, no "
+        "signature joins — then ONE narrow 16-byte-sid dropDuplicates "
+        "exchange and a second tiny MapInPandas attaching original ids "
+        "from the same already-shipped broadcast)": mh.dedup_pairs(
+            sigs, keep_sim=False
         ),
         "dedup pairs, fused bucket verify (EXPECT: the bucket "
         "collect_list aggregate feeds a MapInPandas kernel DIRECTLY — "
@@ -81,7 +81,7 @@ def main():
         "explosion, no candidate aggregate — union with the (empty at "
         "this scale) collapsed-medium and triangle tiers, then ONE "
         "narrow survivors dropDuplicates exchange and the id-attach "
-        "kernel)": mh.dedup_pairs(sigs, keep_sim=False, numpy_verify="fused"),
+        "kernel)": fused_mh.dedup_pairs(sigs, keep_sim=False),
         "simhash tables (EXPECT: project+generate only)": sh.tables(
             sh.signatures(images, "image_id", "caption")
         ),
