@@ -19,13 +19,112 @@ an equi-join, which spreads one bucket's pair generation across
 block_groups reducers. Buckets beyond drop_cap (the all-identical-key
 pathology at 10^12 scale) are excluded — callers record the count via
 their stats helpers (band_stats / gram_stats), never silently.
+
+The id surrogate ("sid") is made here and nowhere else: sid_col builds it
+from an id column, attach_ids puts the ids back on sid pairs. Integral ids
+are their own surrogates (cast to long), so their pairs need no attach
+join; any other id type is hashed with xxhash64 and joined back. A sid
+collision (~n^2/2^65 for hashed ids) can merge two ids; it only adds
+candidates that the operators' exact checks still see. Operators drop
+null-id rows from their membership rows, so a null id is in no pair.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import IntegralType
 
 _BLOCK_SALT = 0x5A17
+
+
+def sid_col(df: DataFrame, id_col: str = "id") -> Column:
+    """The 8-byte surrogate of df's id column: the id cast to long for
+    integral ids (byte, short, int, long), else xxhash64(id). A plain
+    projection, so a size estimate over it stays trusted."""
+    if isinstance(df.schema[id_col].dataType, IntegralType):
+        return F.col(id_col).cast("long")
+    return F.xxhash64(id_col)
+
+
+def attach_ids(pairs: DataFrame, df: DataFrame, id_col: str = "id") -> DataFrame:
+    """(src, dst, *rest) sid pairs -> (src, dst, *rest) pairs of df's ids
+    in (least, greatest) order. Integral ids come back by a cast, with no
+    join: the pair generators emit src < dst in sid order, which is id
+    order. Other ids come back by two joins on the (sid, id) map."""
+    id_type = df.schema[id_col].dataType
+    rest = [c for c in pairs.columns if c not in ("src", "dst")]
+    if isinstance(id_type, IntegralType):
+        return pairs.select(
+            F.col("src").cast(id_type).alias("src"),
+            F.col("dst").cast(id_type).alias("dst"),
+            *rest,
+        )
+    m = df.select(sid_col(df, id_col).alias("sid"), F.col(id_col).alias("id"))
+    ma = m.select(F.col("sid").alias("src"), F.col("id").alias("src_id"))
+    mb = m.select(F.col("sid").alias("dst"), F.col("id").alias("dst_id"))
+    return (
+        pairs.join(ma, "src")
+        .join(mb, "dst")
+        .select(
+            F.least("src_id", "dst_id").alias("src"),
+            F.greatest("src_id", "dst_id").alias("dst"),
+            *rest,
+        )
+    )
+
+
+def is_materialized(df: DataFrame) -> bool:
+    """True if df already has a persist storage level set, so an operator
+    skips adding its own. A plain storage-backed scan returns False and
+    gets persisted: computing the signatures again per consumer would
+    cost more than the cache."""
+    from py4j.protocol import Py4JError
+
+    try:
+        return df.storageLevel.useMemory or df.storageLevel.useDisk
+    except (AttributeError, Py4JError):
+        return False
+
+
+def triangle_block_pairs(sets: DataFrame, block_groups: int) -> DataFrame:
+    """(src, dst, *rest) i<j pairs of every sorted member array `ids` in
+    sets (sids, or structs led by the sid), where rest are sets' other
+    columns (e.g. nb), spread over block_groups x block_groups blocks so
+    no task pairs a whole huge bucket. Members explode to rows keyed by
+    the set's 128-bit identity hb (two independently seeded xxhash64
+    words: a collision would merge two sets and inflate m, breaking the
+    sim >= m/b lower bound, so hb gets the same 128-bit treatment as the
+    substring gram fingerprints). One emission per set, so m stays exact
+    across tiers."""
+    rest = [c for c in sets.columns if c != "ids"]
+    hot = sets.select(
+        F.struct(
+            F.xxhash64("ids").alias("w0"),
+            F.xxhash64("ids", F.lit(1)).alias("w1"),
+        ).alias("hb"),
+        *rest, F.explode("ids").alias("sid"),
+    )
+    g = F.pmod(F.xxhash64("sid", F.lit(_BLOCK_SALT)), F.lit(block_groups))
+    hot_g = hot.withColumn("g", g)
+    left = hot_g.withColumn(
+        "g2", F.explode(F.sequence(F.col("g"), F.lit(block_groups - 1)))
+    ).select("hb", *rest, F.col("sid").alias("lid"), F.col("g").alias("g1"), "g2")
+    right = hot_g.select("hb", F.col("sid").alias("rid"), F.col("g").alias("g2"))
+    # left replicates upward (g2 >= own g), right stays at its own group:
+    # a co-bucketed pair meets exactly in block (min(g), max(g)); the
+    # same-block half-condition keeps one emission per set
+    return (
+        left.join(right, ["hb", "g2"])
+        .where(
+            (F.col("g1") < F.col("g2"))
+            | ((F.col("g1") == F.col("g2")) & (F.col("lid") < F.col("rid")))
+        )
+        .select(
+            F.least("lid", "rid").alias("src"),
+            F.greatest("lid", "rid").alias("dst"),
+            *rest,
+        )
+    )
 
 
 def pairs_from_sorted_ids(ids):
@@ -231,12 +330,7 @@ def sid_pairs_from_buckets(
         has_hot = has_huge = True
     if has_hot:
         # both upper tiers share the identical-member-set collapse:
-        # m stays exact via sum(nb).
-        # hb = 128-bit hash of the member set (two independently-seeded
-        # xxhash64 words): the distinct bucket's identity. A collision here
-        # would merge two hot sets and inflate m (breaking the sim >= m/b
-        # lower bound), so it gets the same 128-bit treatment as the
-        # substring gram fingerprints rather than a single 64-bit word.
+        # m stays exact via sum(nb)
         collapsed = (
             buckets.where(F.size("ids") > array_bucket_limit)
             .groupBy("ids")
@@ -254,41 +348,8 @@ def sid_pairs_from_buckets(
             )
             .select("p.src", "p.dst", "nb")
         )
-        if not has_huge:
-            return raw.groupBy("src", "dst").agg(F.sum("nb").alias("m"))
-        hot = (
-            collapsed.where(F.size("ids") > medium_bucket_limit)
-            .select(
-                F.struct(
-                    F.xxhash64("ids").alias("w0"),
-                    F.xxhash64("ids", F.lit(1)).alias("w1"),
-                ).alias("hb"),
-                "nb", F.explode("ids").alias("sid"),
-            )
-        )
-        g = F.pmod(F.xxhash64("sid", F.lit(_BLOCK_SALT)), F.lit(block_groups))
-        hot_g = hot.withColumn("g", g)
-        left = hot_g.withColumn(
-            "g2", F.explode(F.sequence(F.col("g"), F.lit(block_groups - 1)))
-        ).select(
-            "hb", "nb", F.col("sid").alias("lid"), F.col("g").alias("g1"), "g2"
-        )
-        right = hot_g.select("hb", F.col("sid").alias("rid"), F.col("g").alias("g2"))
-        # left replicates upward (g2 >= own g), right stays at its own group:
-        # a co-bucketed pair meets exactly in block (min(g), max(g)); the
-        # same-block half-condition keeps one emission per bucket, so m
-        # stays exact across both paths.
-        pairs_hot = (
-            left.join(right, ["hb", "g2"])
-            .where(
-                (F.col("g1") < F.col("g2"))
-                | ((F.col("g1") == F.col("g2")) & (F.col("lid") < F.col("rid")))
-            )
-            .select(
-                F.least("lid", "rid").alias("src"),
-                F.greatest("lid", "rid").alias("dst"),
-                "nb",
-            )
-        )
-        raw = raw.unionByName(pairs_hot)
+        if has_huge:
+            raw = raw.unionByName(triangle_block_pairs(
+                collapsed.where(F.size("ids") > medium_bucket_limit), block_groups
+            ))
     return raw.groupBy("src", "dst").agg(F.sum("nb").alias("m"))

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType
 
 from gaoya_spark.config import SimHashConfig
-from gaoya_spark.operators._bucket_pairs import sid_cross_pairs_from_buckets
+from gaoya_spark.operators._bucket_pairs import sid_col, sid_cross_pairs_from_buckets
 from gaoya_spark.operators.simhash_lsh import SimHashLSH
 
 
@@ -92,7 +92,8 @@ def rp_lsh_topk(
 
     Candidates flow through the shared bipartite bucket machinery
     (_bucket_pairs.sid_cross_pairs_from_buckets), same as minhash/simhash
-    queries: one groupBy over side-tagged (bk, sid) membership, JVM array
+    queries: one groupBy over the side-tagged (sid, tk) rows of
+    SimHashLSH.sid_tables (null-id rows have none), JVM array
     cross products, hot buckets (> max_bucket_size — e.g. a constant or
     near-zero embedding repeated across the corpus hashing every copy to
     one sign pattern) triangle-blocked, buckets beyond bucket_cap_hard
@@ -111,19 +112,15 @@ def rp_lsh_topk(
 
     index = sigs(df, "id")
     probe = sigs(probes or df, "qid")
-    it = lsh.tables(index.select(F.col("id"), "sig"), "id")
-    pt = lsh.tables(probe.select(F.col("qid").alias("id"), "sig"), "id")
-    im = it.select(
-        F.xxhash64("table_idx", "key").alias("bk"), F.xxhash64("id").alias("sid")
-    )
-    qm = pt.select(
-        F.xxhash64("table_idx", "key").alias("bk"), F.xxhash64("id").alias("sid")
-    )
+    im = lsh.sid_tables(index.select("id", "sig"))
+    qm = lsh.sid_tables(probe.select(F.col("qid").alias("id"), "sig"))
     cand = sid_cross_pairs_from_buckets(
-        qm, im, array_bucket_limit=max_bucket_size, drop_cap=bucket_cap_hard
+        qm.withColumnRenamed("tk", "bk"), im.withColumnRenamed("tk", "bk"),
+        array_bucket_limit=max_bucket_size, drop_cap=bucket_cap_hard,
     )
-    pmap = probe.select(F.xxhash64("qid").alias("sq"), "qid", "v_qid")
-    imap = index.select(F.xxhash64("id").alias("si"), "id", "v_id")
+    # the vectors ride the sid -> id joins
+    pmap = probe.select(sid_col(probe, "qid").alias("sq"), "qid", "v_qid")
+    imap = index.select(sid_col(index).alias("si"), "id", "v_id")
     scored = (
         cand.select(F.col("qid").alias("sq"), F.col("id").alias("si"))
         .join(pmap, "sq")

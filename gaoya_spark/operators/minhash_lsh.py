@@ -14,13 +14,15 @@ Scale notes (100TB / 10^12 rows):
   compression trick as the reference's BandKey (minhash_index.rs:21-27):
   the shuffle carries 8 bytes per band instead of the r-element slice;
   false band collisions are removed by the full-signature verify step.
-- candidate generation works on 8-byte id surrogates (sid = xxhash64(id))
-  so the pair shuffle carries 16-byte rows regardless of id type; original
-  ids are re-attached only to final (verified) pairs. A sid collision can
-  merge two ids (probability ~n^2/2^65: ~27 expected at 10^12 rows, 0 at
-  any test scale); the cost is a handful of spurious candidate pairs that
-  still must pass the full-signature verify — precision impact <1e-10,
-  recall impact none (collisions only ADD candidates).
+- candidate generation works on 8-byte id surrogates (sid_col in
+  _bucket_pairs.py: the id itself for integral ids, else xxhash64(id)), so
+  the pair shuffle carries 16-byte rows regardless of id type; original
+  ids come back only on final (verified) pairs. A hashed-sid collision
+  can merge two ids (probability ~n^2/2^65: ~27 expected at 10^12 rows, 0
+  at any test scale); the cost is a handful of spurious candidate pairs
+  that still must pass the full-signature verify — precision impact
+  <1e-10, recall impact none (collisions only ADD candidates). Null ids
+  are dropped from the band rows, so they are in no pair and no match.
 - buckets are materialized ONCE with a single groupBy + collect_list and
   pairs are generated by JVM-side array combinatorics (no self-join, no
   dropDuplicates): measured 2.5x faster end-to-end than the former
@@ -47,8 +49,12 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from gaoya_spark.config import MinHashConfig
 from gaoya_spark.operators._bucket_pairs import (
+    attach_ids,
+    is_materialized,
+    sid_col,
     sid_cross_pairs_from_buckets,
     sid_pairs_from_buckets,
+    triangle_block_pairs,
 )
 from gaoya_spark.functions.signatures import (
     make_minhash_udf,
@@ -58,19 +64,6 @@ from gaoya_spark.functions.similarity import (
     minhash_similarity_packed,
     pack_signature_col,
 )
-
-
-def _is_materialized(df: DataFrame) -> bool:
-    """True if the DataFrame already has a persist storage level set (so
-    dedup_pairs skips adding its own). A plain storage-backed scan returns
-    False and gets persisted — recomputing the signature UDF per consumer
-    would cost more than the cache."""
-    try:
-        if df.storageLevel.useMemory or df.storageLevel.useDisk:
-            return True
-    except Exception:
-        pass
-    return False
 
 
 def _min_eq_count(threshold: float, k: int) -> int:
@@ -478,8 +471,8 @@ class MinHashLSH:
             F.sequence(F.lit(0), F.lit(b - 1)),
             lambda i: F.xxhash64(F.slice("sig", i * r + 1, r), i),
         )
-        return sig_df.select(
-            F.xxhash64("id").alias("sid"), F.explode(hashes).alias("bk")
+        return sig_df.where(F.col("id").isNotNull()).select(
+            sid_col(sig_df).alias("sid"), F.explode(hashes).alias("bk")
         )
 
     def _sid_bands_arrow(self, sig_df: DataFrame) -> DataFrame:
@@ -523,8 +516,10 @@ class MinHashLSH:
                     }
                 )
 
-        return sig_df.select(F.xxhash64("id").alias("sid"), "sig").mapInPandas(
-            kernel, "sid long, bk long"
+        return (
+            sig_df.where(F.col("id").isNotNull())
+            .select(sid_col(sig_df).alias("sid"), "sig")
+            .mapInPandas(kernel, "sid long, bk long")
         )
 
     def sid_bands(self, sig_df: DataFrame) -> DataFrame:
@@ -534,15 +529,12 @@ class MinHashLSH:
         them via query(..., index_bands=). At 10^12 rows this is THE
         index artifact a warehouse maintains so a query never re-bands
         the corpus; StreamingDedup appends each micro-batch's rows to
-        its stream_bands table and probes the accumulated index."""
-        return self._sid_bands_arrow(sig_df)
+        its stream_bands table and probes the accumulated index.
 
-    def _sid_map(self, sig_df: DataFrame, as_src: str, as_dst: str):
-        m = sig_df.select(F.xxhash64("id").alias("sid"), "id")
-        return (
-            m.select(F.col("sid").alias("src"), F.col("id").alias(as_src)),
-            m.select(F.col("sid").alias("dst"), F.col("id").alias(as_dst)),
-        )
+        The sid is sid_col's: an integral id is its own sid, so a table
+        written when every sid was xxhash64(id) must be rebuilt before
+        integral-id signatures probe it. Null-id rows have no band row."""
+        return self._sid_bands_arrow(sig_df)
 
     def sid_candidates(
         self,
@@ -584,15 +576,7 @@ class MinHashLSH:
         cand = self.sid_candidates(
             sig_df, max_bucket_size, block_groups, bucket_cap_hard, persist
         )
-        ma, mb = self._sid_map(sig_df, "src_id", "dst_id")
-        return (
-            cand.join(ma, "src")
-            .join(mb, "dst")
-            .select(
-                F.least("src_id", "dst_id").alias("src"),
-                F.greatest("src_id", "dst_id").alias("dst"),
-            )
-        )
+        return attach_ids(cand.select("src", "dst"), sig_df)
 
     def verify_pairs(self, pairs: DataFrame, sig_df: DataFrame) -> DataFrame:
         """(src, dst, sim): join signatures packed two-positions-per-long
@@ -678,9 +662,10 @@ class MinHashLSH:
         - "over size estimate": the trusted size estimate is over
           _ESTIMATE_SLACK budgets, so no Spark job runs at all;
         - "over row bound": more rows than max_rows or the byte budget;
-        - "sid collision": an xxhash64(id) collision (the sorted-adjacency
-          check is free on the already-sorted array; searchsorted would
-          silently resolve a collided sid to its first occurrence,
+        - "sid collision": two rows with one sid, i.e. a duplicated id or
+          an xxhash64(id) collision (the sorted-adjacency check is free
+          on the already-sorted array; searchsorted would silently
+          resolve a collided sid to its first occurrence,
           substituting one doc's signature for another, where the JVM
           join path fans out both rows — routing collisions to the JVM
           path keeps the two verify paths from diverging).
@@ -697,9 +682,9 @@ class MinHashLSH:
 
         Null-id rows count against the row bound but are dropped from the
         payload: a null id names no document, so it joins no pair on any
-        route (every null hashes to one sid, which would also trip the
-        collision guard). sig_df itself is not filtered — a filter hides
-        the size estimate.
+        route (every null string id hashes to one sid, which would also
+        trip the collision guard). sig_df itself is not filtered — a
+        filter hides the size estimate.
 
         Lifecycle: the broadcast must outlive the returned (lazy)
         DataFrames; like the persisted buckets, it is dropped by the
@@ -713,7 +698,7 @@ class MinHashLSH:
         eff_rows = min(max_rows, budget // row_bytes)
 
         def collected():
-            return sig_df.select(F.xxhash64("id").alias("sid"), "sig", "id")
+            return sig_df.select(sid_col(sig_df).alias("sid"), "sig", "id")
 
         est = self._size_estimate(collected())
         if est is not None and est > self._ESTIMATE_SLACK * budget:
@@ -846,8 +831,8 @@ class MinHashLSH:
         are simply verified — measured cheaper than aggregating to learn
         m. bc is the guarded broadcast from _build_sig_broadcast; the
         banding below reads sig_df a second time, from the cache
-        dedup_pairs put on it before that collect, without the null-id
-        rows the broadcast leaves out.
+        dedup_pairs put on it before that collect (and, like every
+        banding, without null-id rows).
 
         Trade-off vs aggregated candidates: survivors replace candidates
         in the one remaining exchange, so this wins when true-pair density
@@ -858,7 +843,7 @@ class MinHashLSH:
         need = _min_eq_count(threshold, k)
         id_sql = sig_df.schema["id"].dataType.simpleString()
         buckets = (
-            self._sid_bands_arrow(sig_df.where(F.col("id").isNotNull()))
+            self._sid_bands_arrow(sig_df)
             .groupBy("bk")
             .agg(F.array_sort(F.collect_list("sid")).alias("ids"))
             .where(F.size("ids").between(2, bucket_cap_hard))
@@ -888,29 +873,8 @@ class MinHashLSH:
         survivors = fused_in.mapInPandas(
             _bucket_verify_fn(bc, need), "src long, dst long"
         )
-        hot = collapsed.where(F.size("ids") > medium_bucket_size).select(
-            F.struct(
-                F.xxhash64("ids").alias("w0"),
-                F.xxhash64("ids", F.lit(1)).alias("w1"),
-            ).alias("hb"),
-            F.explode("ids").alias("sid"),
-        )
-        g = F.pmod(F.xxhash64("sid", F.lit(0x5A17)), F.lit(block_groups))
-        hot_g = hot.withColumn("g", g)
-        left = hot_g.withColumn(
-            "g2", F.explode(F.sequence(F.col("g"), F.lit(block_groups - 1)))
-        ).select("hb", F.col("sid").alias("lid"), F.col("g").alias("g1"), "g2")
-        right = hot_g.select("hb", F.col("sid").alias("rid"), F.col("g").alias("g2"))
-        pairs_hot = (
-            left.join(right, ["hb", "g2"])
-            .where(
-                (F.col("g1") < F.col("g2"))
-                | ((F.col("g1") == F.col("g2")) & (F.col("lid") < F.col("rid")))
-            )
-            .select(
-                F.least("lid", "rid").alias("src"),
-                F.greatest("lid", "rid").alias("dst"),
-            )
+        pairs_hot = triangle_block_pairs(
+            collapsed.where(F.size("ids") > medium_bucket_size), block_groups
         )
         survivors = survivors.unionByName(
             pairs_hot.mapInPandas(_pair_verify_fn(bc, need), "src long, dst long")
@@ -948,7 +912,7 @@ class MinHashLSH:
         routes read sig_df again, and without the cache they would be
         computed twice. The replicated route never reads it again, so
         there the cache is dropped as soon as the route is known."""
-        may_cache = kw.get("persist", True) and not _is_materialized(sig_df)
+        may_cache = kw.get("persist", True) and not is_materialized(sig_df)
         bc, why = self._build_sig_broadcast(sig_df, max_rows, persist=may_cache)
         if bc is None:
             self.last_route = ("jvm", why)
@@ -958,7 +922,7 @@ class MinHashLSH:
             # keys: ~10ms/task) — it deletes the whole bucket dataflow;
             # measured best (2.7s vs fused 5.2) to tied (6.5 vs 6.6) on
             # the 5k-doc bench corpus
-            if may_cache and _is_materialized(sig_df):
+            if may_cache and is_materialized(sig_df):
                 sig_df.unpersist()
             self.last_route = ("replicated", "fits broadcast")
             return self._replicated_dedup(
@@ -1040,11 +1004,8 @@ class MinHashLSH:
             out = self._broadcast_dedup(sig_df, t, numpy_max_rows, kw)
             if out is not None:
                 return out
-        if kw.get("persist", True) and not _is_materialized(sig_df):
+        if kw.get("persist", True) and not is_materialized(sig_df):
             sig_df = sig_df.persist()
-        # a null id names no document: xxhash64 maps every null to one
-        # sid, and least/greatest would pair the other id with itself
-        sig_df = sig_df.where(F.col("id").isNotNull())
         cand = self.sid_candidates(sig_df, **kw)
         k = self.cfg.num_hashes
         r = self.cfg.band_width
@@ -1052,7 +1013,7 @@ class MinHashLSH:
         # signatures ride the verify joins packed two-per-long: half the
         # broadcast build bytes, half the kernel elements (similarity.py)
         s = sig_df.select(
-            F.xxhash64("id").alias("sid"), "id",
+            sid_col(sig_df).alias("sid"), "id",
             pack_signature_col(F.col("sig"), k, self.cfg.hash_size).alias("psig"),
         )
         va = s.select(
@@ -1153,12 +1114,12 @@ class MinHashLSH:
         cand = sid_cross_pairs_from_buckets(self._sid_bands_arrow(probe_sigs), ib)
         k = self.cfg.num_hashes
         qs = probe_sigs.select(
-            F.xxhash64("id").alias("qid"),
+            sid_col(probe_sigs).alias("qid"),
             F.col("id").alias("qid_orig"),
             pack_signature_col(F.col("sig"), k, self.cfg.hash_size).alias("sig_q"),
         )
         ix = index_sigs.select(
-            F.xxhash64("id").alias("id"),
+            sid_col(index_sigs).alias("id"),
             F.col("id").alias("id_orig"),
             pack_signature_col(F.col("sig"), k, self.cfg.hash_size).alias("sig_i"),
         )

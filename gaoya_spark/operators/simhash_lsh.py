@@ -23,6 +23,14 @@ from itertools import combinations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from gaoya_spark.config import SimHashConfig
+from gaoya_spark.operators._bucket_pairs import (
+    attach_ids,
+    is_materialized,
+    pairs_from_sorted_ids,
+    sid_col,
+    sid_cross_pairs_from_buckets,
+    triangle_block_pairs,
+)
 from gaoya_spark.functions.signatures import make_simhash_udf, make_simhash_tokens_udf
 from gaoya_spark.functions.similarity import hamming_distance_col
 
@@ -123,15 +131,13 @@ class SimHashLSH:
         ).select("id", "table_idx", "key")
 
     # ----------------------------------------------------------- dedup pairs
-    def _sid_tables(self, sig_df: DataFrame, raw_id: bool = False) -> DataFrame:
-        """(sid, sig, tk): 8-byte id surrogate, the 8-byte signature itself,
-        and one 8-byte table key per enumerated mask (tk = xxhash64 of the
-        masked signature seeded by the table index — one long key instead of
-        (table_idx, key), exactly like the MinHash band key; a cross-table
-        collision only adds a candidate, and candidates are distance-checked
-        exactly). raw_id=True uses the id column itself as sid (valid only
-        for 64-bit integer ids — lets dedup_pairs skip the sid->id attach
-        joins entirely)."""
+    def _sid_tables(self, sig_df: DataFrame) -> DataFrame:
+        """(sid, sig, tk): the id surrogate (sid_col), the signature
+        itself, and one 8-byte table key per enumerated mask (tk = xxhash64
+        of the masked signature seeded by the table index — one long key
+        instead of (table_idx, key), exactly like the MinHash band key; a
+        cross-table collision only adds a candidate, and candidates are
+        distance-checked exactly). Null-id rows have no table row."""
         if self._wide:
             keys = F.array(*[
                 F.xxhash64(
@@ -146,9 +152,8 @@ class SimHashLSH:
                 F.xxhash64(F.col("sig").bitwiseAND(F.lit(_to_i64(m))), F.lit(i))
                 for i, m in enumerate(self.masks)
             ])
-        sid = F.col("id") if raw_id else F.xxhash64("id")
-        return sig_df.select(
-            sid.alias("sid"), "sig", F.explode(keys).alias("tk")
+        return sig_df.where(F.col("id").isNotNull()).select(
+            sid_col(sig_df).alias("sid"), "sig", F.explode(keys).alias("tk")
         )
 
     def _sid_dist_pairs(
@@ -160,7 +165,6 @@ class SimHashLSH:
         max_distance: int | None = None,
         persist: bool = True,
         gate: bool = False,
-        raw_id: bool = False,
     ) -> DataFrame:
         """(src, dst, dist) in sid space, deduped across tables. The 8-byte
         signature rides inside the bucket arrays, so the Hamming distance is
@@ -172,7 +176,7 @@ class SimHashLSH:
         buckets (the all-empty-caption pathology at web scale) are excluded
         — bucket_stats(max_bucket_size=...) records how many."""
         buckets = (
-            self._sid_tables(sig_df, raw_id=raw_id)
+            self._sid_tables(sig_df)
             .groupBy("tk")
             .agg(F.array_sort(F.collect_list(F.struct("sid", "sig"))).alias("ms"))
             .where(F.size("ms") >= 2)
@@ -184,29 +188,11 @@ class SimHashLSH:
         )
         if persist:
             buckets = buckets.persist()
-        ms = F.col("ms")
-        pair_structs = F.flatten(
-            F.transform(
-                ms,
-                lambda x, i: F.transform(
-                    F.slice(ms, i + 2, F.size(ms)),
-                    lambda y: F.struct(
-                        x["sid"].alias("src"),
-                        y["sid"].alias("dst"),
-                        x["sig"].alias("sig_a"),
-                        y["sig"].alias("sig_b"),
-                    ),
-                ),
-            )
-        )
-        raw = (
-            buckets.where(F.size("ms") <= array_bucket_limit)
-            .select(F.explode(pair_structs).alias("p"))
-            .select(
-                "p.src", "p.dst",
-                self._dist(F.col("p.sig_a"), F.col("p.sig_b")).alias("dist"),
-            )
-        )
+        # members are (sid, sig) structs, sid first: both tiers emit them
+        # as (src, dst) in sid order, and the distance is taken after
+        raw = buckets.where(F.size("ms") <= array_bucket_limit).select(
+            F.explode(pairs_from_sorted_ids(F.col("ms"))).alias("p")
+        ).select("p.src", "p.dst")
         # gate=True prunes the triangle tier with a blocking probe job;
         # default keeps the tier in the plan — same measured trade as
         # _bucket_pairs (an empty AQE stage is cheaper than serializing
@@ -215,38 +201,18 @@ class SimHashLSH:
             buckets.where(F.size("ms") > array_bucket_limit).limit(1).count() > 0
         )
         if has_big:
-            mid = buckets.where(
-                (F.size("ms") > array_bucket_limit) & (F.size("ms") <= max_bucket_size)
-            ).select(
-                F.xxhash64("ms").alias("hb"), F.explode("ms").alias("m")
-            ).select(
-                "hb", F.col("m.sid").alias("sid"), F.col("m.sig").alias("sig")
-            )
-            g = F.pmod(F.xxhash64("sid", F.lit(0x5A17)), F.lit(block_groups))
-            mid_g = mid.withColumn("g", g)
-            left = mid_g.withColumn(
-                "g2", F.explode(F.sequence(F.col("g"), F.lit(block_groups - 1)))
-            ).select(
-                "hb", F.col("sid").alias("lid"), F.col("sig").alias("lsig"),
-                F.col("g").alias("g1"), "g2",
-            )
-            right = mid_g.select(
-                "hb", F.col("sid").alias("rid"), F.col("sig").alias("rsig"),
-                F.col("g").alias("g2"),
-            )
-            pairs_mid = (
-                left.join(right, ["hb", "g2"])
-                .where(
-                    (F.col("g1") < F.col("g2"))
-                    | ((F.col("g1") == F.col("g2")) & (F.col("lid") < F.col("rid")))
-                )
-                .select(
-                    F.least("lid", "rid").alias("src"),
-                    F.greatest("lid", "rid").alias("dst"),
-                    self._dist(F.col("lsig"), F.col("rsig")).alias("dist"),
-                )
-            )
-            raw = raw.unionByName(pairs_mid)
+            raw = raw.unionByName(triangle_block_pairs(
+                buckets.where(
+                    (F.size("ms") > array_bucket_limit)
+                    & (F.size("ms") <= max_bucket_size)
+                ).select(F.col("ms").alias("ids")),
+                block_groups,
+            ))
+        raw = raw.select(
+            F.col("src.sid").alias("src"),
+            F.col("dst.sid").alias("dst"),
+            self._dist(F.col("src.sig"), F.col("dst.sig")).alias("dist"),
+        )
         if max_distance is not None:
             raw = raw.where(F.col("dist") < max_distance)
         return raw.groupBy("src", "dst").agg(F.min("dist").alias("dist"))
@@ -255,26 +221,10 @@ class SimHashLSH:
                         persist: bool = True) -> DataFrame:
         """(src, dst) ids co-bucketed in >=1 table, deduped — public
         id-space wrapper (no distance filter)."""
-        if sig_df.schema["id"].dataType.simpleString() == "bigint":
-            # long-id fast path: see dedup_pairs
-            return self._sid_dist_pairs(
-                sig_df, max_bucket_size=max_bucket_size, persist=persist,
-                raw_id=True,
-            ).select("src", "dst")
         cand = self._sid_dist_pairs(
             sig_df, max_bucket_size=max_bucket_size, persist=persist
         )
-        m = sig_df.select(F.xxhash64("id").alias("sid"), "id")
-        ma = m.select(F.col("sid").alias("src"), F.col("id").alias("src_id"))
-        mb = m.select(F.col("sid").alias("dst"), F.col("id").alias("dst_id"))
-        return (
-            cand.join(ma, "src")
-            .join(mb, "dst")
-            .select(
-                F.least("src_id", "dst_id").alias("src"),
-                F.greatest("src_id", "dst_id").alias("dst"),
-            )
-        )
+        return attach_ids(cand.select("src", "dst"), sig_df)
 
     def bucket_stats(
         self,
@@ -304,36 +254,14 @@ class SimHashLSH:
     def dedup_pairs(self, sig_df: DataFrame, max_distance: int | None = None, **kw) -> DataFrame:
         """(src, dst, dist) pairs with hamming distance strictly below
         max_distance (Q8 strict '<'). The distance filter runs map-side
-        inside pair generation — only true pairs reach a shuffle."""
+        inside pair generation — only true pairs reach a shuffle. Ids come
+        back through attach_ids: a cast for integral ids (no join; at
+        scale the attach joins are candidate-set shuffles), two joins on
+        the (sid, id) map otherwise."""
         d = self.cfg.max_distance if max_distance is None else max_distance
-        if kw.get("persist", True) and not (
-            sig_df.storageLevel.useMemory or sig_df.storageLevel.useDisk
-        ):
+        if kw.get("persist", True) and not is_materialized(sig_df):
             sig_df = sig_df.persist()
-        # 64-bit-integer ids are valid surrogates themselves: feed them in
-        # directly and return candidates as-is — the xxhash64 indirection
-        # and both sid->id attach joins disappear (the same long-id fast
-        # path as substring's candidate_gram_pairs; at scale those joins
-        # are candidate-set shuffles). Canonical (least, greatest) order
-        # is preserved: pair generation orders by sid, which for raw
-        # longs IS id order.
-        if sig_df.schema["id"].dataType.simpleString() == "bigint":
-            return self._sid_dist_pairs(
-                sig_df, max_distance=d, raw_id=True, **kw
-            ).select("src", "dst", "dist")
-        cand = self._sid_dist_pairs(sig_df, max_distance=d, **kw)
-        m = sig_df.select(F.xxhash64("id").alias("sid"), "id")
-        ma = m.select(F.col("sid").alias("src"), F.col("id").alias("src_id"))
-        mb = m.select(F.col("sid").alias("dst"), F.col("id").alias("dst_id"))
-        return (
-            cand.join(ma, "src")
-            .join(mb, "dst")
-            .select(
-                F.least("src_id", "dst_id").alias("src"),
-                F.greatest("src_id", "dst_id").alias("dst"),
-                "dist",
-            )
-        )
+        return attach_ids(self._sid_dist_pairs(sig_df, max_distance=d, **kw), sig_df)
 
     # ----------------------------------------------------------------- query
     def sid_tables(self, sig_df: DataFrame) -> DataFrame:
@@ -342,7 +270,9 @@ class SimHashLSH:
         append these 16-byte rows, query = probe them via
         query(..., index_tables=) so the standing index is never
         re-keyed per probe batch (the SimHash counterpart of
-        MinHashLSH.sid_bands)."""
+        MinHashLSH.sid_bands). An integral id is its own sid, so a table
+        written when every sid was xxhash64(id) must be rebuilt before
+        integral-id signatures probe it."""
         return self._sid_tables(sig_df).select("sid", "tk")
 
     def query(
@@ -370,8 +300,6 @@ class SimHashLSH:
         maintained-index path; stale extra rows (removed docs) only
         produce candidates that vanish in the signature join, but missing
         rows lose recall (same contract as MinHash index_bands)."""
-        from gaoya_spark.operators._bucket_pairs import sid_cross_pairs_from_buckets
-
         d = self.cfg.max_distance if max_distance is None else max_distance
         it = (
             index_tables.select("sid", "tk")
@@ -383,12 +311,12 @@ class SimHashLSH:
             it.select("sid", F.col("tk").alias("bk")),
         )
         qs = probe_sigs.select(
-            F.xxhash64("id").alias("qid"),
+            sid_col(probe_sigs).alias("qid"),
             F.col("id").alias("qid_orig"),
             F.col("sig").alias("sig_q"),
         )
         ix = index_sigs.select(
-            F.xxhash64("id").alias("id"),
+            sid_col(index_sigs).alias("id"),
             F.col("id").alias("id_orig"),
             F.col("sig").alias("sig_i"),
         )

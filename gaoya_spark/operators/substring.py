@@ -38,7 +38,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from gaoya_spark.operators._bucket_pairs import sid_pairs_from_buckets
+from gaoya_spark.operators._bucket_pairs import (
+    attach_ids,
+    sid_col,
+    sid_pairs_from_buckets,
+)
 
 
 def longest_common_substring_len(a: str, b: str) -> int:
@@ -148,25 +152,19 @@ def candidate_gram_pairs(
     """(src, dst) pairs sharing >=1 exact L-gram (by 128-bit gram
     fingerprint), deduped. Grams shared by more than max_gram_bucket docs
     (boilerplate at web scale) are dropped — surfaced via gram_stats, never
-    silently at default settings for tests."""
-    has_len = df.where(F.length(text_col) >= min_len)
-    # 64-bit-integer ids ARE valid 8-byte surrogates: skip the xxhash64
-    # sid indirection and, with it, BOTH sid->id attach joins on the
-    # candidate set (guide §2.4 — at web scale those are two shuffles of
-    # every candidate row; locally ~15% of the query). Pair order is
-    # unchanged: sid_pairs_from_buckets emits src < dst in surrogate
-    # order, which for raw long ids IS (least, greatest) id order.
-    id_is_long = df.schema[id_col].dataType.simpleString() == "bigint"
-    sid = (
-        F.col(id_col).alias("sid")
-        if id_is_long
-        else F.xxhash64(F.col(id_col)).alias("sid")
+    silently at default settings for tests. Docs travel as sid_col
+    surrogates and attach_ids puts the ids back: a cast for integral ids,
+    otherwise two joins (at web scale, two shuffles of every candidate
+    row). Null-id docs are in no pair."""
+    has_len = df.where(
+        (F.length(text_col) >= min_len) & F.col(id_col).isNotNull()
     )
     # two-step select so the sorted gram array is a named column: the
     # adjacent-dedup filter references it twice (element and predecessor)
     # and a named projection guarantees single evaluation of the sort
     gs = has_len.select(
-        sid, _gram_fp128_sorted(F.col(text_col), min_len).alias("gs")
+        sid_col(df, id_col).alias("sid"),
+        _gram_fp128_sorted(F.col(text_col), min_len).alias("gs"),
     )
     dedup = F.filter(
         F.col("gs"),
@@ -179,19 +177,7 @@ def candidate_gram_pairs(
         drop_cap=max_gram_bucket,
         persist=persist,
     )
-    if id_is_long:
-        return cand.select("src", "dst")
-    m = df.select(F.xxhash64(F.col(id_col)).alias("sid"), F.col(id_col).alias("id"))
-    ma = m.select(F.col("sid").alias("src"), F.col("id").alias("src_id"))
-    mb = m.select(F.col("sid").alias("dst"), F.col("id").alias("dst_id"))
-    return (
-        cand.join(ma, "src")
-        .join(mb, "dst")
-        .select(
-            F.least("src_id", "dst_id").alias("src"),
-            F.greatest("src_id", "dst_id").alias("dst"),
-        )
-    )
+    return attach_ids(cand.select("src", "dst"), df, id_col)
 
 
 def substring_pairs(

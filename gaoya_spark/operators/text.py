@@ -15,7 +15,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from gaoya_spark.operators._bucket_pairs import sid_pairs_from_buckets
+from gaoya_spark.operators._bucket_pairs import sid_col, sid_pairs_from_buckets
 
 # HEURISTIC PLACEHOLDER, not a production language identifier: 4 languages
 # x 6 stopwords, chosen to be deterministic and expressible identically in
@@ -220,16 +220,18 @@ def ngram_jaccard_pairs(
     max_shingle_bucket docs are excluded from pairing entirely (recorded by
     ngram_shingle_stats, never silently); below that cap jaccard is exact.
 
-    Docs travel as 8-byte xxhash64(id) surrogates; original ids re-attach
-    only to surviving pairs. A surrogate collision (~n^2/2^65) would merge
-    two docs' intersection counts — negligible at any real scale and
-    impossible at oracle scale.
+    Docs travel as 8-byte sid_col surrogates (the id itself for integral
+    ids, else xxhash64(id)); original ids re-attach only to surviving
+    pairs, in the join that brings each doc's shingle count. A hashed
+    surrogate collision (~n^2/2^65) would merge two docs' intersection
+    counts — negligible at any real scale and impossible at oracle scale.
+    Null-id docs are in no pair.
     """
     docs = _ngram_shingle_docs(df, id_col, text_col, n)
     if persist:
         docs = docs.persist()
-    mem = docs.select(
-        F.explode("sh").alias("bk"), F.xxhash64("id").alias("sid")
+    mem = docs.where(F.col("id").isNotNull()).select(
+        F.explode("sh").alias("bk"), sid_col(docs).alias("sid")
     )
     pairs = sid_pairs_from_buckets(
         mem,
@@ -240,9 +242,7 @@ def ngram_jaccard_pairs(
         medium_bucket_limit=medium_bucket_limit,
         gate=gate,
     )
-    m = docs.select(
-        F.xxhash64("id").alias("sid"), "id", F.size("sh").alias("n_sh")
-    )
+    m = docs.select(sid_col(docs).alias("sid"), "id", F.size("sh").alias("n_sh"))
     ma = m.select(
         F.col("sid").alias("src"), F.col("id").alias("a_id"), F.col("n_sh").alias("na")
     )

@@ -1,7 +1,9 @@
 """Property tests for the shared bucket->pairs machinery: the candidate
 set and the matching-bucket count m must equal a naive per-bucket
 enumeration for random memberships, across the array path, the triangle
-hot path, and the drop cap."""
+hot path, and the drop cap. The id surrogate (sid_col / attach_ids) is
+checked through every operator that uses it: null ids are in no pair and
+no match, and int, long and string ids give the same pairs."""
 
 import itertools
 from collections import Counter
@@ -10,10 +12,15 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from gaoya_spark.config import MinHashConfig, SimHashConfig, TokenizerSpec
 from gaoya_spark.operators._bucket_pairs import (
     sid_cross_pairs_from_buckets,
     sid_pairs_from_buckets,
 )
+from gaoya_spark.operators.minhash_lsh import MinHashLSH
+from gaoya_spark.operators.simhash_lsh import SimHashLSH
+from gaoya_spark.operators.substring import substring_pairs
+from gaoya_spark.operators.text import ngram_jaccard_pairs
 
 
 def _expected(members, drop_cap):
@@ -161,3 +168,109 @@ def test_gram_stats_dropped(spark):
     # dropped; the y-gram stays (single doc)
     assert r["n_dropped"] == 1
     assert r["max_docs_per_gram"] == 5
+
+
+WORD = TokenizerSpec(kind="word", n_from=1, n_to=1, lowercase=True)
+
+
+def _mh():
+    return MinHashLSH(
+        MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
+    )
+
+
+def _sh():
+    return SimHashLSH(SimHashConfig(tokenizer=WORD))
+
+
+def _on_sigs(lsh, method, df, **kw):
+    """lsh.<method> over df's signatures; a query probes the index with
+    the index itself."""
+    sigs = lsh.signatures(df, "id", "text")
+    if method == "query":
+        return lsh.query(sigs, sigs, **kw)
+    return getattr(lsh, method)(sigs, **kw)
+
+
+# Every operator that turns ids into surrogates and back, as df (id, text)
+# -> (src, dst, ...) pairs or (qid, id, ...) query matches.
+SURROGATE_OPERATORS = {
+    "simhash.dedup_pairs": lambda df: _on_sigs(_sh(), "dedup_pairs", df),
+    "simhash.candidate_pairs": lambda df: _on_sigs(_sh(), "candidate_pairs", df),
+    "simhash.query": lambda df: _on_sigs(_sh(), "query", df, keep_distance=True),
+    "substring_pairs": lambda df: substring_pairs(df, "id", "text"),
+    "ngram_jaccard_pairs": lambda df: ngram_jaccard_pairs(df, "id", "text", threshold=0.5),
+    "minhash.dedup_pairs": lambda df: _on_sigs(_mh(), "dedup_pairs", df, keep_sim=False),
+    "minhash.candidate_pairs": lambda df: _on_sigs(_mh(), "candidate_pairs", df),
+    "minhash.query": lambda df: _on_sigs(_mh(), "query", df, keep_sim=True),
+}
+
+
+def _id_rows(out):
+    """Each output row as (first id, second id, *rest)."""
+    return [tuple(r) for r in out.collect()]
+
+
+@pytest.mark.parametrize(
+    "dtype,ids", [("long", (1, 2)), ("string", ("a", "b"))], ids=["long", "string"]
+)
+@pytest.mark.parametrize("op", sorted(SURROGATE_OPERATORS))
+def test_null_ids_in_no_pair_or_match(spark, op, dtype, ids):
+    """Three identical texts, one with a null id: every operator returns
+    only the pair of the two other ids (a query may also match each of
+    them with itself). A null id names no document; without the drop it
+    pairs as (None, x), as a self-pair (x, x), or matches as (x, None)."""
+    text = "the same caption text for all three rows of this test"
+    df = spark.createDataFrame(
+        [(ids[0], text), (None, text), (ids[1], text)], f"id {dtype}, text string"
+    )
+    out = SURROGATE_OPERATORS[op](df)
+    rows = {r[:2] for r in _id_rows(out)}
+    assert all(None not in r for r in rows), rows
+    if out.columns[0] == "src":
+        assert rows == {ids}
+    else:
+        assert {r for r in rows if r[0] != r[1]} == {ids, ids[::-1]}
+        assert {r for r in rows if r[0] == r[1]} <= {(i, i) for i in ids}
+
+
+@pytest.mark.parametrize("op", sorted(SURROGATE_OPERATORS))
+def test_id_types_give_same_pairs(spark, op):
+    """Integral ids are their own surrogates (cast to long and back, no
+    attach join); string ids are hashed and joined back. Over the same
+    texts, int, long and string ids give the same pairs (with the same
+    distances or similarities), each in (least, greatest) order of its own
+    id type, and the output ids keep the input id type: int ids come back
+    as int."""
+    texts = [
+        "the quick brown fox jumps over the lazy dog near the river bank today",
+        "the quick brown fox jumps over the lazy dog near the river bank today",
+        "the quick brown fox jumps over the lazy cat near the river bank today",
+        "completely different words about database engines and query planners",
+        "completely different words about database engines and query optimizers",
+        "another unrelated caption describing a sunny beach with tall palm trees",
+    ]
+    # string order of the names differs from the numeric order of the ids
+    nums = [7, 30, 200, 1000, 45, 3]
+    results = {}
+    for dtype, to_id in (("int", int), ("long", int), ("string", lambda n: f"doc-{n}")):
+        df = spark.createDataFrame(
+            [(to_id(n), t) for n, t in zip(nums, texts)], f"id {dtype}, text string"
+        )
+        out = SURROGATE_OPERATORS[op](df)
+        a, b = out.columns[:2]
+        assert dict(out.dtypes)[a] == dict(out.dtypes)[b] == dict(df.dtypes)["id"]
+        rows = _id_rows(out)
+        assert all(type(x) is type(to_id(0)) for r in rows for x in r[:2])
+        back = {to_id(n): n for n in nums}
+        got = set()
+        for r in rows:
+            ns = (back[r[0]], back[r[1]])
+            if a == "src":  # a pair, canonical in its own id type
+                assert r[0] < r[1]
+                ns = tuple(sorted(ns))
+            got.add(ns + r[2:])
+        assert len(got) == len(rows)
+        results[dtype] = got
+    assert results["int"] == results["long"] == results["string"], results
+    assert results["long"]

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from gaoya_spark.config import MinHashConfig, TokenizerSpec
 from gaoya_spark.fixtures import corpus5_df, token_vectors_pdf
-from gaoya_spark.operators._bucket_pairs import sid_pairs_from_buckets
+from gaoya_spark.operators._bucket_pairs import sid_col, sid_pairs_from_buckets
 from gaoya_spark.operators.minhash_lsh import MinHashLSH
 from gaoya_spark.params import calculate_b_and_r
 
@@ -719,7 +719,7 @@ def test_size_estimate_trusted_only_where_it_measures(
     lsh, sigs = corpus5
 
     def est(df):
-        return lsh._size_estimate(df.select(F.xxhash64("id").alias("sid"), "sig", "id"))
+        return lsh._size_estimate(df.select(sid_col(df).alias("sid"), "sig", "id"))
 
     sigs.write.parquet(str(tmp_path / "sigs"))
     sigs.withColumn("pad", F.lit("x")).write.parquet(str(tmp_path / "padded"))

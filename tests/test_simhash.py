@@ -4,7 +4,6 @@ filter semantics (Q8), centroid majority vote (P20)."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from gaoya_spark import hashing
 from gaoya_spark.config import SimHashConfig, TokenizerSpec
@@ -73,7 +72,9 @@ def test_dedup_pairs_symmetric_and_canonical(spark, perturbed):
 
 def test_candidate_recall_within_ball_is_total(spark):
     """Pigeonhole guarantee: every pair within hamming distance d shares at
-    least one of the C(q, q-d) block masks — candidate recall 1.0."""
+    least one of the C(q, q-d) block masks — candidate recall 1.0, also
+    when array_bucket_limit=2 sends the buckets to the triangle block
+    join."""
     cfg = SimHashConfig(nbits=64, num_blocks=6, max_distance=3)
     lsh = SimHashLSH(cfg)
     rng = np.random.default_rng(5)
@@ -97,6 +98,8 @@ def test_candidate_recall_within_ball_is_total(spark):
         if d < 3:
             want.add((min(i, j), max(i, j)))
     assert got == want
+    tri = lsh.dedup_pairs(sigs, array_bucket_limit=2, block_groups=3)
+    assert {(r["src"], r["dst"]) for r in tri.collect()} == want
 
 
 def test_simhash_centroid_majority(spark):
@@ -149,7 +152,8 @@ def _u128_to_words(v: int) -> list[int]:
 def test_u128_brute_force_parity(spark):
     """128-bit SimHash (the reference's own benchmark config family:
     lsh_bench.rs:73-110 — u128, 12 blocks, d=9): the banded index returns
-    exactly the brute-force Hamming-ball pair set."""
+    exactly the brute-force Hamming-ball pair set, through the array
+    tier and through the triangle block join alike."""
     import itertools
 
     cfg = SimHashConfig(nbits=128, num_blocks=12, max_distance=9)
@@ -171,6 +175,8 @@ def test_u128_brute_force_parity(spark):
         if d < 9:
             want.add((min(i, j), max(i, j), d))
     assert got == want
+    tri = lsh.dedup_pairs(sigs, array_bucket_limit=2, block_groups=3)
+    assert {(r["src"], r["dst"], r["dist"]) for r in tri.collect()} == want
 
 
 def test_u128_text_signatures_and_query(spark):
@@ -278,23 +284,3 @@ def test_query_with_precomputed_index_tables(spark):
         for r in lsh.query(kept, kept, index_tables=tables).collect()
     }
     assert after_rm == {(q, i) for q, i in base if q != 0 and i != 0}
-
-
-def test_dedup_pairs_string_ids_match_long_id_fast_path(spark, perturbed):
-    """Long ids take the fast path (the ids are their own surrogates);
-    string ids go through the xxhash64 surrogate and the sid->id attach
-    joins. Over the same signatures both must give the same pairs and
-    distances, each pair in (least, greatest) order of its own id type."""
-    lsh, sigs, _ = perturbed
-    fast = {(r["src"], r["dst"], r["dist"]) for r in lsh.dedup_pairs(sigs).collect()}
-    assert fast
-    named = sigs.select(
-        F.concat(F.lit("doc-"), F.col("id").cast("string")).alias("id"), "sig"
-    )
-    rows = lsh.dedup_pairs(named).collect()
-    assert all(r["src"] < r["dst"] for r in rows)
-    back = {
-        tuple(sorted((int(r["src"][4:]), int(r["dst"][4:])))) + (r["dist"],)
-        for r in rows
-    }
-    assert back == fast and len(rows) == len(fast)
