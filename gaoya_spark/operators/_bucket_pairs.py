@@ -156,11 +156,11 @@ def sid_cross_pairs_from_buckets(
     query workloads. One groupBy over the union (side-tagged) collects each
     bucket's probe and index members; the cross product is JVM array
     combinatorics for small buckets (probe x index product within
-    array_bucket_limit^2 — per-bucket output is bounded, so point lookups
-    into a big bucket still match), a block join for hot ones; hot buckets
-    whose index side also exceeds drop_cap are excluded (the cap guards
-    the quadratic product, not bounded lookups). A probe that is also in
-    the index meets itself (reference query() includes self-matches)."""
+    array_bucket_limit^2), a block join for hot ones. A bucket whose index
+    side exceeds drop_cap is excluded from every tier, like
+    sid_pairs_from_buckets' cap; at drop_cap >= array_bucket_limit^2 only
+    hot buckets can exceed it. A probe that is also in the index meets
+    itself (reference query() includes self-matches)."""
     tagged = probe_members.select(
         "bk", "sid", F.lit(True).alias("is_probe")
     ).unionByName(index_members.select("bk", "sid", F.lit(False).alias("is_probe")))
@@ -174,7 +174,7 @@ def sid_cross_pairs_from_buckets(
                 F.collect_list(F.when(~F.col("is_probe"), F.col("sid")))
             ).alias("is"),
         )
-        .where((F.size("qs") >= 1) & (F.size("is") >= 1))
+        .where((F.size("qs") >= 1) & F.size("is").between(1, drop_cap))
     )
     if persist:
         buckets = buckets.persist()
@@ -193,20 +193,19 @@ def sid_cross_pairs_from_buckets(
     # collapse costs a second full shuffle of every bucket and measured a
     # net loss (see sid_pairs_from_buckets) — the final groupBy sums m
     # identically either way
-    small = buckets.where(cross_n <= (array_bucket_limit * array_bucket_limit))
+    lim_sq = array_bucket_limit * array_bucket_limit
+    small = buckets.where(cross_n <= lim_sq)
     raw = small.select(
         F.lit(1).cast("long").alias("nb"), F.explode(cross).alias("p")
     ).select("p.qid", "p.id", "nb")
     # halved vs medium^2 so the worst-case per-row cross array matches the
     # symmetric variant's C(medium, 2) bound
     med_cap = (medium_bucket_limit * medium_bucket_limit) // 2
-    lim_sq = array_bucket_limit * array_bucket_limit
     if persist and gate:
-        droppable = F.size("is") <= drop_cap
         tri_cap = max(med_cap, lim_sq)
         st = buckets.agg(
-            F.sum(((cross_n > lim_sq) & droppable).cast("int")).alias("n_over"),
-            F.sum(((cross_n > tri_cap) & droppable).cast("int")).alias("n_tri"),
+            F.sum((cross_n > lim_sq).cast("int")).alias("n_over"),
+            F.sum((cross_n > tri_cap).cast("int")).alias("n_tri"),
         ).collect()[0]
         has_hot = (st["n_over"] or 0) > 0
         has_huge = (st["n_tri"] or 0) > 0
@@ -221,10 +220,7 @@ def sid_cross_pairs_from_buckets(
         # substring gram fingerprints) so an hb collision can't merge two
         # hot member sets and inflate m.
         collapsed = (
-            buckets.where(
-                (cross_n > (array_bucket_limit * array_bucket_limit))
-                & (F.size("is") <= drop_cap)
-            )
+            buckets.where(cross_n > lim_sq)
             .groupBy("qs", "is")
             .agg(F.count("*").alias("nb"))
         )

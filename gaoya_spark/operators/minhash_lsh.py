@@ -3,11 +3,12 @@
 The reference's index is a Vec of per-band hash maps
 (/root/reference/gaoya/src/minhash/minhash_index.rs:316-328). Here the
 "index" is simply the signatures DataFrame/table; banding is recomputed
-declaratively with posexplode and the shuffle on (band_idx, band_hash) IS
-the hash table. That makes inserts (W1-W2) = appends to the signatures
-table, removals (W3) = anti-join/DELETE, and queries (Q1-Q7) = equi-joins —
-all Catalyst-planned, AQE-optimized, and broadcast-able when one side is
-small.
+declaratively and the shuffle on the band key IS the hash table. That
+makes inserts (W1-W2) = appends to the signatures table, removals (W3) =
+anti-join/DELETE, and queries (Q1-Q7) = a size-routed probe: a probe set
+that fits one broadcast is matched in one numpy pass over the index rows
+(no exchange, no join), a larger one groups its band keys with the
+index's and joins the signatures back — the same matches either way.
 
 Scale notes (100TB / 10^12 rows):
 - band hashes are 64-bit xxhash64 of the signature slice — the same
@@ -100,6 +101,27 @@ def _m_sure_bands(threshold: float, k: int, r: int) -> int:
     return m
 
 
+def _band_keys(mat, b: int, r: int):
+    """(n, b) int64 band keys of an (n, b*r) signature matrix: each band's
+    r positions fold through splitmix64, seeded by the band index. The
+    one band-key function of the Arrow banding (_sid_bands_arrow, hence
+    sid_bands tables), the replicated dedup kernel and the broadcast
+    probe. Fold step j reads the strided columns j::r (position i*r+j of
+    band i), so no (n, b, r) uint64 tile is materialized: peak memory
+    stays ~2 key matrices regardless of k."""
+    import numpy as np
+
+    from gaoya_spark import hashing
+
+    seeds = hashing.splitmix64(np.arange(b, dtype=np.int64))
+    acc = np.broadcast_to(seeds, (len(mat), b)).copy()
+    for j in range(r):
+        acc = hashing.splitmix64(
+            (acc ^ mat[:, j : b * r : r].astype(np.uint64)).view(np.int64)
+        )
+    return acc.view(np.int64)
+
+
 def _attach_ids_fn(bc):
     """mapInPandas kernel: (src, dst) sid pairs -> (src, dst) original-id
     pairs in (least, greatest) order, via the broadcast's sid-sorted id
@@ -123,20 +145,22 @@ def _attach_ids_fn(bc):
     return fn
 
 
-def _eq_counts_chunked(mat_b, si, di):
-    """Per-pair equal-position counts, gathered in slices so the two
-    (chunk, k) gathered matrices + bool stay ~<=64MB regardless of how
-    many pairs one flush/batch carries (the unchunked compare materializes
-    2 x (pairs, k) matrices — ~4.5GB per 4M-pair flush at k=126/int32,
-    ~35GB at k=512/int64, multiplied by concurrent tasks)."""
+def _eq_counts_chunked(mat_b, si, di, mat_d=None):
+    """Per-pair equal-position counts of rows mat_b[si] and mat_d[di]
+    (mat_d defaults to mat_b), gathered in slices so the two (chunk, k)
+    gathered matrices + bool stay ~<=64MB regardless of how many pairs
+    one flush/batch carries (the unchunked compare materializes 2 x
+    (pairs, k) matrices — ~4.5GB per 4M-pair flush at k=126/int32, ~35GB
+    at k=512/int64, multiplied by concurrent tasks)."""
     import numpy as np
 
+    mat_d = mat_b if mat_d is None else mat_d
     k = mat_b.shape[1] if mat_b.ndim == 2 else 1
     chunk = max(1024, (64 << 20) // max(2 * k * mat_b.dtype.itemsize, 1))
     out = np.empty(len(si), dtype=np.int64)
     for lo in range(0, len(si), chunk):
         hi = lo + chunk
-        out[lo:hi] = (mat_b[si[lo:hi]] == mat_b[di[lo:hi]]).sum(axis=1)
+        out[lo:hi] = (mat_b[si[lo:hi]] == mat_d[di[lo:hi]]).sum(axis=1)
     return out
 
 
@@ -269,20 +293,7 @@ def _replicated_dedup_fn(bc, need, b, r, n_parts, cap, max_pairs: int = 4_000_00
         n = len(sids_b)
         memb_parts, len_parts = [], []
         if n >= 2:
-            seeds = hashing.splitmix64(np.arange(b, dtype=np.int64))
-            acc = np.broadcast_to(seeds, (n, b)).copy()
-            for j in range(r):
-                # strided column slice: fold step j touches position
-                # i*r+j of band i, i.e. columns j::r — the (n, b) slice
-                # is copied per step instead of materializing the whole
-                # matrix as a (n, b, r) uint64 tile (4x the bytes when
-                # signatures are int32; peak per-task memory stays ~2
-                # key matrices regardless of k)
-                acc = hashing.splitmix64(
-                    (acc ^ mat_b[:, j : b * r : r].astype(np.uint64)).view(
-                        np.int64
-                    )
-                )
+            acc = _band_keys(mat_b, b, r)
             for j in range(b):
                 col = acc[:, j]
                 o = np.argsort(col)
@@ -374,6 +385,72 @@ def _replicated_dedup_fn(bc, need, b, r, n_parts, cap, max_pairs: int = 4_000_00
                 if "seg" not in state:
                     state["seg"] = segments()
                 yield from verify_own(int(part))
+
+    return fn
+
+
+def _probe_match_fn(bc, b, r, excluded, max_pairs: int = 4_000_000):
+    """mapInPandas kernel over (id, sig) index rows: the broadcast probe of
+    MinHashLSH.query. Each task bands the broadcast probe matrix once
+    (_band_keys, sorted, minus the `excluded` over-cap keys). Per index
+    batch it bands the batch the same way, finds every (probe row, index
+    row) pair sharing a band key by searchsorted, keeps each pair once,
+    and scores it sim = eq/k as a float64, the JVM route's
+    minhash_similarity_packed arithmetic. Emits (qid, id, sim) for every
+    candidate in the input id types; the caller filters by threshold.
+
+    Pairs are generated in flushes of whole index rows, ~max_pairs key
+    hits each (at least one row), so the per-flush dedup sees every band
+    of its rows and a whole index row's pairs are emitted once."""
+    import numpy as np
+    import pandas as pd
+
+    state: dict = {}
+
+    def probe_keys(mat_p):
+        keys = _band_keys(mat_p, b, r).ravel()
+        rows = np.arange(len(keys)) // b
+        keep = ~np.isin(keys, excluded)
+        keys, rows = keys[keep], rows[keep]
+        o = np.argsort(keys)
+        return keys[o], rows[o]
+
+    def fn(it):
+        _, mat_p, ids_p = bc.value
+        n_p, k = mat_p.shape
+        for pdf in it:
+            n = len(pdf)
+            if not n:
+                continue
+            if "keys" not in state:
+                state["keys"] = probe_keys(mat_p)
+            pkeys, prows = state["keys"]
+            mat_i = np.stack(pdf["sig"].to_numpy())
+            flat = _band_keys(mat_i, b, r).ravel()
+            lo = np.searchsorted(pkeys, flat, "left")
+            hits = np.searchsorted(pkeys, flat, "right") - lo
+            csum = np.cumsum(hits.reshape(n, b).sum(axis=1))
+            ids_i = pdf["id"].to_numpy()
+            start = 0
+            while start < n:
+                base = csum[start - 1] if start else 0
+                end = max(
+                    int(np.searchsorted(csum, base + max_pairs, side="right")),
+                    start + 1,
+                )
+                c = hits[start * b : end * b]
+                total = int(c.sum())
+                if total:
+                    key_idx = np.repeat(np.arange(start * b, end * b), c)
+                    off = np.arange(total) - np.repeat(np.cumsum(c) - c, c)
+                    pr = prows[lo[key_idx] + off]
+                    u = np.unique((key_idx // b) * np.int64(n_p) + pr)
+                    ir, pr = u // n_p, u % n_p
+                    eq = _eq_counts_chunked(mat_p, pr, ir, mat_i)
+                    yield pd.DataFrame(
+                        {"qid": ids_p[pr], "id": ids_i[ir], "sim": eq / k}
+                    )
+                start = end
 
     return fn
 
@@ -478,8 +555,8 @@ class MinHashLSH:
     def _sid_bands_arrow(self, sig_df: DataFrame) -> DataFrame:
         """(sid, bk) like _sid_bands, but the band keys are computed in one
         vectorized Arrow pass: the batch's signatures stack into an (n, k)
-        matrix, reshape to (n, b, r), and each band slice folds through
-        splitmix64 seeded by the band index — no per-band JVM array slices,
+        matrix and each band slice folds through splitmix64 seeded by the
+        band index (_band_keys) — no per-band JVM array slices,
         no explode of array-valued columns. Measured ~1.5x the JVM banding
         on the 100k-image corpus (1.01s vs 1.54s MIN, EXPERIMENTS.md).
 
@@ -491,28 +568,17 @@ class MinHashLSH:
         import numpy as np
         import pandas as pd
 
-        from gaoya_spark import hashing
-
         b, r = self.cfg.num_bands, self.cfg.band_width
 
         def kernel(it):
-            seeds = hashing.splitmix64(np.arange(b, dtype=np.int64))
             for pdf in it:
-                n = len(pdf)
-                if not n:
+                if not len(pdf):
                     continue
-                mat = (
-                    np.stack(pdf["sig"].to_numpy())
-                    .astype(np.uint64)
-                    .reshape(n, b, r)
-                )
-                acc = np.broadcast_to(seeds, (n, b)).copy()
-                for j in range(r):
-                    acc = hashing.splitmix64((acc ^ mat[:, :, j]).view(np.int64))
+                keys = _band_keys(np.stack(pdf["sig"].to_numpy()), b, r)
                 yield pd.DataFrame(
                     {
                         "sid": np.repeat(pdf["sid"].to_numpy(), b),
-                        "bk": acc.view(np.int64).ravel(),
+                        "bk": keys.ravel(),
                     }
                 )
 
@@ -529,7 +595,11 @@ class MinHashLSH:
         them via query(..., index_bands=). At 10^12 rows this is THE
         index artifact a warehouse maintains so a query never re-bands
         the corpus; StreamingDedup appends each micro-batch's rows to
-        its stream_bands table and probes the accumulated index.
+        its stream_bands table and probes the accumulated index. A probe
+        set that fits one broadcast bands the index rows in its kernel
+        instead, so on that route the table only feeds query's
+        bucket-cap count (see query); larger probes group their keys
+        with its rows.
 
         The sid is sid_col's: an integral id is its own sid, so a table
         written when every sid was xxhash64(id) must be rebuilt before
@@ -600,6 +670,16 @@ class MinHashLSH:
     # 512MB keeps the collected table + per-worker copy comfortably
     # inside a few-GB pool.
     _BROADCAST_BYTES = 512 << 20
+
+    # row bound of a broadcast signature table: dedup_pairs' default
+    # numpy_max_rows, and with _REPL_PREFER_KEYS the probe bound of query
+    _NUMPY_MAX_ROWS = 2_000_000
+
+    # query's bucket cap: a band key whose index side holds more than this
+    # many band rows matches no probe. Both query routes read it (the JVM
+    # route as sid_cross_pairs_from_buckets' drop_cap, the broadcast probe
+    # in its key count), so they cannot diverge.
+    _QUERY_DROP_CAP = 100_000
 
     # auto routing skips the broadcast build when the trusted size
     # estimate (see _size_estimate) is over this many budgets. Measured
@@ -943,7 +1023,7 @@ class MinHashLSH:
         threshold: float | None = None,
         keep_sim: bool = True,
         numpy_verify: bool = True,
-        numpy_max_rows: int = 2_000_000,
+        numpy_max_rows: int = _NUMPY_MAX_ROWS,
         **kw,
     ) -> DataFrame:
         """Full-corpus near-duplicate pairs with sim >= threshold (Q2 uses
@@ -1057,11 +1137,15 @@ class MinHashLSH:
     ) -> DataFrame:
         """Q2/Q4: (qid, id[, sim]) matches above threshold.
 
-        probe_sigs: (id, sig) — renamed internally to qid. The probe side is
-        banded and equi-joined against the index bands; when the probe set
-        is small Catalyst broadcast it automatically (AQE), making this the
-        distributed analogue of a point lookup.
-        Candidates are deduped BEFORE the verify join (O10).
+        probe_sigs: (id, sig) — renamed internally to qid. A probe is
+        matched to every index row it shares a band key with, scored by
+        the exact fraction of equal signature positions. ROUTING is by
+        the probe side's size (see _query_scored): a probe set that fits
+        one broadcast is matched in one numpy pass over the index, with
+        no exchange and no join; a larger one runs the JVM bucket
+        dataflow. Both return the same matches, and the choice is
+        recorded as self.last_route: ("broadcast_probe", "fits
+        broadcast") or ("jvm", <guard reason>).
 
         sorted_by_similarity=True mirrors Q4's similarity-descending return
         (minhash_index.rs:637 sorts matches best-first) as a
@@ -1071,14 +1155,14 @@ class MinHashLSH:
 
         index_bands: a PRECOMPUTED (sid, bk) banding table for the index
         (from sid_bands(), e.g. warehouse-persisted and appended on every
-        insert). When given, the index is NOT re-banded: the probe batch
-        is banded and joined against these 16-byte rows directly — the
-        10^12-row incremental-query path, where re-hashing 50 bands per
-        index row per probe batch would dominate everything. Must
-        correspond exactly to index_sigs' current rows (stale/extra sids
-        produce candidates that verify against nothing and vanish in the
-        inner signature join — removals are therefore safe — but MISSING
-        rows lose recall).
+        insert). It must correspond exactly to index_sigs' current rows:
+        stale extra sids (a removed doc) are harmless on both routes, but
+        MISSING rows lose recall on the JVM route. On the JVM route the
+        index is not re-banded: the probe batch is banded and grouped with
+        these 16-byte rows directly. The broadcast probe instead bands each
+        index row in its kernel as it scans index_sigs (a table the JVM
+        route reads too, to attach signatures), so there index_bands only
+        feeds the bucket-cap count; a missing band row costs it no recall.
         """
         t = self.cfg.threshold if threshold is None else threshold
         out = self._query_scored(index_sigs, probe_sigs, index_bands)
@@ -1100,18 +1184,111 @@ class MinHashLSH:
         probe_sigs: DataFrame,
         index_bands: DataFrame | None = None,
     ) -> DataFrame:
-        """(qid, id, sim) for all probe-vs-index band candidates — the
-        bipartite variant of the dedup candidate machinery (one side-tagged
-        groupBy, cross pairs in sid space, ids/signatures attached only to
-        candidates). index_bands: precomputed (sid, bk) index banding
-        (see query); must use the same band-key function, so pass
-        sid_bands() output, never a hand-rolled table."""
+        """(qid, id, sim) for all probe-vs-index band candidates, routed by
+        the probe side's size; serves query, query_one, query_top_k and
+        query_by_id, and records self.last_route.
+
+        The probe table goes through _build_sig_broadcast (size estimate,
+        row and byte bound, null-id drop, sid-collision guard) with
+        _NUMPY_MAX_ROWS rows, further bounded to _REPL_PREFER_KEYS band
+        keys because every task bands the whole probe again. If it fits,
+        _broadcast_query runs; if a guard trips (e.g. a duplicated probe
+        id: "sid collision"), _jvm_query_scored does. Computed probe
+        signatures are cached before the broadcast build, so the JVM route
+        does not compute them again; the broadcast route never reads them
+        again and drops the cache.
+
+        Both routes exclude a band key whose index side holds more than
+        _QUERY_DROP_CAP band rows, counted over index_bands when given,
+        else over index_sigs' banding, and return the same matches while
+        index_bands keeps its contract (see query). One more input tells
+        them apart: an index holding one id twice with different
+        signatures. The JVM route scores every row of that id once any of
+        them shares a band with the probe, the broadcast route only the
+        rows that do."""
+        may_cache = not is_materialized(probe_sigs)
+        bc, why = self._build_sig_broadcast(
+            probe_sigs,
+            min(self._NUMPY_MAX_ROWS, self._REPL_PREFER_KEYS // self.cfg.num_bands),
+            persist=may_cache,
+        )
+        if bc is None:
+            self.last_route = ("jvm", why)
+            return self._jvm_query_scored(index_sigs, probe_sigs, index_bands)
+        if may_cache and is_materialized(probe_sigs):
+            probe_sigs.unpersist()
+        self.last_route = ("broadcast_probe", "fits broadcast")
+        return self._broadcast_query(index_sigs, probe_sigs, bc, index_bands)
+
+    def _broadcast_query(
+        self,
+        index_sigs: DataFrame,
+        probe_sigs: DataFrame,
+        bc,
+        index_bands: DataFrame | None,
+    ) -> DataFrame:
+        """The broadcast probe: one mapInPandas over the index's (id, sig)
+        rows (_probe_match_fn) — no exchange, no join. The JVM route's
+        bucket cap needs global bucket sizes, which a per-batch kernel
+        cannot see, so the over-cap probe keys are found first, JVM-side:
+        the band rows the JVM route groups, semi-joined to the probe's
+        distinct band keys and counted per key. That count runs now, at
+        plan-construction time, like the broadcast build (0.34 s warm on
+        a 100-row probe of a ~500-row streaming index on 4 cores, against
+        0.57 s for a python kernel counting the same rows)."""
+        import numpy as np
+        import pyarrow as pa
+
+        b, r = self.cfg.num_bands, self.cfg.band_width
+        excluded = np.empty(0, np.int64)
+        if len(bc.value[0]):
+            rows = (
+                index_bands.select("bk")
+                if index_bands is not None
+                else self._sid_bands_arrow(index_sigs).select("bk")
+            )
+            keys = index_sigs.sparkSession.createDataFrame(
+                pa.table({"bk": np.unique(_band_keys(bc.value[1], b, r))})
+            )
+            over = (
+                rows.join(F.broadcast(keys), "bk", "left_semi")
+                .groupBy("bk")
+                .count()
+                .where(F.col("count") > self._QUERY_DROP_CAP)
+                .toArrow()
+            )
+            excluded = over.column("bk").to_numpy()
+        q_sql = probe_sigs.schema["id"].dataType.simpleString()
+        i_sql = index_sigs.schema["id"].dataType.simpleString()
+        return (
+            index_sigs.where(F.col("id").isNotNull())
+            .select("id", "sig")
+            .mapInPandas(
+                _probe_match_fn(bc, b, r, excluded),
+                f"qid {q_sql}, id {i_sql}, sim double",
+            )
+        )
+
+    def _jvm_query_scored(
+        self,
+        index_sigs: DataFrame,
+        probe_sigs: DataFrame,
+        index_bands: DataFrame | None,
+    ) -> DataFrame:
+        """The JVM bucket dataflow: the bipartite variant of the dedup
+        candidate machinery (one side-tagged groupBy, cross pairs in sid
+        space, ids/signatures attached only to candidates). index_bands:
+        precomputed (sid, bk) index banding (see query); must use the same
+        band-key function, so pass sid_bands() output, never a
+        hand-rolled table."""
         ib = (
             index_bands.select("sid", "bk")
             if index_bands is not None
             else self._sid_bands_arrow(index_sigs)
         )
-        cand = sid_cross_pairs_from_buckets(self._sid_bands_arrow(probe_sigs), ib)
+        cand = sid_cross_pairs_from_buckets(
+            self._sid_bands_arrow(probe_sigs), ib, drop_cap=self._QUERY_DROP_CAP
+        )
         k = self.cfg.num_hashes
         qs = probe_sigs.select(
             sid_col(probe_sigs).alias("qid"),

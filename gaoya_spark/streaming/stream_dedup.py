@@ -3,8 +3,10 @@
 The reference's `insert` (W1) is an in-memory mutation; the streaming
 analogue is an append-only signatures table maintained by foreachBatch:
 
-  new images -> signature UDF -> (a) edges vs the existing index (join
-  against the signatures table), (b) edges within the micro-batch, then
+  new images -> signature UDF -> (a) edges vs the existing index
+  (MinHashLSH.query: a micro-batch that fits one broadcast is matched in
+  one numpy pass over the signatures table), (b) edges within the
+  micro-batch, then
   (c) incremental labels: a new id adopts the smallest component among its
   matched neighbors (or itself) — the streaming approximation of label
   propagation (exact for star-shaped arrivals; a periodic batch
@@ -25,9 +27,13 @@ construction.
 
 The bands table is the maintained LSH index (the reference's per-band
 hash maps as a table): each batch appends only its own (sid, bk) rows
-and probes the accumulated table via query(index_bands=...), so the
-standing index is never re-banded — insert cost is proportional to the
-batch, not the corpus.
+and passes the accumulated table to query(index_bands=...), so insert
+cost is proportional to the batch, not the corpus. A probe over the
+broadcast bound groups its keys with the table's rows and never re-bands
+the standing index. A micro-batch probe that fits one broadcast (the
+usual case) bands the index rows in its kernel as it scans the
+signatures table, and reads the bands table only to count the index
+side of its own band keys against query's bucket cap.
 """
 
 from __future__ import annotations
@@ -81,9 +87,10 @@ class StreamingDedup:
             index = None
         # the maintained band index (the reference's per-band hash maps as
         # a table, W1/Q1): each batch appends its own (sid, bk) rows below
-        # and probes the ACCUMULATED rows here, so the standing index is
-        # never re-banded — at 10^12 rows, re-hashing b bands per index
-        # row per micro-batch would dwarf the batch's own work
+        # and hands the ACCUMULATED rows to query. A probe over the
+        # broadcast bound groups with them instead of re-banding the
+        # standing index; a broadcast-fit probe bands the index rows in its
+        # kernel and reads these only for the bucket-cap count
         index_bands = None
         if index is not None and self.wh.exists("stream_bands"):
             # COVERAGE GUARD: only trust the maintained bands index when it
@@ -132,7 +139,8 @@ class StreamingDedup:
         # micro-batch that fits one broadcast takes the numpy kernels
         edges = self.lsh.dedup_pairs(new_sigs, keep_sim=False)
         if index is not None:
-            # edges between batch and the standing index (probe = new rows)
+            # edges between batch and the standing index (probe = new
+            # rows); query routes by the batch's size, like dedup_pairs
             vs_index = (
                 self.lsh.query(
                     index, new_sigs, keep_sim=False, index_bands=index_bands

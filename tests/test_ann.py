@@ -149,9 +149,7 @@ def test_rp_lsh_hot_bucket_capped_and_recorded(spark):
     # probing ALL constants (600 probes x 600 index members — the
     # quadratic product the cap exists for) hits the hot branch and the
     # bucket (index side 600 > bucket_cap_hard=500) is excluded: zero
-    # matches instead of a 360k-pair blowup. A single constant probe would
-    # still match through the bounded small path — the cap guards the
-    # product, not point lookups.
+    # matches instead of a 360k-pair blowup.
     const_probe = df.where("vec_id >= 10000")
     got_const = rp_lsh_topk(
         df, k=1, probes=const_probe, max_bucket_size=64, bucket_cap_hard=500

@@ -79,7 +79,7 @@ def test_sid_pairs_drop_cap_below_array_limit(spark):
     assert got == _expected(members, drop_cap=4) == {(0, 1): 1}
 
 
-def _expected_cross(probes, index, drop_cap, limit_sq):
+def _expected_cross(probes, index, drop_cap):
     by_bk_p, by_bk_i = {}, {}
     for bk, sid in probes:
         by_bk_p.setdefault(bk, set()).add(sid)
@@ -88,7 +88,7 @@ def _expected_cross(probes, index, drop_cap, limit_sq):
     m = Counter()
     for bk in by_bk_p.keys() & by_bk_i.keys():
         qs, is_ = by_bk_p[bk], by_bk_i[bk]
-        if len(qs) * len(is_) > limit_sq and len(is_) > drop_cap:
+        if len(is_) > drop_cap:
             continue
         for q in qs:
             for i in is_:
@@ -100,7 +100,9 @@ def _expected_cross(probes, index, drop_cap, limit_sq):
 @pytest.mark.parametrize("medium", [4, 1024])
 def test_sid_cross_pairs_match_naive_enumeration(spark, seed, medium):
     """Bipartite variant across all three tiers (small product, collapsed
-    medium, block-joined hot) + the index-side drop cap."""
+    medium, block-joined hot) + the index-side drop cap, which binds in
+    every tier: an over-cap bucket whose product fits the small tier is
+    excluded too."""
     rng = np.random.default_rng(seed)
     probes, index = set(), set()
     for bk in range(20):
@@ -116,6 +118,10 @@ def test_sid_cross_pairs_match_naive_enumeration(spark, seed, medium):
         index.add((100, sid))
     for sid in range(20):
         index.add((101, sid))
+    # one probe x 16 index members: a small-tier product over the cap
+    probes.add((102, 0))
+    for sid in range(16):
+        index.add((102, sid))
     pdf = spark.createDataFrame(sorted(probes), "bk long, sid long")
     idf = spark.createDataFrame(sorted(index), "bk long, sid long")
     got = {
@@ -125,7 +131,7 @@ def test_sid_cross_pairs_match_naive_enumeration(spark, seed, medium):
             medium_bucket_limit=medium,
         ).collect()
     }
-    assert got == _expected_cross(probes, index, drop_cap=15, limit_sq=16)
+    assert got == _expected_cross(probes, index, drop_cap=15)
 
 
 def test_band_stats_hot_dropped_counts(spark):

@@ -576,6 +576,119 @@ def test_query_with_precomputed_index_bands(spark, corpus5):
     assert after_rm == want_rm
 
 
+# texts of the query route tests: an exact pair, a near-dup of it, a
+# near-dup pair on another topic and a singleton
+QUERY_TEXTS = [
+    "the quick brown fox jumps over the lazy dog near the river bank today",
+    "the quick brown fox jumps over the lazy dog near the river bank today",
+    "the quick brown fox jumps over the lazy cat near the river bank today",
+    "completely different words about database engines and query planners",
+    "completely different words about database engines and query optimizers",
+    "another unrelated caption describing a sunny beach with tall palm trees",
+]
+QUERY_IDS = [7, 30, 200, 1000, 45, 3]
+
+
+def _query_sigs(spark, lsh, dtype="long", rows=None):
+    rows = rows if rows is not None else list(zip(QUERY_IDS, QUERY_TEXTS))
+    if dtype == "string":
+        rows = [(None if i is None else f"doc-{i}", t) for i, t in rows]
+    df = spark.createDataFrame(rows, f"id {dtype}, text string")
+    return lsh.signatures(df, "id", "text")
+
+
+def _probe_of(sigs):
+    return sigs.orderBy("id").limit(3)
+
+
+def _stale_bands(lsh, sigs):
+    """Probe an index without its first doc through band rows that still
+    hold that doc (a removal)."""
+    kept = sigs.where(F.col("id") != QUERY_IDS[0])
+    return lsh.query(kept, sigs, keep_sim=True, index_bands=lsh.sid_bands(sigs))
+
+
+def _query_keep_sim(lsh, sigs):
+    return lsh.query(sigs, _probe_of(sigs), keep_sim=True)
+
+
+FITS = ("broadcast_probe", "fits broadcast")
+WITH_NULL = [(None, QUERY_TEXTS[0])] + list(zip(QUERY_IDS, QUERY_TEXTS))
+
+# name -> (id type, (id, text) rows or None for the default corpus,
+# (lsh, sigs) -> a query-family result, the route it takes by default)
+QUERY_CASES = {
+    "long": ("long", None, _query_keep_sim, FITS),
+    "int": ("int", None, _query_keep_sim, FITS),
+    "string": ("string", None, _query_keep_sim, FITS),
+    "no_sim": ("long", None, lambda lsh, s: lsh.query(s, _probe_of(s)), FITS),
+    "null_ids": ("long", WITH_NULL, lambda lsh, s: lsh.query(s, s, keep_sim=True), FITS),
+    "empty_probe": ("long", None, lambda lsh, s: lsh.query(s, s.limit(0), keep_sim=True), FITS),
+    "empty_index": ("long", None, lambda lsh, s: lsh.query(s.limit(0), s, keep_sim=True), FITS),
+    "stale_bands": ("long", None, _stale_bands, FITS),
+    "query_one": ("long", None, lambda lsh, s: lsh.query_one(s, _probe_of(s)), FITS),
+    "query_top_k": ("long", None, lambda lsh, s: lsh.query_top_k(s, _probe_of(s), 2), FITS),
+    "query_by_id": ("string", None, lambda lsh, s: lsh.query_by_id(
+        s, s.select("id").orderBy("id").limit(2), keep_sim=True), FITS),
+    "dup_probe_id": ("long", None, lambda lsh, s: lsh.query(
+        s, s.unionByName(s.where(F.col("id") == QUERY_IDS[2])), keep_sim=True,
+    ), ("jvm", "sid collision")),
+}
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("case", sorted(QUERY_CASES))
+def test_query_routes_identical(spark, case, monkeypatch):
+    """query, query_one, query_top_k and query_by_id return the same rows
+    (ids in their input types, sim doubles bit-equal) on the broadcast
+    probe and on the JVM bucket dataflow, forced by a negative broadcast
+    budget that fits no table. Covers int, long, string and null ids, an
+    empty probe and index, stale extra index_bands rows, and a duplicated
+    probe id, which falls back to the JVM route."""
+    dtype, rows, run, route = QUERY_CASES[case]
+    lsh = MinHashLSH(
+        MinHashConfig(num_bands=42, band_width=3, threshold=0.5, tokenizer=WORD)
+    )
+    sigs = _query_sigs(spark, lsh, dtype, rows)
+    out = run(lsh, sigs)
+    assert lsh.last_route == route
+    got = _sorted_rows(out)
+    with monkeypatch.context() as mp:
+        mp.setattr(MinHashLSH, "_BROADCAST_BYTES", -1)
+        jvm_out = run(lsh, sigs)
+        assert lsh.last_route[0] == "jvm"
+    assert out.dtypes == jvm_out.dtypes
+    assert got == _sorted_rows(jvm_out)
+    assert all(None not in r[:2] for r in got)
+    if case not in ("empty_probe", "empty_index"):
+        assert got
+
+
+def test_query_cap_excludes_bucket_on_both_routes(spark, monkeypatch):
+    """_QUERY_DROP_CAP is read by both query routes: pinned to 3, every
+    band key of a text held by 5 index rows is excluded, so its exact
+    copy matches nothing, while a key with 2 index rows still matches.
+    Without the pin the copy matches all 5."""
+    lsh = MinHashLSH(
+        MinHashConfig(num_bands=42, band_width=3, threshold=0.5, tokenizer=WORD)
+    )
+    a, b = QUERY_TEXTS[0], QUERY_TEXTS[3]
+    index = _query_sigs(spark, lsh, rows=[(i, a) for i in range(1, 6)] + [(6, b), (7, b)])
+    probe = _query_sigs(spark, lsh, rows=[(100, a), (101, b)])
+    uncapped = {(r["qid"], r["id"]) for r in lsh.query(index, probe).collect()}
+    assert uncapped == {(100, i) for i in range(1, 6)} | {(101, 6), (101, 7)}
+    monkeypatch.setattr(MinHashLSH, "_QUERY_DROP_CAP", 3)
+    want = [(101, 6, 1.0), (101, 7, 1.0)]
+    assert _sorted_rows(lsh.query(index, probe, keep_sim=True)) == want
+    assert lsh.last_route == FITS
+    monkeypatch.setattr(MinHashLSH, "_BROADCAST_BYTES", -1)
+    assert _sorted_rows(lsh.query(index, probe, keep_sim=True)) == want
+    assert lsh.last_route[0] == "jvm"
+
+
 def test_broadcast_guard_boundary_identical_pairs(
     spark, corpus5, strategy, monkeypatch
 ):
