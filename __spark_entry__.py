@@ -185,26 +185,22 @@ def _q_minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_minhash_dedup_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The default size-routed dedup path (dedup_pairs(keep_sim=False)):
-    a table this small fits one broadcast, so the replicated numpy kernel
-    runs — every task rebuilds the bucket structure from the broadcast
-    signature matrix, verifies its share of the distinct member sets,
-    and attaches original ids — exactly the fully-verified pair set the
-    oracle computes."""
+    a table this small fits one broadcast, so the band-sharded numpy
+    kernel runs — each task builds the buckets of its share of the bands
+    from the broadcast signature matrix and verifies them, and original
+    ids are attached from the same broadcast — exactly the fully-verified
+    pair set the oracle computes."""
     lsh = MinHashLSH(ORACLE_MINHASH)
     sigs = _minhash_sigs_oracle(spark, sf_dir)
     return lsh.dedup_pairs(sigs, keep_sim=False)
 
 
 def _q_minhash_dedup_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fused bucket->pair-gen->verify dedup path, pinned by setting
-    the instance's replicated-kernel key bound (_REPL_PREFER_KEYS) to 0 so
-    no table is small enough to replicate: one Arrow kernel generates each
-    bucket's pairs in numpy and verifies them against the broadcast
-    signature matrix in the same pass; only survivors shuffle. Same
-    fully-verified pair set as every other dedup route — the oracle is
-    identical."""
+    """Named for the fused bucket kernel, which has been deleted: the
+    broadcast regime has one kernel, so this query runs the default
+    route, the band-sharded numpy kernel, like minhash_dedup_numpy. Its
+    oracle is the fully-verified pair set every dedup route returns."""
     lsh = MinHashLSH(ORACLE_MINHASH)
-    lsh._REPL_PREFER_KEYS = 0
     sigs = _minhash_sigs_oracle(spark, sf_dir)
     return lsh.dedup_pairs(sigs, keep_sim=False)
 

@@ -149,7 +149,6 @@ def sid_cross_pairs_from_buckets(
     block_groups: int = 16,
     persist: bool = True,
     medium_bucket_limit: int = 1024,
-    gate: bool = False,
 ) -> DataFrame:
     """(qid, id, m) probe-vs-index candidates from two (bk, sid) membership
     frames — the cross (bipartite) variant of sid_pairs_from_buckets for
@@ -201,57 +200,44 @@ def sid_cross_pairs_from_buckets(
     # halved vs medium^2 so the worst-case per-row cross array matches the
     # symmetric variant's C(medium, 2) bound
     med_cap = (medium_bucket_limit * medium_bucket_limit) // 2
-    if persist and gate:
-        tri_cap = max(med_cap, lim_sq)
-        st = buckets.agg(
-            F.sum((cross_n > lim_sq).cast("int")).alias("n_over"),
-            F.sum((cross_n > tri_cap).cast("int")).alias("n_tri"),
-        ).collect()[0]
-        has_hot = (st["n_over"] or 0) > 0
-        has_huge = (st["n_tri"] or 0) > 0
-    else:
-        has_hot = has_huge = True
-    if has_hot:
-        # upper tiers keep the identical-(probe-set, index-set) collapse —
-        # the boilerplate family that forms the same bucket in every band
-        # is exactly the hot case, and the collapse shuffle now carries
-        # only over-limit buckets. 128-bit bucket identity (two
-        # independently-seeded xxhash64 words, same scheme as the
-        # substring gram fingerprints) so an hb collision can't merge two
-        # hot member sets and inflate m.
-        collapsed = (
-            buckets.where(cross_n > lim_sq)
-            .groupBy("qs", "is")
-            .agg(F.count("*").alias("nb"))
-        )
-        if persist and has_huge:
-            collapsed = collapsed.persist()
-        # medium tier: collapsed products small enough for single-row
-        # cross generation — skips the block join's extra shuffles
-        raw = raw.unionByName(
-            collapsed.where(cross_n <= med_cap)
-            .select("nb", F.explode(cross).alias("p"))
-            .select("p.qid", "p.id", "nb")
-        )
-        if has_huge:
-            hot = collapsed.where(cross_n > med_cap).select(
-                F.struct(
-                    F.xxhash64("qs", "is").alias("w0"),
-                    F.xxhash64("qs", "is", F.lit(1)).alias("w1"),
-                ).alias("hb"),
-                "nb", "qs", "is",
-            )
-            # bipartite block join: probes replicate to every index group
-            left = hot.select(
-                "hb", "nb", F.explode("qs").alias("qid")
-            ).withColumn(
-                "g2", F.explode(F.sequence(F.lit(0), F.lit(block_groups - 1)))
-            )
-            right = hot.select("hb", F.explode("is").alias("id")).withColumn(
-                "g2", F.pmod(F.xxhash64("id", F.lit(_BLOCK_SALT)), F.lit(block_groups))
-            )
-            pairs_hot = left.join(right, ["hb", "g2"]).select("qid", "id", "nb")
-            raw = raw.unionByName(pairs_hot)
+    # upper tiers keep the identical-(probe-set, index-set) collapse — the
+    # boilerplate family that forms the same bucket in every band is
+    # exactly the hot case, and the collapse shuffle carries only
+    # over-limit buckets. 128-bit bucket identity (two independently-seeded
+    # xxhash64 words, same scheme as the substring gram fingerprints) so an
+    # hb collision can't merge two hot member sets and inflate m.
+    collapsed = (
+        buckets.where(cross_n > lim_sq)
+        .groupBy("qs", "is")
+        .agg(F.count("*").alias("nb"))
+    )
+    if persist:
+        collapsed = collapsed.persist()
+    # medium tier: collapsed products small enough for single-row cross
+    # generation — skips the block join's extra shuffles
+    raw = raw.unionByName(
+        collapsed.where(cross_n <= med_cap)
+        .select("nb", F.explode(cross).alias("p"))
+        .select("p.qid", "p.id", "nb")
+    )
+    hot = collapsed.where(cross_n > med_cap).select(
+        F.struct(
+            F.xxhash64("qs", "is").alias("w0"),
+            F.xxhash64("qs", "is", F.lit(1)).alias("w1"),
+        ).alias("hb"),
+        "nb", "qs", "is",
+    )
+    # bipartite block join: probes replicate to every index group
+    left = hot.select(
+        "hb", "nb", F.explode("qs").alias("qid")
+    ).withColumn(
+        "g2", F.explode(F.sequence(F.lit(0), F.lit(block_groups - 1)))
+    )
+    right = hot.select("hb", F.explode("is").alias("id")).withColumn(
+        "g2", F.pmod(F.xxhash64("id", F.lit(_BLOCK_SALT)), F.lit(block_groups))
+    )
+    pairs_hot = left.join(right, ["hb", "g2"]).select("qid", "id", "nb")
+    raw = raw.unionByName(pairs_hot)
     return raw.groupBy("qid", "id").agg(F.sum("nb").alias("m"))
 
 
@@ -262,7 +248,6 @@ def sid_pairs_from_buckets(
     block_groups: int = 16,
     persist: bool = True,
     medium_bucket_limit: int = 1024,
-    gate: bool = False,
 ) -> DataFrame:
     """(src, dst, m) candidate pairs from (bk, sid) membership rows.
 
@@ -291,11 +276,10 @@ def sid_pairs_from_buckets(
         .where(F.size("ids").between(2, drop_cap))
     )
     if persist:
-        # buckets feed the small path and (maybe) the upper tiers; the
-        # tier gate below forces them once, so the gate action is nearly
-        # free. No explicit unpersist: once the returned frame is consumed
-        # and this reference is GC'd, Spark's ContextCleaner drops the
-        # blocks (and LRU eviction handles the interim).
+        # buckets feed the small path and the upper tiers. No explicit
+        # unpersist: once the returned frame is consumed and this
+        # reference is GC'd, Spark's ContextCleaner drops the blocks (and
+        # LRU eviction handles the interim).
         buckets = buckets.persist()
     raw = (
         buckets.where(F.size("ids") <= array_bucket_limit)
@@ -305,47 +289,27 @@ def sid_pairs_from_buckets(
         )
         .select("p.src", "p.dst", "nb")
     )
-    # gate=True runs one stats pass over the persisted buckets to prune
-    # empty upper tiers from the plan — but the blocking collect serializes
-    # the pipeline and measured a consistent ~1-4s net LOSS on the bench
-    # corpora (dedup 7.0s ungated vs 8.0s gated, EXPERIMENTS.md ledger, MIN
-    # of 3), because the always-on tiers cost only near-empty AQE stages.
-    # Default is therefore gate=False (tiers always in the plan, exactness
-    # unaffected); gate=True remains for configs whose tier filters are
-    # expensive to even scan.
-    if persist and gate:
-        sz = F.size("ids")
-        tri_lim = max(medium_bucket_limit, array_bucket_limit)
-        st = buckets.agg(
-            F.sum((sz > array_bucket_limit).cast("int")).alias("n_over"),
-            F.sum((sz > tri_lim).cast("int")).alias("n_tri"),
-        ).collect()[0]
-        has_hot = (st["n_over"] or 0) > 0
-        has_huge = (st["n_tri"] or 0) > 0
-    else:
-        has_hot = has_huge = True
-    if has_hot:
-        # both upper tiers share the identical-member-set collapse:
-        # m stays exact via sum(nb)
-        collapsed = (
-            buckets.where(F.size("ids") > array_bucket_limit)
-            .groupBy("ids")
-            .agg(F.count("*").alias("nb"))
+    # both upper tiers are always in the plan: pruning an empty one takes
+    # a blocking stats job, which measured a net loss (EXPERIMENTS.md),
+    # while an empty tier costs only a near-empty AQE stage. They share
+    # the identical-member-set collapse: m stays exact via sum(nb)
+    collapsed = (
+        buckets.where(F.size("ids") > array_bucket_limit)
+        .groupBy("ids")
+        .agg(F.count("*").alias("nb"))
+    )
+    if persist:
+        # both tiers read collapsed
+        collapsed = collapsed.persist()
+    # medium tier: distinct sets small enough for single-row pair-gen
+    raw = raw.unionByName(
+        collapsed.where(F.size("ids") <= medium_bucket_limit)
+        .select(
+            "nb", F.explode(pairs_from_sorted_ids(F.col("ids"))).alias("p")
         )
-        if persist and has_huge:
-            # both tiers read collapsed; with no triangle tier it is
-            # consumed once and caching would only cost memory
-            collapsed = collapsed.persist()
-        # medium tier: distinct sets small enough for single-row pair-gen
-        raw = raw.unionByName(
-            collapsed.where(F.size("ids") <= medium_bucket_limit)
-            .select(
-                "nb", F.explode(pairs_from_sorted_ids(F.col("ids"))).alias("p")
-            )
-            .select("p.src", "p.dst", "nb")
-        )
-        if has_huge:
-            raw = raw.unionByName(triangle_block_pairs(
-                collapsed.where(F.size("ids") > medium_bucket_limit), block_groups
-            ))
+        .select("p.src", "p.dst", "nb")
+    )
+    raw = raw.unionByName(triangle_block_pairs(
+        collapsed.where(F.size("ids") > medium_bucket_limit), block_groups
+    ))
     return raw.groupBy("src", "dst").agg(F.sum("nb").alias("m"))

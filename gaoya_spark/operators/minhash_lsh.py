@@ -55,7 +55,6 @@ from gaoya_spark.operators._bucket_pairs import (
     sid_col,
     sid_cross_pairs_from_buckets,
     sid_pairs_from_buckets,
-    triangle_block_pairs,
 )
 from gaoya_spark.functions.signatures import (
     make_minhash_udf,
@@ -101,23 +100,25 @@ def _m_sure_bands(threshold: float, k: int, r: int) -> int:
     return m
 
 
-def _band_keys(mat, b: int, r: int):
-    """(n, b) int64 band keys of an (n, b*r) signature matrix: each band's
-    r positions fold through splitmix64, seeded by the band index. The
-    one band-key function of the Arrow banding (_sid_bands_arrow, hence
-    sid_bands tables), the replicated dedup kernel and the broadcast
-    probe. Fold step j reads the strided columns j::r (position i*r+j of
-    band i), so no (n, b, r) uint64 tile is materialized: peak memory
-    stays ~2 key matrices regardless of k."""
+def _band_keys(mat, b: int, r: int, band: int | None = None):
+    """(n, b) int64 band keys of an (n, b*r) signature matrix, or the
+    (n, 1) keys of one band when `band` is given: each band's r positions
+    fold through splitmix64, seeded by the band index. The one band-key
+    function of the Arrow banding (_sid_bands_arrow, hence sid_bands
+    tables), the sharded dedup kernel and the broadcast probe. Fold step
+    j reads the strided columns (position i*r+j of band i), so no
+    (n, b, r) uint64 tile is materialized: peak memory stays ~2 key
+    matrices regardless of k."""
     import numpy as np
 
     from gaoya_spark import hashing
 
-    seeds = hashing.splitmix64(np.arange(b, dtype=np.int64))
-    acc = np.broadcast_to(seeds, (len(mat), b)).copy()
+    lo, hi = (0, b) if band is None else (band, band + 1)
+    seeds = hashing.splitmix64(np.arange(lo, hi, dtype=np.int64))
+    acc = np.broadcast_to(seeds, (len(mat), hi - lo)).copy()
     for j in range(r):
         acc = hashing.splitmix64(
-            (acc ^ mat[:, j : b * r : r].astype(np.uint64)).view(np.int64)
+            (acc ^ mat[:, lo * r + j : hi * r : r].astype(np.uint64)).view(np.int64)
         )
     return acc.view(np.int64)
 
@@ -148,15 +149,17 @@ def _attach_ids_fn(bc):
 def _eq_counts_chunked(mat_b, si, di, mat_d=None):
     """Per-pair equal-position counts of rows mat_b[si] and mat_d[di]
     (mat_d defaults to mat_b), gathered in slices so the two (chunk, k)
-    gathered matrices + bool stay ~<=64MB regardless of how many pairs
+    gathered matrices + bool stay ~<=16MB regardless of how many pairs
     one flush/batch carries (the unchunked compare materializes 2 x
     (pairs, k) matrices — ~4.5GB per 4M-pair flush at k=126/int32, ~35GB
-    at k=512/int64, multiplied by concurrent tasks)."""
+    at k=512/int64, multiplied by concurrent tasks). 16MB slices ran
+    2M pairs at k=200/int32 in 0.67-0.71 s against 1.08-1.35 s for 64MB
+    ones (one process on a 4-core Xeon, 2 MB L2 a core)."""
     import numpy as np
 
     mat_d = mat_b if mat_d is None else mat_d
     k = mat_b.shape[1] if mat_b.ndim == 2 else 1
-    chunk = max(1024, (64 << 20) // max(2 * k * mat_b.dtype.itemsize, 1))
+    chunk = max(1024, (16 << 20) // max(2 * k * mat_b.dtype.itemsize, 1))
     out = np.empty(len(si), dtype=np.int64)
     for lo in range(0, len(si), chunk):
         hi = lo + chunk
@@ -164,232 +167,116 @@ def _eq_counts_chunked(mat_b, si, di, mat_d=None):
     return out
 
 
-def _pair_verify_fn(bc, need):
-    """mapInPandas kernel: (src, dst) sid pairs -> the subset with >= need
-    equal signature positions (exact verify against the broadcast
-    matrix)."""
-    import numpy as np
-    import pandas as pd
-
-    def fn(it):
-        sids_b, mat_b, _ = bc.value
-        for b in it:
-            src = b["src"].to_numpy(dtype=np.int64)
-            dst = b["dst"].to_numpy(dtype=np.int64)
-            si = np.searchsorted(sids_b, src)
-            di = np.searchsorted(sids_b, dst)
-            keep = _eq_counts_chunked(mat_b, si, di) >= need
-            yield pd.DataFrame({"src": src[keep], "dst": dst[keep]})
-
-    return fn
-
-
-def _bucket_verify_fn(bc, need, max_pairs: int = 4_000_000):
-    """mapInPandas kernel over bucket member arrays: generate each
-    bucket's i<j pairs IN NUMPY (vectorized per size class — buckets of
-    equal size stack into a (g, s) matrix and one cached triu_indices
-    gather emits all their pairs at once) and verify them against the
-    broadcast matrix in the same pass, emitting only survivors as sid
-    pairs. Members resolve to matrix rows ONCE per flush (one
-    searchsorted over the member list, not two per generated pair).
-
-    max_pairs bounds the per-flush pair count (index/bool bookkeeping,
-    ~17B/pair), and the equality compare inside the flush is additionally
-    gathered in ~64MB slices (_eq_counts_chunked) so the (pairs, k)
-    signature matrices are never materialized whole — a batch of 10k
-    size-256 buckets (326M potential pairs) peaks at tens of MB per task
-    regardless of k/itemsize. Member arrays arrive
-    sid-sorted, so emitted pairs are (least, greatest) in sid order —
-    identical canonicalization to the JVM pair generation."""
-    import numpy as np
-    import pandas as pd
-
-    tri_cache: dict[int, tuple] = {}
-
-    def flush(lists, sizes, sids_b, mat_b):
-        flat = np.concatenate(list(lists))
-        ridx = np.searchsorted(sids_b, flat)
-        offs = np.cumsum(sizes) - sizes
-        si_parts, di_parts = [], []
-        for s in np.unique(sizes):
-            sel = np.nonzero(sizes == s)[0]
-            pos = offs[sel][:, None] + np.arange(s)[None, :]
-            m = ridx[pos]
-            if int(s) not in tri_cache:
-                tri_cache[int(s)] = np.triu_indices(int(s), 1)
-            iu, ju = tri_cache[int(s)]
-            si_parts.append(m[:, iu].ravel())
-            di_parts.append(m[:, ju].ravel())
-        si = np.concatenate(si_parts)
-        di = np.concatenate(di_parts)
-        keep = _eq_counts_chunked(mat_b, si, di) >= need
-        return pd.DataFrame({"src": sids_b[si[keep]], "dst": sids_b[di[keep]]})
-
-    def fn(it):
-        sids_b, mat_b, _ = bc.value
-        for pdf in it:
-            lists = pdf["ids"].to_numpy()
-            n = len(lists)
-            if not n:
-                continue
-            sizes = np.fromiter((len(x) for x in lists), dtype=np.int64, count=n)
-            csum = np.cumsum(sizes * (sizes - 1) // 2)
-            start = 0
-            while start < n:
-                base = csum[start - 1] if start else 0
-                end = max(
-                    int(np.searchsorted(csum, base + max_pairs, side="right")),
-                    start + 1,
-                )
-                out = flush(lists[start:end], sizes[start:end], sids_b, mat_b)
-                if len(out):
-                    yield out
-                start = end
-
-    return fn
-
-
 _SET_ID_SALT = 0x51C3_9A7B_42D8_11E5
 
 
-def _replicated_dedup_fn(bc, need, b, r, n_parts, cap, max_pairs: int = 4_000_000):
-    """mapInPandas kernel over a 1-row-per-partition range frame: the
-    FULLY-REPLICATED dedup. Every task recomputes the corpus's band keys
-    from the broadcast signature matrix (the same splitmix64 fold as
-    _sid_bands_arrow, vectorized — per-band argsorts, so the grouping
-    cost is b sorts of n keys, not one sort of n*b), derives every
-    bucket's member-row segments, and processes the hash-partition of
-    DISTINCT member sets assigned to it: 128-bit set identity (two
-    independently salted xor-reduceats over member hashes — the same
-    no-collision guarantee class as the substring gram fingerprints),
-    local lexsort dedup, then vectorized triu pair generation + verify
-    against the broadcast matrix, chunked to max_pairs per flush.
+def _sharded_dedup_fn(bc, need, b, r, n_tasks, cap, max_pairs):
+    """mapInPandas kernel over a range frame with one row per task: the
+    band-sharded broadcast dedup. Task t takes bands t, t+n_tasks, ... and
+    handles them one at a time. It folds only that band's keys from the
+    broadcast signature matrix (_band_keys), argsorts them, and keeps the
+    buckets of 2..cap members. A bucket lives in one band, so its size is
+    exact and the cap binds as on the JVM route.
 
-    Replication trades ~0.2-0.5s of redundant vectorized key computation
-    per task for the ENTIRE bucket dataflow: no band explode, no bucket
-    groupBy exchange, no identical-set collapse exchange, no candidate
-    shuffle — survivors (locally uniqued) are the first rows to ever
-    leave a task. Exact: every bucket instance's set is hashed, each
-    distinct set is verified exactly once cluster-wide (assignment is by
-    set identity, so cross-band repeats of a family collapse for free),
-    and pairs shared by overlapping sets are deduped by the caller's
-    dropDuplicates. Buckets larger than cap (bucket_cap_hard) are
-    excluded, exactly like the JVM and fused routes. Members arrive
-    row-index-sorted (rows are sid-sorted in the broadcast), so emitted
-    pairs are (least, greatest) in sid order like every other path."""
+    A bucket whose member set the task already verified in an earlier band
+    is skipped. The set's identity is 128 bits: two independently salted
+    xor-reduceats over member hashes, the no-collision class of the
+    substring gram fingerprints. A match on one word alone never skips a
+    set. The other buckets' i<j pairs (the upper triangle of each bucket)
+    collect across the task's bands into flushes of max_pairs (or one
+    member's pairs, when that is more). A flush is uniqued, so a pair
+    that several of the task's bands share is verified once per flush,
+    and its survivors leave the task already distinct.
+
+    Per-task key memory is one band's n keys, and the cluster folds each
+    band once. A family that repeats in every band is verified once per
+    task that holds its bands; the caller's dropDuplicates absorbs the
+    repeats. Rows are sid-sorted, so pairs come out (least, greatest) in
+    sid order like every other path."""
     import numpy as np
     import pandas as pd
 
     from gaoya_spark import hashing
 
-    tri_cache: dict[int, tuple] = {}
-    state: dict = {}
+    def buckets(mat_b, band):
+        """(members, position in bucket, sizes, offsets) of the band's
+        buckets of 2..cap members, members flat bucket by bucket."""
+        keys = _band_keys(mat_b, b, r, band)[:, 0]
+        o = np.argsort(keys)
+        sk = keys[o]
+        starts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
+        sizes = np.diff(np.r_[starts, len(sk)])
+        keep = (sizes >= 2) & (sizes <= cap)
+        starts, sizes = starts[keep], sizes[keep]
+        offs = np.cumsum(sizes) - sizes
+        pos = np.arange(int(sizes.sum())) - np.repeat(offs, sizes)
+        return o[np.repeat(starts, sizes) + pos], pos, sizes, offs
 
-    def segments():
-        """(memb, lens, seg_starts, h1, h2): flat member row indices of
-        every kept (2 <= size <= cap) bucket across all bands, per-segment
-        lengths/starts, and the 128-bit set-identity words."""
+    def task(t):
         sids_b, mat_b, _ = bc.value
         n = len(sids_b)
-        memb_parts, len_parts = [], []
-        if n >= 2:
-            acc = _band_keys(mat_b, b, r)
-            for j in range(b):
-                col = acc[:, j]
-                o = np.argsort(col)
-                sk = col[o]
-                cut = np.nonzero(sk[1:] != sk[:-1])[0] + 1
-                starts = np.concatenate([np.zeros(1, np.int64), cut])
-                ends = np.concatenate([cut, np.full(1, n, np.int64)])
-                sizes = ends - starts
-                keep = (sizes >= 2) & (sizes <= cap)
-                ks, kl = starts[keep], sizes[keep]
-                if not len(ks):
-                    continue
-                total = int(kl.sum())
-                base = np.cumsum(kl) - kl
-                idx = np.repeat(ks, kl) + np.arange(total) - np.repeat(base, kl)
-                memb_parts.append(o[idx])
-                len_parts.append(kl)
-        if memb_parts:
-            memb = np.concatenate(memb_parts)
-            lens = np.concatenate(len_parts)
-        else:
-            memb = np.empty(0, np.int64)
-            lens = np.empty(0, np.int64)
-        seg_starts = np.cumsum(lens) - lens
-        if len(lens):
-            h1 = np.bitwise_xor.reduceat(hashing.splitmix64(memb), seg_starts)
+        if n < 2:
+            return
+        seen1 = seen2 = np.empty(0, np.uint64)
+        pend: list = []
+        n_pend = 0
+        for band in range(t, b, n_tasks):
+            memb, pos, sizes, offs = buckets(mat_b, band)
+            if not len(sizes):
+                continue
+            h1 = np.bitwise_xor.reduceat(hashing.splitmix64(memb), offs)
             h2 = np.bitwise_xor.reduceat(
-                hashing.splitmix64(memb ^ np.int64(_SET_ID_SALT)), seg_starts
+                hashing.splitmix64(memb ^ np.int64(_SET_ID_SALT)), offs
             )
-        else:
-            h1 = np.empty(0, np.uint64)
-            h2 = np.empty(0, np.uint64)
-        return memb, lens, seg_starts, h1, h2
+            if len(seen1):
+                i = np.minimum(np.searchsorted(seen1, h1), len(seen1) - 1)
+                new = (seen1[i] != h1) | (seen2[i] != h2)
+            else:
+                new = np.ones(len(sizes), bool)
+            seen1 = np.concatenate([seen1, h1[new]])
+            seen2 = np.concatenate([seen2, h2[new]])
+            order = np.argsort(seen1)
+            seen1, seen2 = seen1[order], seen2[order]
+            inc = np.repeat(new, sizes)
+            memb, pos, sizes = memb[inc], pos[inc], sizes[new]
+            # member j of a bucket pairs with the members after it
+            cnt = np.repeat(sizes, sizes) - 1 - pos
+            csum = np.cumsum(cnt)
+            lo = 0
+            while lo < len(memb):
+                base = csum[lo - 1] if lo else 0
+                hi = max(int(np.searchsorted(csum, base + max_pairs, "right")), lo + 1)
+                c = cnt[lo:hi]
+                left = np.repeat(np.arange(lo, hi), c)
+                right = left + 1 + np.arange(len(left)) - np.repeat(np.cumsum(c) - c, c)
+                si, di = memb[left], memb[right]
+                pend.append(np.minimum(si, di) * np.int64(n) + np.maximum(si, di))
+                n_pend += len(si)
+                if n_pend >= max_pairs:
+                    yield verified(pend, sids_b, mat_b)
+                    pend, n_pend = [], 0
+                lo = hi
+        if pend:
+            yield verified(pend, sids_b, mat_b)
 
-    def verify_own(part):
-        sids_b, mat_b, _ = bc.value
-        n = len(sids_b)
-        memb, lens, seg_starts, h1, h2 = state["seg"]
-        if not len(lens):
-            return
-        own = np.nonzero(h1 % np.uint64(n_parts) == np.uint64(part))[0]
-        if not len(own):
-            return
-        # 128-bit-exact local dedup of the assigned distinct sets
-        o1, o2 = h1[own].view(np.int64), h2[own].view(np.int64)
-        order = np.lexsort((o2, o1))
-        first = np.ones(len(order), bool)
-        s1, s2 = o1[order], o2[order]
-        first[1:] = (s1[1:] != s1[:-1]) | (s2[1:] != s2[:-1])
-        segs = own[order[first]]
-        sizes = lens[segs]
-        csum = np.cumsum(sizes * (sizes - 1) // 2)
-        start = 0
-        while start < len(segs):
-            base = csum[start - 1] if start else 0
-            end = max(
-                int(np.searchsorted(csum, base + max_pairs, side="right")),
-                start + 1,
-            )
-            chunk = segs[start:end]
-            ssz = lens[chunk]
-            si_parts, di_parts = [], []
-            for s in np.unique(ssz):
-                sel = chunk[ssz == s]
-                pos = seg_starts[sel][:, None] + np.arange(s)[None, :]
-                mrows = memb[pos]
-                if int(s) not in tri_cache:
-                    tri_cache[int(s)] = np.triu_indices(int(s), 1)
-                iu, ju = tri_cache[int(s)]
-                si_parts.append(mrows[:, iu].ravel())
-                di_parts.append(mrows[:, ju].ravel())
-            si = np.concatenate(si_parts)
-            di = np.concatenate(di_parts)
-            keep = _eq_counts_chunked(mat_b, si, di) >= need
-            si, di = si[keep], di[keep]
-            if len(si):
-                lo = np.minimum(si, di)
-                hi = np.maximum(si, di)
-                # local pair dedup (overlapping sets re-emit a pair):
-                # shrinks the survivor exchange for free
-                u = np.unique(lo * np.int64(n) + hi)
-                lo, hi = u // np.int64(n), u % np.int64(n)
-                yield pd.DataFrame({"src": sids_b[lo], "dst": sids_b[hi]})
-            start = end
+    def verified(pend, sids_b, mat_b):
+        """The flush's distinct candidate pairs (row codes lo*n+hi) that
+        pass the exact verify, as sid pairs."""
+        u = np.unique(np.concatenate(pend))
+        n = np.int64(len(sids_b))
+        si, di = u // n, u % n
+        ok = _eq_counts_chunked(mat_b, si, di) >= need
+        return pd.DataFrame({"src": sids_b[si[ok]], "dst": sids_b[di[ok]]})
 
     def fn(it):
         for pdf in it:
-            for part in pdf["id"].tolist():
-                if "seg" not in state:
-                    state["seg"] = segments()
-                yield from verify_own(int(part))
+            for t in pdf["id"].tolist():
+                yield from task(int(t))
 
     return fn
 
 
-def _probe_match_fn(bc, b, r, excluded, max_pairs: int = 4_000_000):
+def _probe_match_fn(bc, b, r, excluded, max_pairs):
     """mapInPandas kernel over (id, sig) index rows: the broadcast probe of
     MinHashLSH.query. Each task bands the broadcast probe matrix once
     (_band_keys, sorted, minus the `excluded` over-cap keys). Per index
@@ -466,8 +353,8 @@ class BandStats:
 class MinHashLSH:
     def __init__(self, cfg: MinHashConfig | None = None):
         self.cfg = cfg or MinHashConfig()
-        # (route, reason) of the last dedup_pairs call, e.g.
-        # ("replicated", "fits broadcast") or ("jvm", "over row bound")
+        # (route, reason) of the last dedup_pairs or query call, e.g.
+        # ("broadcast", "fits broadcast") or ("jvm", "over row bound")
         self.last_route: tuple[str, str] | None = None
 
     # ------------------------------------------------------------------ sigs
@@ -614,7 +501,6 @@ class MinHashLSH:
         bucket_cap_hard: int = 100_000,
         persist: bool = True,
         medium_bucket_size: int = 1024,
-        gate: bool = False,
     ) -> DataFrame:
         """(src, dst, m) candidate pairs in sid space, m = #matching bands
         (shared machinery: operators/_bucket_pairs.py), banded by the
@@ -630,7 +516,6 @@ class MinHashLSH:
             block_groups=block_groups,
             persist=persist,
             medium_bucket_limit=medium_bucket_size,
-            gate=gate,
         )
 
     def candidate_pairs(
@@ -672,8 +557,16 @@ class MinHashLSH:
     _BROADCAST_BYTES = 512 << 20
 
     # row bound of a broadcast signature table: dedup_pairs' default
-    # numpy_max_rows, and with _REPL_PREFER_KEYS the probe bound of query
+    # numpy_max_rows, and with _PROBE_MAX_KEYS the probe bound of query
     _NUMPY_MAX_ROWS = 2_000_000
+
+    # query's broadcast probe takes at most this many probe band keys
+    # (rows x num_bands). Every task of the probe kernel bands the whole
+    # probe again and holds its sorted keys, so the probe's key count is
+    # per-task memory (~3-4x keys x 8 B at the peak), multiplied by the
+    # concurrent tasks. Sharding the probe instead would rescan the index
+    # once per shard.
+    _PROBE_MAX_KEYS = 2_000_000
 
     # query's bucket cap: a band key whose index side holds more than this
     # many band rows matches no probe. Both query routes read it (the JVM
@@ -818,163 +711,19 @@ class MinHashLSH:
         )
         return bc, None
 
-    # replicated/fused cutover: prefer the replicated kernel only while
-    # the per-task replication work (full key fold + b argsorts, run
-    # concurrently in EVERY task slot) is trivial. Past this bound the
-    # concurrent replicas contend for the one memory bus of a task slot's
-    # host and the kernel's wall time becomes load-dependent (measured on
-    # the 5M-key img corpus: min 2.9s on a quiet box, min 5.3/med 5.9 on
-    # a contended one, vs fused's stable 2.7-3.5) — the fused kernel
-    # takes over there. It also bounds the replicated kernel's per-task
-    # memory: the (rows x num_bands) key matrix, the flat member index and
-    # the fold/sort buffers peak at roughly 3-4x keys*8B (~64MB here).
-    _REPL_PREFER_KEYS = 2_000_000
-
-    def _replicated_dedup(
-        self,
-        sig_df: DataFrame,
-        threshold: float,
-        bc,
-        bucket_cap_hard: int = 100_000,
-    ) -> DataFrame:
-        """Fully-replicated dedup (see _replicated_dedup_fn): every task
-        rebuilds the corpus's bucket structure from the broadcast matrix
-        and verifies its hash-partition of DISTINCT member sets; the only
-        exchanges in the whole plan are the survivor dropDuplicates and
-        nothing else (guide §2.4 — the shuffle-free extreme of the
-        broadcast-verify family). Identical-set collapse is free
-        (assignment is by 128-bit set identity), so it subsumes the fused
-        path's collapse.
-
-        bc is the guarded broadcast from _build_sig_broadcast — the plan
-        never reads sig_df again (dedup_pairs drops its cache). The task
-        count is the session's defaultParallelism — scale-adaptive, never
-        a local constant."""
-        b, r = self.cfg.num_bands, self.cfg.band_width
-        spark = sig_df.sparkSession
-        p = spark.sparkContext.defaultParallelism or 8
-        need = _min_eq_count(threshold, self.cfg.num_hashes)
-        id_sql = sig_df.schema["id"].dataType.simpleString()
-        base = spark.range(0, p, 1, p)
-        survivors = base.mapInPandas(
-            _replicated_dedup_fn(bc, need, b, r, p, bucket_cap_hard),
-            "src long, dst long",
-        )
-        # explicit p-partition hash repartition on the dedup key: the
-        # dropDuplicates groupBy reuses it (no second exchange), and the
-        # attach kernel runs p python tasks instead of
-        # spark.sql.shuffle.partitions — cached/non-AQE plans (the bench
-        # caches results) otherwise keep the uncoalesced default and pay
-        # one python-worker roundtrip per near-empty partition
-        return (
-            survivors.repartition(p, "src", "dst")
-            .dropDuplicates(["src", "dst"])
-            .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}")
-        )
-
-    def _fused_dedup(
-        self,
-        sig_df: DataFrame,
-        threshold: float,
-        bc,
-        max_bucket_size: int = 16,
-        medium_bucket_size: int = 1024,
-        bucket_cap_hard: int = 100_000,
-        block_groups: int = 16,
-        persist: bool = True,
-    ) -> DataFrame:
-        """Fused bucket -> pair-gen -> verify: one Arrow kernel generates
-        each bucket's pairs in numpy AND verifies them against the
-        broadcast signature matrix in the same pass, so only SURVIVORS
-        (true pairs x band multiplicity) ever hit an exchange. Versus the
-        aggregated numpy path this deletes, for the 100k-image corpus:
-        the 6.5M-row candidate m-agg shuffle, the 6.5M-row Arrow transfer
-        into the verify kernel, and the JVM pair explode — the raw numpy
-        compute they fed is trivial (6.5M-pair verify ~ 0.4s spread over
-        32 workers; the shuffles around it were the cost).
-
-        Tiers mirror sid_pairs_from_buckets exactly:
-        - <= max_bucket_size: bucket arrays straight into the fused kernel
-          (one verify per bucket INSTANCE; a boilerplate family repeating
-          per band re-verifies per band — cheap under the vectorized
-          kernel, and dropDuplicates collapses survivors).
-        - <= medium_bucket_size (after identical-member-set collapse, so a
-          family repeating in all b bands verifies ONCE): fused kernel,
-          internally chunked to max_pairs per flush.
-        - <= bucket_cap_hard: triangle block join generates pair rows
-          JVM-side (bounded per-task work), the rowwise kernel verifies.
-        - > bucket_cap_hard: excluded, like every other path (band_stats
-          records the count).
-
-        The m-band prefilter does not apply (no m without the aggregation
-        this path exists to delete); pairs above threshold by band count
-        are simply verified — measured cheaper than aggregating to learn
-        m. bc is the guarded broadcast from _build_sig_broadcast; the
-        banding below reads sig_df a second time, from the cache
-        dedup_pairs put on it before that collect (and, like every
-        banding, without null-id rows).
-
-        Trade-off vs aggregated candidates: survivors replace candidates
-        in the one remaining exchange, so this wins when true-pair density
-        is low-to-moderate (web-crawl dedup); a corpus that is mostly one
-        giant near-dup family (survivor emissions >> candidates after
-        collapse) would prefer the JVM route's aggregation."""
-        k = self.cfg.num_hashes
-        need = _min_eq_count(threshold, k)
-        id_sql = sig_df.schema["id"].dataType.simpleString()
-        buckets = (
-            self._sid_bands_arrow(sig_df)
-            .groupBy("bk")
-            .agg(F.array_sort(F.collect_list("sid")).alias("ids"))
-            .where(F.size("ids").between(2, bucket_cap_hard))
-        )
-        if persist:
-            buckets = buckets.persist()
-        sz = F.size("ids")
-        small = buckets.where(sz <= max_bucket_size).select("ids")
-        # over-limit buckets: collapse identical member sets (the hot
-        # boilerplate family repeats its bucket in every band — one verify
-        # instead of b), medium sets to the fused kernel, huge ones to the
-        # JVM triangle block join + rowwise verify
-        collapsed = (
-            buckets.where(sz > max_bucket_size)
-            .select("ids")
-            .distinct()
-        )
-        if persist:
-            collapsed = collapsed.persist()
-        # small + collapsed-medium run through ONE kernel invocation over
-        # their union (one python stage instead of two — the kernel is
-        # size-agnostic, and on sparse corpora the medium tier is nearly
-        # empty but previously still cost its own MapInPandas stage)
-        fused_in = small.unionByName(
-            collapsed.where(F.size("ids") <= medium_bucket_size)
-        )
-        survivors = fused_in.mapInPandas(
-            _bucket_verify_fn(bc, need), "src long, dst long"
-        )
-        pairs_hot = triangle_block_pairs(
-            collapsed.where(F.size("ids") > medium_bucket_size), block_groups
-        )
-        survivors = survivors.unionByName(
-            pairs_hot.mapInPandas(_pair_verify_fn(bc, need), "src long, dst long")
-        )
-        # p-partition repartition reused by the dedup groupBy; keeps the
-        # attach kernel at p python tasks under cached/non-AQE
-        # compilation — see _replicated_dedup
-        p = sig_df.sparkSession.sparkContext.defaultParallelism or 8
-        return (
-            survivors.repartition(p, "src", "dst")
-            .dropDuplicates(["src", "dst"])
-            .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}")
-        )
-
     # the bucket-tier keywords dedup_pairs accepts through **kw: the
-    # sid_candidates knobs, which the numpy kernels read where they apply
+    # sid_candidates knobs. Both routes read bucket_cap_hard and persist;
+    # max_bucket_size, medium_bucket_size and block_groups shape only the
+    # JVM route's bucket tiers
     _TIER_KW = frozenset({
         "max_bucket_size", "medium_bucket_size", "bucket_cap_hard",
-        "block_groups", "persist", "gate",
+        "block_groups", "persist",
     })
+
+    # pairs one numpy kernel flush generates and verifies (the sharded
+    # dedup and the broadcast probe): bounds the per-pair index, code and
+    # bool arrays a flush holds, a few tens of bytes a pair
+    _FLUSH_PAIRS = 4_000_000
 
     def _broadcast_dedup(
         self,
@@ -983,38 +732,49 @@ class MinHashLSH:
         max_rows: int,
         kw: dict,
     ) -> DataFrame | None:
-        """The broadcast-fit routes of dedup_pairs(keep_sim=False), or None
-        when the JVM shuffle verify must run instead. Records
-        self.last_route either way.
+        """The broadcast route of dedup_pairs(keep_sim=False), or None when
+        a guard of _build_sig_broadcast trips and the JVM shuffle verify
+        must run instead. Records self.last_route either way.
+
+        The plan: a range frame of T = min(defaultParallelism, num_bands)
+        one-row tasks runs _sharded_dedup_fn, task t verifying the buckets
+        of bands t, t+T, ...; the survivors are repartitioned by pair into
+        defaultParallelism partitions, deduplicated, and given back their
+        ids by _attach_ids_fn. The repartition is reused by the
+        dropDuplicates groupBy (no second exchange) and keeps the attach
+        kernel at defaultParallelism python tasks: a cached or non-AQE plan
+        otherwise keeps the spark.sql.shuffle.partitions default and pays
+        one python-worker roundtrip per near-empty partition. Of the tier
+        knobs only bucket_cap_hard applies: every bucket is verified in
+        numpy, whatever its size.
 
         Computed signatures are persisted before the first job of the
-        broadcast build (see _build_sig_broadcast): the JVM and fused
-        routes read sig_df again, and without the cache they would be
-        computed twice. The replicated route never reads it again, so
-        there the cache is dropped as soon as the route is known."""
+        broadcast build (see _build_sig_broadcast), because the JVM route
+        reads sig_df again. The plan here reads only the broadcast, so the
+        cache is dropped as soon as the table fits."""
         may_cache = kw.get("persist", True) and not is_materialized(sig_df)
         bc, why = self._build_sig_broadcast(sig_df, max_rows, persist=may_cache)
         if bc is None:
             self.last_route = ("jvm", why)
             return None
-        if len(bc.value[0]) * self.cfg.num_bands <= self._REPL_PREFER_KEYS:
-            # the replicated kernel while replication is trivial (250k
-            # keys: ~10ms/task) — it deletes the whole bucket dataflow;
-            # measured best (2.7s vs fused 5.2) to tied (6.5 vs 6.6) on
-            # the 5k-doc bench corpus
-            if may_cache and is_materialized(sig_df):
-                sig_df.unpersist()
-            self.last_route = ("replicated", "fits broadcast")
-            return self._replicated_dedup(
-                sig_df, threshold, bc,
-                bucket_cap_hard=kw.get("bucket_cap_hard", 100_000),
-            )
-        # fused bucket->pair-gen->verify kernel (see _fused_dedup): no
-        # candidate materialization at all — only survivors shuffle
-        self.last_route = ("fused", "fits broadcast")
-        return self._fused_dedup(
-            sig_df, threshold, bc,
-            **{key: v for key, v in kw.items() if key != "gate"},
+        if may_cache and is_materialized(sig_df):
+            sig_df.unpersist()
+        self.last_route = ("broadcast", "fits broadcast")
+        b, r = self.cfg.num_bands, self.cfg.band_width
+        spark = sig_df.sparkSession
+        p = spark.sparkContext.defaultParallelism or 8
+        n_tasks = min(p, b)
+        kernel = _sharded_dedup_fn(
+            bc, _min_eq_count(threshold, self.cfg.num_hashes), b, r, n_tasks,
+            kw.get("bucket_cap_hard", 100_000), self._FLUSH_PAIRS,
+        )
+        id_sql = sig_df.schema["id"].dataType.simpleString()
+        return (
+            spark.range(0, n_tasks, 1, n_tasks)
+            .mapInPandas(kernel, "src long, dst long")
+            .repartition(p, "src", "dst")
+            .dropDuplicates(["src", "dst"])
+            .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}")
         )
 
     def dedup_pairs(
@@ -1034,10 +794,10 @@ class MinHashLSH:
         ROUTING is by data size, not by a flag. With keep_sim=False and
         the default numpy_verify=True, a signature table that fits one
         broadcast (numpy_max_rows rows and the 512MB byte budget, no sid
-        collision) runs an exact numpy kernel against the broadcast
-        signature matrix: the replicated kernel up to _REPL_PREFER_KEYS
-        band keys, the fused kernel above. Any other table runs the JVM
-        shuffle verify below, the expected large-corpus path. A table
+        collision) runs one exact numpy kernel against the broadcast
+        signature matrix, its bands sharded across tasks (see
+        _broadcast_dedup). Any other table runs the JVM shuffle verify
+        below, the expected large-corpus path. A table
         whose trusted size estimate is already over twice the budget goes
         to the JVM route without a Spark job, and one the estimate cannot
         place is row-counted before anything is collected, so an
@@ -1046,14 +806,14 @@ class MinHashLSH:
         always takes it (the numpy kernels return pairs only). Every route
         returns the same pair set, and a row with a null id is in no pair
         on any route. The choice is recorded as self.last_route = (route,
-        reason), e.g. ("replicated", "fits broadcast") or ("jvm", "over
+        reason), e.g. ("broadcast", "fits broadcast") or ("jvm", "over
         row bound").
 
         NOTE: building the broadcast runs a Spark job and a driver collect
         of the signature table IMMEDIATELY (at plan-construction time),
         unlike the JVM route, which stays lazy until an action. Computed
         signatures (no trusted size estimate) are persisted before that
-        collect, so they are computed once on every route; the replicated
+        collect, so they are computed once on every route; the broadcast
         route, which never reads sig_df again, drops the cache. A stored
         or cached table is read again instead; the JVM route caches it.
 
@@ -1068,8 +828,10 @@ class MinHashLSH:
 
         **kw takes the bucket-tier knobs of sid_candidates
         (max_bucket_size, medium_bucket_size, bucket_cap_hard,
-        block_groups, persist, gate); any other keyword raises TypeError
-        on every route."""
+        block_groups, persist); any other keyword raises TypeError on
+        every route. Both routes drop buckets over bucket_cap_hard;
+        max_bucket_size, medium_bucket_size and block_groups are read only
+        by the JVM route."""
         unknown = sorted(set(kw) - self._TIER_KW)
         if unknown:
             raise TypeError(f"dedup_pairs() got unexpected keyword arguments {unknown}")
@@ -1190,7 +952,7 @@ class MinHashLSH:
 
         The probe table goes through _build_sig_broadcast (size estimate,
         row and byte bound, null-id drop, sid-collision guard) with
-        _NUMPY_MAX_ROWS rows, further bounded to _REPL_PREFER_KEYS band
+        _NUMPY_MAX_ROWS rows, further bounded to _PROBE_MAX_KEYS band
         keys because every task bands the whole probe again. If it fits,
         _broadcast_query runs; if a guard trips (e.g. a duplicated probe
         id: "sid collision"), _jvm_query_scored does. Computed probe
@@ -1209,7 +971,7 @@ class MinHashLSH:
         may_cache = not is_materialized(probe_sigs)
         bc, why = self._build_sig_broadcast(
             probe_sigs,
-            min(self._NUMPY_MAX_ROWS, self._REPL_PREFER_KEYS // self.cfg.num_bands),
+            min(self._NUMPY_MAX_ROWS, self._PROBE_MAX_KEYS // self.cfg.num_bands),
             persist=may_cache,
         )
         if bc is None:
@@ -1264,7 +1026,7 @@ class MinHashLSH:
             index_sigs.where(F.col("id").isNotNull())
             .select("id", "sig")
             .mapInPandas(
-                _probe_match_fn(bc, b, r, excluded),
+                _probe_match_fn(bc, b, r, excluded, self._FLUSH_PAIRS),
                 f"qid {q_sql}, id {i_sql}, sim double",
             )
         )

@@ -164,7 +164,6 @@ class SimHashLSH:
         block_groups: int = 16,
         max_distance: int | None = None,
         persist: bool = True,
-        gate: bool = False,
     ) -> DataFrame:
         """(src, dst, dist) in sid space, deduped across tables. The 8-byte
         signature rides inside the bucket arrays, so the Hamming distance is
@@ -193,21 +192,15 @@ class SimHashLSH:
         raw = buckets.where(F.size("ms") <= array_bucket_limit).select(
             F.explode(pairs_from_sorted_ids(F.col("ms"))).alias("p")
         ).select("p.src", "p.dst")
-        # gate=True prunes the triangle tier with a blocking probe job;
-        # default keeps the tier in the plan — same measured trade as
-        # _bucket_pairs (an empty AQE stage is cheaper than serializing
-        # the pipeline on a gate collect)
-        has_big = (not gate) or (not persist) or (
-            buckets.where(F.size("ms") > array_bucket_limit).limit(1).count() > 0
-        )
-        if has_big:
-            raw = raw.unionByName(triangle_block_pairs(
-                buckets.where(
-                    (F.size("ms") > array_bucket_limit)
-                    & (F.size("ms") <= max_bucket_size)
-                ).select(F.col("ms").alias("ids")),
-                block_groups,
-            ))
+        # the triangle tier is always in the plan, as in _bucket_pairs: an
+        # empty AQE stage is cheaper than a blocking job that prunes it
+        raw = raw.unionByName(triangle_block_pairs(
+            buckets.where(
+                (F.size("ms") > array_bucket_limit)
+                & (F.size("ms") <= max_bucket_size)
+            ).select(F.col("ms").alias("ids")),
+            block_groups,
+        ))
         raw = raw.select(
             F.col("src.sid").alias("src"),
             F.col("dst.sid").alias("dst"),

@@ -203,7 +203,6 @@ def ngram_jaccard_pairs(
     medium_bucket_limit: int = 1024,
     block_groups: int = 16,
     persist: bool = True,
-    gate: bool = False,
 ) -> DataFrame:
     """Exact char-n-gram jaccard dedup (src, dst, jaccard >= threshold).
 
@@ -240,7 +239,6 @@ def ngram_jaccard_pairs(
         block_groups=block_groups,
         persist=persist,
         medium_bucket_limit=medium_bucket_limit,
-        gate=gate,
     )
     m = docs.select(sid_col(docs).alias("sid"), "id", F.size("sh").alias("n_sh"))
     ma = m.select(

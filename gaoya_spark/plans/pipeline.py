@@ -18,8 +18,8 @@ never shuffled (column pruning at the parquet/Iceberg scan). Edges are the
 only quadratic-risk stage and are guarded by hot-bucket triangle blocking.
 minhash_edges takes its route by size (MinHashLSH.dedup_pairs with
 keep_sim=False): a signature table that fits one broadcast runs the exact
-numpy kernels (replicated, or fused past ~2M band keys), any larger table
-the JVM shuffle verify; both drop buckets over bucket_cap_hard and return
+numpy kernel, its bands sharded across tasks, any larger table the JVM
+shuffle verify; both drop buckets over bucket_cap_hard and return
 the same pairs. Passing numpy_verify=False to dedup_pairs forces the JVM
 route.
 Labels iterate over edges only (bytes untouched). The optional PSNR/caption

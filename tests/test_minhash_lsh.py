@@ -25,15 +25,15 @@ def corpus5(spark):
 # Every dedup_pairs(keep_sim=False) route as (options, route name). Options
 # are dedup_pairs keywords; a leading "_" names a MinHashLSH class constant
 # pinned for the call. In order: the forced JVM shuffle verify, the
-# replicated kernel (the size-routed default at test sizes), the fused
-# kernel (no table is small enough to replicate), the fused kernel with
-# its medium and triangle tiers forced, and the guarded JVM fallback (the
-# row bound trips).
+# band-sharded broadcast kernel (the size-routed default at test sizes),
+# the same kernel flushing after every bucket member's pairs, the forced
+# JVM route with its medium and triangle tiers forced, and the guarded JVM
+# fallback (the row bound trips).
 ROUTES = [
     ({"numpy_verify": False}, "jvm"),
-    ({}, "replicated"),
-    ({"_REPL_PREFER_KEYS": 0}, "fused"),
-    ({"_REPL_PREFER_KEYS": 0, "max_bucket_size": 2, "medium_bucket_size": 3}, "fused"),
+    ({}, "broadcast"),
+    ({"_FLUSH_PAIRS": 1}, "broadcast"),
+    ({"numpy_verify": False, "max_bucket_size": 2, "medium_bucket_size": 3}, "jvm"),
     ({"numpy_max_rows": 1}, "jvm"),
 ]
 
@@ -122,14 +122,23 @@ def test_dedup_pairs_numpy_verify_nonascii_ids(spark, monkeypatch):
         assert _pair_set(_dedup(lsh, sigs, opts, monkeypatch)) == base, opts
 
 
-@pytest.mark.parametrize("hash_size", [32, 64])
-def test_dedup_pairs_numpy_verify_random_corpus(spark, hash_size, monkeypatch):
+# (hash_size, num_bands): 42 bands (off a multiple of the session's 8
+# tasks) at both hash sizes keep the bare hash-size ids; then one band,
+# fewer bands than tasks, and one and two bands a task
+@pytest.mark.parametrize("hash_size,num_bands", [
+    (32, 42), (64, 42), (32, 1), (64, 4), (32, 8), (64, 16),
+], ids=["32", "64", "32-b1", "64-b4", "32-b8", "64-b16"])
+def test_dedup_pairs_numpy_verify_random_corpus(
+    spark, hash_size, num_bands, monkeypatch
+):
     """Seeded random corpus equivalence: every route must produce the
     default JVM path's exact pair set for BOTH matrix dtypes —
     hash_size<64 runs the int32 branch, hash_size=64 the int64 branch
     (the 2^61-1 MinHasher64V1 formula, values above 2^32) — and for
     long (non-string) ids, over a graph with partial overlaps around
-    the threshold rather than clean clone groups."""
+    the threshold rather than clean clone groups. The band count decides
+    how the broadcast kernel shards: min(8, num_bands) tasks, each with
+    one band or several. Every route returns each pair once."""
     import random
 
     rng = random.Random(97 + hash_size)
@@ -145,7 +154,7 @@ def test_dedup_pairs_numpy_verify_random_corpus(spark, hash_size, monkeypatch):
         rows.append((i, " ".join(words)))
     df = spark.createDataFrame(rows, "id long, text string")
     cfg = MinHashConfig(
-        num_bands=42, band_width=3, threshold=0.5, hash_size=hash_size,
+        num_bands=num_bands, band_width=3, threshold=0.5, hash_size=hash_size,
         tokenizer=WORD,
     )
     lsh = MinHashLSH(cfg)
@@ -153,7 +162,8 @@ def test_dedup_pairs_numpy_verify_random_corpus(spark, hash_size, monkeypatch):
     base = _pair_set(lsh.dedup_pairs(sigs))
     assert base  # the mutation chain must create some near-dup pairs
     for opts, _ in ROUTES:
-        assert _pair_set(_dedup(lsh, sigs, opts, monkeypatch)) == base, opts
+        rows = [tuple(r) for r in _dedup(lsh, sigs, opts, monkeypatch).collect()]
+        assert set(rows) == base and len(rows) == len(base), opts
 
 
 def test_null_ids_in_no_pair(spark, strategy, monkeypatch):
@@ -185,7 +195,7 @@ def test_dedup_pairs_rejects_unknown_keywords(spark, corpus5, strategy, monkeypa
     lsh, sigs = corpus5
     opts, _ = strategy
     for bad in ({"max_bucket_sise": 8}, {"raw_candidates": True},
-                {"sketch_prefilter": True}):
+                {"sketch_prefilter": True}, {"gate": True}):
         with pytest.raises(TypeError, match=next(iter(bad))):
             _dedup(lsh, sigs, opts, monkeypatch, **bad)
         with pytest.raises(TypeError, match=next(iter(bad))):
@@ -515,26 +525,6 @@ def test_arrow_bands_jvm_bands_same_pairs(spark, corpus5):
     assert arrow == jvm and arrow
 
 
-def test_fused_dedup_matches_jvm_all_tiers(spark, monkeypatch):
-    """The fused kernel (bucket -> pair-gen -> verify in one kernel,
-    pinned by _REPL_PREFER_KEYS=0) must produce the exact JVM-path pair
-    set, including when tiny tier limits force buckets through the
-    medium (collapsed) and triangle (block join + rowwise verify) tiers."""
-    cfg = MinHashConfig(num_bands=42, band_width=3, threshold=0.5, tokenizer=WORD)
-    lsh = MinHashLSH(cfg)
-    sigs = lsh.signatures(corpus5_df(spark), "id", "text").cache()
-    sigs.count()
-    jvm = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
-    monkeypatch.setattr(MinHashLSH, "_REPL_PREFER_KEYS", 0)
-    fused = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
-    assert lsh.last_route == ("fused", "fits broadcast")
-    assert fused == jvm and jvm
-    forced = _pair_set(lsh.dedup_pairs(
-        sigs, keep_sim=False, max_bucket_size=2, medium_bucket_size=3,
-    ))
-    assert forced == jvm
-
-
 def test_dedup_strategies_empty_and_singleton(spark, strategy, monkeypatch):
     """Every dedup route must return an empty (src, dst) frame — with
     the id-typed schema — on an empty corpus and on a single-doc corpus
@@ -721,7 +711,7 @@ def test_numpy_strategy_values_identical(spark, corpus5):
 
 def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
     """The default numpy_verify=True routes by size: a broadcast-fit
-    table takes the replicated kernel; a table over the row bound
+    table takes the band-sharded kernel; a table over the row bound
     (numpy_max_rows) or far over the optimizer's size estimate takes the
     JVM shuffle verify. Every route returns the same pairs, and
     last_route names the route and the reason."""
@@ -731,7 +721,7 @@ def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
     lsh.dedup_pairs(sigs)
     assert lsh.last_route == ("jvm", "keep_sim")
     auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
-    assert lsh.last_route == ("replicated", "fits broadcast")
+    assert lsh.last_route == ("broadcast", "fits broadcast")
     over_rows = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_max_rows=1))
     assert lsh.last_route == ("jvm", "over row bound")
     # a byte budget far below the cached table's size estimate: the
@@ -742,14 +732,16 @@ def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
     assert auto == over_rows == over_est == jvm and jvm
 
 
-def test_replicated_drops_buckets_over_hard_cap(spark, monkeypatch):
+def test_replicated_drops_buckets_over_hard_cap(spark):
     """bucket_cap_hard parity: a family of 10 identical docs fills every
     band bucket with 10 members. With bucket_cap_hard=5 (under the
-    default max_bucket_size, so the cap must bind in the small tier too)
-    the JVM, fused and replicated routes all drop those buckets —
-    identical pair sets, the other pairs kept."""
-    cfg = MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
-    lsh = MinHashLSH(cfg)
+    default max_bucket_size, so the cap must bind in the JVM route's
+    small tier too) the JVM and broadcast routes both drop those buckets
+    — identical pair sets, the other pairs kept — and without the cap
+    both return the family's 45 pairs. At 8 bands each of the session's
+    8 tasks holds one band; at 42 bands a task holds 5 or 6, so it skips
+    the family's bucket after verifying it once, and every other task
+    verifies it again."""
     rows = [(i, "same boilerplate caption for every family member here")
             for i in range(10)]
     rows += [
@@ -757,23 +749,27 @@ def test_replicated_drops_buckets_over_hard_cap(spark, monkeypatch):
         (101, "a quick brown fox jumps over the lazy cat"),
         (102, "completely different words about database engines"),
     ]
-    sigs = lsh.signatures(
-        spark.createDataFrame(rows, "id long, text string"), "id", "text"
-    ).cache()
-    jvm = _pair_set(lsh.dedup_pairs(
-        sigs, keep_sim=False, numpy_verify=False, bucket_cap_hard=5
-    ))
-    auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, bucket_cap_hard=5))
-    assert lsh.last_route == ("replicated", "fits broadcast")
-    monkeypatch.setattr(MinHashLSH, "_REPL_PREFER_KEYS", 0)
-    fused = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, bucket_cap_hard=5))
-    assert lsh.last_route == ("fused", "fits broadcast")
-    assert auto == jvm == fused
-    assert (100, 101) in jvm
-    assert not any(a < 10 and b < 10 for a, b in jvm)
-    # without the cap the family's 45 pairs come back on every route
-    uncapped = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
-    assert len(uncapped - jvm) == 45
+    family = {(a, b) for a in range(10) for b in range(a + 1, 10)}
+    for num_bands in (8, 42):
+        cfg = MinHashConfig(
+            num_bands=num_bands, band_width=2, threshold=0.5, tokenizer=WORD
+        )
+        lsh = MinHashLSH(cfg)
+        sigs = lsh.signatures(
+            spark.createDataFrame(rows, "id long, text string"), "id", "text"
+        ).cache()
+        for cap, want_family in ((5, set()), (100_000, family)):
+            jvm = _pair_set(lsh.dedup_pairs(
+                sigs, keep_sim=False, numpy_verify=False, bucket_cap_hard=cap
+            ))
+            auto = _pair_set(
+                lsh.dedup_pairs(sigs, keep_sim=False, bucket_cap_hard=cap)
+            )
+            assert lsh.last_route == ("broadcast", "fits broadcast")
+            assert auto == jvm, (num_bands, cap)
+            assert (100, 101) in jvm
+            assert {(a, b) for a, b in jvm if b < 10} == want_family
+        sigs.unpersist()
 
 
 def _counted_sigs(spark, sigs):
@@ -793,8 +789,8 @@ def _counted_sigs(spark, sigs):
 
 
 @pytest.mark.parametrize("strategy,route", [
-    ({}, "replicated"),
-    ({"_REPL_PREFER_KEYS": 0}, "fused"),
+    ({}, "broadcast"),
+    ({"_FLUSH_PAIRS": 1}, "broadcast"),
     ({"numpy_verify": False}, "jvm"),
     ({"numpy_max_rows": 1}, "jvm"),
 ])
@@ -804,10 +800,10 @@ def test_uncached_signatures_computed_once(
     """dedup_pairs on an uncached signature table computes each row's
     signature once on every route: the broadcast collect (and the row
     count before it, which runs because a python-computed table has no
-    trusted size estimate) fills the cache that the fused and guarded
-    JVM routes read again, and the forced JVM route caches the table
-    before its first read. The replicated route reads only the broadcast
-    and drops the cache."""
+    trusted size estimate) fills the cache that the guarded JVM route
+    reads again, and the forced JVM route caches the table before its
+    first read. The broadcast route reads only the broadcast and drops
+    the cache."""
     lsh, sigs = corpus5
     n = sigs.count()
     counted, acc = _counted_sigs(spark, sigs)
@@ -816,7 +812,7 @@ def test_uncached_signatures_computed_once(
     assert lsh.last_route[0] == route
     assert got == want and want
     assert acc.value == n
-    assert counted.storageLevel.useMemory == (route != "replicated")
+    assert counted.storageLevel.useMemory == (route != "broadcast")
     counted.unpersist()
 
 

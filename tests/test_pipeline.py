@@ -146,7 +146,7 @@ def test_pipeline_with_substring_stage(spark, images, tmp_path_factory):
 def test_pipeline_minhash_edges_match_jvm_route_string_ids(
     spark, images, tmp_path_factory, monkeypatch
 ):
-    """minhash_edges is dedup_pairs routed by size — the replicated numpy
+    """minhash_edges is dedup_pairs routed by size — the band-sharded numpy
     kernel at this scale. On a string-id corpus it must equal the pair set
     of the JVM route (numpy_verify=False) over the same signatures."""
     from gaoya_spark.operators.minhash_lsh import MinHashLSH
@@ -167,7 +167,7 @@ def test_pipeline_minhash_edges_match_jvm_route_string_ids(
     cfg = PipelineConfig(use_simhash=False)
     pipe = DedupPipeline(spark, str(tmp_path_factory.mktemp("wh_str")), cfg)
     pipe.run(sdf)
-    assert routes == [("replicated", "fits broadcast")]
+    assert routes == [("broadcast", "fits broadcast")]
     edges = pipe.wh.read("minhash_edges")
     assert dict(edges.dtypes)["src"] == "string"
     got = {(r["src"], r["dst"]) for r in edges.collect()}

@@ -415,7 +415,7 @@ def test_in_batch_edges_match_jvm_route(spark, tmp_path):
         SCHEMA,
     )
     sd.process_batch(b0, 0)
-    assert sd.lsh.last_route == ("replicated", "fits broadcast")
+    assert sd.lsh.last_route == ("broadcast", "fits broadcast")
     got = {(r["src"], r["dst"]) for r in wh.read("stream_edges").collect()}
     sigs = sd.lsh.signatures(b0, "image_id", "caption", phash_col="phash")
     jvm = sd.lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False)

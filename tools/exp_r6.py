@@ -5,10 +5,6 @@ interleaved comparisons are valid — EXPERIMENTS.md protocol).
 Variants:
   jvm      : JVM shuffle-verify route (numpy_verify=False)
   np       : size-routed numpy route (the bench path)
-  np_mb32  : same, max_bucket_size 32 (a fused-kernel tier knob: routes
-             mid-size repeating families through the identical-set
-             collapse BEFORE pair explosion)
-  np_mb16  : same, limit 16
 
 Counts are asserted identical across variants (same semantics, different
 plans). Usage: python tools/exp_r6.py [corpus: doc|img] [reps] [variants]
@@ -59,12 +55,6 @@ def main() -> None:
         ).count(),
         "np": lambda: mh.dedup_pairs(
             sigs, keep_sim=False, numpy_verify=True
-        ).count(),
-        "np_mb32": lambda: mh.dedup_pairs(
-            sigs, keep_sim=False, numpy_verify=True, max_bucket_size=32
-        ).count(),
-        "np_mb16": lambda: mh.dedup_pairs(
-            sigs, keep_sim=False, numpy_verify=True, max_bucket_size=16
         ).count(),
     }
     if only:

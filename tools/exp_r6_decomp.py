@@ -9,7 +9,6 @@ Stages:
   cand_agg   : full candidate set (src, dst, m) count
   bcast      : _build_sig_broadcast (eager driver collect + broadcast)
   np         : full dedup_pairs(keep_sim=False).count()   [bench path]
-  fused      : the same with _REPL_PREFER_KEYS=0 (fused kernel pinned)
   jvm        : full dedup_pairs(keep_sim=False, numpy_verify=False).count()
 
 Usage: python tools/exp_r6_decomp.py [doc|img] [reps] [stages]
@@ -58,9 +57,6 @@ def main() -> None:
         phash_token_weight=1 if phash else 0,
     )
     mh = MinHashLSH(cfg)
-    # the fused kernel, pinned: no table is small enough to replicate
-    fused_mh = MinHashLSH(cfg)
-    fused_mh._REPL_PREFER_KEYS = 0
     sigs = mh.signatures(df, id_col, text_col, phash_col=phash).cache()
     sigs.count()
 
@@ -91,7 +87,6 @@ def main() -> None:
         "cand_agg": cand_agg,
         "bcast": bcast,
         "np": lambda: mh.dedup_pairs(sigs, keep_sim=False).count(),
-        "fused": lambda: fused_mh.dedup_pairs(sigs, keep_sim=False).count(),
         "jvm": lambda: mh.dedup_pairs(
             sigs, keep_sim=False, numpy_verify=False
         ).count(),

@@ -41,9 +41,6 @@ def main():
 
     char34 = TokenizerSpec(kind="char", n_from=3, n_to=4, lowercase=True)
     mh = MinHashLSH(MinHashConfig(tokenizer=char34, phash_token_weight=1))
-    # the fused kernel, pinned: no table is small enough to replicate
-    fused_mh = MinHashLSH(mh.cfg)
-    fused_mh._REPL_PREFER_KEYS = 0
     sh = SimHashLSH(SimHashConfig())
 
     from gaoya_spark.operators.substring import candidate_gram_pairs
@@ -68,20 +65,12 @@ def main():
         "pairs)": mh.dedup_pairs(sigs),
         "dedup pairs, size-routed default on a broadcast-fit table "
         "(EXPECT: a one-row-per-task range feeds ONE MapInPandas kernel "
-        "that rebuilds the buckets from the broadcast signature matrix "
-        "and verifies them — no band explode, no bucket exchange, no "
-        "signature joins — then ONE narrow 16-byte-sid dropDuplicates "
-        "exchange and a second tiny MapInPandas attaching original ids "
-        "from the same already-shipped broadcast)": mh.dedup_pairs(
-            sigs, keep_sim=False
-        ),
-        "dedup pairs, fused bucket verify (EXPECT: the bucket "
-        "collect_list aggregate feeds a MapInPandas kernel DIRECTLY — "
-        "pair generation and signature verify fused in numpy, no pair "
-        "explosion, no candidate aggregate — union with the (empty at "
-        "this scale) collapsed-medium and triangle tiers, then ONE "
-        "narrow survivors dropDuplicates exchange and the id-attach "
-        "kernel)": fused_mh.dedup_pairs(sigs, keep_sim=False),
+        "that builds each task's share of the bands' buckets from the "
+        "broadcast signature matrix and verifies them — no band explode, "
+        "no bucket exchange, no signature joins — then ONE narrow "
+        "16-byte-sid dropDuplicates exchange and a second tiny "
+        "MapInPandas attaching original ids from the same already-shipped "
+        "broadcast)": mh.dedup_pairs(sigs, keep_sim=False),
         "simhash tables (EXPECT: project+generate only)": sh.tables(
             sh.signatures(images, "image_id", "caption")
         ),
