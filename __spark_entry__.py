@@ -638,9 +638,10 @@ def _q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/stream_dedup.py) replayed deterministically: the documents
     table arrives in doc_id-ordered micro-batches of 100 (one parquet
     file per batch, ascending mtimes, availableNow +
-    maxFilesPerTrigger=1). Each batch's edges are its within-batch dedup
-    pairs plus probe-vs-standing-index matches, so a pair is discovered
-    exactly when its later member arrives — after the full replay the
+    maxFilesPerTrigger=1). Each batch's edges come from one probe of the
+    batch against the standing index plus the batch itself, as
+    (least, greatest) pairs, so a pair is discovered exactly when its
+    later member arrives — after the full replay the
     batch-partitioned edge table must equal the BATCH-mode answer: every
     verified pair over the whole corpus. Oracle: the same banded-LSH +
     signature-verify SQL as minhash_band_pairs, pair set only.
@@ -676,17 +677,9 @@ def _q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = sd.start(stream, os.path.join(base, "ckpt"))
     q.awaitTermination()
-    # normalize orientation: cross-index edges are (newer, older); the
-    # oracle (and dedup_pairs) order by id value
-    rows = (
-        wh.read("stream_edges")
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .distinct()
-        .collect()
-    )
+    # stream edges are already (least, greatest) and found once each, the
+    # oracle's orientation
+    rows = wh.read("stream_edges").select("src", "dst").collect()
     shutil.rmtree(base, ignore_errors=True)
     return spark.createDataFrame(rows, "src long, dst long")
 

@@ -479,14 +479,13 @@ class MinHashLSH:
         """Public (sid, bk) banding table — the persisted-index form of
         the reference's per-band hash maps (minhash_index.rs:316-328):
         insert (W1) = append these 16-byte rows, query (Q1-Q2) = probe
-        them via query(..., index_bands=). At 10^12 rows this is THE
-        index artifact a warehouse maintains so a query never re-bands
-        the corpus; StreamingDedup appends each micro-batch's rows to
-        its stream_bands table and probes the accumulated index. A probe
-        set that fits one broadcast bands the index rows in its kernel
-        instead, so on that route the table only feeds query's
-        bucket-cap count (see query); larger probes group their keys
-        with its rows.
+        them via query(..., index_bands=). A warehouse can maintain it
+        so that a probe over the broadcast bound groups its keys with
+        these rows instead of re-banding the corpus. A probe set that fits
+        one broadcast bands the index rows in its kernel instead, so on
+        that route the table only feeds query's bucket-cap count (see
+        query). StreamingDedup keeps no such table: its micro-batch probe
+        bands its index (signatures plus the batch) on either route.
 
         The sid is sid_col's: an integral id is its own sid, so a table
         written when every sid was xxhash64(id) must be rebuilt before
@@ -915,9 +914,10 @@ class MinHashLSH:
         property (dropped by further transformations); use query_one /
         query_top_k for order-dependent logic.
 
-        index_bands: a PRECOMPUTED (sid, bk) banding table for the index
-        (from sid_bands(), e.g. warehouse-persisted and appended on every
-        insert). It must correspond exactly to index_sigs' current rows:
+        index_bands: an optional PRECOMPUTED (sid, bk) banding table for
+        the index (from sid_bands(), e.g. warehouse-persisted and appended
+        on every insert); without it both routes band index_sigs
+        themselves. It must correspond exactly to index_sigs' current rows:
         stale extra sids (a removed doc) are harmless on both routes, but
         MISSING rows lose recall on the JVM route. On the JVM route the
         index is not re-banded: the probe batch is banded and grouped with
@@ -967,7 +967,12 @@ class MinHashLSH:
         them apart: an index holding one id twice with different
         signatures. The JVM route scores every row of that id once any of
         them shares a band with the probe, the broadcast route only the
-        rows that do."""
+        rows that do.
+
+        The index may hold the probe rows too (StreamingDedup probes its
+        signatures table plus the micro-batch with the micro-batch): each
+        such probe row then matches itself, and its rows count toward the
+        cap like any index row."""
         may_cache = not is_materialized(probe_sigs)
         bc, why = self._build_sig_broadcast(
             probe_sigs,

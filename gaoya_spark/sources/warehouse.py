@@ -207,22 +207,6 @@ class Warehouse:
             if f.endswith(".parquet")
         )
 
-    def partition_values(self, name: str, key: str) -> set[str]:
-        """Distinct values of a top-level partition column, read from the
-        directory layout (key=value subdirs) — an O(#partitions) listing,
-        no Spark job. Used for cheap index-coverage checks (a maintained
-        index table must cover every batch of its base table before a
-        query may trust it)."""
-        p = self.table_path(name)
-        if not os.path.isdir(p):
-            return set()
-        prefix = key + "="
-        return {
-            f[len(prefix):]
-            for f in os.listdir(p)
-            if f.startswith(prefix) and os.path.isdir(os.path.join(p, f))
-        }
-
     # -------------------------------------------------------------- manifest
     def _load_manifest(self) -> dict:
         if os.path.exists(self._manifest_path):
@@ -260,14 +244,18 @@ class Warehouse:
         """Execute a stage with resume: if the manifest marks it done and the
         table exists, read it back instead of recomputing. Returns the stage
         output DataFrame (always read from storage, so downstream stages cut
-        lineage — the checkpoint IS the plan barrier)."""
+        lineage — the checkpoint IS the plan barrier). The manifest's row
+        count is summed from the written files' parquet footers, so it
+        costs no Spark job."""
+        import pyarrow.dataset as pads
+
         if not force and self.stage_done(stage) and self.exists(table):
             return self.read(table)
         t0 = time.time()
         df = build()
         self.write(df, table, partition_by=partition_by)
+        rows = pads.dataset(self.table_path(table), format="parquet").count_rows()
         out = self.read(table)
-        rows = out.count()
         wall = time.time() - t0
         self.mark_stage(
             stage,

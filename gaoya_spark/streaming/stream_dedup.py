@@ -3,11 +3,12 @@
 The reference's `insert` (W1) is an in-memory mutation; the streaming
 analogue is an append-only signatures table maintained by foreachBatch:
 
-  new images -> signature UDF -> (a) edges vs the existing index
-  (MinHashLSH.query: a micro-batch that fits one broadcast is matched in
-  one numpy pass over the signatures table), (b) edges within the
-  micro-batch, then
-  (c) incremental labels: a new id adopts the smallest component among its
+  new images -> signature UDF -> (a) every edge of the micro-batch, from
+  one MinHashLSH.query of the batch against the signatures table plus the
+  batch itself (a micro-batch that fits one broadcast is matched in one
+  numpy pass; the batch's own pairs come back in both directions and are
+  kept once as (least, greatest)), then
+  (b) incremental labels: a new id adopts the smallest component among its
   matched neighbors (or itself) — the streaming approximation of label
   propagation (exact for star-shaped arrivals; a periodic batch
   connected-components pass reconciles chains, same as any incremental CC).
@@ -19,21 +20,16 @@ resumable, and unbounded-size (executor state stores are not designed for
 
 Checkpointing: Spark's streaming checkpointLocation gives exactly-once
 batch ids, and every warehouse write here is keyed by that batch id: the
-four stream tables (signatures, bands, edges, labels) are partitioned by
+three stream tables (signatures, edges, labels) are partitioned by
 batch_id and written with dynamic partition overwrite, so a foreachBatch
 replay (Spark re-runs the same batch_id after a mid-batch failure)
 rewrites its own partition instead of double-appending — idempotent by
 construction.
 
-The bands table is the maintained LSH index (the reference's per-band
-hash maps as a table): each batch appends only its own (sid, bk) rows
-and passes the accumulated table to query(index_bands=...), so insert
-cost is proportional to the batch, not the corpus. A probe over the
-broadcast bound groups its keys with the table's rows and never re-bands
-the standing index. A micro-batch probe that fits one broadcast (the
-usual case) bands the index rows in its kernel as it scans the
-signatures table, and reads the bands table only to count the index
-side of its own band keys against query's bucket cap.
+The signatures table is the only maintained index: the probe bands the
+index rows as it reads them (the broadcast route in its kernel, the JVM
+route of a batch over the broadcast bound in one Arrow pass), so no band
+table has to be kept in step with it.
 """
 
 from __future__ import annotations
@@ -61,7 +57,7 @@ class StreamingDedup:
         self.cfg = cfg or MinHashConfig()
         self.lsh = MinHashLSH(self.cfg)
         self.id_col, self.text_col, self.phash_col = id_col, text_col, phash_col
-        # every K batches the four stream tables are compacted to one file
+        # every K batches the three stream tables are compacted to one file
         # per batch_id partition (Warehouse.compact): each micro-batch
         # write lands shuffle-partition-many small files, so an
         # uncompacted index probe after thousands of triggers would pay
@@ -75,81 +71,35 @@ class StreamingDedup:
             batch_df, self.id_col, self.text_col, phash_col=self.phash_col
         ).localCheckpoint(eager=True)
 
+        index = new_sigs
         if self.wh.exists("stream_signatures"):
             # exclude this batch's own partition: on a foreachBatch replay
             # the previous attempt's output is already in the table, and
             # reading it back would make the replay see different state
-            # than the original run (self-matches, duplicated edges)
-            index = self.wh.read("stream_signatures").where(
-                F.col("batch_id") != batch_id
+            # than the original run (the batch twice in the index, its
+            # bucket counts doubled against the cap)
+            index = (
+                self.wh.read("stream_signatures")
+                .where(F.col("batch_id") != batch_id)
+                .select("id", "sig")
+                .unionByName(new_sigs)
             )
-        else:
-            index = None
-        # the maintained band index (the reference's per-band hash maps as
-        # a table, W1/Q1): each batch appends its own (sid, bk) rows below
-        # and hands the ACCUMULATED rows to query. A probe over the
-        # broadcast bound groups with them instead of re-banding the
-        # standing index; a broadcast-fit probe bands the index rows in its
-        # kernel and reads these only for the bucket-cap count
-        index_bands = None
-        if index is not None and self.wh.exists("stream_bands"):
-            # COVERAGE GUARD: only trust the maintained bands index when it
-            # covers every batch present in stream_signatures (missing rows
-            # lose recall — query()'s own contract). A warehouse written by
-            # an older three-table layout, or a partially-deleted bands
-            # table, would otherwise silently drop all cross-batch edges
-            # against the uncovered batches from the second post-upgrade
-            # batch onward. The check is a directory listing (both tables
-            # are partitioned by batch_id), not a Spark job.
-            sig_batches = self.wh.partition_values("stream_signatures", "batch_id")
-            band_batches = self.wh.partition_values("stream_bands", "batch_id")
-            sig_batches.discard(str(batch_id))
-            band_batches.discard(str(batch_id))
-            missing = sig_batches - band_batches
-            if missing:
-                # self-heal: band the uncovered batches once and write them
-                # into their own partitions (idempotent overwrite), instead
-                # of silently probing an index that misses them. Cost is
-                # proportional to the gap, paid once; afterwards the
-                # maintained-index invariant holds again.
-                import warnings
-
-                warnings.warn(
-                    "StreamingDedup: stream_bands was missing batches "
-                    f"{sorted(missing)} of stream_signatures — backfilling "
-                    "their (sid, bk) rows before probing the index",
-                    RuntimeWarning,
-                )
-                for b in sorted(missing):
-                    part = self.wh.read("stream_signatures").where(
-                        F.col("batch_id") == int(b)
-                    )
-                    self.wh.overwrite_partitions(
-                        self.lsh.sid_bands(part.select("id", "sig")).withColumn(
-                            "batch_id", F.lit(int(b))
-                        ),
-                        "stream_bands",
-                        ["batch_id"],
-                    )
-            index_bands = self.wh.read("stream_bands").where(
-                F.col("batch_id") != batch_id
+        # one probe finds every edge: the batch against the standing index
+        # and against itself. query routes by the batch's size, so a
+        # micro-batch that fits one broadcast is matched in one numpy pass
+        # over index + batch. A pair inside the batch comes back in both
+        # directions and every row matches itself, so drop self-matches
+        # and keep each pair once as (least, greatest)
+        edges = (
+            self.lsh.query(index, new_sigs, keep_sim=False)
+            .where(F.col("qid") != F.col("id"))
+            .select(
+                F.least("qid", "id").alias("src"),
+                F.greatest("qid", "id").alias("dst"),
             )
-
-        # edges inside the batch; dedup_pairs routes by size, so a
-        # micro-batch that fits one broadcast takes the numpy kernels
-        edges = self.lsh.dedup_pairs(new_sigs, keep_sim=False)
-        if index is not None:
-            # edges between batch and the standing index (probe = new
-            # rows); query routes by the batch's size, like dedup_pairs
-            vs_index = (
-                self.lsh.query(
-                    index, new_sigs, keep_sim=False, index_bands=index_bands
-                )
-                .where(F.col("qid") != F.col("id"))
-                .select(F.col("qid").alias("src"), F.col("id").alias("dst"))
-            )
-            edges = edges.unionByName(vs_index)
-        edges = edges.localCheckpoint(eager=True)
+            .dropDuplicates()
+            .localCheckpoint(eager=True)
+        )
 
         # incremental labels: new id -> min(existing neighbor component,
         # new neighbor id, own id)
@@ -163,8 +113,8 @@ class StreamingDedup:
             ) if dict(new_sigs.dtypes)["id"] == "string" else self.spark.createDataFrame(
                 [], "id long, component long"
             )
-        # symmetrize for the neighbor-min step: a batch-internal pair (a, b)
-        # must update BOTH endpoints (the canonical edge list stays directed)
+        # symmetrize for the neighbor-min step: a pair (a, b) must update
+        # BOTH endpoints (the stored edge list keeps one direction)
         sym = edges.unionByName(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
@@ -189,11 +139,6 @@ class StreamingDedup:
             new_sigs.withColumn("batch_id", bid), "stream_signatures", ["batch_id"]
         )
         self.wh.overwrite_partitions(
-            self.lsh.sid_bands(new_sigs).withColumn("batch_id", bid),
-            "stream_bands",
-            ["batch_id"],
-        )
-        self.wh.overwrite_partitions(
             edges.withColumn("batch_id", bid), "stream_edges", ["batch_id"]
         )
         self.wh.overwrite_partitions(
@@ -205,8 +150,7 @@ class StreamingDedup:
             # dirs, so a replayed batch still overwrites exactly its own
             # partition; older batches never replay once their streaming
             # checkpoint is committed
-            for t in ("stream_signatures", "stream_bands",
-                      "stream_edges", "stream_labels"):
+            for t in ("stream_signatures", "stream_edges", "stream_labels"):
                 if self.wh.exists(t):
                     self.wh.compact(t, partition_by=["batch_id"])
 

@@ -44,6 +44,24 @@ def test_warehouse_roundtrip_and_manifest(spark, tmp_path):
     assert not wh.stage_done("s1")
 
 
+def test_run_stage_manifest_rows_match_count(spark, tmp_path):
+    """run_stage records the row count from the written files' parquet
+    footers: it must equal count() of the table read back, unpartitioned,
+    partitioned and empty."""
+    wh = Warehouse(spark, str(tmp_path / "w"))
+    df = spark.range(37).selectExpr("id", "id % 5 AS part")
+    cases = {
+        "flat": (df, None),
+        "parted": (df, ["part"]),
+        "empty": (df.where("id < 0"), None),
+    }
+    for name, (d, part) in cases.items():
+        out = wh.run_stage(name, name, lambda d=d: d, partition_by=part)
+        assert wh.manifest()["stages"][name]["rows"] == out.count(), name
+    assert wh.manifest()["stages"]["parted"]["rows"] == 37
+    assert wh.manifest()["stages"]["empty"]["rows"] == 0
+
+
 def test_iceberg_templates_render_and_gate(spark, tmp_path):
     """The Iceberg DDL/DML templates are untestable end-to-end in this
     sandbox (no runtime jar — SURVEY.md §7.1), so pin what IS testable:

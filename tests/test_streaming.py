@@ -285,10 +285,10 @@ def test_stateful_first_seen_ttl_eviction(spark, tmp_path):
 
 
 def test_compaction_preserves_index_and_bounds_files(spark, tmp_path):
-    """Warehouse.compact rewrites each stream table to one file per
-    batch_id partition: rows identical, query(index_bands=) results
-    identical before/after, and the file count is bounded by the batch
-    count instead of batches x shuffle partitions."""
+    """Warehouse.compact rewrites each of the three stream tables to one
+    file per batch_id partition: rows identical, query results over the
+    signatures identical before/after, and the file count is bounded by
+    the batch count instead of batches x shuffle partitions."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     sd = StreamingDedup(spark, wh, CFG, compact_every=None)
     texts = [
@@ -304,38 +304,24 @@ def test_compaction_preserves_index_and_bounds_files(spark, tmp_path):
         )
         sd.process_batch(df, b)
 
-    sigs = wh.read("stream_signatures")
-    bands_before = wh.read("stream_bands")
-    probe = sigs.select("id", "sig")
-    before = {
-        (r["qid"], r["id"])
-        for r in sd.lsh.query(
-            sigs.select("id", "sig"), probe, index_bands=bands_before
-        ).collect()
-    }
-    rows_before = {
-        t: wh.read(t).count()
-        for t in ("stream_signatures", "stream_bands", "stream_edges", "stream_labels")
-    }
-    files_before = wh.file_count("stream_bands")
+    def matches():
+        sigs = wh.read("stream_signatures").select("id", "sig")
+        return {(r["qid"], r["id"]) for r in sd.lsh.query(sigs, sigs).collect()}
 
-    for t in rows_before:
+    before = matches()
+    tables = ("stream_signatures", "stream_edges", "stream_labels")
+    rows_before = {t: wh.read(t).count() for t in tables}
+    files_before = {t: wh.file_count(t) for t in tables}
+
+    for t in tables:
         wh.compact(t, partition_by=["batch_id"])
 
-    for t, n in rows_before.items():
-        assert wh.read(t).count() == n, t
-    files_after = wh.file_count("stream_bands")
-    assert files_after <= 4  # one file per batch partition
-    assert files_after < files_before
-    sigs2 = wh.read("stream_signatures")
-    after = {
-        (r["qid"], r["id"])
-        for r in sd.lsh.query(
-            sigs2.select("id", "sig"), sigs2.select("id", "sig"),
-            index_bands=wh.read("stream_bands"),
-        ).collect()
-    }
-    assert after == before and before
+    for t in tables:
+        assert wh.read(t).count() == rows_before[t], t
+        assert wh.file_count(t) <= 4, t  # one file per batch partition
+    assert sum(wh.file_count(t) for t in tables) < sum(files_before.values())
+    assert not wh.exists("stream_bands")
+    assert matches() == before and before
 
     # and the next batch still processes correctly on the compacted tables
     df = spark.createDataFrame(
@@ -348,75 +334,94 @@ def test_compaction_preserves_index_and_bounds_files(spark, tmp_path):
     ) or labels[100] == 100
 
 
-def test_bands_coverage_guard_backfills_missing_batches(spark, tmp_path):
-    """A stream_bands table missing a batch (older layout / partial
-    delete) must not silently lose cross-batch edges: process_batch
-    detects the gap via the partition listing, backfills the missing
-    batch's (sid, bk) rows, and produces the same edges as a coherent
-    warehouse."""
-    import warnings
-
-    texts = {
-        1: "the quick brown fox jumps over the lazy dog",
-        2: "totally unrelated text about database engines",
-        3: "the quick brown fox jumps over the lazy cat",
-    }
-    # coherent reference run
-    wh_ok = Warehouse(spark, str(tmp_path / "ok"))
-    sd_ok = StreamingDedup(spark, wh_ok, CFG)
-    sd_ok.process_batch(
-        spark.createDataFrame(_img_rows([(1, texts[1]), (2, texts[2])]), SCHEMA), 0
-    )
-    sd_ok.process_batch(
-        spark.createDataFrame(_img_rows([(3, texts[3])]), SCHEMA), 1
-    )
-    want = {
-        (r["src"], r["dst"]) for r in wh_ok.read("stream_edges").collect()
-    }
-
-    # damaged run: batch 0's bands partition is deleted after batch 0,
-    # but batch 1's partition remains — a genuine coverage gap (an
-    # entirely-missing table is just the cold-start path)
-    wh = Warehouse(spark, str(tmp_path / "gap"))
-    sd = StreamingDedup(spark, wh, CFG)
-    sd.process_batch(
-        spark.createDataFrame(_img_rows([(1, texts[1])]), SCHEMA), 0
-    )
-    sd.process_batch(
-        spark.createDataFrame(_img_rows([(2, texts[2])]), SCHEMA), 1
-    )
-    import shutil
-
-    shutil.rmtree(os.path.join(wh.table_path("stream_bands"), "batch_id=0"))
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        sd.process_batch(
-            spark.createDataFrame(_img_rows([(3, texts[3])]), SCHEMA), 2
-        )
-    assert any("backfilling" in str(x.message) for x in w)
-    got = {(r["src"], r["dst"]) for r in wh.read("stream_edges").collect()}
-    assert got == want
-    # the backfill repaired the index: batch 0's partition exists again
-    assert "0" in wh.partition_values("stream_bands", "batch_id")
+PARITY_BATCHES = [
+    [(1, "the quick brown fox jumps over the lazy dog"),
+     (2, "the quick brown fox jumps over the lazy cat"),
+     (3, "columnar storage engines scan compressed pages fast"),
+     (4, "totally unrelated words about mountain weather")],
+    [(5, "the quick brown fox leaps over the lazy dog"),
+     (6, "columnar storage engines scan compressed pages quickly"),
+     (7, "columnar storage engines scan compressed pages fast"),
+     (8, "a recipe for sourdough bread with rye flour")],
+    [(9, "a recipe for sourdough bread with rye flour and salt"),
+     (10, "the quick brown fox jumps over the lazy dog"),
+     (11, "the quick brown fox jumps over the lazy dog"),
+     (12, "nothing here resembles any earlier caption at all")],
+]
 
 
-def test_in_batch_edges_match_jvm_route(spark, tmp_path):
-    """process_batch's in-batch dedup takes the numpy route by size; the
-    batch's edges must be exactly the JVM route's pair set."""
+def _brute_stream_edges(sigs_by_batch, threshold):
+    """Each batch's edges by brute force over the stored signatures: every
+    row of the batch against the earlier rows of the batch and every row of
+    the earlier batches, eq/k >= threshold, as (least, greatest) pairs."""
+    import numpy as np
+
+    seen, out = [], []
+    for rows in sigs_by_batch:
+        got = set()
+        for i, (a, sa) in enumerate(rows):
+            for b, sb in seen + rows[:i]:
+                if np.mean(np.asarray(sa) == np.asarray(sb)) >= threshold:
+                    got.add((min(a, b), max(a, b)))
+        out.append(got)
+        seen += rows
+    return out
+
+
+@pytest.mark.parametrize("route", ["broadcast_probe", "jvm"])
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_stream_edges_match_brute_force(spark, tmp_path, route, id_type):
+    """One probe per micro-batch finds the batch's edges against itself
+    and the earlier batches: each batch's stream_edges equal a brute force
+    over the signatures, on the broadcast probe and on the JVM route."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     sd = StreamingDedup(spark, wh, CFG)
-    b0 = spark.createDataFrame(
-        _img_rows([(1, "the quick brown fox jumps over the lazy dog"),
-                   (2, "the quick brown fox jumps over the lazy cat"),
-                   (3, "the quick brown fox leaps over the lazy dog"),
-                   (4, "columnar storage engines scan compressed pages fast"),
-                   (5, "columnar storage engines scan compressed pages quickly"),
-                   (6, "totally unrelated words about mountain weather")]),
-        SCHEMA,
+    if route == "jvm":
+        sd.lsh._BROADCAST_BYTES = -1
+    conv = str if id_type == "string" else int
+    schema = f"image_id {id_type}, caption string, phash long"
+    for b, rows in enumerate(PARITY_BATCHES):
+        sd.process_batch(
+            spark.createDataFrame(_img_rows([(conv(i), t) for i, t in rows]), schema),
+            b,
+        )
+        assert sd.lsh.last_route[0] == route
+
+    sigs = wh.read("stream_signatures").collect()
+    by_batch = [
+        [(r["id"], list(r["sig"])) for r in sigs if r["batch_id"] == b]
+        for b in range(len(PARITY_BATCHES))
+    ]
+    want = _brute_stream_edges(by_batch, CFG.threshold)
+    edges = wh.read("stream_edges").collect()
+    for b in range(len(PARITY_BATCHES)):
+        got = [(r["src"], r["dst"]) for r in edges if r["batch_id"] == b]
+        assert len(got) == len(set(got)), b
+        assert set(got) == want[b], b
+    assert all(want)
+
+
+@pytest.mark.parametrize("route", ["broadcast_probe", "jvm"])
+def test_stream_edges_bucket_cap_counts_index_and_batch(spark, tmp_path, route):
+    """The batch's edges obey query's bucket cap, counted over the index
+    plus the batch: a text held by more rows than _QUERY_DROP_CAP yields no
+    edge, on either route."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    sd = StreamingDedup(spark, wh, CFG)
+    sd.lsh._QUERY_DROP_CAP = 2
+    if route == "jvm":
+        sd.lsh._BROADCAST_BYTES = -1
+    common = "the quick brown fox jumps over the lazy dog"
+    other = "columnar storage engines scan compressed pages fast"
+    sd.process_batch(
+        spark.createDataFrame(_img_rows([(1, common), (2, common)]), SCHEMA), 0
     )
-    sd.process_batch(b0, 0)
-    assert sd.lsh.last_route == ("broadcast", "fits broadcast")
-    got = {(r["src"], r["dst"]) for r in wh.read("stream_edges").collect()}
-    sigs = sd.lsh.signatures(b0, "image_id", "caption", phash_col="phash")
-    jvm = sd.lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False)
-    assert got == {(r["src"], r["dst"]) for r in jvm.collect()} and got
+    # batch 1: `common` is now held by 3 rows (2 in the index + 1 new),
+    # over the cap; `other` by 2, within it
+    sd.process_batch(
+        spark.createDataFrame(_img_rows([(3, common), (4, other), (5, other)]), SCHEMA),
+        1,
+    )
+    assert sd.lsh.last_route[0] == route
+    edges = {(r["batch_id"], r["src"], r["dst"]) for r in wh.read("stream_edges").collect()}
+    assert edges == {(0, 1, 2), (1, 4, 5)}

@@ -41,6 +41,7 @@ def main() -> None:
     from gaoya_spark.config import MinHashConfig, TokenizerSpec
     from gaoya_spark.operators.minhash_lsh import MinHashLSH
     from gaoya_spark.session import get_spark
+    from tools.bench_images import bench_images_path
 
     spark = get_spark("exp_r6_decomp", cores=CPUS)
     char34 = TokenizerSpec(kind="char", n_from=3, n_to=4, lowercase=True)
@@ -48,7 +49,7 @@ def main() -> None:
         df = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
         id_col, text_col, phash = "doc_id", "text", None
     else:
-        df = spark.read.parquet("/tmp/gaoya_bench_images_100000")
+        df = spark.read.parquet(bench_images_path(spark))
         id_col, text_col, phash = "image_id", "caption", "phash"
     df = df.repartition(CPUS * 2).cache()
     df.count()

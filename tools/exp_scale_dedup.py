@@ -37,11 +37,12 @@ from pyspark.sql import functions as F
 from gaoya_spark.config import MinHashConfig, TokenizerSpec
 from gaoya_spark.operators.minhash_lsh import MinHashLSH
 from gaoya_spark.session import get_spark
+from tools.bench_images import bench_images_path
 
 spark = get_spark("scale_dedup", cores=cpus)
 char34 = TokenizerSpec(kind="char", n_from=3, n_to=4, lowercase=True)
 images = (
-    spark.read.parquet({img_path!r})
+    spark.read.parquet(bench_images_path(spark, {n_images}))
     .repartition(cpus * 3)
     .cache()
 )
@@ -60,8 +61,7 @@ print("RESULT", time.time() - t0, n, flush=True)
 spark.stop()
 """.format(
     repo=REPO,
-    img_path="/tmp/gaoya_bench_images_"
-    + os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "100000"),
+    n_images=int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "100000")),
 )
 
 

@@ -15,10 +15,12 @@ import sys
 from contextlib import redirect_stdout
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+from tools.bench_images import bench_images_path  # noqa: E402
+
+# the gaoya_spark imports in main() resolve to PLANS_TREE when it is set
 if os.environ.get("PLANS_TREE"):
     sys.path.insert(0, os.environ["PLANS_TREE"])
-else:
-    sys.path.insert(0, REPO)
 
 TAG = sys.argv[1] if len(sys.argv) > 1 else "after"
 OUTDIR = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "plans", "r06")
@@ -45,7 +47,7 @@ def main() -> None:
 
     spark = get_spark("plans_r06", cores=4, shuffle_partitions=8)
     docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    images = spark.read.parquet("/tmp/gaoya_bench_images_100000")
+    images = spark.read.parquet(bench_images_path(spark))
 
     char34 = TokenizerSpec(kind="char", n_from=3, n_to=4, lowercase=True)
     word = TokenizerSpec(kind="word", n_from=1, n_to=1, lowercase=True)
