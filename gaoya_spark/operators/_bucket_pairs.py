@@ -13,12 +13,17 @@ the former sizes-groupBy + broadcast-tag + self-join + dropDuplicates plan
 at both local[8] and local[32]). Over-limit buckets are first collapsed by
 identical member set (boilerplate families repeat the same bucket in every
 band — one emission with multiplicity nb); distinct sets up to
-medium_bucket_limit then use the same array combinatorics, and only
-genuinely huge buckets are exploded back to rows and triangle-blocked via
-an equi-join, which spreads one bucket's pair generation across
-block_groups reducers. Buckets beyond drop_cap (the all-identical-key
+_MEDIUM_LIMIT then use the same array combinatorics, and only genuinely
+huge buckets are exploded back to rows and triangle-blocked via an
+equi-join, which spreads one bucket's pair generation across
+_BLOCK_GROUPS reducers. Buckets beyond drop_cap (the all-identical-key
 pathology at 10^12 scale) are excluded — callers record the count via
 their stats helpers (band_stats / gram_stats), never silently.
+
+The upper tiers' shape is this module's policy, not a caller's option:
+_MEDIUM_LIMIT and _BLOCK_GROUPS are read at call time, and the bucket
+arrays are always persisted. Callers choose only array_bucket_limit and
+drop_cap.
 
 The id surrogate ("sid") is made here and nowhere else: sid_col builds it
 from an id column, attach_ids puts the ids back on sid pairs. Integral ids
@@ -35,6 +40,15 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import IntegralType
 
 _BLOCK_SALT = 0x5A17
+
+# reducer groups a hot bucket's triangle (or bipartite) block join spreads
+# over: one bucket's pair generation runs in up to _BLOCK_GROUPS^2 blocks
+_BLOCK_GROUPS = 16
+
+# largest distinct member set (collapsed bucket) pair-generated in one row
+# by array combinatorics: C(1024, 2) structs ~ 8 MB, safely inside
+# executor task memory. Larger sets take the triangle block join.
+_MEDIUM_LIMIT = 1024
 
 
 def sid_col(df: DataFrame, id_col: str = "id") -> Column:
@@ -86,10 +100,10 @@ def is_materialized(df: DataFrame) -> bool:
         return False
 
 
-def triangle_block_pairs(sets: DataFrame, block_groups: int) -> DataFrame:
+def triangle_block_pairs(sets: DataFrame) -> DataFrame:
     """(src, dst, *rest) i<j pairs of every sorted member array `ids` in
     sets (sids, or structs led by the sid), where rest are sets' other
-    columns (e.g. nb), spread over block_groups x block_groups blocks so
+    columns (e.g. nb), spread over _BLOCK_GROUPS x _BLOCK_GROUPS blocks so
     no task pairs a whole huge bucket. Members explode to rows keyed by
     the set's 128-bit identity hb (two independently seeded xxhash64
     words: a collision would merge two sets and inflate m, breaking the
@@ -104,10 +118,10 @@ def triangle_block_pairs(sets: DataFrame, block_groups: int) -> DataFrame:
         ).alias("hb"),
         *rest, F.explode("ids").alias("sid"),
     )
-    g = F.pmod(F.xxhash64("sid", F.lit(_BLOCK_SALT)), F.lit(block_groups))
+    g = F.pmod(F.xxhash64("sid", F.lit(_BLOCK_SALT)), F.lit(_BLOCK_GROUPS))
     hot_g = hot.withColumn("g", g)
     left = hot_g.withColumn(
-        "g2", F.explode(F.sequence(F.col("g"), F.lit(block_groups - 1)))
+        "g2", F.explode(F.sequence(F.col("g"), F.lit(_BLOCK_GROUPS - 1)))
     ).select("hb", *rest, F.col("sid").alias("lid"), F.col("g").alias("g1"), "g2")
     right = hot_g.select("hb", F.col("sid").alias("rid"), F.col("g").alias("g2"))
     # left replicates upward (g2 >= own g), right stays at its own group:
@@ -146,9 +160,6 @@ def sid_cross_pairs_from_buckets(
     index_members: DataFrame,
     array_bucket_limit: int = 256,
     drop_cap: int = 100_000,
-    block_groups: int = 16,
-    persist: bool = True,
-    medium_bucket_limit: int = 1024,
 ) -> DataFrame:
     """(qid, id, m) probe-vs-index candidates from two (bk, sid) membership
     frames — the cross (bipartite) variant of sid_pairs_from_buckets for
@@ -174,9 +185,8 @@ def sid_cross_pairs_from_buckets(
             ).alias("is"),
         )
         .where((F.size("qs") >= 1) & F.size("is").between(1, drop_cap))
+        .persist()
     )
-    if persist:
-        buckets = buckets.persist()
     qs, is_ = F.col("qs"), F.col("is")
     cross = F.flatten(
         F.transform(
@@ -199,7 +209,7 @@ def sid_cross_pairs_from_buckets(
     ).select("p.qid", "p.id", "nb")
     # halved vs medium^2 so the worst-case per-row cross array matches the
     # symmetric variant's C(medium, 2) bound
-    med_cap = (medium_bucket_limit * medium_bucket_limit) // 2
+    med_cap = (_MEDIUM_LIMIT * _MEDIUM_LIMIT) // 2
     # upper tiers keep the identical-(probe-set, index-set) collapse — the
     # boilerplate family that forms the same bucket in every band is
     # exactly the hot case, and the collapse shuffle carries only
@@ -210,9 +220,8 @@ def sid_cross_pairs_from_buckets(
         buckets.where(cross_n > lim_sq)
         .groupBy("qs", "is")
         .agg(F.count("*").alias("nb"))
+        .persist()
     )
-    if persist:
-        collapsed = collapsed.persist()
     # medium tier: collapsed products small enough for single-row cross
     # generation — skips the block join's extra shuffles
     raw = raw.unionByName(
@@ -231,10 +240,10 @@ def sid_cross_pairs_from_buckets(
     left = hot.select(
         "hb", "nb", F.explode("qs").alias("qid")
     ).withColumn(
-        "g2", F.explode(F.sequence(F.lit(0), F.lit(block_groups - 1)))
+        "g2", F.explode(F.sequence(F.lit(0), F.lit(_BLOCK_GROUPS - 1)))
     )
     right = hot.select("hb", F.explode("is").alias("id")).withColumn(
-        "g2", F.pmod(F.xxhash64("id", F.lit(_BLOCK_SALT)), F.lit(block_groups))
+        "g2", F.pmod(F.xxhash64("id", F.lit(_BLOCK_SALT)), F.lit(_BLOCK_GROUPS))
     )
     pairs_hot = left.join(right, ["hb", "g2"]).select("qid", "id", "nb")
     raw = raw.unionByName(pairs_hot)
@@ -245,9 +254,6 @@ def sid_pairs_from_buckets(
     members: DataFrame,
     array_bucket_limit: int = 16,
     drop_cap: int = 100_000,
-    block_groups: int = 16,
-    persist: bool = True,
-    medium_bucket_limit: int = 1024,
 ) -> DataFrame:
     """(src, dst, m) candidate pairs from (bk, sid) membership rows.
 
@@ -256,31 +262,30 @@ def sid_pairs_from_buckets(
       - <= array_bucket_limit: direct JVM array pair-gen per bucket
         instance (no collapse — a collapse shuffle of EVERY bucket
         measured a net loss; per-bucket emission is bounded anyway).
-      - <= medium_bucket_limit: identical-member-set collapse (boilerplate
+      - <= _MEDIUM_LIMIT: identical-member-set collapse (boilerplate
         families form the same bucket in every band; one emission with
         multiplicity nb), then the SAME array pair-gen on the distinct
         sets — the collapse shuffle carries only over-limit buckets, and
         skipping the triangle join's two extra shuffles measured ~20%
         off the dense-corpus dedup stage. Worst-case per-row array:
         C(1024,2) structs ~ 8 MB, safely inside executor task memory.
-      - <= drop_cap: collapse + triangle blocking across block_groups
+      - <= drop_cap: collapse + triangle blocking across _BLOCK_GROUPS
         reducers — bounded per-task work for genuinely huge buckets.
       - > drop_cap: excluded; callers record the count via their stats
         helpers (band_stats / gram_stats), never silently.
     """
     # buckets over drop_cap are excluded from every tier, including the
-    # small one when drop_cap < array_bucket_limit
+    # small one when drop_cap < array_bucket_limit. buckets feed the small
+    # path and the upper tiers, so they are persisted. No explicit
+    # unpersist: once the returned frame is consumed and this reference
+    # is GC'd, Spark's ContextCleaner drops the blocks (and LRU eviction
+    # handles the interim).
     buckets = (
         members.groupBy("bk")
         .agg(F.array_sort(F.collect_list("sid")).alias("ids"))
         .where(F.size("ids").between(2, drop_cap))
+        .persist()
     )
-    if persist:
-        # buckets feed the small path and the upper tiers. No explicit
-        # unpersist: once the returned frame is consumed and this
-        # reference is GC'd, Spark's ContextCleaner drops the blocks (and
-        # LRU eviction handles the interim).
-        buckets = buckets.persist()
     raw = (
         buckets.where(F.size("ids") <= array_bucket_limit)
         .select(
@@ -292,24 +297,23 @@ def sid_pairs_from_buckets(
     # both upper tiers are always in the plan: pruning an empty one takes
     # a blocking stats job, which measured a net loss (EXPERIMENTS.md),
     # while an empty tier costs only a near-empty AQE stage. They share
-    # the identical-member-set collapse: m stays exact via sum(nb)
+    # the identical-member-set collapse (persisted: both read it), and m
+    # stays exact via sum(nb)
     collapsed = (
         buckets.where(F.size("ids") > array_bucket_limit)
         .groupBy("ids")
         .agg(F.count("*").alias("nb"))
+        .persist()
     )
-    if persist:
-        # both tiers read collapsed
-        collapsed = collapsed.persist()
     # medium tier: distinct sets small enough for single-row pair-gen
     raw = raw.unionByName(
-        collapsed.where(F.size("ids") <= medium_bucket_limit)
+        collapsed.where(F.size("ids") <= _MEDIUM_LIMIT)
         .select(
             "nb", F.explode(pairs_from_sorted_ids(F.col("ids"))).alias("p")
         )
         .select("p.src", "p.dst", "nb")
     )
-    raw = raw.unionByName(triangle_block_pairs(
-        collapsed.where(F.size("ids") > medium_bucket_limit), block_groups
-    ))
+    raw = raw.unionByName(
+        triangle_block_pairs(collapsed.where(F.size("ids") > _MEDIUM_LIMIT))
+    )
     return raw.groupBy("src", "dst").agg(F.sum("nb").alias("m"))

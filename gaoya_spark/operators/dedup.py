@@ -58,16 +58,7 @@ def minhash_dedup(
     # by size (numpy kernels for a broadcast-fit table, else the JVM
     # verify, whose m-band prefilter skips the signature join for
     # above-threshold-by-m-bound pairs)
-    pairs = lsh.dedup_pairs(sigs, keep_sim=False)
-    labels = connected_components(
-        pairs.select("src", "dst"), nodes=df.select(id_col)
-    )
-    if keep == "labels":
-        return labels
-    if keep == "first":
-        reps = labels.groupBy("component").agg(F.min("id").alias(id_col)).select(id_col)
-        return df.join(reps, id_col, "left_semi")
-    raise ValueError(f"keep must be pairs|labels|first, got {keep}")
+    return _labels_or_first(df, id_col, lsh.dedup_pairs(sigs, keep_sim=False), keep)
 
 
 def simhash_dedup(
@@ -80,6 +71,14 @@ def simhash_dedup(
     pairs = lsh.dedup_pairs(sigs)
     if keep == "pairs":
         return pairs
+    return _labels_or_first(df, id_col, pairs, keep)
+
+
+def _labels_or_first(df: DataFrame, id_col: str, pairs: DataFrame,
+                     keep: str) -> DataFrame:
+    """The keep='labels' | 'first' tail of the LSH dedups: (id, component)
+    labels of the pair graph over df's ids, or the surviving rows of df
+    (smallest id per component)."""
     labels = connected_components(
         pairs.select("src", "dst"), nodes=df.select(id_col)
     )

@@ -476,77 +476,40 @@ class MinHashLSH:
         )
 
     def sid_bands(self, sig_df: DataFrame) -> DataFrame:
-        """Public (sid, bk) banding table — the persisted-index form of
-        the reference's per-band hash maps (minhash_index.rs:316-328):
-        insert (W1) = append these 16-byte rows, query (Q1-Q2) = probe
-        them via query(..., index_bands=). A warehouse can maintain it
-        so that a probe over the broadcast bound groups its keys with
-        these rows instead of re-banding the corpus. A probe set that fits
-        one broadcast bands the index rows in its kernel instead, so on
-        that route the table only feeds query's bucket-cap count (see
-        query). StreamingDedup keeps no such table: its micro-batch probe
-        bands its index (signatures plus the batch) on either route.
-
-        The sid is sid_col's: an integral id is its own sid, so a table
-        written when every sid was xxhash64(id) must be rebuilt before
-        integral-id signatures probe it. Null-id rows have no band row."""
+        """(sid, bk): one 16-byte row per (signature row, band), the band
+        keys every route of dedup_pairs and query computes for itself
+        (_band_keys), next to sid_col's surrogate of the row's id. Null-id
+        rows have no band row."""
         return self._sid_bands_arrow(sig_df)
 
     def sid_candidates(
         self,
         sig_df: DataFrame,
         max_bucket_size: int = 16,
-        block_groups: int = 16,
         bucket_cap_hard: int = 100_000,
-        persist: bool = True,
-        medium_bucket_size: int = 1024,
     ) -> DataFrame:
         """(src, dst, m) candidate pairs in sid space, m = #matching bands
         (shared machinery: operators/_bucket_pairs.py), banded by the
-        vectorized Arrow kernel (_sid_bands_arrow). Buckets >
+        vectorized Arrow kernel (_sid_bands_arrow). Buckets over
+        max_bucket_size take the collapsed upper tiers; buckets >
         bucket_cap_hard are excluded — band_stats records hot/dropped
-        counts. medium_bucket_size bounds the collapse+array middle tier
-        (set equal to max_bucket_size to route everything hot through the
-        triangle block join)."""
+        counts."""
         return sid_pairs_from_buckets(
             self._sid_bands_arrow(sig_df),
             array_bucket_limit=max_bucket_size,
             drop_cap=bucket_cap_hard,
-            block_groups=block_groups,
-            persist=persist,
-            medium_bucket_limit=medium_bucket_size,
         )
 
     def candidate_pairs(
         self,
         sig_df: DataFrame,
         max_bucket_size: int = 16,
-        block_groups: int = 16,
         bucket_cap_hard: int = 100_000,
-        persist: bool = True,
     ) -> DataFrame:
         """All-corpus candidate pairs (src < dst by id value), deduped across
         bands — public id-space wrapper over sid_candidates."""
-        cand = self.sid_candidates(
-            sig_df, max_bucket_size, block_groups, bucket_cap_hard, persist
-        )
+        cand = self.sid_candidates(sig_df, max_bucket_size, bucket_cap_hard)
         return attach_ids(cand.select("src", "dst"), sig_df)
-
-    def verify_pairs(self, pairs: DataFrame, sig_df: DataFrame) -> DataFrame:
-        """(src, dst, sim): join signatures packed two-positions-per-long
-        (halves both the broadcast build and the verify kernel's element
-        count — measured 1.6x on the 59M-candidate workload), compute the
-        JVM-side fraction of equal positions (P14)."""
-        k = self.cfg.num_hashes
-        s = sig_df.select("id", pack_signature_col(F.col("sig"), k, self.cfg.hash_size).alias("psig"))
-        sa = s.select(F.col("id").alias("src"), F.col("psig").alias("pa"))
-        sb = s.select(F.col("id").alias("dst"), F.col("psig").alias("pb"))
-        return (
-            pairs.join(sa, "src")
-            .join(sb, "dst")
-            .withColumn("sim", minhash_similarity_packed("pa", "pb", k, self.cfg.hash_size))
-            .select("src", "dst", "sim")
-        )
 
     # byte budget for the numpy routes' broadcast signature matrix:
     # bytes-aware, not just rows — k varies 128..512 across configs, so a
@@ -622,12 +585,7 @@ class MinHashLSH:
         except (AttributeError, Py4JError):
             return None
 
-    def _build_sig_broadcast(
-        self,
-        sig_df: DataFrame,
-        max_rows: int,
-        persist: bool = False,
-    ):
+    def _build_sig_broadcast(self, sig_df: DataFrame, max_rows: int):
         """(broadcast, None) of (sids_sorted, signature matrix, ids_sorted)
         for the numpy kernels, or (None, reason) when a guard trips and the
         JVM shuffle verify runs instead:
@@ -645,12 +603,14 @@ class MinHashLSH:
         The row bound costs one bounded collect when the trusted estimate
         is within budget. Otherwise (no trusted estimate, or one between
         the budget and the slack) a row count runs first, so a table over
-        the bound ships nothing to the driver. persist=True caches a
-        sig_df that has no trusted estimate (computed signatures: costly
-        to compute again; a stored or cached table is cheap to read
-        again), after the estimate is read (a cache that is not yet
-        filled hides it) and before the first job, so the count or
-        collect fills the cache that the later readers of sig_df use.
+        the bound ships nothing to the driver. An uncached sig_df that has
+        no trusted estimate (computed signatures: costly to compute again;
+        a stored or cached table is cheap to read again) is cached after
+        the estimate is read (a cache that is not yet filled hides it) and
+        before the first job, so the count or collect fills the cache that
+        the JVM route, which reads sig_df again, uses. When the broadcast
+        is built that cache is dropped: the numpy routes read only the
+        broadcast.
 
         Null-id rows count against the row bound but are dropped from the
         payload: a null id names no document, so it joins no pair on any
@@ -675,7 +635,8 @@ class MinHashLSH:
         est = self._size_estimate(collected())
         if est is not None and est > self._ESTIMATE_SLACK * budget:
             return None, "over size estimate"
-        if persist and est is None:
+        cached = est is None and not is_materialized(sig_df)
+        if cached:
             sig_df.persist()
         sel = collected()
         # limit(bound+1) caps the driver transfer (at most bound+1 rows
@@ -708,16 +669,14 @@ class MinHashLSH:
         bc = sig_df.sparkSession.sparkContext.broadcast(
             (sids_sorted, mat, ids_sorted)
         )
+        if cached:
+            sig_df.unpersist()
         return bc, None
 
     # the bucket-tier keywords dedup_pairs accepts through **kw: the
-    # sid_candidates knobs. Both routes read bucket_cap_hard and persist;
-    # max_bucket_size, medium_bucket_size and block_groups shape only the
-    # JVM route's bucket tiers
-    _TIER_KW = frozenset({
-        "max_bucket_size", "medium_bucket_size", "bucket_cap_hard",
-        "block_groups", "persist",
-    })
+    # sid_candidates knobs. Both routes read bucket_cap_hard;
+    # max_bucket_size shapes only the JVM route's bucket tiers
+    _TIER_KW = frozenset({"max_bucket_size", "bucket_cap_hard"})
 
     # pairs one numpy kernel flush generates and verifies (the sharded
     # dedup and the broadcast probe): bounds the per-pair index, code and
@@ -747,17 +706,13 @@ class MinHashLSH:
         knobs only bucket_cap_hard applies: every bucket is verified in
         numpy, whatever its size.
 
-        Computed signatures are persisted before the first job of the
-        broadcast build (see _build_sig_broadcast), because the JVM route
-        reads sig_df again. The plan here reads only the broadcast, so the
-        cache is dropped as soon as the table fits."""
-        may_cache = kw.get("persist", True) and not is_materialized(sig_df)
-        bc, why = self._build_sig_broadcast(sig_df, max_rows, persist=may_cache)
+        Computed signatures are cached for the JVM route while the
+        broadcast is built, and dropped once it fits (see
+        _build_sig_broadcast)."""
+        bc, why = self._build_sig_broadcast(sig_df, max_rows)
         if bc is None:
             self.last_route = ("jvm", why)
             return None
-        if may_cache and is_materialized(sig_df):
-            sig_df.unpersist()
         self.last_route = ("broadcast", "fits broadcast")
         b, r = self.cfg.num_bands, self.cfg.band_width
         spark = sig_df.sparkSession
@@ -826,11 +781,9 @@ class MinHashLSH:
         (the web-crawl case) a large share of true pairs clear the bound.
 
         **kw takes the bucket-tier knobs of sid_candidates
-        (max_bucket_size, medium_bucket_size, bucket_cap_hard,
-        block_groups, persist); any other keyword raises TypeError on
-        every route. Both routes drop buckets over bucket_cap_hard;
-        max_bucket_size, medium_bucket_size and block_groups are read only
-        by the JVM route."""
+        (max_bucket_size, bucket_cap_hard); any other keyword raises
+        TypeError on every route. Both routes drop buckets over
+        bucket_cap_hard; max_bucket_size is read only by the JVM route."""
         unknown = sorted(set(kw) - self._TIER_KW)
         if unknown:
             raise TypeError(f"dedup_pairs() got unexpected keyword arguments {unknown}")
@@ -845,7 +798,7 @@ class MinHashLSH:
             out = self._broadcast_dedup(sig_df, t, numpy_max_rows, kw)
             if out is not None:
                 return out
-        if kw.get("persist", True) and not is_materialized(sig_df):
+        if not is_materialized(sig_df):
             sig_df = sig_df.persist()
         cand = self.sid_candidates(sig_df, **kw)
         k = self.cfg.num_hashes
@@ -894,7 +847,6 @@ class MinHashLSH:
         strict: bool = False,
         keep_sim: bool = False,
         sorted_by_similarity: bool = False,
-        index_bands: DataFrame | None = None,
     ) -> DataFrame:
         """Q2/Q4: (qid, id[, sim]) matches above threshold.
 
@@ -914,20 +866,11 @@ class MinHashLSH:
         property (dropped by further transformations); use query_one /
         query_top_k for order-dependent logic.
 
-        index_bands: an optional PRECOMPUTED (sid, bk) banding table for
-        the index (from sid_bands(), e.g. warehouse-persisted and appended
-        on every insert); without it both routes band index_sigs
-        themselves. It must correspond exactly to index_sigs' current rows:
-        stale extra sids (a removed doc) are harmless on both routes, but
-        MISSING rows lose recall on the JVM route. On the JVM route the
-        index is not re-banded: the probe batch is banded and grouped with
-        these 16-byte rows directly. The broadcast probe instead bands each
-        index row in its kernel as it scans index_sigs (a table the JVM
-        route reads too, to attach signatures), so there index_bands only
-        feeds the bucket-cap count; a missing band row costs it no recall.
-        """
+        Both routes band index_sigs themselves, so the index is always
+        its current rows: an insert or removal is a change to index_sigs
+        and nothing else."""
         t = self.cfg.threshold if threshold is None else threshold
-        out = self._query_scored(index_sigs, probe_sigs, index_bands)
+        out = self._query_scored(index_sigs, probe_sigs)
         cond = F.col("sim") > t if strict else F.col("sim") >= t
         out = out.where(cond)
         cols = (
@@ -941,10 +884,7 @@ class MinHashLSH:
         return out
 
     def _query_scored(
-        self,
-        index_sigs: DataFrame,
-        probe_sigs: DataFrame,
-        index_bands: DataFrame | None = None,
+        self, index_sigs: DataFrame, probe_sigs: DataFrame
     ) -> DataFrame:
         """(qid, id, sim) for all probe-vs-index band candidates, routed by
         the probe side's size; serves query, query_one, query_top_k and
@@ -961,38 +901,28 @@ class MinHashLSH:
         again and drops the cache.
 
         Both routes exclude a band key whose index side holds more than
-        _QUERY_DROP_CAP band rows, counted over index_bands when given,
-        else over index_sigs' banding, and return the same matches while
-        index_bands keeps its contract (see query). One more input tells
-        them apart: an index holding one id twice with different
-        signatures. The JVM route scores every row of that id once any of
-        them shares a band with the probe, the broadcast route only the
-        rows that do.
+        _QUERY_DROP_CAP band rows, counted over index_sigs' banding, and
+        return the same matches. One input tells them apart: an index
+        holding one id twice with different signatures. The JVM route
+        scores every row of that id once any of them shares a band with
+        the probe, the broadcast route only the rows that do.
 
         The index may hold the probe rows too (StreamingDedup probes its
         signatures table plus the micro-batch with the micro-batch): each
         such probe row then matches itself, and its rows count toward the
         cap like any index row."""
-        may_cache = not is_materialized(probe_sigs)
         bc, why = self._build_sig_broadcast(
             probe_sigs,
             min(self._NUMPY_MAX_ROWS, self._PROBE_MAX_KEYS // self.cfg.num_bands),
-            persist=may_cache,
         )
         if bc is None:
             self.last_route = ("jvm", why)
-            return self._jvm_query_scored(index_sigs, probe_sigs, index_bands)
-        if may_cache and is_materialized(probe_sigs):
-            probe_sigs.unpersist()
+            return self._jvm_query_scored(index_sigs, probe_sigs)
         self.last_route = ("broadcast_probe", "fits broadcast")
-        return self._broadcast_query(index_sigs, probe_sigs, bc, index_bands)
+        return self._broadcast_query(index_sigs, probe_sigs, bc)
 
     def _broadcast_query(
-        self,
-        index_sigs: DataFrame,
-        probe_sigs: DataFrame,
-        bc,
-        index_bands: DataFrame | None,
+        self, index_sigs: DataFrame, probe_sigs: DataFrame, bc
     ) -> DataFrame:
         """The broadcast probe: one mapInPandas over the index's (id, sig)
         rows (_probe_match_fn) — no exchange, no join. The JVM route's
@@ -1009,11 +939,7 @@ class MinHashLSH:
         b, r = self.cfg.num_bands, self.cfg.band_width
         excluded = np.empty(0, np.int64)
         if len(bc.value[0]):
-            rows = (
-                index_bands.select("bk")
-                if index_bands is not None
-                else self._sid_bands_arrow(index_sigs).select("bk")
-            )
+            rows = self._sid_bands_arrow(index_sigs).select("bk")
             keys = index_sigs.sparkSession.createDataFrame(
                 pa.table({"bk": np.unique(_band_keys(bc.value[1], b, r))})
             )
@@ -1037,24 +963,15 @@ class MinHashLSH:
         )
 
     def _jvm_query_scored(
-        self,
-        index_sigs: DataFrame,
-        probe_sigs: DataFrame,
-        index_bands: DataFrame | None,
+        self, index_sigs: DataFrame, probe_sigs: DataFrame
     ) -> DataFrame:
         """The JVM bucket dataflow: the bipartite variant of the dedup
         candidate machinery (one side-tagged groupBy, cross pairs in sid
-        space, ids/signatures attached only to candidates). index_bands:
-        precomputed (sid, bk) index banding (see query); must use the same
-        band-key function, so pass sid_bands() output, never a
-        hand-rolled table."""
-        ib = (
-            index_bands.select("sid", "bk")
-            if index_bands is not None
-            else self._sid_bands_arrow(index_sigs)
-        )
+        space, ids/signatures attached only to candidates)."""
         cand = sid_cross_pairs_from_buckets(
-            self._sid_bands_arrow(probe_sigs), ib, drop_cap=self._QUERY_DROP_CAP
+            self._sid_bands_arrow(probe_sigs),
+            self._sid_bands_arrow(index_sigs),
+            drop_cap=self._QUERY_DROP_CAP,
         )
         k = self.cfg.num_hashes
         qs = probe_sigs.select(

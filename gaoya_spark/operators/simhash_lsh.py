@@ -65,6 +65,15 @@ def _to_i64(v: int) -> int:
 
 
 class SimHashLSH:
+    # largest bucket whose pairs dedup_pairs / candidate_pairs generate by
+    # JVM array combinatorics; larger buckets take the triangle block join
+    _ARRAY_LIMIT = 512
+
+    # largest bucket dedup_pairs / candidate_pairs pair at all: larger
+    # ones (the all-empty-caption pathology at web scale) are excluded,
+    # and bucket_stats(max_bucket_size=BUCKET_CAP) counts them
+    BUCKET_CAP = 4096
+
     def __init__(self, cfg: SimHashConfig | None = None):
         self.cfg = cfg or SimHashConfig()
         self.masks = _block_masks(cfg.nbits if cfg else 64,
@@ -157,23 +166,17 @@ class SimHashLSH:
         )
 
     def _sid_dist_pairs(
-        self,
-        sig_df: DataFrame,
-        max_bucket_size: int = 4096,
-        array_bucket_limit: int = 512,
-        block_groups: int = 16,
-        max_distance: int | None = None,
-        persist: bool = True,
+        self, sig_df: DataFrame, max_distance: int | None = None
     ) -> DataFrame:
         """(src, dst, dist) in sid space, deduped across tables. The 8-byte
         signature rides inside the bucket arrays, so the Hamming distance is
         computed map-side during pair generation and (when max_distance is
         given) candidates are filtered BEFORE the dedup shuffle — the only
-        wide exchange carries surviving pairs. Buckets <= array_bucket_limit
-        expand via JVM array combinatorics; (array_bucket_limit,
-        max_bucket_size] fall back to the triangle-block join; larger
-        buckets (the all-empty-caption pathology at web scale) are excluded
-        — bucket_stats(max_bucket_size=...) records how many."""
+        wide exchange carries surviving pairs. Buckets <= _ARRAY_LIMIT
+        expand via JVM array combinatorics; (_ARRAY_LIMIT, BUCKET_CAP]
+        fall back to the triangle-block join; larger buckets (the
+        all-empty-caption pathology at web scale) are excluded —
+        bucket_stats(max_bucket_size=BUCKET_CAP) records how many."""
         buckets = (
             self._sid_tables(sig_df)
             .groupBy("tk")
@@ -184,22 +187,20 @@ class SimHashLSH:
             # needed here: the output is a distinct pair set, not a count)
             .select("ms")
             .distinct()
+            .persist()
         )
-        if persist:
-            buckets = buckets.persist()
         # members are (sid, sig) structs, sid first: both tiers emit them
         # as (src, dst) in sid order, and the distance is taken after
-        raw = buckets.where(F.size("ms") <= array_bucket_limit).select(
+        raw = buckets.where(F.size("ms") <= self._ARRAY_LIMIT).select(
             F.explode(pairs_from_sorted_ids(F.col("ms"))).alias("p")
         ).select("p.src", "p.dst")
         # the triangle tier is always in the plan, as in _bucket_pairs: an
         # empty AQE stage is cheaper than a blocking job that prunes it
         raw = raw.unionByName(triangle_block_pairs(
             buckets.where(
-                (F.size("ms") > array_bucket_limit)
-                & (F.size("ms") <= max_bucket_size)
-            ).select(F.col("ms").alias("ids")),
-            block_groups,
+                (F.size("ms") > self._ARRAY_LIMIT)
+                & (F.size("ms") <= self.BUCKET_CAP)
+            ).select(F.col("ms").alias("ids"))
         ))
         raw = raw.select(
             F.col("src.sid").alias("src"),
@@ -210,13 +211,10 @@ class SimHashLSH:
             raw = raw.where(F.col("dist") < max_distance)
         return raw.groupBy("src", "dst").agg(F.min("dist").alias("dist"))
 
-    def candidate_pairs(self, sig_df: DataFrame, max_bucket_size: int = 4096,
-                        persist: bool = True) -> DataFrame:
+    def candidate_pairs(self, sig_df: DataFrame) -> DataFrame:
         """(src, dst) ids co-bucketed in >=1 table, deduped — public
         id-space wrapper (no distance filter)."""
-        cand = self._sid_dist_pairs(
-            sig_df, max_bucket_size=max_bucket_size, persist=persist
-        )
+        cand = self._sid_dist_pairs(sig_df)
         return attach_ids(cand.select("src", "dst"), sig_df)
 
     def bucket_stats(
@@ -244,7 +242,7 @@ class SimHashLSH:
             .agg(*aggs)
         )
 
-    def dedup_pairs(self, sig_df: DataFrame, max_distance: int | None = None, **kw) -> DataFrame:
+    def dedup_pairs(self, sig_df: DataFrame, max_distance: int | None = None) -> DataFrame:
         """(src, dst, dist) pairs with hamming distance strictly below
         max_distance (Q8 strict '<'). The distance filter runs map-side
         inside pair generation — only true pairs reach a shuffle. Ids come
@@ -252,20 +250,16 @@ class SimHashLSH:
         scale the attach joins are candidate-set shuffles), two joins on
         the (sid, id) map otherwise."""
         d = self.cfg.max_distance if max_distance is None else max_distance
-        if kw.get("persist", True) and not is_materialized(sig_df):
+        if not is_materialized(sig_df):
             sig_df = sig_df.persist()
-        return attach_ids(self._sid_dist_pairs(sig_df, max_distance=d, **kw), sig_df)
+        return attach_ids(self._sid_dist_pairs(sig_df, max_distance=d), sig_df)
 
     # ----------------------------------------------------------------- query
     def sid_tables(self, sig_df: DataFrame) -> DataFrame:
-        """Public (sid, tk) table-key rows — the persisted-index artifact
-        (the reference's per-table HashMaps, sim_hash_index.rs): insert =
-        append these 16-byte rows, query = probe them via
-        query(..., index_tables=) so the standing index is never
-        re-keyed per probe batch (the SimHash counterpart of
-        MinHashLSH.sid_bands). An integral id is its own sid, so a table
-        written when every sid was xxhash64(id) must be rebuilt before
-        integral-id signatures probe it."""
+        """(sid, tk): one 16-byte row per (signature row, enumerated mask),
+        the table keys dedup_pairs and query compute for themselves, next
+        to sid_col's surrogate of the row's id (the SimHash counterpart of
+        MinHashLSH.sid_bands). Null-id rows have no table row."""
         return self._sid_tables(sig_df).select("sid", "tk")
 
     def query(
@@ -275,7 +269,6 @@ class SimHashLSH:
         max_distance: int | None = None,
         keep_distance: bool = False,
         sorted_by_distance: bool = False,
-        index_tables: DataFrame | None = None,
     ) -> DataFrame:
         """Q9: (qid, id[, dist]) with dist < max_distance (strict).
         Candidates come from the bipartite bucket machinery (side-tagged
@@ -287,21 +280,11 @@ class SimHashLSH:
         as a (qid, dist, id) orderBy — note a DataFrame's ordering is a
         presentation property (any further transformation may drop it), so
         downstream code should use query_top_k / query_one rather than
-        relying on row order.
-
-        index_tables: precomputed (sid, tk) rows from sid_tables() — the
-        maintained-index path; stale extra rows (removed docs) only
-        produce candidates that vanish in the signature join, but missing
-        rows lose recall (same contract as MinHash index_bands)."""
+        relying on row order."""
         d = self.cfg.max_distance if max_distance is None else max_distance
-        it = (
-            index_tables.select("sid", "tk")
-            if index_tables is not None
-            else self._sid_tables(index_sigs)
-        )
         cand = sid_cross_pairs_from_buckets(
             self._sid_tables(probe_sigs).select("sid", F.col("tk").alias("bk")),
-            it.select("sid", F.col("tk").alias("bk")),
+            self._sid_tables(index_sigs).select("sid", F.col("tk").alias("bk")),
         )
         qs = probe_sigs.select(
             sid_col(probe_sigs).alias("qid"),

@@ -44,6 +44,10 @@ from gaoya_spark.operators._bucket_pairs import (
     sid_pairs_from_buckets,
 )
 
+# largest gram bucket candidate_gram_pairs pairs per bucket instance by
+# array combinatorics; larger ones take _bucket_pairs' collapsed tiers
+_ARRAY_LIMIT = 512
+
 
 def longest_common_substring_len(a: str, b: str) -> int:
     """LCS length via suffix automaton of `a` streamed over `b` — O(|a|+|b|)."""
@@ -146,8 +150,7 @@ def _gram_fp128_sorted(text_col, min_len: int):
 
 def candidate_gram_pairs(
     df: DataFrame, id_col: str, text_col: str, min_len: int = 24,
-    max_gram_bucket: int = 10_000, array_bucket_limit: int = 512,
-    persist: bool = True,
+    max_gram_bucket: int = 10_000,
 ) -> DataFrame:
     """(src, dst) pairs sharing >=1 exact L-gram (by 128-bit gram
     fingerprint), deduped. Grams shared by more than max_gram_bucket docs
@@ -172,10 +175,7 @@ def candidate_gram_pairs(
     )
     members = gs.select("sid", F.explode(dedup).alias("bk"))
     cand = sid_pairs_from_buckets(
-        members,
-        array_bucket_limit=array_bucket_limit,
-        drop_cap=max_gram_bucket,
-        persist=persist,
+        members, array_bucket_limit=_ARRAY_LIMIT, drop_cap=max_gram_bucket
     )
     return attach_ids(cand.select("src", "dst"), df, id_col)
 

@@ -17,6 +17,10 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from gaoya_spark.operators._bucket_pairs import sid_col, sid_pairs_from_buckets
 
+# largest shingle bucket ngram_jaccard_pairs pairs per bucket instance by
+# array combinatorics; larger ones take _bucket_pairs' collapsed tiers
+_ARRAY_LIMIT = 256
+
 # HEURISTIC PLACEHOLDER, not a production language identifier: 4 languages
 # x 6 stopwords, chosen to be deterministic and expressible identically in
 # SQL so the operator's Spark plumbing (the part that matters at 100 TB)
@@ -199,10 +203,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.7,
     max_shingle_bucket: int = 50_000,
-    array_bucket_limit: int = 256,
-    medium_bucket_limit: int = 1024,
-    block_groups: int = 16,
-    persist: bool = True,
 ) -> DataFrame:
     """Exact char-n-gram jaccard dedup (src, dst, jaccard >= threshold).
 
@@ -214,7 +214,7 @@ def ngram_jaccard_pairs(
     That inherits the three size tiers (JVM array combinatorics for small
     buckets, identical-set collapse + array for medium, triangle block join
     for hot), so one stopword-gram shared by 40k docs is spread across
-    block_groups bounded reducers instead of expanding quadratically inside
+    bounded reducers instead of expanding quadratically inside
     a raw shingle self-join. Shingles shared by more than
     max_shingle_bucket docs are excluded from pairing entirely (recorded by
     ngram_shingle_stats, never silently); below that cap jaccard is exact.
@@ -226,19 +226,12 @@ def ngram_jaccard_pairs(
     counts — negligible at any real scale and impossible at oracle scale.
     Null-id docs are in no pair.
     """
-    docs = _ngram_shingle_docs(df, id_col, text_col, n)
-    if persist:
-        docs = docs.persist()
+    docs = _ngram_shingle_docs(df, id_col, text_col, n).persist()
     mem = docs.where(F.col("id").isNotNull()).select(
         F.explode("sh").alias("bk"), sid_col(docs).alias("sid")
     )
     pairs = sid_pairs_from_buckets(
-        mem,
-        array_bucket_limit=array_bucket_limit,
-        drop_cap=max_shingle_bucket,
-        block_groups=block_groups,
-        persist=persist,
-        medium_bucket_limit=medium_bucket_limit,
+        mem, array_bucket_limit=_ARRAY_LIMIT, drop_cap=max_shingle_bucket
     )
     m = docs.select(sid_col(docs).alias("sid"), "id", F.size("sh").alias("n_sh"))
     ma = m.select(

@@ -197,7 +197,7 @@ class DedupPipeline:
         )
         if sh is not None and sh_sigs is not None:
             self.wh.write(
-                sh.bucket_stats(sh_sigs, max_bucket_size=4096),
+                sh.bucket_stats(sh_sigs, max_bucket_size=sh.BUCKET_CAP),
                 "metrics_simhash_skew",
             )
 

@@ -26,6 +26,7 @@ import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 # DDL/DML templates used when an Iceberg runtime jar is on the classpath
@@ -137,8 +138,14 @@ class Warehouse:
             .parquet(self.table_path(name))
         )
 
-    def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.table_path(name))
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """The table's rows. With schema, the parquet files are read with
+        it instead of inferring one, which also reads a table that holds
+        no data file (an empty partitioned write leaves only _SUCCESS)."""
+        r = self.spark.read
+        if schema is not None:
+            r = r.schema(schema)
+        return r.parquet(self.table_path(name))
 
     def exists(self, name: str) -> bool:
         p = self.table_path(name)
@@ -246,20 +253,27 @@ class Warehouse:
         output DataFrame (always read from storage, so downstream stages cut
         lineage — the checkpoint IS the plan barrier). The manifest's row
         count is summed from the written files' parquet footers, so it
-        costs no Spark job."""
+        costs no Spark job. The manifest also records the built frame's
+        schema, and both the fresh and the resumed read use it, so a stage
+        that yielded no rows reads back as an empty table with its
+        columns."""
         import pyarrow.dataset as pads
 
         if not force and self.stage_done(stage) and self.exists(table):
-            return self.read(table)
+            schema = self._load_manifest()["stages"][stage].get("schema")
+            return self.read(
+                table, StructType.fromJson(schema) if schema else None
+            )
         t0 = time.time()
         df = build()
         self.write(df, table, partition_by=partition_by)
         rows = pads.dataset(self.table_path(table), format="parquet").count_rows()
-        out = self.read(table)
+        out = self.read(table, df.schema)
         wall = time.time() - t0
         self.mark_stage(
             stage,
             table=table,
+            schema=df.schema.jsonValue(),
             rows=rows,
             wall_sec=round(wall, 3),
             rows_per_sec=round(rows / wall, 1) if wall > 0 else None,

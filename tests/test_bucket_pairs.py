@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gaoya_spark.config import MinHashConfig, SimHashConfig, TokenizerSpec
+from gaoya_spark.operators import _bucket_pairs
 from gaoya_spark.operators._bucket_pairs import (
     sid_cross_pairs_from_buckets,
     sid_pairs_from_buckets,
@@ -36,11 +37,14 @@ def _expected(members, drop_cap):
     return dict(m)
 
 
-# medium_bucket_limit routes the size-20/30 buckets into all three tiers:
-# 1024 -> medium (collapse + array), 12 -> mixed, 8 -> triangle-only
+# _MEDIUM_LIMIT, pinned to `medium`, routes the size-20/30 buckets into
+# all three tiers: 1024 -> medium (collapse + array), 12 -> mixed, 8 ->
+# triangle-only; _BLOCK_GROUPS is pinned to 4 blocks
 @pytest.mark.parametrize("seed", [0, 1, 2])
 @pytest.mark.parametrize("medium", [8, 12, 1024])
-def test_sid_pairs_match_naive_enumeration(spark, seed, medium):
+def test_sid_pairs_match_naive_enumeration(spark, seed, medium, monkeypatch):
+    monkeypatch.setattr(_bucket_pairs, "_BLOCK_GROUPS", 4)
+    monkeypatch.setattr(_bucket_pairs, "_MEDIUM_LIMIT", medium)
     rng = np.random.default_rng(seed)
     n_buckets, n_sids = 30, 40
     members = set()
@@ -58,22 +62,22 @@ def test_sid_pairs_match_naive_enumeration(spark, seed, medium):
     got = {
         (r["src"], r["dst"]): r["m"]
         for r in sid_pairs_from_buckets(
-            df, array_bucket_limit=8, drop_cap=25, block_groups=4,
-            medium_bucket_limit=medium,
+            df, array_bucket_limit=8, drop_cap=25
         ).collect()
     }
     assert got == _expected(members, drop_cap=25)
 
 
-def test_sid_pairs_drop_cap_below_array_limit(spark):
+def test_sid_pairs_drop_cap_below_array_limit(spark, monkeypatch):
     """drop_cap binds in every tier: with drop_cap under
     array_bucket_limit, a bucket between the two is excluded too."""
+    monkeypatch.setattr(_bucket_pairs, "_BLOCK_GROUPS", 4)
     members = sorted({(0, s) for s in range(6)} | {(1, 0), (1, 1)})
     df = spark.createDataFrame(members, "bk long, sid long")
     got = {
         (r["src"], r["dst"]): r["m"]
         for r in sid_pairs_from_buckets(
-            df, array_bucket_limit=8, drop_cap=4, block_groups=4
+            df, array_bucket_limit=8, drop_cap=4
         ).collect()
     }
     assert got == _expected(members, drop_cap=4) == {(0, 1): 1}
@@ -98,11 +102,14 @@ def _expected_cross(probes, index, drop_cap):
 
 @pytest.mark.parametrize("seed", [0, 1])
 @pytest.mark.parametrize("medium", [4, 1024])
-def test_sid_cross_pairs_match_naive_enumeration(spark, seed, medium):
+def test_sid_cross_pairs_match_naive_enumeration(spark, seed, medium, monkeypatch):
     """Bipartite variant across all three tiers (small product, collapsed
-    medium, block-joined hot) + the index-side drop cap, which binds in
-    every tier: an over-cap bucket whose product fits the small tier is
+    medium, block-joined hot; _MEDIUM_LIMIT pinned to `medium`,
+    _BLOCK_GROUPS to 4) + the index-side drop cap, which binds in every
+    tier: an over-cap bucket whose product fits the small tier is
     excluded too."""
+    monkeypatch.setattr(_bucket_pairs, "_BLOCK_GROUPS", 4)
+    monkeypatch.setattr(_bucket_pairs, "_MEDIUM_LIMIT", medium)
     rng = np.random.default_rng(seed)
     probes, index = set(), set()
     for bk in range(20):
@@ -127,8 +134,7 @@ def test_sid_cross_pairs_match_naive_enumeration(spark, seed, medium):
     got = {
         (r["qid"], r["id"]): r["m"]
         for r in sid_cross_pairs_from_buckets(
-            pdf, idf, array_bucket_limit=4, drop_cap=15, block_groups=4,
-            medium_bucket_limit=medium,
+            pdf, idf, array_bucket_limit=4, drop_cap=15
         ).collect()
     }
     assert got == _expected_cross(probes, index, drop_cap=15)

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from gaoya_spark.config import MinHashConfig, TokenizerSpec
 from gaoya_spark.fixtures import corpus5_df, token_vectors_pdf
+from gaoya_spark.operators import _bucket_pairs
 from gaoya_spark.operators._bucket_pairs import sid_col, sid_pairs_from_buckets
 from gaoya_spark.operators.minhash_lsh import MinHashLSH
 from gaoya_spark.params import calculate_b_and_r
@@ -23,17 +24,17 @@ def corpus5(spark):
 
 
 # Every dedup_pairs(keep_sim=False) route as (options, route name). Options
-# are dedup_pairs keywords; a leading "_" names a MinHashLSH class constant
-# pinned for the call. In order: the forced JVM shuffle verify, the
-# band-sharded broadcast kernel (the size-routed default at test sizes),
-# the same kernel flushing after every bucket member's pairs, the forced
-# JVM route with its medium and triangle tiers forced, and the guarded JVM
-# fallback (the row bound trips).
+# are dedup_pairs keywords; a leading "_" names a constant pinned for the
+# call, of MinHashLSH or else of _bucket_pairs. In order: the forced JVM
+# shuffle verify, the band-sharded broadcast kernel (the size-routed
+# default at test sizes), the same kernel flushing after every bucket
+# member's pairs, the forced JVM route with its medium and triangle tiers
+# forced, and the guarded JVM fallback (the row bound trips).
 ROUTES = [
     ({"numpy_verify": False}, "jvm"),
     ({}, "broadcast"),
     ({"_FLUSH_PAIRS": 1}, "broadcast"),
-    ({"numpy_verify": False, "max_bucket_size": 2, "medium_bucket_size": 3}, "jvm"),
+    ({"numpy_verify": False, "max_bucket_size": 2, "_MEDIUM_LIMIT": 3}, "jvm"),
     ({"numpy_max_rows": 1}, "jvm"),
 ]
 
@@ -50,7 +51,8 @@ def _dedup(lsh, sigs, opts, monkeypatch, **kw):
     opts = dict(opts, **kw)
     with monkeypatch.context() as mp:
         for name in [o for o in opts if o.startswith("_")]:
-            mp.setattr(MinHashLSH, name, opts.pop(name))
+            owner = MinHashLSH if hasattr(MinHashLSH, name) else _bucket_pairs
+            mp.setattr(owner, name, opts.pop(name))
         return lsh.dedup_pairs(sigs, keep_sim=False, **opts)
 
 
@@ -195,7 +197,9 @@ def test_dedup_pairs_rejects_unknown_keywords(spark, corpus5, strategy, monkeypa
     lsh, sigs = corpus5
     opts, _ = strategy
     for bad in ({"max_bucket_sise": 8}, {"raw_candidates": True},
-                {"sketch_prefilter": True}, {"gate": True}):
+                {"sketch_prefilter": True}, {"gate": True},
+                {"block_groups": 4}, {"medium_bucket_size": 64},
+                {"persist": False}):
         with pytest.raises(TypeError, match=next(iter(bad))):
             _dedup(lsh, sigs, opts, monkeypatch, **bad)
         with pytest.raises(TypeError, match=next(iter(bad))):
@@ -330,15 +334,18 @@ def test_band_stats_shape(spark, corpus5):
     assert all(r["max_bucket"] <= 5 for r in stats)
 
 
-def test_hot_bucket_blocking_exact(spark):
+def test_hot_bucket_blocking_exact(spark, monkeypatch):
     """Triangle blocking must produce exactly the same pair set as the
-    naive self-join when a bucket exceeds max_bucket_size."""
+    naive self-join when a bucket exceeds max_bucket_size (and, pinned
+    here, _bucket_pairs' medium limit)."""
+    monkeypatch.setattr(_bucket_pairs, "_MEDIUM_LIMIT", 8)
+    monkeypatch.setattr(_bucket_pairs, "_BLOCK_GROUPS", 4)
     cfg = MinHashConfig(num_bands=4, band_width=2, threshold=0.0, tokenizer=WORD)
     lsh = MinHashLSH(cfg)
     # 40 identical docs -> every band bucket has 40 members
     df = spark.createDataFrame([(i, "same text here") for i in range(40)], "id long, text string")
     sigs = lsh.signatures(df, "id", "text")
-    pairs_blocked = lsh.candidate_pairs(sigs, max_bucket_size=8, block_groups=4)
+    pairs_blocked = lsh.candidate_pairs(sigs, max_bucket_size=8)
     got = {(r["src"], r["dst"]) for r in pairs_blocked.collect()}
     expected = {(a, b) for a in range(40) for b in range(40) if a < b}
     assert got == expected
@@ -542,30 +549,6 @@ def test_dedup_strategies_empty_and_singleton(spark, strategy, monkeypatch):
         assert dict(out.dtypes)["src"] == "string"
 
 
-def test_query_with_precomputed_index_bands(spark, corpus5):
-    """query(index_bands=sid_bands(index)) — the maintained-band-table
-    path (the reference's insert-updates-tables / query-probes-tables
-    contract) — must return exactly the re-banding path's matches, and
-    stale EXTRA band rows (a removed doc) must be harmless: their
-    candidates find no signature in the verify join."""
-    lsh, sigs = corpus5
-    bands = lsh.sid_bands(sigs)
-    base = {(r["qid"], r["id"]) for r in lsh.query(sigs, sigs).collect()}
-    with_tbl = {
-        (r["qid"], r["id"])
-        for r in lsh.query(sigs, sigs, index_bands=bands).collect()
-    }
-    assert with_tbl == base and base
-    # removal: drop doc 0's signatures but leave its band rows stale
-    kept = sigs.where("id <> 0")
-    after_rm = {
-        (r["qid"], r["id"])
-        for r in lsh.query(kept, kept, index_bands=bands).collect()
-    }
-    want_rm = {(q, i) for q, i in base if q != 0 and i != 0}
-    assert after_rm == want_rm
-
-
 # texts of the query route tests: an exact pair, a near-dup of it, a
 # near-dup pair on another topic and a singleton
 QUERY_TEXTS = [
@@ -591,13 +574,6 @@ def _probe_of(sigs):
     return sigs.orderBy("id").limit(3)
 
 
-def _stale_bands(lsh, sigs):
-    """Probe an index without its first doc through band rows that still
-    hold that doc (a removal)."""
-    kept = sigs.where(F.col("id") != QUERY_IDS[0])
-    return lsh.query(kept, sigs, keep_sim=True, index_bands=lsh.sid_bands(sigs))
-
-
 def _query_keep_sim(lsh, sigs):
     return lsh.query(sigs, _probe_of(sigs), keep_sim=True)
 
@@ -615,7 +591,6 @@ QUERY_CASES = {
     "null_ids": ("long", WITH_NULL, lambda lsh, s: lsh.query(s, s, keep_sim=True), FITS),
     "empty_probe": ("long", None, lambda lsh, s: lsh.query(s, s.limit(0), keep_sim=True), FITS),
     "empty_index": ("long", None, lambda lsh, s: lsh.query(s.limit(0), s, keep_sim=True), FITS),
-    "stale_bands": ("long", None, _stale_bands, FITS),
     "query_one": ("long", None, lambda lsh, s: lsh.query_one(s, _probe_of(s)), FITS),
     "query_top_k": ("long", None, lambda lsh, s: lsh.query_top_k(s, _probe_of(s), 2), FITS),
     "query_by_id": ("string", None, lambda lsh, s: lsh.query_by_id(
@@ -636,8 +611,8 @@ def test_query_routes_identical(spark, case, monkeypatch):
     (ids in their input types, sim doubles bit-equal) on the broadcast
     probe and on the JVM bucket dataflow, forced by a negative broadcast
     budget that fits no table. Covers int, long, string and null ids, an
-    empty probe and index, stale extra index_bands rows, and a duplicated
-    probe id, which falls back to the JVM route."""
+    empty probe and index, and a duplicated probe id, which falls back to
+    the JVM route."""
     dtype, rows, run, route = QUERY_CASES[case]
     lsh = MinHashLSH(
         MinHashConfig(num_bands=42, band_width=3, threshold=0.5, tokenizer=WORD)

@@ -8,9 +8,17 @@ import pytest
 from gaoya_spark import hashing
 from gaoya_spark.config import SimHashConfig, TokenizerSpec
 from gaoya_spark.fixtures import perturbed_docs_pdf
+from gaoya_spark.operators import _bucket_pairs
 from gaoya_spark.operators.simhash_lsh import SimHashLSH, _block_masks
 
 WORD = TokenizerSpec(kind="word", n_from=1, n_to=1, lowercase=True)
+
+
+def _pin_triangle_tier(monkeypatch):
+    """Send every SimHash bucket over 2 members to the triangle block
+    join, spread over 3 block groups."""
+    monkeypatch.setattr(SimHashLSH, "_ARRAY_LIMIT", 2)
+    monkeypatch.setattr(_bucket_pairs, "_BLOCK_GROUPS", 3)
 
 
 def test_block_masks_cover_all_bits():
@@ -70,10 +78,10 @@ def test_dedup_pairs_symmetric_and_canonical(spark, perturbed):
     assert len(pairs) > 0
 
 
-def test_candidate_recall_within_ball_is_total(spark):
+def test_candidate_recall_within_ball_is_total(spark, monkeypatch):
     """Pigeonhole guarantee: every pair within hamming distance d shares at
     least one of the C(q, q-d) block masks — candidate recall 1.0, also
-    when array_bucket_limit=2 sends the buckets to the triangle block
+    when an array limit of 2 sends the buckets to the triangle block
     join."""
     cfg = SimHashConfig(nbits=64, num_blocks=6, max_distance=3)
     lsh = SimHashLSH(cfg)
@@ -98,7 +106,8 @@ def test_candidate_recall_within_ball_is_total(spark):
         if d < 3:
             want.add((min(i, j), max(i, j)))
     assert got == want
-    tri = lsh.dedup_pairs(sigs, array_bucket_limit=2, block_groups=3)
+    _pin_triangle_tier(monkeypatch)
+    tri = lsh.dedup_pairs(sigs)
     assert {(r["src"], r["dst"]) for r in tri.collect()} == want
 
 
@@ -149,7 +158,7 @@ def _u128_to_words(v: int) -> list[int]:
     return [lo, hi]
 
 
-def test_u128_brute_force_parity(spark):
+def test_u128_brute_force_parity(spark, monkeypatch):
     """128-bit SimHash (the reference's own benchmark config family:
     lsh_bench.rs:73-110 — u128, 12 blocks, d=9): the banded index returns
     exactly the brute-force Hamming-ball pair set, through the array
@@ -175,7 +184,8 @@ def test_u128_brute_force_parity(spark):
         if d < 9:
             want.add((min(i, j), max(i, j), d))
     assert got == want
-    tri = lsh.dedup_pairs(sigs, array_bucket_limit=2, block_groups=3)
+    _pin_triangle_tier(monkeypatch)
+    tri = lsh.dedup_pairs(sigs)
     assert {(r["src"], r["dst"], r["dist"]) for r in tri.collect()} == want
 
 
@@ -256,31 +266,10 @@ def test_hamming_angle_col(spark):
     assert got[1]["ang"] == 0.0
 
 
-def test_query_with_precomputed_index_tables(spark):
-    """query(index_tables=sid_tables(index)) — the maintained-table path —
-    must equal the re-keying path exactly, and stale rows from removed
-    docs must be harmless."""
-    from gaoya_spark.config import SimHashConfig, TokenizerSpec
-    from gaoya_spark.fixtures import corpus5_df
-    from gaoya_spark.operators.simhash_lsh import SimHashLSH
-
-    cfg = SimHashConfig(
-        nbits=64, num_blocks=8, max_distance=6,
-        tokenizer=TokenizerSpec(kind="word", n_from=1, n_to=1, lowercase=True),
-    )
-    lsh = SimHashLSH(cfg)
-    sigs = lsh.signatures(corpus5_df(spark), "id", "text").cache()
-    sigs.count()
-    tables = lsh.sid_tables(sigs)
-    base = {(r["qid"], r["id"]) for r in lsh.query(sigs, sigs).collect()}
-    with_tbl = {
-        (r["qid"], r["id"])
-        for r in lsh.query(sigs, sigs, index_tables=tables).collect()
-    }
-    assert with_tbl == base and base
-    kept = sigs.where("id <> 0")
-    after_rm = {
-        (r["qid"], r["id"])
-        for r in lsh.query(kept, kept, index_tables=tables).collect()
-    }
-    assert after_rm == {(q, i) for q, i in base if q != 0 and i != 0}
+def test_dedup_pairs_rejects_tier_keywords(spark):
+    """The bucket tiers are fixed policy: a former tier keyword is an
+    unexpected argument, not silently ignored."""
+    lsh = SimHashLSH(SimHashConfig(nbits=64, num_blocks=6, max_distance=3))
+    sigs = spark.createDataFrame([(0, 1), (1, 3)], "id long, sig long")
+    with pytest.raises(TypeError, match="block_groups"):
+        lsh.dedup_pairs(sigs, block_groups=3)

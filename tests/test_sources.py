@@ -47,19 +47,34 @@ def test_warehouse_roundtrip_and_manifest(spark, tmp_path):
 def test_run_stage_manifest_rows_match_count(spark, tmp_path):
     """run_stage records the row count from the written files' parquet
     footers: it must equal count() of the table read back, unpartitioned,
-    partitioned and empty."""
+    partitioned and empty. An empty partitioned stage writes no data
+    file, so its table reads back through the schema the manifest
+    records, both when run and when resumed."""
     wh = Warehouse(spark, str(tmp_path / "w"))
     df = spark.range(37).selectExpr("id", "id % 5 AS part")
     cases = {
         "flat": (df, None),
         "parted": (df, ["part"]),
         "empty": (df.where("id < 0"), None),
+        "empty_parted": (df.where("id < 0"), ["part"]),
     }
+    columns = {}
     for name, (d, part) in cases.items():
         out = wh.run_stage(name, name, lambda d=d: d, partition_by=part)
         assert wh.manifest()["stages"][name]["rows"] == out.count(), name
+        assert sorted(out.columns) == ["id", "part"], name
+        columns[name] = out.columns
     assert wh.manifest()["stages"]["parted"]["rows"] == 37
     assert wh.manifest()["stages"]["empty"]["rows"] == 0
+    assert wh.manifest()["stages"]["empty_parted"]["rows"] == 0
+
+    def boom():
+        raise AssertionError("stage rebuilt despite manifest")
+
+    for name, (_, part) in cases.items():
+        resumed = wh.run_stage(name, name, boom, partition_by=part)
+        assert resumed.count() == wh.manifest()["stages"][name]["rows"], name
+        assert resumed.columns == columns[name], name
 
 
 def test_iceberg_templates_render_and_gate(spark, tmp_path):

@@ -82,13 +82,18 @@ def test_ngram_jaccard_pairs_on_documents(spark, docs):
     assert pairs.count() < 200
 
 
-def test_ngram_jaccard_hot_shingle_tiers(spark):
+def test_ngram_jaccard_hot_shingle_tiers(spark, monkeypatch):
     """A shingle shared by thousands of docs must flow through the tiered
     bucket machinery (triangle block join), not a raw self-join — and the
     jaccard VALUES for true near-dup pairs that also share the hot shingle
     must stay exact (the old self-join undercounted `inter` whenever a hot
     shingle was dropped). Tier limits are shrunk so the 3k-member bucket
     exercises the triangle tier at test scale."""
+    from gaoya_spark.operators import _bucket_pairs, text
+
+    monkeypatch.setattr(text, "_ARRAY_LIMIT", 16)
+    monkeypatch.setattr(_bucket_pairs, "_MEDIUM_LIMIT", 64)
+    monkeypatch.setattr(_bucket_pairs, "_BLOCK_GROUPS", 4)
     base = "qwertyuiopasdfghjklzxcvbnm"  # shared hot prefix -> hot shingles
     rows = [(i, base + f"#{i:06d}") for i in range(3000)]
     # two planted near-dup pairs that ALSO contain the hot prefix
@@ -98,9 +103,7 @@ def test_ngram_jaccard_hot_shingle_tiers(spark):
     got = {
         (r["src"], r["dst"]): r["jaccard"]
         for r in ngram_jaccard_pairs(
-            df, "id", "text", n=3, threshold=0.5,
-            array_bucket_limit=16, medium_bucket_limit=64, block_groups=4,
-            max_shingle_bucket=50_000,
+            df, "id", "text", n=3, threshold=0.5, max_shingle_bucket=50_000,
         ).collect()
     }
 
