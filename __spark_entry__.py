@@ -175,7 +175,8 @@ def _q_minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The m-band prefilter dedup path (dedup_pairs(keep_sim=False,
     numpy_verify=False) — the JVM route; by default a table this small
     would take the numpy kernels): a pair matching m bands has >= m*r
-    equal positions, so m >= ceil(t*k/r) skips the exact verify. The
+    equal positions, so a candidate with m >= ceil(t*k/r) passes without
+    its equal count being computed (it still joins its signatures). The
     oracle computes the fully-verified pair set — the two must be
     identical."""
     lsh = MinHashLSH(ORACLE_MINHASH)

@@ -76,6 +76,23 @@ def _batch_tokens(texts: pd.Series, cfg, phash: pd.Series | None):
     return hashes, counts
 
 
+def _token_array_hashes(token_arrays: pd.Series):
+    """(splitmix64 hashes of every row's integer tokens, flat; per-row
+    token counts) of an array<long> column batch; a null array counts as
+    no tokens."""
+    counts = np.fromiter(
+        (0 if v is None else len(v) for v in token_arrays),
+        dtype=np.int64,
+        count=len(token_arrays),
+    )
+    if not counts.sum():
+        return np.empty(0, dtype=np.uint64), counts
+    flat = np.concatenate(
+        [np.asarray(v, dtype=np.int64) for v in token_arrays if v is not None and len(v)]
+    )
+    return hashing.splitmix64(flat), counts
+
+
 def _signature_kernel(cfg: MinHashConfig):
     """Returns (hashes, counts) -> signature matrix for the configured
     scheme (affine reference formula or SuperMinHash)."""
@@ -137,18 +154,7 @@ def make_minhash_tokens_udf(cfg: MinHashConfig):
     @F.pandas_udf(ArrayType(elem, containsNull=False))
     def minhash_tokens_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for token_arrays in it:
-            counts = np.fromiter(
-                (0 if v is None else len(v) for v in token_arrays),
-                dtype=np.int64,
-                count=len(token_arrays),
-            )
-            if counts.sum():
-                flat = np.concatenate(
-                    [np.asarray(v, dtype=np.int64) for v in token_arrays if v is not None and len(v)]
-                )
-                hashes = hashing.splitmix64(flat)
-            else:
-                hashes = np.empty(0, dtype=np.uint64)
+            hashes, counts = _token_array_hashes(token_arrays)
             sig = kernel(hashes, counts)
             if cfg.hash_size < 64:
                 sig = sig.astype(np.int32)
@@ -222,18 +228,7 @@ def make_simhash_tokens_udf(cfg: SimHashConfig):
     @F.pandas_udf(LongType())
     def simhash_tokens_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for token_arrays in it:
-            counts = np.fromiter(
-                (0 if v is None else len(v) for v in token_arrays),
-                dtype=np.int64,
-                count=len(token_arrays),
-            )
-            if counts.sum():
-                flat = np.concatenate(
-                    [np.asarray(v, dtype=np.int64) for v in token_arrays if v is not None and len(v)]
-                )
-                hashes = hashing.splitmix64(flat)
-            else:
-                hashes = np.empty(0, dtype=np.uint64)
+            hashes, counts = _token_array_hashes(token_arrays)
             yield pd.Series(
                 hashing.simhash_signatures(hashes, counts, cfg.nbits)
             )

@@ -268,15 +268,15 @@ def _sipround(v0, v1, v2, v3):
     return v0, v1, v2, v3
 
 
-def siphash24_batch(msgs: list[bytes], k0: int, k1: int) -> np.ndarray:
-    """SipHash-2-4 (64-bit) of each message, vectorized across the batch.
+def _sip_compress(msgs: list[bytes], k0: int, k1: int, v1_xor: int):
+    """SipHash-2-4 state (v0, v1, v2, v3) after compressing each message,
+    vectorized across the batch; v1_xor is XORed into v1 at init (0 for
+    the 64-bit variant, 0xee for the 128-bit one).
 
-    Classic SipHash per the Aumasson/Bernstein spec: little-endian 8-byte
-    words, zero-padded final block whose top byte is len % 256; 2
-    compression rounds per word, 4 finalization rounds. Messages are
-    processed word-index-major with an activity mask, so the per-word loop
-    runs max(len)//8+1 times regardless of batch size. Matches the
-    `siphasher` crate the reference uses (sim_hasher.rs:1,36-38)."""
+    Little-endian 8-byte words, zero-padded final block whose top byte is
+    len % 256; 2 compression rounds per word. Messages are processed
+    word-index-major with an activity mask, so the per-word loop runs
+    max(len)//8+1 times regardless of batch size."""
     n = len(msgs)
     lens = np.fromiter((len(m) for m in msgs), dtype=np.int64, count=n)
     n_words = lens // 8 + 1
@@ -291,7 +291,7 @@ def siphash24_batch(msgs: list[bytes], k0: int, k1: int) -> np.ndarray:
     k0_ = np.uint64(k0)
     k1_ = np.uint64(k1)
     v0 = np.full(n, 0x736F6D6570736575, dtype=np.uint64) ^ k0_
-    v1 = np.full(n, 0x646F72616E646F6D, dtype=np.uint64) ^ k1_
+    v1 = np.full(n, 0x646F72616E646F6D, dtype=np.uint64) ^ k1_ ^ np.uint64(v1_xor)
     v2 = np.full(n, 0x6C7967656E657261, dtype=np.uint64) ^ k0_
     v3 = np.full(n, 0x7465646279746573, dtype=np.uint64) ^ k1_
     for w in range(max_words):
@@ -304,6 +304,16 @@ def siphash24_batch(msgs: list[bytes], k0: int, k1: int) -> np.ndarray:
         v1 = np.where(active, t1, v1)
         v2 = np.where(active, t2, v2)
         v3 = np.where(active, t3, v3)
+    return v0, v1, v2, v3
+
+
+def siphash24_batch(msgs: list[bytes], k0: int, k1: int) -> np.ndarray:
+    """SipHash-2-4 (64-bit) of each message, vectorized across the batch.
+
+    Classic SipHash per the Aumasson/Bernstein spec (_sip_compress), then
+    4 finalization rounds. Matches the `siphasher` crate the reference
+    uses (sim_hasher.rs:1,36-38)."""
+    v0, v1, v2, v3 = _sip_compress(msgs, k0, k1, 0)
     v2 = v2 ^ np.uint64(0xFF)
     for _ in range(4):
         v0, v1, v2, v3 = _sipround(v0, v1, v2, v3)
@@ -321,32 +331,7 @@ def siphash24_128_batch(
     the first word, then XORs v1 with 0xdd and runs 4 more rounds for the
     second; `finish128().as_u128()` puts h1 in the low 64 bits. Verified
     against the official veorq/SipHash vectors_sip128 (test_hashing)."""
-    n = len(msgs)
-    lens = np.fromiter((len(m) for m in msgs), dtype=np.int64, count=n)
-    n_words = lens // 8 + 1
-    max_words = int(n_words.max()) if n else 0
-    buf = np.zeros((n, max_words * 8), dtype=np.uint8)
-    for i, m in enumerate(msgs):
-        buf[i, : len(m)] = np.frombuffer(m, dtype=np.uint8)
-        buf[i, n_words[i] * 8 - 1] = len(m) & 0xFF
-    words = buf.view("<u8").reshape(n, max_words).astype(np.uint64)
-
-    k0_ = np.uint64(k0)
-    k1_ = np.uint64(k1)
-    v0 = np.full(n, 0x736F6D6570736575, dtype=np.uint64) ^ k0_
-    v1 = np.full(n, 0x646F72616E646F6D, dtype=np.uint64) ^ k1_ ^ np.uint64(0xEE)
-    v2 = np.full(n, 0x6C7967656E657261, dtype=np.uint64) ^ k0_
-    v3 = np.full(n, 0x7465646279746573, dtype=np.uint64) ^ k1_
-    for w in range(max_words):
-        active = w < n_words
-        m = np.where(active, words[:, w], np.uint64(0))
-        t0, t1, t2, t3 = _sipround(v0, v1, v2, v3 ^ m)
-        t0, t1, t2, t3 = _sipround(t0, t1, t2, t3)
-        t0 = t0 ^ m
-        v0 = np.where(active, t0, v0)
-        v1 = np.where(active, t1, v1)
-        v2 = np.where(active, t2, v2)
-        v3 = np.where(active, t3, v3)
+    v0, v1, v2, v3 = _sip_compress(msgs, k0, k1, 0xEE)
     v2 = v2 ^ np.uint64(0xEE)
     for _ in range(4):
         v0, v1, v2, v3 = _sipround(v0, v1, v2, v3)

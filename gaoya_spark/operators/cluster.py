@@ -12,10 +12,10 @@ candidate graph, so connected components co-clusters it too (SURVEY.md
 Algorithm: labels start as own id; each iteration every node takes the min
 label over itself and its neighbors; stop at fixpoint. Iteration count is
 bounded by the graph diameter — near-dup graphs are unions of dense
-blobs, so a handful of iterations suffices; `checkpoint_every` breaks the
-lineage chain (localCheckpoint locally, warehouse parquet in the pipeline)
-to keep plans from growing unboundedly — which is also what makes a
-10^12-row run resumable mid-clustering.
+blobs, so a handful of iterations suffices; every iteration is
+checkpointed (localCheckpoint locally, warehouse parquet in the pipeline),
+which breaks the lineage chain so plans do not grow unboundedly — which is
+also what makes a 10^12-row run resumable mid-clustering.
 """
 
 from __future__ import annotations
@@ -82,7 +82,7 @@ def _driver_union_find(spark, edges_pdf, nodes: DataFrame | None, id_type: str) 
 
 
 def _two_phase_cc(raw: DataFrame, nodes: DataFrame | None, max_iter: int,
-                  checkpoint_fn, checkpoint_every: int):
+                  checkpoint_fn):
     """Alternating large-star / small-star connected components (Kiveris et
     al., "Connected Components in MapReduce and Beyond", SoCC'14) — the
     10^12-edge path for graphs whose diameter is NOT small: rounds are
@@ -143,7 +143,7 @@ def _two_phase_cc(raw: DataFrame, nodes: DataFrame | None, max_iter: int,
             .where(F.col("u") != F.col("v"))
             .dropDuplicates(["u", "v"])
         )
-        if checkpoint_fn is not None and (it + 1) % checkpoint_every == 0:
+        if checkpoint_fn is not None:
             ss = checkpoint_fn(ss, it)
         else:
             # non-eager: the checksum aggregate right below is the first
@@ -184,7 +184,6 @@ def connected_components(
     dst: str = "dst",
     nodes: DataFrame | None = None,
     max_iter: int = 50,
-    checkpoint_every: int = 1,
     checkpoint_fn=None,
     driver_threshold: int = 2_000_000,
     return_converged: bool = False,
@@ -194,8 +193,9 @@ def connected_components(
 
     edges: undirected pair list. nodes: optional (id) DataFrame of all nodes
     (so isolated nodes appear as singleton components). checkpoint_fn:
-    optional DataFrame -> DataFrame stage checkpointer (the pipeline passes
-    a warehouse writer; default localCheckpoint). return_converged=True
+    optional (DataFrame, iteration) -> DataFrame stage checkpointer, called
+    every iteration (the pipeline passes a warehouse writer; default
+    localCheckpoint). return_converged=True
     returns (labels, converged: bool) instead of just labels — the reliable
     programmatic convergence signal (a dynamic attribute on the DataFrame
     would be lost by any subsequent transformation); the driver union-find
@@ -230,9 +230,7 @@ def connected_components(
             return (out, True) if return_converged else out
 
     if algorithm == "twophase":
-        labels, converged = _two_phase_cc(
-            raw, nodes, max_iter, checkpoint_fn, checkpoint_every
-        )
+        labels, converged = _two_phase_cc(raw, nodes, max_iter, checkpoint_fn)
         return (labels, converged) if return_converged else labels
 
     # distributed label propagation: symmetrize once, persisted across
@@ -286,7 +284,7 @@ def connected_components(
                 (F.col("component") < F.col("old_component")).alias("changed"),
             )
         )
-        if checkpoint_fn is not None and (it + 1) % checkpoint_every == 0:
+        if checkpoint_fn is not None:
             new_labels = checkpoint_fn(new_labels, it)
         else:
             # non-eager: the convergence aggregate below is the first

@@ -52,13 +52,10 @@ def minhash_dedup(
     component)."""
     lsh = MinHashLSH(cfg or MinHashConfig())
     sigs = lsh.signatures(df, id_col, text_col, phash_col=phash_col)
+    pairs = lsh.dedup_pairs(sigs, keep_sim=(keep == "pairs"))
     if keep == "pairs":
-        return lsh.dedup_pairs(sigs)
-    # labels/first never read sim: keep_sim=False lets dedup_pairs route
-    # by size (numpy kernels for a broadcast-fit table, else the JVM
-    # verify, whose m-band prefilter skips the signature join for
-    # above-threshold-by-m-bound pairs)
-    return _labels_or_first(df, id_col, lsh.dedup_pairs(sigs, keep_sim=False), keep)
+        return pairs
+    return _labels_or_first(df, id_col, pairs, keep)
 
 
 def simhash_dedup(

@@ -124,24 +124,21 @@ def _band_keys(mat, b: int, r: int, band: int | None = None):
 
 
 def _attach_ids_fn(bc):
-    """mapInPandas kernel: (src, dst) sid pairs -> (src, dst) original-id
-    pairs in (least, greatest) order, via the broadcast's sid-sorted id
-    array. Python id comparison is code-point order, which equals Spark's
-    binary UTF8 ordering (UTF-8 is order-preserving), so least/greatest
-    agree with the JVM path."""
+    """mapInPandas kernel: (src, dst[, eq]) sid pairs -> (src, dst[, eq])
+    original-id pairs in (least, greatest) order, via the broadcast's
+    sid-sorted id array; an eq column passes through. Python id
+    comparison is code-point order, which equals Spark's binary UTF8
+    ordering (UTF-8 is order-preserving), so least/greatest agree with
+    the JVM path."""
     import numpy as np
-    import pandas as pd
 
     def fn(it):
         sids_b, _, ids_b = bc.value
         for b in it:
-            src = b["src"].to_numpy(dtype=np.int64)
-            dst = b["dst"].to_numpy(dtype=np.int64)
-            a = ids_b[np.searchsorted(sids_b, src)]
-            c = ids_b[np.searchsorted(sids_b, dst)]
-            yield pd.DataFrame(
-                {"src": np.minimum(a, c), "dst": np.maximum(a, c)}
-            )
+            a = ids_b[np.searchsorted(sids_b, b["src"].to_numpy(dtype=np.int64))]
+            c = ids_b[np.searchsorted(sids_b, b["dst"].to_numpy(dtype=np.int64))]
+            b["src"], b["dst"] = np.minimum(a, c), np.maximum(a, c)
+            yield b
 
     return fn
 
@@ -170,7 +167,7 @@ def _eq_counts_chunked(mat_b, si, di, mat_d=None):
 _SET_ID_SALT = 0x51C3_9A7B_42D8_11E5
 
 
-def _sharded_dedup_fn(bc, need, b, r, n_tasks, cap, max_pairs):
+def _sharded_dedup_fn(bc, need, b, r, n_tasks, cap, max_pairs, with_eq):
     """mapInPandas kernel over a range frame with one row per task: the
     band-sharded broadcast dedup. Task t takes bands t, t+n_tasks, ... and
     handles them one at a time. It folds only that band's keys from the
@@ -192,7 +189,9 @@ def _sharded_dedup_fn(bc, need, b, r, n_tasks, cap, max_pairs):
     band once. A family that repeats in every band is verified once per
     task that holds its bands; the caller's dropDuplicates absorbs the
     repeats. Rows are sid-sorted, so pairs come out (least, greatest) in
-    sid order like every other path."""
+    sid order like every other path. with_eq adds each survivor's equal
+    count as an eq column, a function of the pair, so the dropDuplicates
+    on (src, dst) keeps it."""
     import numpy as np
     import pandas as pd
 
@@ -261,12 +260,16 @@ def _sharded_dedup_fn(bc, need, b, r, n_tasks, cap, max_pairs):
 
     def verified(pend, sids_b, mat_b):
         """The flush's distinct candidate pairs (row codes lo*n+hi) that
-        pass the exact verify, as sid pairs."""
+        pass the exact verify, as sid pairs (with their equal counts)."""
         u = np.unique(np.concatenate(pend))
         n = np.int64(len(sids_b))
         si, di = u // n, u % n
-        ok = _eq_counts_chunked(mat_b, si, di) >= need
-        return pd.DataFrame({"src": sids_b[si[ok]], "dst": sids_b[di[ok]]})
+        eq = _eq_counts_chunked(mat_b, si, di)
+        ok = eq >= need
+        out = {"src": sids_b[si[ok]], "dst": sids_b[di[ok]]}
+        if with_eq:
+            out["eq"] = eq[ok]
+        return pd.DataFrame(out)
 
     def fn(it):
         for pdf in it:
@@ -688,11 +691,12 @@ class MinHashLSH:
         sig_df: DataFrame,
         threshold: float,
         max_rows: int,
+        keep_sim: bool,
         kw: dict,
     ) -> DataFrame | None:
-        """The broadcast route of dedup_pairs(keep_sim=False), or None when
-        a guard of _build_sig_broadcast trips and the JVM shuffle verify
-        must run instead. Records self.last_route either way.
+        """The broadcast route of dedup_pairs, or None when a guard of
+        _build_sig_broadcast trips and the JVM shuffle verify must run
+        instead. Records self.last_route either way.
 
         The plan: a range frame of T = min(defaultParallelism, num_bands)
         one-row tasks runs _sharded_dedup_fn, task t verifying the buckets
@@ -704,7 +708,9 @@ class MinHashLSH:
         otherwise keeps the spark.sql.shuffle.partitions default and pays
         one python-worker roundtrip per near-empty partition. Of the tier
         knobs only bucket_cap_hard applies: every bucket is verified in
-        numpy, whatever its size.
+        numpy, whatever its size. With keep_sim the kernel's equal counts
+        ride along as eq, and sim = eq/k is the JVM verify's arithmetic
+        (minhash_similarity_packed), so the sims are bit-equal.
 
         Computed signatures are cached for the JVM route while the
         broadcast is built, and dropped once it fits (see
@@ -718,18 +724,25 @@ class MinHashLSH:
         spark = sig_df.sparkSession
         p = spark.sparkContext.defaultParallelism or 8
         n_tasks = min(p, b)
+        k = self.cfg.num_hashes
         kernel = _sharded_dedup_fn(
-            bc, _min_eq_count(threshold, self.cfg.num_hashes), b, r, n_tasks,
-            kw.get("bucket_cap_hard", 100_000), self._FLUSH_PAIRS,
+            bc, _min_eq_count(threshold, k), b, r, n_tasks,
+            kw.get("bucket_cap_hard", 100_000), self._FLUSH_PAIRS, keep_sim,
         )
         id_sql = sig_df.schema["id"].dataType.simpleString()
-        return (
+        eq = ", eq long" if keep_sim else ""
+        out = (
             spark.range(0, n_tasks, 1, n_tasks)
-            .mapInPandas(kernel, "src long, dst long")
+            .mapInPandas(kernel, "src long, dst long" + eq)
             .repartition(p, "src", "dst")
             .dropDuplicates(["src", "dst"])
-            .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}")
+            .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}" + eq)
         )
+        if keep_sim:
+            out = out.select(
+                "src", "dst", (F.col("eq").cast("double") / F.lit(float(k))).alias("sim")
+            )
+        return out
 
     def dedup_pairs(
         self,
@@ -745,8 +758,8 @@ class MinHashLSH:
         ids are attached in the same join that brings the signatures, so the
         only shuffles carrying ids/signatures are over final candidates.
 
-        ROUTING is by data size, not by a flag. With keep_sim=False and
-        the default numpy_verify=True, a signature table that fits one
+        ROUTING is by data size, not by a flag. With the default
+        numpy_verify=True, a signature table that fits one
         broadcast (numpy_max_rows rows and the 512MB byte budget, no sid
         collision) runs one exact numpy kernel against the broadcast
         signature matrix, its bands sharded across tasks (see
@@ -756,12 +769,11 @@ class MinHashLSH:
         to the JVM route without a Spark job, and one the estimate cannot
         place is row-counted before anything is collected, so an
         over-bound table never ships rows to the driver.
-        numpy_verify=False forces the JVM route at any size; keep_sim=True
-        always takes it (the numpy kernels return pairs only). Every route
-        returns the same pair set, and a row with a null id is in no pair
-        on any route. The choice is recorded as self.last_route = (route,
-        reason), e.g. ("broadcast", "fits broadcast") or ("jvm", "over
-        row bound").
+        numpy_verify=False forces the JVM route at any size. Every route
+        returns the same rows, sims bit-equal, and a row with a null id is
+        in no pair on any route. The choice is recorded as self.last_route
+        = (route, reason), e.g. ("broadcast", "fits broadcast") or ("jvm",
+        "over row bound").
 
         NOTE: building the broadcast runs a Spark job and a driver collect
         of the signature table IMMEDIATELY (at plan-construction time),
@@ -771,14 +783,19 @@ class MinHashLSH:
         route, which never reads sig_df again, drops the cache. A stored
         or cached table is read again instead; the JVM route caches it.
 
-        keep_sim=False drops the sim column and, on the JVM route, enables
-        the m-band verify prefilter: bands are disjoint signature slices,
-        so a pair matching m bands has >= m*r equal positions, i.e. sim >=
-        m*r/k exactly. Pairs with m >= ceil(t*k/r) are therefore above
-        threshold by construction and skip the signature-verify join
-        entirely (they only touch the 16-byte sid->id map); the full
-        zip_with verify runs on the unsure remainder. On dup-dense corpora
-        (the web-crawl case) a large share of true pairs clear the bound.
+        keep_sim only decides whether the sim column (eq/k) is returned.
+
+        Without keep_sim the JVM verify has one m-band bound: bands are
+        disjoint signature slices, so a pair matching m bands has >= m*r
+        equal positions, i.e. sim >= m*r/k exactly. Every candidate joins
+        its signatures, but one with m >= ceil(t*k/r) passes without its
+        equal count being computed; the count runs on the unsure
+        remainder. On dup-dense corpora (the web-crawl case) a large share
+        of true pairs clear the bound. With keep_sim every row is scored
+        anyway, so the filter is sim >= t alone: m counts the bands a sid
+        pair shares, and a duplicated id (the sid-collision fallback)
+        joins every row of that sid, so the bound would pass row pairs
+        whose own sim is below t.
 
         **kw takes the bucket-tier knobs of sid_candidates
         (max_bucket_size, bucket_cap_hard); any other keyword raises
@@ -790,12 +807,10 @@ class MinHashLSH:
         if not isinstance(numpy_verify, bool):
             raise TypeError(f"numpy_verify must be a bool, got {numpy_verify!r}")
         t = self.cfg.threshold if threshold is None else threshold
-        if keep_sim:
-            self.last_route = ("jvm", "keep_sim")
-        elif not numpy_verify:
+        if not numpy_verify:
             self.last_route = ("jvm", "requested")
         else:
-            out = self._broadcast_dedup(sig_df, t, numpy_max_rows, kw)
+            out = self._broadcast_dedup(sig_df, t, numpy_max_rows, keep_sim, kw)
             if out is not None:
                 return out
         if not is_materialized(sig_df):
@@ -816,26 +831,23 @@ class MinHashLSH:
         vb = s.select(
             F.col("sid").alias("dst"), F.col("id").alias("dst_id"), F.col("psig").alias("pb")
         )
-        pair_ids = [
-            F.least("src_id", "dst_id").alias("src"),
-            F.greatest("src_id", "dst_id").alias("dst"),
-        ]
-        if keep_sim:
-            return (
-                cand.join(va, "src")
-                .join(vb, "dst")
-                .withColumn("sim", minhash_similarity_packed("pa", "pb", k, self.cfg.hash_size))
-                .where(F.col("sim") >= t)
-                .select(*pair_ids, "sim")
-            )
-        # single pass, short-circuit OR: the packed verify evaluates only
-        # for rows failing the m bound (a two-branch union would recompute
-        # the whole candidate chain once per branch — measured 2x slower)
-        cond = (F.col("m") >= m_sure) | (
-            minhash_similarity_packed("pa", "pb", k, self.cfg.hash_size) >= t
-        )
+        # without keep_sim, single pass, short-circuit OR: the packed
+        # verify evaluates only for rows failing the m bound (a two-branch
+        # union would recompute the whole candidate chain once per branch
+        # — measured 2x slower)
+        keep = F.col("sim") >= t
+        if not keep_sim:
+            keep = (F.col("m") >= m_sure) | keep
         return (
-            cand.join(va, "src").join(vb, "dst").where(cond).select(*pair_ids)
+            cand.join(va, "src")
+            .join(vb, "dst")
+            .withColumn("sim", minhash_similarity_packed("pa", "pb", k, self.cfg.hash_size))
+            .where(keep)
+            .select(
+                F.least("src_id", "dst_id").alias("src"),
+                F.greatest("src_id", "dst_id").alias("dst"),
+                *(["sim"] if keep_sim else []),
+            )
         )
 
     # ----------------------------------------------------------------- query

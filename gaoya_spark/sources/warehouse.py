@@ -110,19 +110,12 @@ class Warehouse:
         return os.path.join(self.path, name)
 
     def write(
-        self,
-        df: DataFrame,
-        name: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
+        self, df: DataFrame, name: str, partition_by: list[str] | None = None
     ) -> None:
-        w = df.write.mode(mode)
+        w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.table_path(name))
-
-    def append(self, df: DataFrame, name: str) -> None:
-        self.write(df, name, mode="append")
 
     def overwrite_partitions(self, df: DataFrame, name: str,
                              partition_by: list[str]) -> None:
@@ -163,20 +156,14 @@ class Warehouse:
     def drop(self, name: str) -> None:
         shutil.rmtree(self.table_path(name), ignore_errors=True)
 
-    def compact(
-        self,
-        name: str,
-        partition_by: list[str] | None = None,
-        target_files: int = 1,
-    ) -> int:
-        """Rewrite a table to a bounded file count, preserving rows and
-        the partition layout. A maintained index table accretes one
-        directory of shuffle-partition-many small files per micro-batch;
-        after thousands of triggers every index probe pays thousands of
-        file opens (guide §6 small-files problem). With partition_by, rows
+    def compact(self, name: str, partition_by: list[str]) -> int:
+        """Rewrite a partitioned table to one file per partition,
+        preserving rows and the partition layout. A maintained index
+        table accretes one directory of shuffle-partition-many small files
+        per micro-batch; after thousands of triggers every index probe
+        pays thousands of file opens (guide §6 small-files problem). Rows
         are hash-clustered by the partition columns first so each
-        partition value lands in exactly one write task -> one file per
-        partition; without, the whole table coalesces to target_files.
+        partition value lands in exactly one write task.
 
         Parquet-fallback atomicity: the rewrite lands in a temp dir first
         and is swapped in with rename; the rm+rename window is the
@@ -186,15 +173,12 @@ class Warehouse:
         df = self.read(name)
         tmp = self.table_path(name) + "._compact_tmp"
         shutil.rmtree(tmp, ignore_errors=True)
-        if partition_by:
-            (
-                df.repartition(*[df[c] for c in partition_by])
-                .write.mode("overwrite")
-                .partitionBy(*partition_by)
-                .parquet(tmp)
-            )
-        else:
-            df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
+        (
+            df.repartition(*[df[c] for c in partition_by])
+            .write.mode("overwrite")
+            .partitionBy(*partition_by)
+            .parquet(tmp)
+        )
         dst = self.table_path(name)
         shutil.rmtree(dst)
         os.replace(tmp, dst)

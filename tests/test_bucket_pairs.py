@@ -213,6 +213,10 @@ SURROGATE_OPERATORS = {
     "substring_pairs": lambda df: substring_pairs(df, "id", "text"),
     "ngram_jaccard_pairs": lambda df: ngram_jaccard_pairs(df, "id", "text", threshold=0.5),
     "minhash.dedup_pairs": lambda df: _on_sigs(_mh(), "dedup_pairs", df, keep_sim=False),
+    "minhash.dedup_pairs.keep_sim": lambda df: _on_sigs(_mh(), "dedup_pairs", df),
+    "minhash.dedup_pairs.keep_sim.jvm": lambda df: _on_sigs(
+        _mh(), "dedup_pairs", df, numpy_verify=False
+    ),
     "minhash.candidate_pairs": lambda df: _on_sigs(_mh(), "candidate_pairs", df),
     "minhash.query": lambda df: _on_sigs(_mh(), "query", df, keep_sim=True),
 }

@@ -98,7 +98,7 @@ def test_dedup_pairs_numpy_verify_identical(spark, corpus5, monkeypatch):
     guarded fallback — returns the verified keep_sim=True pair set, and
     last_route names the route that ran."""
     lsh, sigs = corpus5
-    base = _pair_set(lsh.dedup_pairs(sigs))
+    base = _pair_set(lsh.dedup_pairs(sigs, numpy_verify=False))
     for opts, route in ROUTES:
         assert _pair_set(_dedup(lsh, sigs, opts, monkeypatch)) == base, opts
         assert lsh.last_route[0] == route
@@ -110,18 +110,38 @@ def test_dedup_pairs_numpy_verify_nonascii_ids(spark, monkeypatch):
     UTF8 least/greatest — UTF-8 is order-preserving, so the claim must
     hold beyond ASCII. Clone docs carry ids mixing accents, CJK, and
     astral-plane emoji (surrogate-pair territory in UTF-16, where naive
-    orderings diverge), and every route's pair set must equal the default
-    JVM path's exactly."""
+    orderings diverge), and every route's pair set must equal the forced
+    JVM keep_sim=True path's exactly."""
     ids = ["zz~ascii", "é-accent", "中文-cjk", "\U0001f600-emoji", "Zupper"]
     rows = [(i, "common shared near duplicate text body here") for i in ids]
     df = spark.createDataFrame(rows, "id string, text string")
     cfg = MinHashConfig(num_bands=42, band_width=3, threshold=0.5, tokenizer=WORD)
     lsh = MinHashLSH(cfg)
     sigs = lsh.signatures(df, "id", "text").cache()
-    base = _pair_set(lsh.dedup_pairs(sigs))
+    base = _pair_set(lsh.dedup_pairs(sigs, numpy_verify=False))
     assert len(base) == 10  # all 5 clones pair up
     for opts, _ in ROUTES:
         assert _pair_set(_dedup(lsh, sigs, opts, monkeypatch)) == base, opts
+
+
+def _chain_rows(seed: int, n: int = 80) -> list[tuple[int, str]]:
+    """(id, text) rows of a seeded mutation chain over a 60-word
+    vocabulary: every third doc is fresh, each other one replaces 1-6 of
+    the previous doc's 12 words, so overlaps hover near the threshold."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(60)]
+    rows: list[tuple[int, str]] = []
+    for i in range(n):
+        if i % 3 == 0 or not rows:
+            words = rng.sample(vocab, 12)
+        else:
+            base = rows[-1][1].split()
+            k = rng.randint(1, 6)
+            words = base[: 12 - k] + rng.sample(vocab, k)
+        rows.append((i, " ".join(words)))
+    return rows
 
 
 # (hash_size, num_bands): 42 bands (off a multiple of the session's 8
@@ -134,35 +154,27 @@ def test_dedup_pairs_numpy_verify_random_corpus(
     spark, hash_size, num_bands, monkeypatch
 ):
     """Seeded random corpus equivalence: every route must produce the
-    default JVM path's exact pair set for BOTH matrix dtypes —
+    forced JVM keep_sim=True path's exact pair set for BOTH matrix dtypes —
     hash_size<64 runs the int32 branch, hash_size=64 the int64 branch
     (the 2^61-1 MinHasher64V1 formula, values above 2^32) — and for
     long (non-string) ids, over a graph with partial overlaps around
     the threshold rather than clean clone groups. The band count decides
     how the broadcast kernel shards: min(8, num_bands) tasks, each with
-    one band or several. Every route returns each pair once."""
-    import random
-
-    rng = random.Random(97 + hash_size)
-    vocab = [f"w{i}" for i in range(60)]
-    rows = []
-    for i in range(80):
-        if i % 3 == 0 or not rows:
-            words = rng.sample(vocab, 12)
-        else:  # mutate a recent doc: overlap hovers near threshold
-            base = rows[-1][1].split()
-            k = rng.randint(1, 6)
-            words = base[: 12 - k] + rng.sample(vocab, k)
-        rows.append((i, " ".join(words)))
-    df = spark.createDataFrame(rows, "id long, text string")
+    one band or several. Every route returns each pair once, and the
+    default keep_sim=True call (the broadcast kernel) returns the forced
+    JVM route's (src, dst, sim) rows, sims equal as doubles."""
+    df = spark.createDataFrame(_chain_rows(97 + hash_size), "id long, text string")
     cfg = MinHashConfig(
         num_bands=num_bands, band_width=3, threshold=0.5, hash_size=hash_size,
         tokenizer=WORD,
     )
     lsh = MinHashLSH(cfg)
     sigs = lsh.signatures(df, "id", "text").cache()
-    base = _pair_set(lsh.dedup_pairs(sigs))
+    jvm = _sorted_rows(lsh.dedup_pairs(sigs, numpy_verify=False))
+    base = {r[:2] for r in jvm}
     assert base  # the mutation chain must create some near-dup pairs
+    assert _sorted_rows(lsh.dedup_pairs(sigs)) == jvm
+    assert lsh.last_route == ("broadcast", "fits broadcast")
     for opts, _ in ROUTES:
         rows = [tuple(r) for r in _dedup(lsh, sigs, opts, monkeypatch).collect()]
         assert set(rows) == base and len(rows) == len(base), opts
@@ -366,11 +378,12 @@ def test_corpus5_with_superminhash_scheme(spark):
 
 
 def test_dedup_pairs_keep_sim_false_same_pairs(spark):
-    """keep_sim=False (m-band prefilter: m*r disjoint equal positions =>
-    sim >= m*r/k skips verify) returns exactly the same pair set as the
-    verified keep_sim=True path, minus the sim column. The caption fixture
-    has both near-identical pairs (clear the m bound) and borderline
-    ones."""
+    """On the JVM route keep_sim=False (m-band prefilter: m*r disjoint
+    equal positions => sim >= m*r/k skips the equal count) returns exactly
+    the keep_sim=True pair set, minus the sim column, and both equal the
+    broadcast kernel's, which verifies every candidate. The caption
+    fixture has both near-identical pairs (clear the m bound) and
+    borderline ones."""
     from gaoya_spark.fixtures import make_images_pdf
 
     cfg = MinHashConfig(
@@ -381,10 +394,11 @@ def test_dedup_pairs_keep_sim_false_same_pairs(spark):
     pdf, _ = make_images_pdf(400, seed=9, dup_frac=0.4, with_bytes=False)
     docs = spark.createDataFrame(pdf[["image_id", "caption"]])
     sigs = lsh.signatures(docs, "image_id", "caption").cache()
-    with_sim = {(r["src"], r["dst"]) for r in lsh.dedup_pairs(sigs).collect()}
+    with_sim = _pair_set(lsh.dedup_pairs(sigs, numpy_verify=False))
     fast = lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False)
     assert fast.columns == ["src", "dst"]
-    assert {(r["src"], r["dst"]) for r in fast.collect()} == with_sim
+    assert _pair_set(fast) == with_sim == _pair_set(lsh.dedup_pairs(sigs))
+    assert lsh.last_route == ("broadcast", "fits broadcast")
     assert len(with_sim) > 0
 
 
@@ -499,11 +513,15 @@ def test_numpy_verify_guards_fall_back_to_jvm(spark):
     up by sid, so they would substitute one row's signature for the
     other; the sid-collision guard sends the table to the JVM shuffle
     verify instead, which fans out both rows — the default route returns
-    exactly the forced JVM route's pairs."""
+    exactly the forced JVM route's pairs. With keep_sim=True every row's
+    sim clears the threshold: id 1's last row shares no word with id 2,
+    and the bands the sid pair (1, 2) shares through id 1's first row
+    must not pass it."""
     cfg = MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
     lsh = MinHashLSH(cfg)
     rows = [(1, "a quick brown fox jumps over the lazy dog"),
             (1, "a quick brown fox jumps over the lazy cat"),
+            (1, "seven pale herons waded past some muddy reeds"),
             (2, "a quick brown fox jumps over the lazy dog")]
     sigs = lsh.signatures(
         spark.createDataFrame(rows, "id long, text string"), "id", "text"
@@ -512,6 +530,11 @@ def test_numpy_verify_guards_fall_back_to_jvm(spark):
     auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
     assert lsh.last_route == ("jvm", "sid collision")
     assert auto == jvm and (1, 2) in jvm
+    jvm_sim = _sorted_rows(lsh.dedup_pairs(sigs, numpy_verify=False))
+    auto_sim = _sorted_rows(lsh.dedup_pairs(sigs))
+    assert lsh.last_route == ("jvm", "sid collision")
+    assert auto_sim == jvm_sim and (1, 2, 1.0) in jvm_sim
+    assert all(r[2] >= 0.5 for r in jvm_sim)
 
 
 def test_arrow_bands_jvm_bands_same_pairs(spark, corpus5):
@@ -675,7 +698,7 @@ def test_numpy_strategy_values_identical(spark, corpus5):
     route, and both yield the exact keep_sim=True pair set. Anything else
     — such as a kernel name the option once took — raises."""
     lsh, sigs = corpus5
-    base = _pair_set(lsh.dedup_pairs(sigs))
+    base = _pair_set(lsh.dedup_pairs(sigs, numpy_verify=False))
     for nv in (True, False):
         got = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=nv))
         assert got == base, nv
@@ -694,7 +717,7 @@ def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
     jvm = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
     assert lsh.last_route == ("jvm", "requested")
     lsh.dedup_pairs(sigs)
-    assert lsh.last_route == ("jvm", "keep_sim")
+    assert lsh.last_route == ("broadcast", "fits broadcast")
     auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
     assert lsh.last_route == ("broadcast", "fits broadcast")
     over_rows = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_max_rows=1))
@@ -705,6 +728,55 @@ def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
     over_est = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
     assert lsh.last_route == ("jvm", "over size estimate")
     assert auto == over_rows == over_est == jvm and jvm
+
+
+CHAIN = _chain_rows(7)
+FAMILY_TEXT = "same boilerplate caption for every family member here"
+
+# name -> ((id, text) rows, MinHashConfig overrides, dedup_pairs keywords)
+# of the keep_sim route-parity test; id types, null ids and 32-/64-bit
+# signatures are covered by test_dedup_pairs_numpy_verify_random_corpus
+# and the SURROGATE_OPERATORS tests of test_bucket_pairs.py
+KEEP_SIM_CASES = {
+    "t0.07_k100": (CHAIN, {"num_bands": 50, "band_width": 2, "threshold": 0.07}, {}),
+    "empty": ([], {}, {}),
+    "singleton": (CHAIN[:1], {}, {}),
+    "cap_binds": (
+        [(100 + i, FAMILY_TEXT) for i in range(10)] + CHAIN, {},
+        {"bucket_cap_hard": 5},
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(KEEP_SIM_CASES))
+def test_keep_sim_routes_identical(spark, case):
+    """keep_sim=True (the default) picks its route by size like
+    keep_sim=False: a broadcast-fit table takes the band-sharded kernel,
+    which carries each survivor's equal count, and returns exactly the
+    forced JVM verify's (src, dst, sim) rows, sims equal as doubles. Covers
+    the float boundary t=0.07 at k=100 (7/100 >= 0.07 holds in double
+    arithmetic), an empty and a one-row table, and a bucket_cap_hard that
+    drops the buckets of a 10-doc family of identical texts."""
+    rows, cfg_kw, kw = KEEP_SIM_CASES[case]
+    cfg = dict(num_bands=42, band_width=3, threshold=0.5, tokenizer=WORD)
+    lsh = MinHashLSH(MinHashConfig(**dict(cfg, **cfg_kw)))
+    df = spark.createDataFrame(rows, "id long, text string")
+    sigs = lsh.signatures(df, "id", "text").cache()
+    auto = lsh.dedup_pairs(sigs, **kw)
+    assert lsh.last_route == ("broadcast", "fits broadcast")
+    jvm = lsh.dedup_pairs(sigs, numpy_verify=False, **kw)
+    assert lsh.last_route == ("jvm", "requested")
+    assert auto.dtypes == jvm.dtypes == [("src", "bigint"), ("dst", "bigint"), ("sim", "double")]
+    got = _sorted_rows(auto)
+    assert got == _sorted_rows(jvm)
+    assert len(set(got)) == len(got)
+    assert all(r[0] < r[1] for r in got)
+    assert bool(got) == (case not in ("empty", "singleton"))
+    if case == "t0.07_k100":
+        assert any(r[2] == 0.07 for r in got)
+    if case == "cap_binds":
+        assert not any(r[0] >= 100 for r in got)
+    sigs.unpersist()
 
 
 def test_replicated_drops_buckets_over_hard_cap(spark):

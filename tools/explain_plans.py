@@ -57,12 +57,14 @@ def main():
         "key into an ObjectHashAggregate collect_list, pair explosion as "
         "pure project/generate — no self-join, no dropDuplicates — then "
         "the (src,dst) count aggregate)": mh.sid_candidates(sigs),
-        "dedup pairs end-to-end (EXPECT: the candidate plan above, then "
-        "the equal-count as a FLAT balanced tree of per-word packed-XOR "
-        "terms inside WholeStageCodegen (no higher-order aggregate — HOFs "
-        "evaluate interpreted) in the signature joins — broadcast when "
-        "sigs are small — and original ids attached only to verified "
-        "pairs)": mh.dedup_pairs(sigs),
+        "dedup pairs end-to-end, forced JVM route (EXPECT: the candidate "
+        "plan above, then the equal-count as a FLAT balanced tree of "
+        "per-word packed-XOR terms inside WholeStageCodegen (no "
+        "higher-order aggregate — HOFs evaluate interpreted) in the "
+        "signature joins — broadcast when sigs are small — and original "
+        "ids attached only to verified pairs)": mh.dedup_pairs(
+            sigs, numpy_verify=False
+        ),
         "dedup pairs, size-routed default on a broadcast-fit table "
         "(EXPECT: a one-row-per-task range feeds ONE MapInPandas kernel "
         "that builds each task's share of the bands' buckets from the "
@@ -92,7 +94,7 @@ def main():
 
     edges = mh.dedup_pairs(sigs).select("src", "dst")
     tp_labels, _ = _two_phase_cc(
-        edges.selectExpr("src as a", "dst as b"), None, 1, None, 1
+        edges.selectExpr("src as a", "dst as b"), None, 1, None
     )
     sections[
         "two-phase connected components, one round + label extraction "

@@ -114,7 +114,6 @@ def main() -> None:
 
     connected_components(
         edges, max_iter=1, driver_threshold=0, checkpoint_fn=cap,
-        checkpoint_every=1,
     )
     with open(os.path.join(OUTDIR, f"img_components_distributed_{TAG}.txt"), "w") as f:
         f.write(captured[0])
