@@ -172,13 +172,12 @@ ORACLE_SIMHASH128 = SimHashConfig(
 
 
 def _q_minhash_dedup_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The m-band prefilter dedup path (dedup_pairs(keep_sim=False,
-    numpy_verify=False) — the JVM route; by default a table this small
-    would take the numpy kernels): a pair matching m bands has >= m*r
-    equal positions, so a candidate with m >= ceil(t*k/r) passes without
-    its equal count being computed (it still joins its signatures). The
-    oracle computes the fully-verified pair set — the two must be
-    identical."""
+    """The JVM shuffle-verify dedup path without sims
+    (dedup_pairs(keep_sim=False, numpy_verify=False); by default a table
+    this small would take the numpy kernel): every band candidate joins
+    its packed signatures and is kept when its exact sim clears the
+    threshold, the filter the keep_sim=True call applies. The oracle
+    computes the fully-verified pair set — the two must be identical."""
     lsh = MinHashLSH(ORACLE_MINHASH)
     sigs = _minhash_sigs_oracle(spark, sf_dir)
     return lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False)
@@ -188,9 +187,9 @@ def _q_minhash_dedup_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The default size-routed dedup path (dedup_pairs(keep_sim=False)):
     a table this small fits one broadcast, so the band-sharded numpy
     kernel runs — each task builds the buckets of its share of the bands
-    from the broadcast signature matrix and verifies them, and original
-    ids are attached from the same broadcast — exactly the fully-verified
-    pair set the oracle computes."""
+    from the broadcast signature matrix, verifies them and emits the
+    pairs' ids from the same broadcast — exactly the fully-verified pair
+    set the oracle computes."""
     lsh = MinHashLSH(ORACLE_MINHASH)
     sigs = _minhash_sigs_oracle(spark, sf_dir)
     return lsh.dedup_pairs(sigs, keep_sim=False)

@@ -3,8 +3,9 @@ grams — any "equi-key blocking" operator).
 
 Input: (bk, sid) membership rows — an 8-byte bucket key and an 8-byte id
 surrogate. Output: (src, dst, m) with src < dst (sid order) and m = number
-of buckets the pair co-occurs in (exact: every path emits a pair at most
-once per bucket).
+of buckets the pair co-occurs in (exact: a sid is a bucket's member once,
+however many rows it has, and every path emits a pair at most once per
+bucket).
 
 One groupBy materializes buckets as sorted sid arrays; pair generation for
 buckets <= array_bucket_limit is JVM array combinatorics fused into the
@@ -29,8 +30,9 @@ The id surrogate ("sid") is made here and nowhere else: sid_col builds it
 from an id column, attach_ids puts the ids back on sid pairs. Integral ids
 are their own surrogates (cast to long), so their pairs need no attach
 join; any other id type is hashed with xxhash64 and joined back. A sid
-collision (~n^2/2^65 for hashed ids) can merge two ids; it only adds
-candidates that the operators' exact checks still see. Operators drop
+collision (~n^2/2^65 for hashed ids) merges two ids: they are never
+paired with each other, and each meets the other's candidates, which the
+operators' exact checks still see. Operators drop
 null-id rows from their membership rows, so a null id is in no pair.
 """
 
@@ -274,15 +276,17 @@ def sid_pairs_from_buckets(
       - > drop_cap: excluded; callers record the count via their stats
         helpers (band_stats / gram_stats), never silently.
     """
-    # buckets over drop_cap are excluded from every tier, including the
-    # small one when drop_cap < array_bucket_limit. buckets feed the small
-    # path and the upper tiers, so they are persisted. No explicit
-    # unpersist: once the returned frame is consumed and this reference
-    # is GC'd, Spark's ContextCleaner drops the blocks (and LRU eviction
-    # handles the interim).
+    # a sid is a member of a bucket once (collect_set), however many of
+    # its rows hold the key: a duplicated id forms no (s, s) pair and m
+    # counts buckets. buckets over drop_cap are excluded from every tier,
+    # including the small one when drop_cap < array_bucket_limit. buckets
+    # feed the small path and the upper tiers, so they are persisted. No
+    # explicit unpersist: once the returned frame is consumed and this
+    # reference is GC'd, Spark's ContextCleaner drops the blocks (and LRU
+    # eviction handles the interim).
     buckets = (
         members.groupBy("bk")
-        .agg(F.array_sort(F.collect_list("sid")).alias("ids"))
+        .agg(F.array_sort(F.collect_set("sid")).alias("ids"))
         .where(F.size("ids").between(2, drop_cap))
         .persist()
     )

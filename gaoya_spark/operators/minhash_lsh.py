@@ -15,20 +15,22 @@ Scale notes (100TB / 10^12 rows):
   compression trick as the reference's BandKey (minhash_index.rs:21-27):
   the shuffle carries 8 bytes per band instead of the r-element slice;
   false band collisions are removed by the full-signature verify step.
-- candidate generation works on 8-byte id surrogates (sid_col in
-  _bucket_pairs.py: the id itself for integral ids, else xxhash64(id)), so
-  the pair shuffle carries 16-byte rows regardless of id type; original
-  ids come back only on final (verified) pairs. A hashed-sid collision
-  can merge two ids (probability ~n^2/2^65: ~27 expected at 10^12 rows, 0
-  at any test scale); the cost is a handful of spurious candidate pairs
-  that still must pass the full-signature verify — precision impact
-  <1e-10, recall impact none (collisions only ADD candidates). Null ids
-  are dropped from the band rows, so they are in no pair and no match.
-- buckets are materialized ONCE with a single groupBy + collect_list and
+- the JVM routes generate candidates on 8-byte id surrogates (sid_col
+  in _bucket_pairs.py: the id itself for integral ids, else
+  xxhash64(id)), so the pair shuffle carries 16-byte rows regardless of
+  id type; original ids come back only on final (verified) pairs. A
+  hashed-sid collision merges two ids (probability ~n^2/2^65: ~27
+  expected at 10^12 rows, 0 at any test scale): they are never paired
+  with each other, and each is tried against the other's candidates,
+  which the full-signature verify still checks. The numpy routes make no
+  surrogate: they index the rows of a broadcast (signature matrix, ids)
+  table. Null ids are dropped from the band rows and from the broadcast,
+  so they are in no pair and no match.
+- buckets are materialized ONCE with a single groupBy + collect_set and
   pairs are generated by JVM-side array combinatorics (no self-join, no
   dropDuplicates): measured 2.5x faster end-to-end than the former
   sizes-groupBy + broadcast-tag + self-join + dropDuplicates plan at both
-  local[8] and local[32]. collect_list is safe because buckets beyond
+  local[8] and local[32]. Collecting is safe because buckets beyond
   `max_bucket_size` never expand to arrays-of-pairs in a single task:
 - hot buckets (> max_bucket_size members) fall back to triangle blocking:
   members are exploded back to rows, split into g groups, and pairs are
@@ -43,8 +45,6 @@ Scale notes (100TB / 10^12 rows):
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -84,31 +84,14 @@ def _min_eq_count(threshold: float, k: int) -> int:
     return e
 
 
-def _m_sure_bands(threshold: float, k: int, r: int) -> int:
-    """Smallest m with (m*r)/k >= threshold under double division: m
-    matching bands imply >= m*r equal positions (bands are disjoint
-    slices), and IEEE division is monotone in the numerator, so eq/k >=
-    (m*r)/k >= t holds in the JVM's own arithmetic — the m-band
-    prefilter bound, float-boundary-exact like _min_eq_count."""
-    import math
-
-    m = max(int(math.ceil(threshold * k / r)), 0)
-    while m > 0 and ((m - 1) * r) / k >= threshold:
-        m -= 1
-    while (m * r) / k < threshold:
-        m += 1
-    return m
-
-
 def _band_keys(mat, b: int, r: int, band: int | None = None):
     """(n, b) int64 band keys of an (n, b*r) signature matrix, or the
     (n, 1) keys of one band when `band` is given: each band's r positions
     fold through splitmix64, seeded by the band index. The one band-key
-    function of the Arrow banding (_sid_bands_arrow, hence sid_bands
-    tables), the sharded dedup kernel and the broadcast probe. Fold step
-    j reads the strided columns (position i*r+j of band i), so no
-    (n, b, r) uint64 tile is materialized: peak memory stays ~2 key
-    matrices regardless of k."""
+    function of the Arrow banding (sid_bands), the sharded dedup kernel
+    and the broadcast probe. Fold step j reads the strided columns
+    (position i*r+j of band i), so no (n, b, r) uint64 tile is
+    materialized: peak memory stays ~2 key matrices regardless of k."""
     import numpy as np
 
     from gaoya_spark import hashing
@@ -121,26 +104,6 @@ def _band_keys(mat, b: int, r: int, band: int | None = None):
             (acc ^ mat[:, lo * r + j : hi * r : r].astype(np.uint64)).view(np.int64)
         )
     return acc.view(np.int64)
-
-
-def _attach_ids_fn(bc):
-    """mapInPandas kernel: (src, dst[, eq]) sid pairs -> (src, dst[, eq])
-    original-id pairs in (least, greatest) order, via the broadcast's
-    sid-sorted id array; an eq column passes through. Python id
-    comparison is code-point order, which equals Spark's binary UTF8
-    ordering (UTF-8 is order-preserving), so least/greatest agree with
-    the JVM path."""
-    import numpy as np
-
-    def fn(it):
-        sids_b, _, ids_b = bc.value
-        for b in it:
-            a = ids_b[np.searchsorted(sids_b, b["src"].to_numpy(dtype=np.int64))]
-            c = ids_b[np.searchsorted(sids_b, b["dst"].to_numpy(dtype=np.int64))]
-            b["src"], b["dst"] = np.minimum(a, c), np.maximum(a, c)
-            yield b
-
-    return fn
 
 
 def _eq_counts_chunked(mat_b, si, di, mat_d=None):
@@ -188,10 +151,11 @@ def _sharded_dedup_fn(bc, need, b, r, n_tasks, cap, max_pairs, with_eq):
     Per-task key memory is one band's n keys, and the cluster folds each
     band once. A family that repeats in every band is verified once per
     task that holds its bands; the caller's dropDuplicates absorbs the
-    repeats. Rows are sid-sorted, so pairs come out (least, greatest) in
-    sid order like every other path. with_eq adds each survivor's equal
-    count as an eq column, a function of the pair, so the dropDuplicates
-    on (src, dst) keeps it."""
+    repeats. Survivors leave as (least, greatest) pairs of the rows' ids:
+    Python compares strings by code point, which is Spark's binary UTF-8
+    order (UTF-8 is order-preserving), so least/greatest agree with the
+    JVM route. with_eq adds each survivor's equal count as an eq column, a
+    function of the pair, so the dropDuplicates on (src, dst) keeps it."""
     import numpy as np
     import pandas as pd
 
@@ -212,8 +176,8 @@ def _sharded_dedup_fn(bc, need, b, r, n_tasks, cap, max_pairs, with_eq):
         return o[np.repeat(starts, sizes) + pos], pos, sizes, offs
 
     def task(t):
-        sids_b, mat_b, _ = bc.value
-        n = len(sids_b)
+        mat_b, ids_b = bc.value
+        n = len(ids_b)
         if n < 2:
             return
         seen1 = seen2 = np.empty(0, np.uint64)
@@ -252,21 +216,22 @@ def _sharded_dedup_fn(bc, need, b, r, n_tasks, cap, max_pairs, with_eq):
                 pend.append(np.minimum(si, di) * np.int64(n) + np.maximum(si, di))
                 n_pend += len(si)
                 if n_pend >= max_pairs:
-                    yield verified(pend, sids_b, mat_b)
+                    yield verified(pend, mat_b, ids_b)
                     pend, n_pend = [], 0
                 lo = hi
         if pend:
-            yield verified(pend, sids_b, mat_b)
+            yield verified(pend, mat_b, ids_b)
 
-    def verified(pend, sids_b, mat_b):
+    def verified(pend, mat_b, ids_b):
         """The flush's distinct candidate pairs (row codes lo*n+hi) that
-        pass the exact verify, as sid pairs (with their equal counts)."""
+        pass the exact verify, as id pairs (with their equal counts)."""
         u = np.unique(np.concatenate(pend))
-        n = np.int64(len(sids_b))
+        n = np.int64(len(ids_b))
         si, di = u // n, u % n
         eq = _eq_counts_chunked(mat_b, si, di)
         ok = eq >= need
-        out = {"src": sids_b[si[ok]], "dst": sids_b[di[ok]]}
+        a, c = ids_b[si[ok]], ids_b[di[ok]]
+        out = {"src": np.minimum(a, c), "dst": np.maximum(a, c)}
         if with_eq:
             out["eq"] = eq[ok]
         return pd.DataFrame(out)
@@ -306,7 +271,7 @@ def _probe_match_fn(bc, b, r, excluded, max_pairs):
         return keys[o], rows[o]
 
     def fn(it):
-        _, mat_p, ids_p = bc.value
+        mat_p, ids_p = bc.value
         n_p, k = mat_p.shape
         for pdf in it:
             n = len(pdf)
@@ -343,14 +308,6 @@ def _probe_match_fn(bc, b, r, excluded, max_pairs):
                 start = end
 
     return fn
-
-
-@dataclass
-class BandStats:
-    """Skew metrics per band (reference's band_sizes/BandStats,
-    minhash_index.rs:800-821) — recorded by the pipeline (north rule)."""
-
-    df: DataFrame  # (band_idx, n_buckets, max_bucket, avg_bucket)
 
 
 class MinHashLSH:
@@ -432,7 +389,7 @@ class MinHashLSH:
     def _sid_bands(self, sig_df: DataFrame) -> DataFrame:
         """(sid, bk) via JVM xxhash64 of each band slice, seeded by the band
         index. No route uses it: it is the independent reference the
-        Arrow banding (_sid_bands_arrow) is tested against."""
+        Arrow banding (sid_bands) is tested against."""
         b, r = self.cfg.num_bands, self.cfg.band_width
         hashes = F.transform(
             F.sequence(F.lit(0), F.lit(b - 1)),
@@ -442,13 +399,16 @@ class MinHashLSH:
             sid_col(sig_df).alias("sid"), F.explode(hashes).alias("bk")
         )
 
-    def _sid_bands_arrow(self, sig_df: DataFrame) -> DataFrame:
-        """(sid, bk) like _sid_bands, but the band keys are computed in one
-        vectorized Arrow pass: the batch's signatures stack into an (n, k)
-        matrix and each band slice folds through splitmix64 seeded by the
-        band index (_band_keys) — no per-band JVM array slices,
-        no explode of array-valued columns. Measured ~1.5x the JVM banding
-        on the 100k-image corpus (1.01s vs 1.54s MIN, EXPERIMENTS.md).
+    def sid_bands(self, sig_df: DataFrame) -> DataFrame:
+        """(sid, bk): one 16-byte row per (signature row, band), sid_col's
+        surrogate of the row's id next to the band key. Null-id rows have
+        no band row. The keys are the ones every route of dedup_pairs and
+        query computes for itself (_band_keys), in one vectorized Arrow
+        pass: the batch's signatures stack into an (n, k) matrix and each
+        band slice folds through splitmix64 seeded by the band index — no
+        per-band JVM array slices, no explode of array-valued columns.
+        Measured ~1.5x the JVM banding on the 100k-image corpus (1.01s vs
+        1.54s MIN, EXPERIMENTS.md).
 
         The key FUNCTION differs from _sid_bands (splitmix64 fold vs
         xxhash64) — both are internal bucket keys whose only contract is
@@ -478,13 +438,6 @@ class MinHashLSH:
             .mapInPandas(kernel, "sid long, bk long")
         )
 
-    def sid_bands(self, sig_df: DataFrame) -> DataFrame:
-        """(sid, bk): one 16-byte row per (signature row, band), the band
-        keys every route of dedup_pairs and query computes for itself
-        (_band_keys), next to sid_col's surrogate of the row's id. Null-id
-        rows have no band row."""
-        return self._sid_bands_arrow(sig_df)
-
     def sid_candidates(
         self,
         sig_df: DataFrame,
@@ -493,12 +446,12 @@ class MinHashLSH:
     ) -> DataFrame:
         """(src, dst, m) candidate pairs in sid space, m = #matching bands
         (shared machinery: operators/_bucket_pairs.py), banded by the
-        vectorized Arrow kernel (_sid_bands_arrow). Buckets over
+        vectorized Arrow kernel (sid_bands). Buckets over
         max_bucket_size take the collapsed upper tiers; buckets >
         bucket_cap_hard are excluded — band_stats records hot/dropped
         counts."""
         return sid_pairs_from_buckets(
-            self._sid_bands_arrow(sig_df),
+            self.sid_bands(sig_df),
             array_bucket_limit=max_bucket_size,
             drop_cap=bucket_cap_hard,
         )
@@ -521,8 +474,8 @@ class MinHashLSH:
     # inside a few-GB pool.
     _BROADCAST_BYTES = 512 << 20
 
-    # row bound of a broadcast signature table: dedup_pairs' default
-    # numpy_max_rows, and with _PROBE_MAX_KEYS the probe bound of query
+    # row bound of a broadcast signature table: dedup_pairs' bound, and
+    # with _PROBE_MAX_KEYS the probe bound of query
     _NUMPY_MAX_ROWS = 2_000_000
 
     # query's broadcast probe takes at most this many probe band keys
@@ -541,8 +494,9 @@ class MinHashLSH:
 
     # auto routing skips the broadcast build when the trusted size
     # estimate (see _size_estimate) is over this many budgets. Measured
-    # estimate / actual Arrow bytes of the collected (sid, sig, id) table,
-    # 20k- and 40k-row signature tables at k=200, 32- and 64-bit:
+    # estimate / actual Arrow bytes of the collected table (then with a
+    # sid column too), 20k- and 40k-row signature tables at k=200, 32-
+    # and 64-bit:
     # 0.29-1.37 from a parquet scan (compression only lowers it),
     # 1.36-1.46 from a filled cache. 2 keeps every measured fit table on
     # the broadcast side; a table between one and two budgets pays the
@@ -589,19 +543,17 @@ class MinHashLSH:
             return None
 
     def _build_sig_broadcast(self, sig_df: DataFrame, max_rows: int):
-        """(broadcast, None) of (sids_sorted, signature matrix, ids_sorted)
-        for the numpy kernels, or (None, reason) when a guard trips and the
-        JVM shuffle verify runs instead:
+        """(broadcast, None) of (signature matrix, ids) in table order for
+        the numpy kernels, which name a row by its index, or (None, reason)
+        when a guard trips and the JVM shuffle verify runs instead:
         - "over size estimate": the trusted size estimate is over
           _ESTIMATE_SLACK budgets, so no Spark job runs at all;
         - "over row bound": more rows than max_rows or the byte budget;
-        - "sid collision": two rows with one sid, i.e. a duplicated id or
-          an xxhash64(id) collision (the sorted-adjacency check is free
-          on the already-sorted array; searchsorted would silently
-          resolve a collided sid to its first occurrence,
-          substituting one doc's signature for another, where the JVM
-          join path fans out both rows — routing collisions to the JVM
-          path keeps the two verify paths from diverging).
+        - "duplicate id": two rows share one id. A kernel would pair the
+          id with itself and score each of its rows on its own, where the
+          JVM route joins every row of the id; routing the table there
+          keeps the routes from diverging. Distinct ids whose hashed
+          surrogates collide need no guard: the kernels never read one.
 
         The row bound costs one bounded collect when the trusted estimate
         is within budget. Otherwise (no trusted estimate, or one between
@@ -617,14 +569,14 @@ class MinHashLSH:
 
         Null-id rows count against the row bound but are dropped from the
         payload: a null id names no document, so it joins no pair on any
-        route (every null string id hashes to one sid, which would also
-        trip the collision guard). sig_df itself is not filtered — a
-        filter hides the size estimate.
+        route. sig_df itself is not filtered — a filter hides the size
+        estimate.
 
         Lifecycle: the broadcast must outlive the returned (lazy)
         DataFrames; like the persisted buckets, it is dropped by the
         ContextCleaner once the plan is no longer referenced."""
         import numpy as np
+        import pyarrow.compute as pc
 
         k = self.cfg.num_hashes
         dt = np.int64 if self.cfg.hash_size >= 64 else np.int32
@@ -632,16 +584,14 @@ class MinHashLSH:
         budget = self._BROADCAST_BYTES
         eff_rows = min(max_rows, budget // row_bytes)
 
-        def collected():
-            return sig_df.select(sid_col(sig_df).alias("sid"), "sig", "id")
-
-        est = self._size_estimate(collected())
+        est = self._size_estimate(sig_df.select("id", "sig"))
         if est is not None and est > self._ESTIMATE_SLACK * budget:
             return None, "over size estimate"
         cached = est is None and not is_materialized(sig_df)
         if cached:
             sig_df.persist()
-        sel = collected()
+        # selected again after the persist, so the jobs read the cache
+        sel = sig_df.select("id", "sig")
         # limit(bound+1) caps the driver transfer (at most bound+1 rows
         # ever reach the driver); within bound the collected batch IS the
         # broadcast payload, so a table the estimate already fits costs
@@ -654,23 +604,22 @@ class MinHashLSH:
             over = tbl.num_rows > eff_rows
         if over:
             return None, "over row bound"
-        if tbl.column("id").null_count:
-            tbl = tbl.filter(tbl.column("id").is_valid())
-        sids = tbl.column("sid").to_numpy()
-        order = np.argsort(sids)
-        sids_sorted = sids[order]
-        if len(sids) > 1 and (sids_sorted[1:] == sids_sorted[:-1]).any():
-            return None, "sid collision"
-        if len(sids):
+        ids = tbl.column("id")
+        if ids.null_count:
+            tbl = tbl.filter(ids.is_valid())
+            ids = tbl.column("id")
+        n = tbl.num_rows
+        if pc.count_distinct(ids).as_py() < n:
+            return None, "duplicate id"
+        if n:
             flat = tbl.column("sig").combine_chunks().flatten().to_numpy(
                 zero_copy_only=False
             )
-            mat = flat.astype(dt, copy=False).reshape(len(sids), k)[order]
+            mat = flat.astype(dt, copy=False).reshape(n, k)
         else:
             mat = np.zeros((0, k), dtype=dt)
-        ids_sorted = tbl.column("id").to_numpy(zero_copy_only=False)[order]
         bc = sig_df.sparkSession.sparkContext.broadcast(
-            (sids_sorted, mat, ids_sorted)
+            (mat, ids.to_numpy(zero_copy_only=False))
         )
         if cached:
             sig_df.unpersist()
@@ -690,7 +639,6 @@ class MinHashLSH:
         self,
         sig_df: DataFrame,
         threshold: float,
-        max_rows: int,
         keep_sim: bool,
         kw: dict,
     ) -> DataFrame | None:
@@ -700,13 +648,12 @@ class MinHashLSH:
 
         The plan: a range frame of T = min(defaultParallelism, num_bands)
         one-row tasks runs _sharded_dedup_fn, task t verifying the buckets
-        of bands t, t+T, ...; the survivors are repartitioned by pair into
-        defaultParallelism partitions, deduplicated, and given back their
-        ids by _attach_ids_fn. The repartition is reused by the
-        dropDuplicates groupBy (no second exchange) and keeps the attach
-        kernel at defaultParallelism python tasks: a cached or non-AQE plan
-        otherwise keeps the spark.sql.shuffle.partitions default and pays
-        one python-worker roundtrip per near-empty partition. Of the tier
+        of bands t, t+T, ... and emitting its survivors as id pairs; they
+        are repartitioned by pair into defaultParallelism partitions and
+        deduplicated. The repartition is reused by the dropDuplicates
+        groupBy (no second exchange) and keeps it at defaultParallelism
+        tasks: a cached or non-AQE plan otherwise keeps the
+        spark.sql.shuffle.partitions default. Of the tier
         knobs only bucket_cap_hard applies: every bucket is verified in
         numpy, whatever its size. With keep_sim the kernel's equal counts
         ride along as eq, and sim = eq/k is the JVM verify's arithmetic
@@ -715,7 +662,7 @@ class MinHashLSH:
         Computed signatures are cached for the JVM route while the
         broadcast is built, and dropped once it fits (see
         _build_sig_broadcast)."""
-        bc, why = self._build_sig_broadcast(sig_df, max_rows)
+        bc, why = self._build_sig_broadcast(sig_df, self._NUMPY_MAX_ROWS)
         if bc is None:
             self.last_route = ("jvm", why)
             return None
@@ -733,10 +680,9 @@ class MinHashLSH:
         eq = ", eq long" if keep_sim else ""
         out = (
             spark.range(0, n_tasks, 1, n_tasks)
-            .mapInPandas(kernel, "src long, dst long" + eq)
+            .mapInPandas(kernel, f"src {id_sql}, dst {id_sql}" + eq)
             .repartition(p, "src", "dst")
             .dropDuplicates(["src", "dst"])
-            .mapInPandas(_attach_ids_fn(bc), f"src {id_sql}, dst {id_sql}" + eq)
         )
         if keep_sim:
             out = out.select(
@@ -750,21 +696,21 @@ class MinHashLSH:
         threshold: float | None = None,
         keep_sim: bool = True,
         numpy_verify: bool = True,
-        numpy_max_rows: int = _NUMPY_MAX_ROWS,
         **kw,
     ) -> DataFrame:
         """Full-corpus near-duplicate pairs with sim >= threshold (Q2 uses
-        >=, minhash_index.rs:556). Candidates flow in sid space; original
-        ids are attached in the same join that brings the signatures, so the
-        only shuffles carrying ids/signatures are over final candidates.
+        >=, minhash_index.rs:556).
 
         ROUTING is by data size, not by a flag. With the default
-        numpy_verify=True, a signature table that fits one
-        broadcast (numpy_max_rows rows and the 512MB byte budget, no sid
-        collision) runs one exact numpy kernel against the broadcast
-        signature matrix, its bands sharded across tasks (see
-        _broadcast_dedup). Any other table runs the JVM shuffle verify
-        below, the expected large-corpus path. A table
+        numpy_verify=True, a signature table that fits one broadcast
+        (_NUMPY_MAX_ROWS rows and the 512MB byte budget, no duplicated id)
+        runs one exact numpy kernel against the broadcast (signature
+        matrix, ids), its bands sharded across tasks; it indexes rows and
+        emits id pairs (see _broadcast_dedup). Any other table runs the JVM
+        shuffle verify below, the expected large-corpus path: candidates
+        flow in sid space, and original ids are attached in the same join
+        that brings the signatures, so the only shuffles carrying
+        ids/signatures are over final candidates. A table
         whose trusted size estimate is already over twice the budget goes
         to the JVM route without a Spark job, and one the estimate cannot
         place is row-counted before anything is collected, so an
@@ -783,19 +729,12 @@ class MinHashLSH:
         route, which never reads sig_df again, drops the cache. A stored
         or cached table is read again instead; the JVM route caches it.
 
-        keep_sim only decides whether the sim column (eq/k) is returned.
-
-        Without keep_sim the JVM verify has one m-band bound: bands are
-        disjoint signature slices, so a pair matching m bands has >= m*r
-        equal positions, i.e. sim >= m*r/k exactly. Every candidate joins
-        its signatures, but one with m >= ceil(t*k/r) passes without its
-        equal count being computed; the count runs on the unsure
-        remainder. On dup-dense corpora (the web-crawl case) a large share
-        of true pairs clear the bound. With keep_sim every row is scored
-        anyway, so the filter is sim >= t alone: m counts the bands a sid
-        pair shares, and a duplicated id (the sid-collision fallback)
-        joins every row of that sid, so the bound would pass row pairs
-        whose own sim is below t.
+        keep_sim only decides whether the sim column (eq/k) is returned:
+        the JVM verify scores every candidate row pair and keeps sim >= t
+        either way. A band count cannot stand in for the score: it counts
+        the bands a sid pair shares, and a duplicated id (the table the
+        duplicate-id guard sends to this route) joins every row of its
+        sid, so it would pass row pairs whose own sim is below t.
 
         **kw takes the bucket-tier knobs of sid_candidates
         (max_bucket_size, bucket_cap_hard); any other keyword raises
@@ -810,15 +749,13 @@ class MinHashLSH:
         if not numpy_verify:
             self.last_route = ("jvm", "requested")
         else:
-            out = self._broadcast_dedup(sig_df, t, numpy_max_rows, keep_sim, kw)
+            out = self._broadcast_dedup(sig_df, t, keep_sim, kw)
             if out is not None:
                 return out
         if not is_materialized(sig_df):
             sig_df = sig_df.persist()
         cand = self.sid_candidates(sig_df, **kw)
         k = self.cfg.num_hashes
-        r = self.cfg.band_width
-        m_sure = _m_sure_bands(t, k, r)  # m >= m_sure  =>  sim >= m*r/k >= t
         # signatures ride the verify joins packed two-per-long: half the
         # broadcast build bytes, half the kernel elements (similarity.py)
         s = sig_df.select(
@@ -831,18 +768,11 @@ class MinHashLSH:
         vb = s.select(
             F.col("sid").alias("dst"), F.col("id").alias("dst_id"), F.col("psig").alias("pb")
         )
-        # without keep_sim, single pass, short-circuit OR: the packed
-        # verify evaluates only for rows failing the m bound (a two-branch
-        # union would recompute the whole candidate chain once per branch
-        # — measured 2x slower)
-        keep = F.col("sim") >= t
-        if not keep_sim:
-            keep = (F.col("m") >= m_sure) | keep
         return (
             cand.join(va, "src")
             .join(vb, "dst")
             .withColumn("sim", minhash_similarity_packed("pa", "pb", k, self.cfg.hash_size))
-            .where(keep)
+            .where(F.col("sim") >= t)
             .select(
                 F.least("src_id", "dst_id").alias("src"),
                 F.greatest("src_id", "dst_id").alias("dst"),
@@ -903,11 +833,11 @@ class MinHashLSH:
         query_by_id, and records self.last_route.
 
         The probe table goes through _build_sig_broadcast (size estimate,
-        row and byte bound, null-id drop, sid-collision guard) with
+        row and byte bound, null-id drop, duplicate-id guard) with
         _NUMPY_MAX_ROWS rows, further bounded to _PROBE_MAX_KEYS band
         keys because every task bands the whole probe again. If it fits,
         _broadcast_query runs; if a guard trips (e.g. a duplicated probe
-        id: "sid collision"), _jvm_query_scored does. Computed probe
+        id: "duplicate id"), _jvm_query_scored does. Computed probe
         signatures are cached before the broadcast build, so the JVM route
         does not compute them again; the broadcast route never reads them
         again and drops the cache.
@@ -949,11 +879,12 @@ class MinHashLSH:
         import pyarrow as pa
 
         b, r = self.cfg.num_bands, self.cfg.band_width
+        mat_p, _ = bc.value
         excluded = np.empty(0, np.int64)
-        if len(bc.value[0]):
-            rows = self._sid_bands_arrow(index_sigs).select("bk")
+        if len(mat_p):
+            rows = self.sid_bands(index_sigs).select("bk")
             keys = index_sigs.sparkSession.createDataFrame(
-                pa.table({"bk": np.unique(_band_keys(bc.value[1], b, r))})
+                pa.table({"bk": np.unique(_band_keys(mat_p, b, r))})
             )
             over = (
                 rows.join(F.broadcast(keys), "bk", "left_semi")
@@ -981,8 +912,8 @@ class MinHashLSH:
         candidate machinery (one side-tagged groupBy, cross pairs in sid
         space, ids/signatures attached only to candidates)."""
         cand = sid_cross_pairs_from_buckets(
-            self._sid_bands_arrow(probe_sigs),
-            self._sid_bands_arrow(index_sigs),
+            self.sid_bands(probe_sigs),
+            self.sid_bands(index_sigs),
             drop_cap=self._QUERY_DROP_CAP,
         )
         k = self.cfg.num_hashes

@@ -202,7 +202,9 @@ class SimHashLSH:
                 & (F.size("ms") <= self.BUCKET_CAP)
             ).select(F.col("ms").alias("ids"))
         ))
-        raw = raw.select(
+        # a duplicated id is a member twice; its rows pair with no row
+        # of the same id
+        raw = raw.where(F.col("src.sid") != F.col("dst.sid")).select(
             F.col("src.sid").alias("src"),
             F.col("dst.sid").alias("dst"),
             self._dist(F.col("src.sig"), F.col("dst.sig")).alias("dist"),

@@ -250,6 +250,27 @@ def test_null_ids_in_no_pair_or_match(spark, op, dtype, ids):
         assert {r for r in rows if r[0] == r[1]} <= {(i, i) for i in ids}
 
 
+# the operators of SURROGATE_OPERATORS that return (src, dst, ...) pairs
+PAIR_OPERATORS = sorted(op for op in SURROGATE_OPERATORS if not op.endswith(".query"))
+
+
+@pytest.mark.parametrize(
+    "dtype,ids", [("long", (1, 2)), ("string", ("a", "b"))], ids=["long", "string"]
+)
+@pytest.mark.parametrize("op", PAIR_OPERATORS)
+def test_duplicated_id_no_self_pair(spark, op, dtype, ids):
+    """Rows (x, t), (x, t), (y, t): the two rows of x share every bucket,
+    but a pair operator pairs an id with no copy of itself, so the only
+    pair is (x, y). A bucket collects each surrogate once, and SimHash
+    drops a member pair whose two surrogates are equal."""
+    text = "the same caption text for all three rows of this test"
+    x, y = ids
+    df = spark.createDataFrame([(x, text), (x, text), (y, text)], f"id {dtype}, text string")
+    out = SURROGATE_OPERATORS[op](df)
+    assert out.columns[0] == "src"
+    assert {r[:2] for r in _id_rows(out)} == {(x, y)}
+
+
 @pytest.mark.parametrize("op", sorted(SURROGATE_OPERATORS))
 def test_id_types_give_same_pairs(spark, op):
     """Integral ids are their own surrogates (cast to long and back, no

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from gaoya_spark.config import MinHashConfig, TokenizerSpec
 from gaoya_spark.fixtures import corpus5_df, token_vectors_pdf
 from gaoya_spark.operators import _bucket_pairs
-from gaoya_spark.operators._bucket_pairs import sid_col, sid_pairs_from_buckets
+from gaoya_spark.operators._bucket_pairs import sid_pairs_from_buckets
 from gaoya_spark.operators.minhash_lsh import MinHashLSH
 from gaoya_spark.params import calculate_b_and_r
 
@@ -35,7 +35,7 @@ ROUTES = [
     ({}, "broadcast"),
     ({"_FLUSH_PAIRS": 1}, "broadcast"),
     ({"numpy_verify": False, "max_bucket_size": 2, "_MEDIUM_LIMIT": 3}, "jvm"),
-    ({"numpy_max_rows": 1}, "jvm"),
+    ({"_NUMPY_MAX_ROWS": 1}, "jvm"),
 ]
 
 
@@ -490,10 +490,7 @@ def test_min_eq_count_float_boundaries():
     alone over-requires at thresholds whose product rounds up in binary
     (0.07*100 = 7.000000000000001): a pair with exactly 7/100 equal
     positions DOES satisfy the JVM's 7/100 >= 0.07."""
-    from gaoya_spark.operators.minhash_lsh import (
-        _m_sure_bands,
-        _min_eq_count,
-    )
+    from gaoya_spark.operators.minhash_lsh import _min_eq_count
 
     for t, k, want in [(0.07, 100, 7), (0.5, 200, 100), (0.14, 100, 14),
                        (0.33, 3, 1), (1.0, 10, 10), (0.0, 10, 0)]:
@@ -502,21 +499,18 @@ def test_min_eq_count_float_boundaries():
         # definitional check: got passes, got-1 does not
         assert got / k >= t
         assert got == 0 or (got - 1) / k < t
-    for t, k, r in [(0.07, 100, 4), (0.5, 200, 4), (0.7, 222, 6)]:
-        m = _m_sure_bands(t, k, r)
-        assert (m * r) / k >= t
-        assert m == 0 or ((m - 1) * r) / k < t
 
 
 def test_numpy_verify_guards_fall_back_to_jvm(spark):
-    """A duplicated id gives two rows one sid. The numpy kernels look rows
-    up by sid, so they would substitute one row's signature for the
-    other; the sid-collision guard sends the table to the JVM shuffle
-    verify instead, which fans out both rows — the default route returns
-    exactly the forced JVM route's pairs. With keep_sim=True every row's
-    sim clears the threshold: id 1's last row shares no word with id 2,
-    and the bands the sid pair (1, 2) shares through id 1's first row
-    must not pass it."""
+    """A duplicated id: the numpy kernels name rows by index, so they
+    would pair the id with itself and score each of its rows on its own;
+    the duplicate-id guard sends the table to the JVM shuffle verify,
+    which joins every row of the id, and the default route returns
+    exactly the forced JVM route's rows. No route pairs id 1 with itself.
+    Every returned pair, with or without keep_sim, has a row pair that
+    clears the threshold: id 1's last row shares no word with id 2, and
+    the bands the sid pair (1, 2) shares through id 1's other rows must
+    not pass it."""
     cfg = MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
     lsh = MinHashLSH(cfg)
     rows = [(1, "a quick brown fox jumps over the lazy dog"),
@@ -526,15 +520,32 @@ def test_numpy_verify_guards_fall_back_to_jvm(spark):
     sigs = lsh.signatures(
         spark.createDataFrame(rows, "id long, text string"), "id", "text"
     ).cache()
-    jvm = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
-    auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
-    assert lsh.last_route == ("jvm", "sid collision")
-    assert auto == jvm and (1, 2) in jvm
+    by_id = {}
+    for r in sigs.collect():
+        by_id.setdefault(r["id"], []).append(list(r["sig"]))
+    k = cfg.num_hashes
+
+    def supported(a, b):
+        return sum(
+            sum(x == y for x, y in zip(sa, sb)) / k >= 0.5
+            for sa in by_id[a] for sb in by_id[b]
+        )
+
+    jvm_rows = _sorted_rows(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
+    auto_rows = _sorted_rows(lsh.dedup_pairs(sigs, keep_sim=False))
+    assert lsh.last_route == ("jvm", "duplicate id")
+    assert auto_rows == jvm_rows and (1, 2) in jvm_rows
+    assert all(a != b for a, b in jvm_rows)
+    # each returned copy of a pair is one supporting row pair
+    for pair in set(jvm_rows):
+        assert jvm_rows.count(pair) <= supported(*pair), (pair, jvm_rows)
     jvm_sim = _sorted_rows(lsh.dedup_pairs(sigs, numpy_verify=False))
     auto_sim = _sorted_rows(lsh.dedup_pairs(sigs))
-    assert lsh.last_route == ("jvm", "sid collision")
+    assert lsh.last_route == ("jvm", "duplicate id")
     assert auto_sim == jvm_sim and (1, 2, 1.0) in jvm_sim
-    assert all(r[2] >= 0.5 for r in jvm_sim)
+    assert all(r[0] != r[1] and r[2] >= 0.5 for r in jvm_sim)
+    assert [r[:2] for r in jvm_sim] == jvm_rows
+    sigs.unpersist()
 
 
 def test_arrow_bands_jvm_bands_same_pairs(spark, corpus5):
@@ -620,7 +631,7 @@ QUERY_CASES = {
         s, s.select("id").orderBy("id").limit(2), keep_sim=True), FITS),
     "dup_probe_id": ("long", None, lambda lsh, s: lsh.query(
         s, s.unionByName(s.where(F.col("id") == QUERY_IDS[2])), keep_sim=True,
-    ), ("jvm", "sid collision")),
+    ), ("jvm", "duplicate id")),
 }
 
 
@@ -680,15 +691,15 @@ def test_query_cap_excludes_bucket_on_both_routes(spark, monkeypatch):
 def test_broadcast_guard_boundary_identical_pairs(
     spark, corpus5, strategy, monkeypatch
 ):
-    """Pin the broadcast row bound below the corpus size THROUGH THE
-    PUBLIC API (numpy_max_rows): every route must fall back to (or stay
-    on) the JVM shuffle verify and produce the IDENTICAL pair set — the
-    silent-divergence class the guards exist to prevent."""
+    """Pin the broadcast row bound (_NUMPY_MAX_ROWS) below the corpus
+    size: every route must fall back to (or stay on) the JVM shuffle
+    verify and produce the IDENTICAL pair set — the silent-divergence
+    class the guards exist to prevent."""
     lsh, sigs = corpus5
     opts, _ = strategy
     jvm = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
     normal = _pair_set(_dedup(lsh, sigs, opts, monkeypatch))
-    guarded = _pair_set(_dedup(lsh, sigs, opts, monkeypatch, numpy_max_rows=1))
+    guarded = _pair_set(_dedup(lsh, sigs, opts, monkeypatch, _NUMPY_MAX_ROWS=1))
     assert lsh.last_route[0] == "jvm"
     assert guarded == normal == jvm and normal
 
@@ -710,7 +721,7 @@ def test_numpy_strategy_values_identical(spark, corpus5):
 def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
     """The default numpy_verify=True routes by size: a broadcast-fit
     table takes the band-sharded kernel; a table over the row bound
-    (numpy_max_rows) or far over the optimizer's size estimate takes the
+    (_NUMPY_MAX_ROWS) or far over the optimizer's size estimate takes the
     JVM shuffle verify. Every route returns the same pairs, and
     last_route names the route and the reason."""
     lsh, sigs = corpus5
@@ -720,7 +731,9 @@ def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
     assert lsh.last_route == ("broadcast", "fits broadcast")
     auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
     assert lsh.last_route == ("broadcast", "fits broadcast")
-    over_rows = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False, numpy_max_rows=1))
+    with monkeypatch.context() as mp:
+        mp.setattr(MinHashLSH, "_NUMPY_MAX_ROWS", 1)
+        over_rows = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
     assert lsh.last_route == ("jvm", "over row bound")
     # a byte budget far below the cached table's size estimate: the
     # estimate alone routes to the JVM verify, before any collect
@@ -728,6 +741,18 @@ def test_auto_route_by_size_falls_back_quietly(spark, corpus5, monkeypatch):
     over_est = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
     assert lsh.last_route == ("jvm", "over size estimate")
     assert auto == over_rows == over_est == jvm and jvm
+
+
+def test_broadcast_dedup_plan_has_one_python_stage(spark, corpus5):
+    """The band-sharded kernel emits id pairs itself: the optimized plan
+    of dedup_pairs(keep_sim=False) on the broadcast route holds exactly
+    one MapInPandas, and no second Python stage maps surrogates back to
+    ids."""
+    lsh, sigs = corpus5
+    out = lsh.dedup_pairs(sigs, keep_sim=False)
+    assert lsh.last_route == ("broadcast", "fits broadcast")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("MapInPandas") == 1, plan
 
 
 CHAIN = _chain_rows(7)
@@ -839,7 +864,7 @@ def _counted_sigs(spark, sigs):
     ({}, "broadcast"),
     ({"_FLUSH_PAIRS": 1}, "broadcast"),
     ({"numpy_verify": False}, "jvm"),
-    ({"numpy_max_rows": 1}, "jvm"),
+    ({"_NUMPY_MAX_ROWS": 1}, "jvm"),
 ])
 def test_uncached_signatures_computed_once(
     spark, corpus5, strategy, route, monkeypatch
@@ -875,7 +900,7 @@ def test_size_estimate_trusted_only_where_it_measures(
     lsh, sigs = corpus5
 
     def est(df):
-        return lsh._size_estimate(df.select(sid_col(df).alias("sid"), "sig", "id"))
+        return lsh._size_estimate(df.select("id", "sig"))
 
     sigs.write.parquet(str(tmp_path / "sigs"))
     sigs.withColumn("pad", F.lit("x")).write.parquet(str(tmp_path / "padded"))

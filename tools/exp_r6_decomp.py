@@ -4,8 +4,8 @@ plus the full strategies, interleaved in one session (EXPERIMENTS.md
 protocol: host drifts, only same-session interleaved MINs are compared).
 
 Stages:
-  bands      : _sid_bands_arrow noop (Arrow band kernel over cached sigs)
-  buckets    : banding + groupBy(bk) collect_list, size>=2, noop
+  bands      : sid_bands noop (Arrow band kernel over cached sigs)
+  buckets    : banding + groupBy(bk) collect_set, size>=2, noop
   cand_agg   : full candidate set (src, dst, m) count
   bcast      : _build_sig_broadcast (eager driver collect + broadcast)
   np         : full dedup_pairs(keep_sim=False).count()   [bench path]
@@ -62,13 +62,13 @@ def main() -> None:
     sigs.count()
 
     def bands():
-        return noop(mh._sid_bands_arrow(sigs))
+        return noop(mh.sid_bands(sigs))
 
     def buckets():
         b = (
-            mh._sid_bands_arrow(sigs)
+            mh.sid_bands(sigs)
             .groupBy("bk")
-            .agg(F.array_sort(F.collect_list("sid")).alias("ids"))
+            .agg(F.array_sort(F.collect_set("sid")).alias("ids"))
             .where(F.size("ids") >= 2)
         )
         return noop(b)
@@ -78,7 +78,8 @@ def main() -> None:
 
     def bcast():
         bc, _ = mh._build_sig_broadcast(sigs, 2_000_000)
-        n = len(bc.value[0])
+        _, ids = bc.value
+        n = len(ids)
         bc.destroy()
         return n
 
