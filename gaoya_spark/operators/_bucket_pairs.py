@@ -18,13 +18,15 @@ _MEDIUM_LIMIT then use the same array combinatorics, and only genuinely
 huge buckets are exploded back to rows and triangle-blocked via an
 equi-join, which spreads one bucket's pair generation across
 _BLOCK_GROUPS reducers. Buckets beyond drop_cap (the all-identical-key
-pathology at 10^12 scale) are excluded — callers record the count via
-their stats helpers (band_stats / gram_stats), never silently.
+pathology at 10^12 scale) are excluded — each operator passes its own
+array-tier and cap constants, and its stats helper (band_stats,
+bucket_stats, gram_stats, ngram_shingle_stats, rp_bucket_stats) counts
+the buckets over them on the same members, never silently.
 
 The upper tiers' shape is this module's policy, not a caller's option:
 _MEDIUM_LIMIT and _BLOCK_GROUPS are read at call time, and the bucket
 arrays are always persisted. Callers choose only array_bucket_limit and
-drop_cap.
+drop_cap, from their own module constants.
 
 The id surrogate ("sid") is made here and nowhere else: sid_col builds it
 from an id column, attach_ids puts the ids back on sid pairs. Integral ids
@@ -108,10 +110,10 @@ def triangle_block_pairs(sets: DataFrame) -> DataFrame:
     columns (e.g. nb), spread over _BLOCK_GROUPS x _BLOCK_GROUPS blocks so
     no task pairs a whole huge bucket. Members explode to rows keyed by
     the set's 128-bit identity hb (two independently seeded xxhash64
-    words: a collision would merge two sets and inflate m, breaking the
-    sim >= m/b lower bound, so hb gets the same 128-bit treatment as the
-    substring gram fingerprints). One emission per set, so m stays exact
-    across tiers."""
+    words: a collision would merge two sets and inflate m, and
+    ngram_jaccard_pairs reads m as a pair's exact shingle intersection
+    count, so hb gets the same 128-bit treatment as the substring gram
+    fingerprints). One emission per set, so m stays exact across tiers."""
     rest = [c for c in sets.columns if c != "ids"]
     hot = sets.select(
         F.struct(
@@ -274,7 +276,8 @@ def sid_pairs_from_buckets(
       - <= drop_cap: collapse + triangle blocking across _BLOCK_GROUPS
         reducers — bounded per-task work for genuinely huge buckets.
       - > drop_cap: excluded; callers record the count via their stats
-        helpers (band_stats / gram_stats), never silently.
+        helpers (band_stats / gram_stats / ngram_shingle_stats), which
+        count a bucket's distinct non-null sids as this function does.
     """
     # a sid is a member of a bucket once (collect_set), however many of
     # its rows hold the key: a duplicated id forms no (s, s) pair and m

@@ -25,6 +25,13 @@ from gaoya_spark.config import SimHashConfig
 from gaoya_spark.operators._bucket_pairs import sid_col, sid_cross_pairs_from_buckets
 from gaoya_spark.operators.simhash_lsh import SimHashLSH
 
+# rp_lsh_topk's bucket limits: a bucket whose probe x index product is
+# within _ARRAY_LIMIT^2 is cross-paired by array combinatorics (larger ones
+# take the collapsed upper tiers), and a bucket whose index side holds more
+# than _BUCKET_CAP rows is excluded; rp_bucket_stats counts those
+_ARRAY_LIMIT = 256
+_BUCKET_CAP = 100_000
+
 
 def cosine_col(a, b) -> F.Column:
     """Exact cosine between two array<float|double> columns, JVM-side."""
@@ -84,7 +91,6 @@ def rp_lsh_topk(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     k: int = 5, dim: int = 64, nbits: int = 64, num_blocks: int = 8,
     max_distance: int = 4, seed: int = 17, probes: DataFrame | None = None,
-    max_bucket_size: int = 256, bucket_cap_hard: int = 100_000,
 ) -> DataFrame:
     """LSH-bucketed ANN: random-hyperplane signature -> Hamming-ball
     candidates (pigeonhole-complete within the ball) -> exact cosine rerank.
@@ -94,11 +100,11 @@ def rp_lsh_topk(
     (_bucket_pairs.sid_cross_pairs_from_buckets), same as minhash/simhash
     queries: one groupBy over the side-tagged (sid, tk) rows of
     SimHashLSH.sid_tables (null-id rows have none), JVM array
-    cross products, hot buckets (> max_bucket_size — e.g. a constant or
+    cross products, hot buckets (over _ARRAY_LIMIT — e.g. a constant or
     near-zero embedding repeated across the corpus hashing every copy to
-    one sign pattern) triangle-blocked, buckets beyond bucket_cap_hard
-    excluded. Use rp_bucket_stats with the same parameters to record
-    hot/dropped bucket counts — the cap is never silent."""
+    one sign pattern) block-joined, buckets whose index side is over
+    _BUCKET_CAP excluded. rp_bucket_stats with the same signature
+    parameters counts the excluded buckets — the cap is never silent."""
     cfg = SimHashConfig(nbits=nbits, num_blocks=num_blocks, max_distance=max_distance)
     lsh = SimHashLSH(cfg)
     udf = _rp_signature_udf(dim, nbits, seed)
@@ -116,7 +122,7 @@ def rp_lsh_topk(
     qm = lsh.sid_tables(probe.select(F.col("qid").alias("id"), "sig"))
     cand = sid_cross_pairs_from_buckets(
         qm.withColumnRenamed("tk", "bk"), im.withColumnRenamed("tk", "bk"),
-        array_bucket_limit=max_bucket_size, drop_cap=bucket_cap_hard,
+        array_bucket_limit=_ARRAY_LIMIT, drop_cap=_BUCKET_CAP,
     )
     # the vectors ride the sid -> id joins
     pmap = probe.select(sid_col(probe, "qid").alias("sq"), "qid", "v_qid")
@@ -140,18 +146,19 @@ def rp_bucket_stats(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     dim: int = 64, nbits: int = 64, num_blocks: int = 8,
     max_distance: int = 4, seed: int = 17,
-    max_bucket_size: int | None = 256,
 ) -> DataFrame:
-    """Per-table bucket occupancy stats for the rp_lsh_topk index (n_hot
-    via max_bucket_size) — the recorded-skew companion of the candidate
-    cap, delegating to SimHashLSH.bucket_stats over the same signatures."""
+    """Per-table bucket occupancy stats for the rp_lsh_topk index of df
+    (SimHashLSH.bucket_stats' columns over the same signatures and table
+    keys): n_dropped counts the buckets holding more than _BUCKET_CAP
+    index rows, the ones rp_lsh_topk excludes — the recorded-skew
+    companion of the candidate cap."""
     cfg = SimHashConfig(nbits=nbits, num_blocks=num_blocks, max_distance=max_distance)
     lsh = SimHashLSH(cfg)
     udf = _rp_signature_udf(dim, nbits, seed)
     sig_df = df.select(
         F.col(id_col).alias("id"), udf(F.col(vec_col)).alias("sig")
     )
-    return lsh.bucket_stats(sig_df, max_bucket_size=max_bucket_size)
+    return lsh._table_stats(sig_df, _BUCKET_CAP)
 
 
 def _kmeans_fit(sample: np.ndarray, n_cells: int, seed: int, iters: int = 12,

@@ -30,18 +30,17 @@ Scale notes (100TB / 10^12 rows):
   pairs are generated by JVM-side array combinatorics (no self-join, no
   dropDuplicates): measured 2.5x faster end-to-end than the former
   sizes-groupBy + broadcast-tag + self-join + dropDuplicates plan at both
-  local[8] and local[32]. Collecting is safe because buckets beyond
-  `max_bucket_size` never expand to arrays-of-pairs in a single task:
-- hot buckets (> max_bucket_size members) fall back to triangle blocking:
-  members are exploded back to rows, split into g groups, and pairs are
-  generated per group-pair block via an equi-join — exact (no lost pairs,
-  one emission per band), and each block is bounded. Buckets larger than
-  `bucket_cap_hard` (pathological keys, e.g. the all-empty-caption bucket
-  at 10^12 scale) are excluded from pairing; `band_stats` with thresholds
-  reports hot/dropped bucket counts for the pipeline metrics tables.
+  local[8] and local[32]. Collecting is safe because a bucket over
+  `_ARRAY_LIMIT` members never expands to an array of pairs in a single
+  task: _bucket_pairs collapses identical member sets and triangle-blocks
+  the hot ones. A bucket over `_BUCKET_CAP` members (pathological keys,
+  e.g. the all-empty-caption bucket at 10^12 scale) is excluded from
+  pairing on every route of dedup_pairs and query; `band_stats` counts
+  the hot (n_hot) and the excluded (n_dropped) buckets at these same two
+  constants for the pipeline metrics tables.
 - every pair is emitted exactly once per matching band, so the post-union
-  groupBy yields m = #matching-bands per pair (free skew/selectivity
-  metric; also an exact sim lower bound: m matching bands => sim >= m/b).
+  groupBy yields m = #matching-bands per pair, a free skew/selectivity
+  metric. No route filters on m: the verify scores every candidate.
 """
 
 from __future__ import annotations
@@ -340,63 +339,63 @@ class MinHashLSH:
         return df.select(F.col(id_col).alias("id"), sig.alias("sig"))
 
     # ----------------------------------------------------------------- bands
-    def bands(self, sig_df: DataFrame, id_col: str = "id") -> DataFrame:
-        """(id, band_idx, band_hash): one row per band, fully JVM-side.
+    # largest band bucket the JVM route pairs per bucket instance by array
+    # combinatorics; larger ones take _bucket_pairs' collapsed upper tiers
+    _ARRAY_LIMIT = 16
 
-        band_hash = xxhash64(slice(sig, band*r, r), band_idx) — seeding with
-        band_idx keeps identical slices in different bands in distinct key
-        spaces, mirroring per-band hash tables.
-        """
+    # largest band bucket any route pairs: dedup_pairs drops a bucket of
+    # more members and query a band key of more index rows, on both
+    # routes, and band_stats counts the dropped buckets at this same cap
+    _BUCKET_CAP = 100_000
+
+    def _band_hashes(self):
+        """The b band keys of a row's sig as an array column, JVM-side:
+        xxhash64(slice(sig, band*r, r), band_idx). Seeding with band_idx
+        keeps identical slices in different bands in distinct key spaces,
+        mirroring per-band hash tables."""
         b, r = self.cfg.num_bands, self.cfg.band_width
-        hashes = F.transform(
+        return F.transform(
             F.sequence(F.lit(0), F.lit(b - 1)),
             lambda i: F.xxhash64(F.slice("sig", i * r + 1, r), i),
         )
-        return sig_df.select(
-            F.col(id_col).alias("id"),
-            F.posexplode(hashes).alias("band_idx", "band_hash"),
-        )
 
-    def band_stats(
-        self,
-        bands_df: DataFrame,
-        max_bucket_size: int | None = None,
-        bucket_cap_hard: int | None = None,
-    ) -> DataFrame:
-        """Per-band skew metrics. When the candidate-generation thresholds
-        are passed, also reports n_hot (triangle-blocked) and n_dropped
-        (excluded by bucket_cap_hard) bucket counts — the pipeline writes
-        this to metrics_band_skew, so capped buckets are never silent."""
-        bucket = bands_df.groupBy("band_idx", "band_hash").agg(
-            F.count("*").alias("bucket_size")
+    def band_stats(self, sig_df: DataFrame) -> DataFrame:
+        """Per-band skew of sig_df's banding: (band_idx, n_buckets,
+        max_bucket, avg_bucket, n_hot, n_dropped), where n_hot counts the
+        buckets over _ARRAY_LIMIT (the JVM route's collapsed tiers) and
+        n_dropped those over _BUCKET_CAP (excluded from pairing on every
+        route). A bucket's size is its number of distinct non-null ids,
+        the members dedup_pairs pairs. The pipeline writes this to
+        metrics_band_skew, so capped buckets are never silent.
+
+        The keys are the JVM banding (_band_hashes), so the stats need
+        no Python stage; the Arrow keys of sid_bands, which the routes
+        group, put the same rows in one bucket, up to key collisions."""
+        bucket = (
+            sig_df.where(F.col("id").isNotNull())
+            .select(
+                sid_col(sig_df).alias("sid"),
+                F.posexplode(self._band_hashes()).alias("band_idx", "bk"),
+            )
+            .groupBy("band_idx", "bk")
+            .agg(F.countDistinct("sid").alias("bucket_size"))
         )
-        aggs = [
+        size = F.col("bucket_size")
+        return bucket.groupBy("band_idx").agg(
             F.count("*").alias("n_buckets"),
-            F.max("bucket_size").alias("max_bucket"),
-            F.avg("bucket_size").alias("avg_bucket"),
-        ]
-        if max_bucket_size is not None:
-            aggs.append(
-                F.sum((F.col("bucket_size") > max_bucket_size).cast("long")).alias("n_hot")
-            )
-        if bucket_cap_hard is not None:
-            aggs.append(
-                F.sum((F.col("bucket_size") > bucket_cap_hard).cast("long")).alias("n_dropped")
-            )
-        return bucket.groupBy("band_idx").agg(*aggs)
+            F.max(size).alias("max_bucket"),
+            F.avg(size).alias("avg_bucket"),
+            F.sum((size > self._ARRAY_LIMIT).cast("long")).alias("n_hot"),
+            F.sum((size > self._BUCKET_CAP).cast("long")).alias("n_dropped"),
+        )
 
     # ----------------------------------------------------------- dedup pairs
     def _sid_bands(self, sig_df: DataFrame) -> DataFrame:
-        """(sid, bk) via JVM xxhash64 of each band slice, seeded by the band
-        index. No route uses it: it is the independent reference the
-        Arrow banding (sid_bands) is tested against."""
-        b, r = self.cfg.num_bands, self.cfg.band_width
-        hashes = F.transform(
-            F.sequence(F.lit(0), F.lit(b - 1)),
-            lambda i: F.xxhash64(F.slice("sig", i * r + 1, r), i),
-        )
+        """(sid, bk) via the JVM banding (_band_hashes). No route uses it:
+        it is the independent reference the Arrow banding (sid_bands) is
+        tested against."""
         return sig_df.where(F.col("id").isNotNull()).select(
-            sid_col(sig_df).alias("sid"), F.explode(hashes).alias("bk")
+            sid_col(sig_df).alias("sid"), F.explode(self._band_hashes()).alias("bk")
         )
 
     def sid_bands(self, sig_df: DataFrame) -> DataFrame:
@@ -438,33 +437,22 @@ class MinHashLSH:
             .mapInPandas(kernel, "sid long, bk long")
         )
 
-    def sid_candidates(
-        self,
-        sig_df: DataFrame,
-        max_bucket_size: int = 16,
-        bucket_cap_hard: int = 100_000,
-    ) -> DataFrame:
+    def sid_candidates(self, sig_df: DataFrame) -> DataFrame:
         """(src, dst, m) candidate pairs in sid space, m = #matching bands
         (shared machinery: operators/_bucket_pairs.py), banded by the
-        vectorized Arrow kernel (sid_bands). Buckets over
-        max_bucket_size take the collapsed upper tiers; buckets >
-        bucket_cap_hard are excluded — band_stats records hot/dropped
-        counts."""
+        vectorized Arrow kernel (sid_bands). Buckets over _ARRAY_LIMIT
+        take the collapsed upper tiers; buckets over _BUCKET_CAP are
+        excluded, and band_stats counts both."""
         return sid_pairs_from_buckets(
             self.sid_bands(sig_df),
-            array_bucket_limit=max_bucket_size,
-            drop_cap=bucket_cap_hard,
+            array_bucket_limit=self._ARRAY_LIMIT,
+            drop_cap=self._BUCKET_CAP,
         )
 
-    def candidate_pairs(
-        self,
-        sig_df: DataFrame,
-        max_bucket_size: int = 16,
-        bucket_cap_hard: int = 100_000,
-    ) -> DataFrame:
+    def candidate_pairs(self, sig_df: DataFrame) -> DataFrame:
         """All-corpus candidate pairs (src < dst by id value), deduped across
         bands — public id-space wrapper over sid_candidates."""
-        cand = self.sid_candidates(sig_df, max_bucket_size, bucket_cap_hard)
+        cand = self.sid_candidates(sig_df)
         return attach_ids(cand.select("src", "dst"), sig_df)
 
     # byte budget for the numpy routes' broadcast signature matrix:
@@ -485,12 +473,6 @@ class MinHashLSH:
     # concurrent tasks. Sharding the probe instead would rescan the index
     # once per shard.
     _PROBE_MAX_KEYS = 2_000_000
-
-    # query's bucket cap: a band key whose index side holds more than this
-    # many band rows matches no probe. Both query routes read it (the JVM
-    # route as sid_cross_pairs_from_buckets' drop_cap, the broadcast probe
-    # in its key count), so they cannot diverge.
-    _QUERY_DROP_CAP = 100_000
 
     # auto routing skips the broadcast build when the trusted size
     # estimate (see _size_estimate) is over this many budgets. Measured
@@ -625,11 +607,6 @@ class MinHashLSH:
             sig_df.unpersist()
         return bc, None
 
-    # the bucket-tier keywords dedup_pairs accepts through **kw: the
-    # sid_candidates knobs. Both routes read bucket_cap_hard;
-    # max_bucket_size shapes only the JVM route's bucket tiers
-    _TIER_KW = frozenset({"max_bucket_size", "bucket_cap_hard"})
-
     # pairs one numpy kernel flush generates and verifies (the sharded
     # dedup and the broadcast probe): bounds the per-pair index, code and
     # bool arrays a flush holds, a few tens of bytes a pair
@@ -640,7 +617,6 @@ class MinHashLSH:
         sig_df: DataFrame,
         threshold: float,
         keep_sim: bool,
-        kw: dict,
     ) -> DataFrame | None:
         """The broadcast route of dedup_pairs, or None when a guard of
         _build_sig_broadcast trips and the JVM shuffle verify must run
@@ -653,9 +629,8 @@ class MinHashLSH:
         deduplicated. The repartition is reused by the dropDuplicates
         groupBy (no second exchange) and keeps it at defaultParallelism
         tasks: a cached or non-AQE plan otherwise keeps the
-        spark.sql.shuffle.partitions default. Of the tier
-        knobs only bucket_cap_hard applies: every bucket is verified in
-        numpy, whatever its size. With keep_sim the kernel's equal counts
+        spark.sql.shuffle.partitions default. Every bucket of 2.._BUCKET_CAP
+        members is verified in numpy, whatever its size. With keep_sim the kernel's equal counts
         ride along as eq, and sim = eq/k is the JVM verify's arithmetic
         (minhash_similarity_packed), so the sims are bit-equal.
 
@@ -674,7 +649,7 @@ class MinHashLSH:
         k = self.cfg.num_hashes
         kernel = _sharded_dedup_fn(
             bc, _min_eq_count(threshold, k), b, r, n_tasks,
-            kw.get("bucket_cap_hard", 100_000), self._FLUSH_PAIRS, keep_sim,
+            self._BUCKET_CAP, self._FLUSH_PAIRS, keep_sim,
         )
         id_sql = sig_df.schema["id"].dataType.simpleString()
         eq = ", eq long" if keep_sim else ""
@@ -696,7 +671,6 @@ class MinHashLSH:
         threshold: float | None = None,
         keep_sim: bool = True,
         numpy_verify: bool = True,
-        **kw,
     ) -> DataFrame:
         """Full-corpus near-duplicate pairs with sim >= threshold (Q2 uses
         >=, minhash_index.rs:556).
@@ -734,27 +708,24 @@ class MinHashLSH:
         either way. A band count cannot stand in for the score: it counts
         the bands a sid pair shares, and a duplicated id (the table the
         duplicate-id guard sends to this route) joins every row of its
-        sid, so it would pass row pairs whose own sim is below t.
+        sid, so it would pass row pairs whose own sim is below t. Several
+        row pairs of one id pair may clear t; the pair is returned once,
+        with the largest of their sims.
 
-        **kw takes the bucket-tier knobs of sid_candidates
-        (max_bucket_size, bucket_cap_hard); any other keyword raises
-        TypeError on every route. Both routes drop buckets over
-        bucket_cap_hard; max_bucket_size is read only by the JVM route."""
-        unknown = sorted(set(kw) - self._TIER_KW)
-        if unknown:
-            raise TypeError(f"dedup_pairs() got unexpected keyword arguments {unknown}")
+        Both routes drop band buckets over _BUCKET_CAP members; the
+        bucket limits are class constants, not arguments."""
         if not isinstance(numpy_verify, bool):
             raise TypeError(f"numpy_verify must be a bool, got {numpy_verify!r}")
         t = self.cfg.threshold if threshold is None else threshold
         if not numpy_verify:
             self.last_route = ("jvm", "requested")
         else:
-            out = self._broadcast_dedup(sig_df, t, keep_sim, kw)
+            out = self._broadcast_dedup(sig_df, t, keep_sim)
             if out is not None:
                 return out
         if not is_materialized(sig_df):
             sig_df = sig_df.persist()
-        cand = self.sid_candidates(sig_df, **kw)
+        cand = self.sid_candidates(sig_df)
         k = self.cfg.num_hashes
         # signatures ride the verify joins packed two-per-long: half the
         # broadcast build bytes, half the kernel elements (similarity.py)
@@ -768,7 +739,7 @@ class MinHashLSH:
         vb = s.select(
             F.col("sid").alias("dst"), F.col("id").alias("dst_id"), F.col("psig").alias("pb")
         )
-        return (
+        pairs = (
             cand.join(va, "src")
             .join(vb, "dst")
             .withColumn("sim", minhash_similarity_packed("pa", "pb", k, self.cfg.hash_size))
@@ -779,6 +750,10 @@ class MinHashLSH:
                 *(["sim"] if keep_sim else []),
             )
         )
+        # one row per id pair: a duplicated id joins every row of its sid
+        if keep_sim:
+            return pairs.groupBy("src", "dst").agg(F.max("sim").alias("sim"))
+        return pairs.distinct()
 
     # ----------------------------------------------------------------- query
     def query(
@@ -843,7 +818,7 @@ class MinHashLSH:
         again and drops the cache.
 
         Both routes exclude a band key whose index side holds more than
-        _QUERY_DROP_CAP band rows, counted over index_sigs' banding, and
+        _BUCKET_CAP band rows, counted over index_sigs' banding, and
         return the same matches. One input tells them apart: an index
         holding one id twice with different signatures. The JVM route
         scores every row of that id once any of them shares a band with
@@ -890,7 +865,7 @@ class MinHashLSH:
                 rows.join(F.broadcast(keys), "bk", "left_semi")
                 .groupBy("bk")
                 .count()
-                .where(F.col("count") > self._QUERY_DROP_CAP)
+                .where(F.col("count") > self._BUCKET_CAP)
                 .toArrow()
             )
             excluded = over.column("bk").to_numpy()
@@ -914,7 +889,7 @@ class MinHashLSH:
         cand = sid_cross_pairs_from_buckets(
             self.sid_bands(probe_sigs),
             self.sid_bands(index_sigs),
-            drop_cap=self._QUERY_DROP_CAP,
+            drop_cap=self._BUCKET_CAP,
         )
         k = self.cfg.num_hashes
         qs = probe_sigs.select(

@@ -71,7 +71,7 @@ class SimHashLSH:
 
     # largest bucket dedup_pairs / candidate_pairs pair at all: larger
     # ones (the all-empty-caption pathology at web scale) are excluded,
-    # and bucket_stats(max_bucket_size=BUCKET_CAP) counts them
+    # and bucket_stats counts them
     BUCKET_CAP = 4096
 
     def __init__(self, cfg: SimHashConfig | None = None):
@@ -116,39 +116,16 @@ class SimHashLSH:
             return hamming_distance_col(a[0], b[0]) + hamming_distance_col(a[1], b[1])
         return hamming_distance_col(a, b)
 
-    def tables(self, sig_df: DataFrame, id_col: str = "id") -> DataFrame:
-        """(id, table_idx, key): key = sig & mask per enumerated mask —
-        the Hamming-ball bucketing, fully JVM-side. For 128-bit signatures
-        the key is xxhash64 of both masked words (an 8-byte key either way;
-        cross-key collisions only add candidates, removed by the exact
-        distance filter)."""
-        if self._wide:
-            keys = F.array(*[
-                F.xxhash64(
-                    F.col("sig")[0].bitwiseAND(F.lit(lo)),
-                    F.col("sig")[1].bitwiseAND(F.lit(hi)),
-                )
-                for lo, hi in self._mask_words()
-            ])
-        else:
-            mask_arr = F.array(*[F.lit(_to_i64(m)) for m in self.masks])
-            keys = F.transform(mask_arr, lambda m: F.col("sig").bitwiseAND(m))
-        return sig_df.select(
-            F.col(id_col).alias("id"),
-            F.col("sig"),
-            F.posexplode(keys).alias("table_idx", "key"),
-        ).select("id", "table_idx", "key")
-
     # ----------------------------------------------------------- dedup pairs
-    def _sid_tables(self, sig_df: DataFrame) -> DataFrame:
-        """(sid, sig, tk): the id surrogate (sid_col), the signature
-        itself, and one 8-byte table key per enumerated mask (tk = xxhash64
-        of the masked signature seeded by the table index — one long key
-        instead of (table_idx, key), exactly like the MinHash band key; a
-        cross-table collision only adds a candidate, and candidates are
-        distance-checked exactly). Null-id rows have no table row."""
+    def _table_keys(self):
+        """One 8-byte table key per enumerated mask as an array column:
+        xxhash64 of the masked signature (both masked words for 128-bit
+        signatures) seeded by the table index — one long key instead of
+        (table_idx, key), exactly like the MinHash band key. A cross-table
+        collision only adds a candidate, and candidates are
+        distance-checked exactly."""
         if self._wide:
-            keys = F.array(*[
+            return F.array(*[
                 F.xxhash64(
                     F.col("sig")[0].bitwiseAND(F.lit(lo)),
                     F.col("sig")[1].bitwiseAND(F.lit(hi)),
@@ -156,13 +133,17 @@ class SimHashLSH:
                 )
                 for i, (lo, hi) in enumerate(self._mask_words())
             ])
-        else:
-            keys = F.array(*[
-                F.xxhash64(F.col("sig").bitwiseAND(F.lit(_to_i64(m))), F.lit(i))
-                for i, m in enumerate(self.masks)
-            ])
+        return F.array(*[
+            F.xxhash64(F.col("sig").bitwiseAND(F.lit(_to_i64(m))), F.lit(i))
+            for i, m in enumerate(self.masks)
+        ])
+
+    def _sid_tables(self, sig_df: DataFrame) -> DataFrame:
+        """(sid, sig, tk): the id surrogate (sid_col), the signature
+        itself, and one row per table key (_table_keys). Null-id rows have
+        no table row."""
         return sig_df.where(F.col("id").isNotNull()).select(
-            sid_col(sig_df).alias("sid"), "sig", F.explode(keys).alias("tk")
+            sid_col(sig_df).alias("sid"), "sig", F.explode(self._table_keys()).alias("tk")
         )
 
     def _sid_dist_pairs(
@@ -176,7 +157,7 @@ class SimHashLSH:
         expand via JVM array combinatorics; (_ARRAY_LIMIT, BUCKET_CAP]
         fall back to the triangle-block join; larger buckets (the
         all-empty-caption pathology at web scale) are excluded —
-        bucket_stats(max_bucket_size=BUCKET_CAP) records how many."""
+        bucket_stats records how many."""
         buckets = (
             self._sid_tables(sig_df)
             .groupBy("tk")
@@ -219,29 +200,31 @@ class SimHashLSH:
         cand = self._sid_dist_pairs(sig_df)
         return attach_ids(cand.select("src", "dst"), sig_df)
 
-    def bucket_stats(
-        self,
-        sig_df: DataFrame,
-        max_bucket_size: int | None = None,
-    ) -> DataFrame:
-        """C5/O9: avg/max bucket occupancy per table — skew metrics. With
-        max_bucket_size, also counts buckets the dedup path excluded
-        (n_dropped), so the cap is recorded, never silent."""
-        t = self.tables(sig_df)
-        aggs = [
-            F.count("*").alias("n_buckets"),
-            F.avg("n").alias("avg_bucket"),
-            F.max("n").alias("max_bucket"),
-        ]
-        if max_bucket_size is not None:
-            aggs.append(
-                F.sum((F.col("n") > max_bucket_size).cast("long")).alias("n_dropped")
-            )
+    def bucket_stats(self, sig_df: DataFrame) -> DataFrame:
+        """C5/O9: per-table skew of sig_df's table keys — (table_idx,
+        n_buckets, avg_bucket, max_bucket, n_dropped), n_dropped counting
+        the buckets over BUCKET_CAP that dedup_pairs and candidate_pairs
+        exclude, so the cap is recorded, never silent."""
+        return self._table_stats(sig_df, self.BUCKET_CAP)
+
+    def _table_stats(self, sig_df: DataFrame, cap: int) -> DataFrame:
+        """bucket_stats with n_dropped counted over cap. A bucket's size
+        is its member rows with a non-null id, grouped by the table keys
+        of _sid_tables: the members _sid_dist_pairs and
+        sid_cross_pairs_from_buckets count against their caps."""
+        size = F.col("n")
         return (
-            t.groupBy("table_idx", "key")
+            sig_df.where(F.col("id").isNotNull())
+            .select(F.posexplode(self._table_keys()).alias("table_idx", "tk"))
+            .groupBy("table_idx", "tk")
             .agg(F.count("*").alias("n"))
             .groupBy("table_idx")
-            .agg(*aggs)
+            .agg(
+                F.count("*").alias("n_buckets"),
+                F.avg(size).alias("avg_bucket"),
+                F.max(size).alias("max_bucket"),
+                F.sum((size > cap).cast("long")).alias("n_dropped"),
+            )
         )
 
     def dedup_pairs(self, sig_df: DataFrame, max_distance: int | None = None) -> DataFrame:

@@ -15,8 +15,8 @@ match contains an L-length window). So the Spark-first scale path is:
      content-addressable storage, and why the default needs no re-check;
   3. candidate pairs via the shared bucket machinery (_bucket_pairs.py):
      one groupBy on the fingerprint + JVM array combinatorics, hot grams
-     triangle-blocked, boilerplate grams beyond the cap dropped with a
-     gram_stats metric;
+     triangle-blocked, boilerplate grams beyond _BUCKET_CAP dropped and
+     counted by gram_stats;
   4. optional verification for callers that want literal string equality:
      verify="grams" re-checks candidates with arrays_overlap on the TRUE
      L-gram string arrays (JVM, no Python); verify="lcs" attaches the exact
@@ -47,6 +47,10 @@ from gaoya_spark.operators._bucket_pairs import (
 # largest gram bucket candidate_gram_pairs pairs per bucket instance by
 # array combinatorics; larger ones take _bucket_pairs' collapsed tiers
 _ARRAY_LIMIT = 512
+
+# largest gram bucket candidate_gram_pairs pairs at all: a gram shared by
+# more docs (boilerplate at web scale) is dropped, and gram_stats counts it
+_BUCKET_CAP = 10_000
 
 
 def longest_common_substring_len(a: str, b: str) -> int:
@@ -115,18 +119,6 @@ def _gram_strings(text_col, min_len: int):
     )
 
 
-def _gram_hashes(text_col, min_len: int):
-    """Distinct xxhash64 values of all L-grams of the column — JVM-side."""
-    n_positions = F.length(text_col) - F.lit(min_len - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n_positions, F.lit(1))),
-        lambda i: F.xxhash64(text_col.substr(i, F.lit(min_len))),
-    )
-    return F.when(n_positions >= 1, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<bigint>")
-    )
-
-
 def _gram_fp128_sorted(text_col, min_len: int):
     """SORTED (duplicates kept) 128-bit L-gram fingerprints: struct of two
     independently seeded xxhash64 words — JVM-side. Callers dedupe with an
@@ -148,17 +140,11 @@ def _gram_fp128_sorted(text_col, min_len: int):
     )
 
 
-def candidate_gram_pairs(
-    df: DataFrame, id_col: str, text_col: str, min_len: int = 24,
-    max_gram_bucket: int = 10_000,
-) -> DataFrame:
-    """(src, dst) pairs sharing >=1 exact L-gram (by 128-bit gram
-    fingerprint), deduped. Grams shared by more than max_gram_bucket docs
-    (boilerplate at web scale) are dropped — surfaced via gram_stats, never
-    silently at default settings for tests. Docs travel as sid_col
-    surrogates and attach_ids puts the ids back: a cast for integral ids,
-    otherwise two joins (at web scale, two shuffles of every candidate
-    row). Null-id docs are in no pair."""
+def _gram_members(df: DataFrame, id_col: str, text_col: str, min_len: int) -> DataFrame:
+    """(sid, bk) bucket membership rows of the gram join: one row per
+    distinct 128-bit L-gram fingerprint of each doc with a non-null id,
+    next to sid_col's surrogate of the id. Texts shorter than min_len
+    have no row."""
     has_len = df.where(
         (F.length(text_col) >= min_len) & F.col(id_col).isNotNull()
     )
@@ -173,16 +159,28 @@ def candidate_gram_pairs(
         F.col("gs"),
         lambda x, i: (i == F.lit(0)) | ~(x == F.element_at(F.col("gs"), i)),
     )
-    members = gs.select("sid", F.explode(dedup).alias("bk"))
+    return gs.select("sid", F.explode(dedup).alias("bk"))
+
+
+def candidate_gram_pairs(
+    df: DataFrame, id_col: str, text_col: str, min_len: int = 24,
+) -> DataFrame:
+    """(src, dst) pairs sharing >=1 exact L-gram (by 128-bit gram
+    fingerprint), deduped. Grams shared by more than _BUCKET_CAP docs
+    (boilerplate at web scale) are dropped, and gram_stats counts them.
+    Docs travel as sid_col surrogates and attach_ids puts the ids back: a
+    cast for integral ids, otherwise two joins (at web scale, two
+    shuffles of every candidate row). Null-id docs are in no pair."""
     cand = sid_pairs_from_buckets(
-        members, array_bucket_limit=_ARRAY_LIMIT, drop_cap=max_gram_bucket
+        _gram_members(df, id_col, text_col, min_len),
+        array_bucket_limit=_ARRAY_LIMIT, drop_cap=_BUCKET_CAP,
     )
     return attach_ids(cand.select("src", "dst"), df, id_col)
 
 
 def substring_pairs(
     df: DataFrame, id_col: str, text_col: str, min_len: int = 24,
-    verify: str | bool = "fp128", **kw,
+    verify: str = "fp128",
 ) -> DataFrame:
     """(src, dst) pairs with an exact shared substring >= min_len.
 
@@ -192,12 +190,8 @@ def substring_pairs(
     TRUE gram strings (arrays_overlap, JVM, no Python). verify="lcs":
     attach the exact shared-substring length as lcs_len via the suffix
     automaton (per-pair Python — the expensive path; only for callers that
-    need the length). Legacy booleans keep their original semantics:
-    True -> "lcs" (the pre-fp128 verified path, lcs_len column included),
-    False -> "fp128"."""
-    if isinstance(verify, bool):
-        verify = "lcs" if verify else "fp128"
-    cand = candidate_gram_pairs(df, id_col, text_col, min_len, **kw)
+    need the length)."""
+    cand = candidate_gram_pairs(df, id_col, text_col, min_len)
     if verify == "fp128":
         return cand
     texts_a = df.select(F.col(id_col).alias("src"), F.col(text_col).alias("text_a"))
@@ -238,19 +232,22 @@ def substring_pairs(
 
 def gram_stats(
     df: DataFrame, id_col: str, text_col: str, min_len: int = 24,
-    max_gram_bucket: int | None = None,
 ) -> DataFrame:
-    """Skew metrics for the gram join (analogue of LSH band stats). With
-    max_gram_bucket, counts grams the candidate pass dropped (n_dropped) —
+    """Skew metrics for the gram join (analogue of LSH band stats): one
+    row of (n_grams, avg_docs_per_gram, max_docs_per_gram, n_dropped),
+    over the fingerprint buckets candidate_gram_pairs groups (_gram_members,
+    null ids excluded). A bucket's size is its distinct docs; n_dropped
+    counts the grams over _BUCKET_CAP that the candidate pass drops, so
     the cap is recorded, never silent."""
-    grams = df.where(F.length(text_col) >= min_len).select(
-        F.explode(_gram_hashes(F.col(text_col), min_len)).alias("gram")
+    n = F.col("n")
+    return (
+        _gram_members(df, id_col, text_col, min_len)
+        .groupBy("bk")
+        .agg(F.countDistinct("sid").alias("n"))
+        .agg(
+            F.count("*").alias("n_grams"),
+            F.avg(n).alias("avg_docs_per_gram"),
+            F.max(n).alias("max_docs_per_gram"),
+            F.sum((n > _BUCKET_CAP).cast("long")).alias("n_dropped"),
+        )
     )
-    aggs = [
-        F.count("*").alias("n_grams"),
-        F.avg("n").alias("avg_docs_per_gram"),
-        F.max("n").alias("max_docs_per_gram"),
-    ]
-    if max_gram_bucket is not None:
-        aggs.append(F.sum((F.col("n") > max_gram_bucket).cast("long")).alias("n_dropped"))
-    return grams.groupBy("gram").agg(F.count("*").alias("n")).agg(*aggs)

@@ -21,6 +21,10 @@ from gaoya_spark.operators._bucket_pairs import sid_col, sid_pairs_from_buckets
 # array combinatorics; larger ones take _bucket_pairs' collapsed tiers
 _ARRAY_LIMIT = 256
 
+# largest shingle bucket ngram_jaccard_pairs pairs at all: a shingle shared
+# by more docs is excluded, and ngram_shingle_stats counts it
+_BUCKET_CAP = 50_000
+
 # HEURISTIC PLACEHOLDER, not a production language identifier: 4 languages
 # x 6 stopwords, chosen to be deterministic and expressible identically in
 # SQL so the operator's Spark plumbing (the part that matters at 100 TB)
@@ -171,28 +175,38 @@ def _ngram_shingle_docs(df: DataFrame, id_col: str, text_col: str, n: int) -> Da
     )
 
 
+def _shingle_members(docs: DataFrame) -> DataFrame:
+    """(bk, sid) bucket membership rows of ngram_jaccard_pairs: one row
+    per distinct shingle of each doc of _ngram_shingle_docs with a
+    non-null id, next to sid_col's surrogate of the id."""
+    return docs.where(F.col("id").isNotNull()).select(
+        F.explode("sh").alias("bk"), sid_col(docs).alias("sid")
+    )
+
+
 def ngram_shingle_stats(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    max_shingle_bucket: int = 50_000,
 ) -> DataFrame:
     """Skew report for ngram_jaccard_pairs' blocking key: one row of
-    (n_shingles, max_docs_per_shingle, n_dropped) where n_dropped counts
-    shingles shared by more than max_shingle_bucket docs — the buckets the
-    pairing pass excludes. Pipelines record this next to band_stats /
-    gram_stats so capped shingles are never silent."""
-    docs = _ngram_shingle_docs(df, id_col, text_col, n)
-    sizes = (
-        docs.select(F.explode("sh").alias("s"))
-        .groupBy("s")
-        .agg(F.count("*").alias("cnt"))
-    )
-    return sizes.agg(
-        F.count("*").alias("n_shingles"),
-        F.max("cnt").alias("max_docs_per_shingle"),
-        F.sum((F.col("cnt") > max_shingle_bucket).cast("long")).alias("n_dropped"),
+    (n_shingles, max_docs_per_shingle, n_dropped) over the shingle
+    buckets the pairing pass groups (_shingle_members, null ids
+    excluded). A bucket's size is its distinct docs; n_dropped counts the
+    shingles over _BUCKET_CAP that the pairing pass excludes. Pipelines
+    record this next to band_stats / gram_stats so capped shingles are
+    never silent."""
+    cnt = F.col("cnt")
+    return (
+        _shingle_members(_ngram_shingle_docs(df, id_col, text_col, n))
+        .groupBy("bk")
+        .agg(F.countDistinct("sid").alias("cnt"))
+        .agg(
+            F.count("*").alias("n_shingles"),
+            F.max(cnt).alias("max_docs_per_shingle"),
+            F.sum((cnt > _BUCKET_CAP).cast("long")).alias("n_dropped"),
+        )
     )
 
 
@@ -202,7 +216,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     n: int = 3,
     threshold: float = 0.7,
-    max_shingle_bucket: int = 50_000,
 ) -> DataFrame:
     """Exact char-n-gram jaccard dedup (src, dst, jaccard >= threshold).
 
@@ -216,7 +229,7 @@ def ngram_jaccard_pairs(
     for hot), so one stopword-gram shared by 40k docs is spread across
     bounded reducers instead of expanding quadratically inside
     a raw shingle self-join. Shingles shared by more than
-    max_shingle_bucket docs are excluded from pairing entirely (recorded by
+    _BUCKET_CAP docs are excluded from pairing entirely (recorded by
     ngram_shingle_stats, never silently); below that cap jaccard is exact.
 
     Docs travel as 8-byte sid_col surrogates (the id itself for integral
@@ -227,11 +240,8 @@ def ngram_jaccard_pairs(
     Null-id docs are in no pair.
     """
     docs = _ngram_shingle_docs(df, id_col, text_col, n).persist()
-    mem = docs.where(F.col("id").isNotNull()).select(
-        F.explode("sh").alias("bk"), sid_col(docs).alias("sid")
-    )
     pairs = sid_pairs_from_buckets(
-        mem, array_bucket_limit=_ARRAY_LIMIT, drop_cap=max_shingle_bucket
+        _shingle_members(docs), array_bucket_limit=_ARRAY_LIMIT, drop_cap=_BUCKET_CAP
     )
     m = docs.select(sid_col(docs).alias("sid"), "id", F.size("sh").alias("n_sh"))
     ma = m.select(

@@ -19,9 +19,12 @@ only quadratic-risk stage and are guarded by hot-bucket triangle blocking.
 minhash_edges takes its route by size (MinHashLSH.dedup_pairs with
 keep_sim=False): a signature table that fits one broadcast runs the exact
 numpy kernel, its bands sharded across tasks, any larger table the JVM
-shuffle verify; both drop buckets over bucket_cap_hard and return
-the same pairs. Passing numpy_verify=False to dedup_pairs forces the JVM
-route.
+shuffle verify; both drop band buckets over MinHashLSH._BUCKET_CAP
+members and return the same pairs. Passing numpy_verify=False to
+dedup_pairs forces the JVM route. The bucket limits are operator
+constants, not pipeline settings: metrics_band_skew and
+metrics_simhash_skew count the hot and dropped buckets at the limits
+the edge stages applied.
 Labels iterate over edges only (bytes untouched). The optional PSNR/caption
 invariant check (verify_invariants) decodes pixels for a sampled fraction.
 """
@@ -65,8 +68,6 @@ class PipelineConfig:
     use_substring: bool = False
     substring_min_len: int = 24
     min_cluster_size: int = 2
-    max_bucket_size: int = 256
-    bucket_cap_hard: int = 100_000
     # "labelprop" (O(diameter) rounds — near-dup blobs) or "twophase"
     # (large-star/small-star, O(log n) rounds — unknown-diameter graphs)
     cluster_algorithm: str = "labelprop"
@@ -98,12 +99,7 @@ class DedupPipeline:
         )
         mh_edges = self._stage(
             "minhash_edges",
-            lambda: mh.dedup_pairs(
-                mh_sigs,
-                keep_sim=False,
-                max_bucket_size=c.max_bucket_size,
-                bucket_cap_hard=c.bucket_cap_hard,
-            ),
+            lambda: mh.dedup_pairs(mh_sigs, keep_sim=False),
             force,
         )
         edge_frames = [mh_edges]
@@ -185,21 +181,11 @@ class DedupPipeline:
         self.wh.write(stage_df, "metrics_stages")
 
         # band skew (reference W5 band_sizes/BandStats analogue) + the
-        # hot/dropped bucket counts for this run's candidate thresholds, so
-        # buckets excluded by the hard cap are recorded, never silent
-        self.wh.write(
-            mh.band_stats(
-                mh.bands(mh_sigs),
-                max_bucket_size=self.cfg.max_bucket_size,
-                bucket_cap_hard=self.cfg.bucket_cap_hard,
-            ),
-            "metrics_band_skew",
-        )
+        # hot/dropped bucket counts at the operators' own bucket limits,
+        # so buckets excluded by the hard cap are recorded, never silent
+        self.wh.write(mh.band_stats(mh_sigs), "metrics_band_skew")
         if sh is not None and sh_sigs is not None:
-            self.wh.write(
-                sh.bucket_stats(sh_sigs, max_bucket_size=sh.BUCKET_CAP),
-                "metrics_simhash_skew",
-            )
+            self.wh.write(sh.bucket_stats(sh_sigs), "metrics_simhash_skew")
 
         # per-partition lineage of the signatures table
         lineage = (

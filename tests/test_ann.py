@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from gaoya_spark.operators import ann
 from gaoya_spark.operators.ann import (
     rp_bucket_stats,
     brute_force_topk,
@@ -120,13 +121,15 @@ def test_cosine_dedup_pairs_planted(spark):
     assert {(r["src"], r["dst"]) for r in pairs_lsh} == {(0, 1)}
 
 
-def test_rp_lsh_hot_bucket_capped_and_recorded(spark):
+def test_rp_lsh_hot_bucket_capped_and_recorded(spark, monkeypatch):
     """A constant embedding repeated 600x hashes every copy to one sign
-    pattern in every table — the web-scale hot bucket. With
-    bucket_cap_hard below the bucket size the candidate join must stay
+    pattern in every table — the web-scale hot bucket. With the bucket
+    cap (ann._BUCKET_CAP, pinned to 500) below the bucket size the candidate join must stay
     bounded (no quadratic pair blowup from the constant cluster), normal
     planted near-dups must still be found, and rp_bucket_stats must record
     the hot buckets (never silent)."""
+    monkeypatch.setattr(ann, "_ARRAY_LIMIT", 64)
+    monkeypatch.setattr(ann, "_BUCKET_CAP", 500)
     rng = np.random.default_rng(43)
     rows = []
     const = np.ones(64)
@@ -141,21 +144,19 @@ def test_rp_lsh_hot_bucket_capped_and_recorded(spark):
     got = {
         r["qid"]: r["id"]
         for r in rp_lsh_topk(
-            df, k=1, probes=probes, max_bucket_size=64, bucket_cap_hard=500
+            df, k=1, probes=probes
         ).collect()
     }
     hits = sum(1 for q, i in got.items() if i == q + 1)
     assert hits >= 38, f"near-dup top-1 hits {hits}/40 with hot bucket planted"
     # probing ALL constants (600 probes x 600 index members — the
     # quadratic product the cap exists for) hits the hot branch and the
-    # bucket (index side 600 > bucket_cap_hard=500) is excluded: zero
+    # bucket (index side 600 > _BUCKET_CAP=500) is excluded: zero
     # matches instead of a 360k-pair blowup.
     const_probe = df.where("vec_id >= 10000")
-    got_const = rp_lsh_topk(
-        df, k=1, probes=const_probe, max_bucket_size=64, bucket_cap_hard=500
-    ).count()
+    got_const = rp_lsh_topk(df, k=1, probes=const_probe).count()
     assert got_const == 0
     # ...and the skew metric records it: every table has >= 1 hot bucket
-    stats = rp_bucket_stats(df, max_bucket_size=64).collect()
+    stats = rp_bucket_stats(df).collect()
     assert len(stats) > 0
     assert all(r["n_dropped"] >= 1 for r in stats)

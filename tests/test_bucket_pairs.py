@@ -140,8 +140,9 @@ def test_sid_cross_pairs_match_naive_enumeration(spark, seed, medium, monkeypatc
     assert got == _expected_cross(probes, index, drop_cap=15)
 
 
-def test_band_stats_hot_dropped_counts(spark):
-    """n_hot / n_dropped count exactly the buckets above each threshold."""
+def test_band_stats_hot_dropped_counts(spark, monkeypatch):
+    """n_hot / n_dropped count exactly the buckets above MinHashLSH's
+    _ARRAY_LIMIT / _BUCKET_CAP."""
     from gaoya_spark.config import MinHashConfig, TokenizerSpec
     from gaoya_spark.operators.minhash_lsh import MinHashLSH
 
@@ -154,28 +155,28 @@ def test_band_stats_hot_dropped_counts(spark):
     df = spark.createDataFrame(
         [(i, "same text here") for i in range(40)], "id long, text string"
     )
-    stats = lsh.band_stats(
-        lsh.bands(lsh.signatures(df, "id", "text")),
-        max_bucket_size=8, bucket_cap_hard=50,
-    ).collect()
+    monkeypatch.setattr(MinHashLSH, "_ARRAY_LIMIT", 8)
+    monkeypatch.setattr(MinHashLSH, "_BUCKET_CAP", 50)
+    stats = lsh.band_stats(lsh.signatures(df, "id", "text")).collect()
     assert len(stats) == 4
     for r in stats:
         assert r["n_hot"] == 1 and r["n_dropped"] == 0 and r["max_bucket"] == 40
-    stats2 = lsh.band_stats(
-        lsh.bands(lsh.signatures(df, "id", "text")),
-        max_bucket_size=8, bucket_cap_hard=30,
-    ).collect()
+    monkeypatch.setattr(MinHashLSH, "_BUCKET_CAP", 30)
+    stats2 = lsh.band_stats(lsh.signatures(df, "id", "text")).collect()
     assert all(r["n_dropped"] == 1 for r in stats2)
 
 
-def test_gram_stats_dropped(spark):
+def test_gram_stats_dropped(spark, monkeypatch):
+    from gaoya_spark.operators import substring
     from gaoya_spark.operators.substring import gram_stats
+
+    monkeypatch.setattr(substring, "_BUCKET_CAP", 3)
 
     df = spark.createDataFrame(
         [(i, "x" * 30) for i in range(5)] + [(9, "y" * 40)],
         "id long, text string",
     )
-    r = gram_stats(df, "id", "text", min_len=24, max_gram_bucket=3).collect()[0]
+    r = gram_stats(df, "id", "text", min_len=24).collect()[0]
     # "x"*30 has one DISTINCT 24-gram ("x"*24), shared by 5 docs (> 3) ->
     # dropped; the y-gram stays (single doc)
     assert r["n_dropped"] == 1
@@ -311,3 +312,108 @@ def test_id_types_give_same_pairs(spark, op):
         results[dtype] = got
     assert results["int"] == results["long"] == results["string"], results
     assert results["long"]
+
+
+# Two texts with no word, 3-char shingle or 24-char gram in common
+TEXT_A = "abc def ghi jkl mab cde fgh ijk lma bcd efg hij klm"
+TEXT_B = "nop qrs tuv wxy zno pqr stu vwx yzn opq rst uvw xyz"
+STATS_CAP = 3
+
+
+def _grams(text, n):
+    return {text[i : i + n] for i in range(len(text) - n + 1)}
+
+
+def _minhash_stats_case(route):
+    def case(spark, df, mp):
+        mp.setattr(MinHashLSH, "_BUCKET_CAP", STATS_CAP)
+        lsh = _mh()
+        sigs = lsh.signatures(df, "id", "text")
+        pairs = lsh.dedup_pairs(
+            sigs, keep_sim=False, numpy_verify=(route == "broadcast")
+        )
+        assert lsh.last_route[0] == route
+        return pairs, lsh.band_stats(sigs), lsh.cfg.num_bands
+
+    return case
+
+
+def _simhash_stats_case(spark, df, mp):
+    # the array tier pairs without the cap, so it is pinned under the cap
+    mp.setattr(SimHashLSH, "_ARRAY_LIMIT", STATS_CAP - 1)
+    mp.setattr(SimHashLSH, "BUCKET_CAP", STATS_CAP)
+    lsh = _sh()
+    sigs = lsh.signatures(df, "id", "text")
+    return lsh.dedup_pairs(sigs), lsh.bucket_stats(sigs), len(lsh.masks)
+
+
+def _substring_stats_case(spark, df, mp):
+    from gaoya_spark.operators import substring
+
+    mp.setattr(substring, "_BUCKET_CAP", STATS_CAP)
+    return (
+        substring_pairs(df, "id", "text"),
+        substring.gram_stats(df, "id", "text"),
+        len(_grams(TEXT_A, 24)),
+    )
+
+
+def _ngram_stats_case(spark, df, mp):
+    from gaoya_spark.operators import text
+
+    mp.setattr(text, "_BUCKET_CAP", STATS_CAP)
+    return (
+        ngram_jaccard_pairs(df, "id", "text", threshold=0.5),
+        text.ngram_shingle_stats(df, "id", "text"),
+        len(_grams(TEXT_A, 3)),
+    )
+
+
+def _ann_stats_case(spark, df, mp):
+    from gaoya_spark.operators import ann
+
+    mp.setattr(ann, "_BUCKET_CAP", STATS_CAP)
+    # opposite vectors have opposite sign patterns: no table key in common
+    va = np.random.default_rng(5).standard_normal(64)
+    vec = {TEXT_A: va, TEXT_B: -va}
+    edf = spark.createDataFrame(
+        [(r["id"], vec[r["text"]].tolist()) for r in df.collect()],
+        "vec_id long, embedding array<double>",
+    )
+    pairs = ann.rp_lsh_topk(edf).where(F.col("qid") < F.col("id"))
+    # rp_lsh_topk's default Hamming-ball tables: C(8 blocks, 4 kept)
+    return pairs, ann.rp_bucket_stats(edf), len(SimHashLSH(
+        SimHashConfig(nbits=64, num_blocks=8, max_distance=4)
+    ).masks)
+
+
+# name -> case(spark, df, monkeypatch) that pins the operator's cap to
+# STATS_CAP and returns (pairs, stats, number of keys of TEXT_A)
+STATS_CASES = {
+    "minhash.broadcast": _minhash_stats_case("broadcast"),
+    "minhash.jvm": _minhash_stats_case("jvm"),
+    "simhash": _simhash_stats_case,
+    "substring": _substring_stats_case,
+    "ngram": _ngram_stats_case,
+    "ann": _ann_stats_case,
+}
+
+
+@pytest.mark.parametrize("op", sorted(STATS_CASES))
+def test_stats_count_what_pairs_drop(spark, op, monkeypatch):
+    """Each stats helper counts, at its operator's own cap, exactly the
+    buckets the operator's pair generator excludes. STATS_CAP + 1 rows
+    hold TEXT_A, so each of its keys is a bucket just over the cap, which
+    no pair comes from; STATS_CAP rows hold TEXT_B, a bucket at the cap,
+    which is paired; and a null-id row holds TEXT_B too. The pair
+    generators exclude null ids, so the stats must not count that row,
+    or every TEXT_B bucket would read as dropped."""
+    a_ids = list(range(1, STATS_CAP + 2))
+    b_ids = list(range(11, 11 + STATS_CAP))
+    rows = [(i, TEXT_A) for i in a_ids] + [(i, TEXT_B) for i in b_ids]
+    df = spark.createDataFrame(rows + [(None, TEXT_B)], "id long, text string")
+    pairs, stats, a_keys = STATS_CASES[op](spark, df, monkeypatch)
+    got = [tuple(r[:2]) for r in pairs.collect()]
+    assert sorted(got) == list(itertools.combinations(b_ids, 2))
+    assert a_keys > 0
+    assert sum(r["n_dropped"] for r in stats.collect()) == a_keys

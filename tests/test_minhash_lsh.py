@@ -34,7 +34,7 @@ ROUTES = [
     ({"numpy_verify": False}, "jvm"),
     ({}, "broadcast"),
     ({"_FLUSH_PAIRS": 1}, "broadcast"),
-    ({"numpy_verify": False, "max_bucket_size": 2, "_MEDIUM_LIMIT": 3}, "jvm"),
+    ({"numpy_verify": False, "_ARRAY_LIMIT": 2, "_MEDIUM_LIMIT": 3}, "jvm"),
     ({"_NUMPY_MAX_ROWS": 1}, "jvm"),
 ]
 
@@ -203,15 +203,17 @@ def test_null_ids_in_no_pair(spark, strategy, monkeypatch):
 
 
 def test_dedup_pairs_rejects_unknown_keywords(spark, corpus5, strategy, monkeypatch):
-    """dedup_pairs accepts only the bucket-tier knobs through **kw: a
-    misspelled knob, or an option this operator no longer has, raises
-    TypeError on every route instead of being silently ignored."""
+    """dedup_pairs takes threshold, keep_sim and numpy_verify only: a
+    misspelled keyword, or an option this operator no longer has (the
+    bucket limits are class constants), raises TypeError on every route
+    instead of being silently ignored."""
     lsh, sigs = corpus5
     opts, _ = strategy
     for bad in ({"max_bucket_sise": 8}, {"raw_candidates": True},
                 {"sketch_prefilter": True}, {"gate": True},
                 {"block_groups": 4}, {"medium_bucket_size": 64},
-                {"persist": False}):
+                {"persist": False}, {"max_bucket_size": 2},
+                {"bucket_cap_hard": 5}):
         with pytest.raises(TypeError, match=next(iter(bad))):
             _dedup(lsh, sigs, opts, monkeypatch, **bad)
         with pytest.raises(TypeError, match=next(iter(bad))):
@@ -341,15 +343,16 @@ def test_minhash_band_centroid_beats_pointwise_recall(spark, vectors):
 
 def test_band_stats_shape(spark, corpus5):
     lsh, sigs = corpus5
-    stats = lsh.band_stats(lsh.bands(sigs)).collect()
+    stats = lsh.band_stats(sigs).collect()
     assert len(stats) == 42
     assert all(r["max_bucket"] <= 5 for r in stats)
 
 
 def test_hot_bucket_blocking_exact(spark, monkeypatch):
     """Triangle blocking must produce exactly the same pair set as the
-    naive self-join when a bucket exceeds max_bucket_size (and, pinned
+    naive self-join when a bucket exceeds the array tier (and, pinned
     here, _bucket_pairs' medium limit)."""
+    monkeypatch.setattr(MinHashLSH, "_ARRAY_LIMIT", 8)
     monkeypatch.setattr(_bucket_pairs, "_MEDIUM_LIMIT", 8)
     monkeypatch.setattr(_bucket_pairs, "_BLOCK_GROUPS", 4)
     cfg = MinHashConfig(num_bands=4, band_width=2, threshold=0.0, tokenizer=WORD)
@@ -357,7 +360,7 @@ def test_hot_bucket_blocking_exact(spark, monkeypatch):
     # 40 identical docs -> every band bucket has 40 members
     df = spark.createDataFrame([(i, "same text here") for i in range(40)], "id long, text string")
     sigs = lsh.signatures(df, "id", "text")
-    pairs_blocked = lsh.candidate_pairs(sigs, max_bucket_size=8)
+    pairs_blocked = lsh.candidate_pairs(sigs)
     got = {(r["src"], r["dst"]) for r in pairs_blocked.collect()}
     expected = {(a, b) for a in range(40) for b in range(40) if a < b}
     assert got == expected
@@ -510,7 +513,9 @@ def test_numpy_verify_guards_fall_back_to_jvm(spark):
     Every returned pair, with or without keep_sim, has a row pair that
     clears the threshold: id 1's last row shares no word with id 2, and
     the bands the sid pair (1, 2) shares through id 1's other rows must
-    not pass it."""
+    not pass it. Two of id 1's rows clear the threshold against id 2
+    (sims 0.625 and 1.0): the pair comes back once, with the larger
+    sim."""
     cfg = MinHashConfig(num_bands=8, band_width=2, threshold=0.5, tokenizer=WORD)
     lsh = MinHashLSH(cfg)
     rows = [(1, "a quick brown fox jumps over the lazy dog"),
@@ -534,17 +539,12 @@ def test_numpy_verify_guards_fall_back_to_jvm(spark):
     jvm_rows = _sorted_rows(lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False))
     auto_rows = _sorted_rows(lsh.dedup_pairs(sigs, keep_sim=False))
     assert lsh.last_route == ("jvm", "duplicate id")
-    assert auto_rows == jvm_rows and (1, 2) in jvm_rows
-    assert all(a != b for a, b in jvm_rows)
-    # each returned copy of a pair is one supporting row pair
-    for pair in set(jvm_rows):
-        assert jvm_rows.count(pair) <= supported(*pair), (pair, jvm_rows)
+    assert supported(1, 2) == 2
+    assert auto_rows == jvm_rows == [(1, 2)]
     jvm_sim = _sorted_rows(lsh.dedup_pairs(sigs, numpy_verify=False))
     auto_sim = _sorted_rows(lsh.dedup_pairs(sigs))
     assert lsh.last_route == ("jvm", "duplicate id")
-    assert auto_sim == jvm_sim and (1, 2, 1.0) in jvm_sim
-    assert all(r[0] != r[1] and r[2] >= 0.5 for r in jvm_sim)
-    assert [r[:2] for r in jvm_sim] == jvm_rows
+    assert auto_sim == jvm_sim == [(1, 2, 1.0)]
     sigs.unpersist()
 
 
@@ -667,7 +667,7 @@ def test_query_routes_identical(spark, case, monkeypatch):
 
 
 def test_query_cap_excludes_bucket_on_both_routes(spark, monkeypatch):
-    """_QUERY_DROP_CAP is read by both query routes: pinned to 3, every
+    """_BUCKET_CAP is read by both query routes: pinned to 3, every
     band key of a text held by 5 index rows is excluded, so its exact
     copy matches nothing, while a key with 2 index rows still matches.
     Without the pin the copy matches all 5."""
@@ -679,7 +679,7 @@ def test_query_cap_excludes_bucket_on_both_routes(spark, monkeypatch):
     probe = _query_sigs(spark, lsh, rows=[(100, a), (101, b)])
     uncapped = {(r["qid"], r["id"]) for r in lsh.query(index, probe).collect()}
     assert uncapped == {(100, i) for i in range(1, 6)} | {(101, 6), (101, 7)}
-    monkeypatch.setattr(MinHashLSH, "_QUERY_DROP_CAP", 3)
+    monkeypatch.setattr(MinHashLSH, "_BUCKET_CAP", 3)
     want = [(101, 6, 1.0), (101, 7, 1.0)]
     assert _sorted_rows(lsh.query(index, probe, keep_sim=True)) == want
     assert lsh.last_route == FITS
@@ -758,7 +758,8 @@ def test_broadcast_dedup_plan_has_one_python_stage(spark, corpus5):
 CHAIN = _chain_rows(7)
 FAMILY_TEXT = "same boilerplate caption for every family member here"
 
-# name -> ((id, text) rows, MinHashConfig overrides, dedup_pairs keywords)
+# name -> ((id, text) rows, MinHashConfig overrides, MinHashLSH constants
+# pinned for the case)
 # of the keep_sim route-parity test; id types, null ids and 32-/64-bit
 # signatures are covered by test_dedup_pairs_numpy_verify_random_corpus
 # and the SURROGATE_OPERATORS tests of test_bucket_pairs.py
@@ -768,28 +769,30 @@ KEEP_SIM_CASES = {
     "singleton": (CHAIN[:1], {}, {}),
     "cap_binds": (
         [(100 + i, FAMILY_TEXT) for i in range(10)] + CHAIN, {},
-        {"bucket_cap_hard": 5},
+        {"_BUCKET_CAP": 5},
     ),
 }
 
 
 @pytest.mark.parametrize("case", sorted(KEEP_SIM_CASES))
-def test_keep_sim_routes_identical(spark, case):
+def test_keep_sim_routes_identical(spark, case, monkeypatch):
     """keep_sim=True (the default) picks its route by size like
     keep_sim=False: a broadcast-fit table takes the band-sharded kernel,
     which carries each survivor's equal count, and returns exactly the
     forced JVM verify's (src, dst, sim) rows, sims equal as doubles. Covers
     the float boundary t=0.07 at k=100 (7/100 >= 0.07 holds in double
-    arithmetic), an empty and a one-row table, and a bucket_cap_hard that
+    arithmetic), an empty and a one-row table, and a _BUCKET_CAP that
     drops the buckets of a 10-doc family of identical texts."""
-    rows, cfg_kw, kw = KEEP_SIM_CASES[case]
+    rows, cfg_kw, pins = KEEP_SIM_CASES[case]
+    for name, value in pins.items():
+        monkeypatch.setattr(MinHashLSH, name, value)
     cfg = dict(num_bands=42, band_width=3, threshold=0.5, tokenizer=WORD)
     lsh = MinHashLSH(MinHashConfig(**dict(cfg, **cfg_kw)))
     df = spark.createDataFrame(rows, "id long, text string")
     sigs = lsh.signatures(df, "id", "text").cache()
-    auto = lsh.dedup_pairs(sigs, **kw)
+    auto = lsh.dedup_pairs(sigs)
     assert lsh.last_route == ("broadcast", "fits broadcast")
-    jvm = lsh.dedup_pairs(sigs, numpy_verify=False, **kw)
+    jvm = lsh.dedup_pairs(sigs, numpy_verify=False)
     assert lsh.last_route == ("jvm", "requested")
     assert auto.dtypes == jvm.dtypes == [("src", "bigint"), ("dst", "bigint"), ("sim", "double")]
     got = _sorted_rows(auto)
@@ -804,11 +807,11 @@ def test_keep_sim_routes_identical(spark, case):
     sigs.unpersist()
 
 
-def test_replicated_drops_buckets_over_hard_cap(spark):
-    """bucket_cap_hard parity: a family of 10 identical docs fills every
-    band bucket with 10 members. With bucket_cap_hard=5 (under the
-    default max_bucket_size, so the cap must bind in the JVM route's
-    small tier too) the JVM and broadcast routes both drop those buckets
+def test_replicated_drops_buckets_over_hard_cap(spark, monkeypatch):
+    """_BUCKET_CAP parity: a family of 10 identical docs fills every
+    band bucket with 10 members. With _BUCKET_CAP pinned to 5 (under
+    _ARRAY_LIMIT, so the cap must bind in the JVM route's small tier
+    too) the JVM and broadcast routes both drop those buckets
     — identical pair sets, the other pairs kept — and without the cap
     both return the family's 45 pairs. At 8 bands each of the session's
     8 tasks holds one band; at 42 bands a task holds 5 or 6, so it skips
@@ -831,12 +834,11 @@ def test_replicated_drops_buckets_over_hard_cap(spark):
             spark.createDataFrame(rows, "id long, text string"), "id", "text"
         ).cache()
         for cap, want_family in ((5, set()), (100_000, family)):
-            jvm = _pair_set(lsh.dedup_pairs(
-                sigs, keep_sim=False, numpy_verify=False, bucket_cap_hard=cap
-            ))
-            auto = _pair_set(
-                lsh.dedup_pairs(sigs, keep_sim=False, bucket_cap_hard=cap)
+            monkeypatch.setattr(MinHashLSH, "_BUCKET_CAP", cap)
+            jvm = _pair_set(
+                lsh.dedup_pairs(sigs, keep_sim=False, numpy_verify=False)
             )
+            auto = _pair_set(lsh.dedup_pairs(sigs, keep_sim=False))
             assert lsh.last_route == ("broadcast", "fits broadcast")
             assert auto == jvm, (num_bands, cap)
             assert (100, 101) in jvm

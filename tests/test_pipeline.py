@@ -176,7 +176,5 @@ def test_pipeline_minhash_edges_match_jvm_route_string_ids(
         pipe.wh.read("minhash_signatures"),
         keep_sim=False,
         numpy_verify=False,
-        max_bucket_size=cfg.max_bucket_size,
-        bucket_cap_hard=cfg.bucket_cap_hard,
     )
     assert got == {(r["src"], r["dst"]) for r in jvm.collect()} and got

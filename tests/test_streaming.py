@@ -404,11 +404,11 @@ def test_stream_edges_match_brute_force(spark, tmp_path, route, id_type):
 @pytest.mark.parametrize("route", ["broadcast_probe", "jvm"])
 def test_stream_edges_bucket_cap_counts_index_and_batch(spark, tmp_path, route):
     """The batch's edges obey query's bucket cap, counted over the index
-    plus the batch: a text held by more rows than _QUERY_DROP_CAP yields no
+    plus the batch: a text held by more rows than _BUCKET_CAP yields no
     edge, on either route."""
     wh = Warehouse(spark, str(tmp_path / "wh"))
     sd = StreamingDedup(spark, wh, CFG)
-    sd.lsh._QUERY_DROP_CAP = 2
+    sd.lsh._BUCKET_CAP = 2
     if route == "jvm":
         sd.lsh._BROADCAST_BYTES = -1
     common = "the quick brown fox jumps over the lazy dog"

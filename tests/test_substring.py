@@ -55,25 +55,3 @@ def test_short_texts_no_grams(spark):
     )
     pairs = substring_pairs(docs, "id", "text", min_len=24).collect()
     assert {(r["src"], r["dst"]) for r in pairs} == {(3, 4)}
-
-
-def test_verify_true_keeps_lcs_semantics(spark):
-    """Legacy verify=True maps to the 'lcs' path (ADVICE r2): callers get
-    suffix-automaton-verified pairs WITH the lcs_len column, as before the
-    fp128 default landed."""
-    from gaoya_spark.operators.substring import substring_pairs
-
-    shared = "the quick brown fox jumps over the lazy dog tonight"
-    df = spark.createDataFrame(
-        [
-            ("a", "AAA " + shared + " BBB"),
-            ("b", "CCC " + shared + " DDD"),
-            ("c", "completely unrelated content with no overlap at all here"),
-        ],
-        "doc_id string, text string",
-    )
-    out = substring_pairs(df, "doc_id", "text", min_len=24, verify=True)
-    assert "lcs_len" in out.columns
-    rows = out.collect()
-    assert [(r["src"], r["dst"]) for r in rows] == [("a", "b")]
-    assert rows[0]["lcs_len"] >= len(shared)

@@ -103,7 +103,7 @@ def test_ngram_jaccard_hot_shingle_tiers(spark, monkeypatch):
     got = {
         (r["src"], r["dst"]): r["jaccard"]
         for r in ngram_jaccard_pairs(
-            df, "id", "text", n=3, threshold=0.5, max_shingle_bucket=50_000,
+            df, "id", "text", n=3, threshold=0.5,
         ).collect()
     }
 
@@ -127,12 +127,15 @@ def test_ngram_jaccard_hot_shingle_tiers(spark, monkeypatch):
     assert all(jac(texts[s], texts[d]) >= 0.5 for (s, d) in got)
 
 
-def test_ngram_shingle_stats(spark):
+def test_ngram_shingle_stats(spark, monkeypatch):
+    from gaoya_spark.operators import text
     from gaoya_spark.operators.text import ngram_shingle_stats
+
+    monkeypatch.setattr(text, "_BUCKET_CAP", 10)
 
     rows = [(i, "aaaa" + f"{i:04d}") for i in range(50)]
     df = spark.createDataFrame(rows, "id long, text string")
-    st = ngram_shingle_stats(df, "id", "text", n=3, max_shingle_bucket=10).collect()[0]
+    st = ngram_shingle_stats(df, "id", "text", n=3).collect()[0]
     # 'aaa' (x2 positions, distinct per doc) + 'aa' prefix grams shared by
     # all 50 docs -> at least one bucket over the cap, recorded
     assert st["max_docs_per_shingle"] == 50

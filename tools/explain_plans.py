@@ -56,8 +56,10 @@ def sections(images):
         ("minhash signatures over images parquet "
          "(EXPECT: ReadSchema only image_id/caption/phash — bytes pruned; "
          "one ArrowEvalPython node)", lambda: sigs),
-        ("banding, public view (EXPECT: pure project/generate, no Python, "
-         "no shuffle)", lambda: mh.bands(sigs)),
+        ("band stats (EXPECT: the JVM banding as project/generate, no "
+         "Python stage past the signature UDF; two exchanges into the "
+         "distinct-id count per (band_idx, key), then one into the "
+         "per-band aggregate)", lambda: mh.band_stats(sigs)),
         ("sid candidates (EXPECT: ONE MapInPandas node — the vectorized "
          "Arrow band kernel — feeding ONE exchange on the band key into an "
          "ObjectHashAggregate collect_set, pair explosion as pure "
@@ -67,8 +69,9 @@ def sections(images):
          "plan above, then the equal-count as a FLAT balanced tree of "
          "per-word packed-XOR terms inside WholeStageCodegen (no "
          "higher-order aggregate — HOFs evaluate interpreted) in the "
-         "signature joins — broadcast when sigs are small — and original "
-         "ids attached only to verified pairs)",
+         "signature joins — broadcast when sigs are small — original "
+         "ids attached only to verified pairs, then ONE (src, dst) "
+         "aggregate keeping each id pair once at its max sim)",
          lambda: mh.dedup_pairs(sigs, numpy_verify=False)),
         ("dedup pairs, size-routed default on a broadcast-fit table "
          "(EXPECT: a one-row-per-task range feeds ONE MapInPandas kernel "
@@ -77,8 +80,10 @@ def sections(images):
          "no band explode, no bucket exchange, no signature joins, no "
          "second Python stage — then ONE narrow dropDuplicates exchange)",
          lambda: mh.dedup_pairs(sigs, keep_sim=False)),
-        ("simhash tables (EXPECT: project+generate only)",
-         lambda: sh.tables(sh.signatures(images, "image_id", "caption"))),
+        ("simhash bucket stats (EXPECT: the table keys as "
+         "project+generate; one exchange on (table_idx, key) into the "
+         "bucket count, then the per-table aggregate)",
+         lambda: sh.bucket_stats(sh.signatures(images, "image_id", "caption"))),
         ("simhash dedup (EXPECT: one collect_list aggregate carrying "
          "(sid, sig) structs; hamming distance filtered map-side during "
          "pair explosion, before any pair exchange)",

@@ -175,7 +175,7 @@ def main() -> None:
 
     # ---- planted pathology: one constant-caption block (the all-identical
     # key failure mode at 10^12 scale) unioned into the corpus; every band
-    # hashes the block into ONE bucket of size PATH_N > bucket_cap_hard, so
+    # hashes the block into ONE bucket of size PATH_N > MinHashLSH._BUCKET_CAP, so
     # the drop cap must exclude it (recorded via band_stats, never silent)
     # while the planted-dup recall of the real corpus is unaffected.
     PATH_N = int(os.environ.get("SCALE_DEMO_PATHOLOGY", "200000"))
@@ -193,7 +193,7 @@ def main() -> None:
     n_pairs_patho = pairs_p.count()
     t_patho = time.time() - t0
     st = (
-        mh.band_stats(mh.bands(sigs_p), max_bucket_size=256, bucket_cap_hard=100_000)
+        mh.band_stats(sigs_p)
         .agg(F.sum("n_hot").alias("hot"), F.sum("n_dropped").alias("dropped"))
         .collect()[0]
     )
