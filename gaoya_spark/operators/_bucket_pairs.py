@@ -28,19 +28,28 @@ _MEDIUM_LIMIT and _BLOCK_GROUPS are read at call time, and the bucket
 arrays are always persisted. Callers choose only array_bucket_limit and
 drop_cap, from their own module constants.
 
-The id surrogate ("sid") is made here and nowhere else: sid_col builds it
-from an id column, attach_ids puts the ids back on sid pairs. Integral ids
-are their own surrogates (cast to long), so their pairs need no attach
-join; any other id type is hashed with xxhash64 and joined back. A sid
-collision (~n^2/2^65 for hashed ids) merges two ids: they are never
-paired with each other, and each meets the other's candidates, which the
-operators' exact checks still see. Operators drop
-null-id rows from their membership rows, so a null id is in no pair.
+The id surrogate ("sid") is this module's format both ways, made and
+resolved nowhere else. sid_rows makes membership rows: it drops null-id
+rows and puts each row's sid next to the caller's columns, so a null id
+is in no pair. join_rows joins sid pairs (src, dst) or bipartite (qid,
+id) back to the rows they name, bringing the caller's columns along
+(packed signatures, vectors, texts, shingle counts). An integral id is
+its own sid (cast to long), so a pair that needs no columns gets its ids
+back by a cast, with no join; any other id is hashed with xxhash64 and
+joined back on a distinct (sid, id) map, so each id pair comes once.
+
+A hashed-sid collision merges two ids. The expected number of merged
+pairs is ~n^2/2^65: 0 at any test scale, ~27,000 at 10^12 rows. Merged
+ids are never paired with each other, and each meets the other's
+candidates. MinHash scores every joined row pair, so a merge is checked;
+SimHash and substring_pairs (fp128) hand a merged sid's pairs to both
+ids unchecked; ngram_jaccard_pairs counts the merged ids' shingles as
+one set's.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegralType
 
 _BLOCK_SALT = 0x5A17
@@ -55,39 +64,63 @@ _BLOCK_GROUPS = 16
 _MEDIUM_LIMIT = 1024
 
 
-def sid_col(df: DataFrame, id_col: str = "id") -> Column:
-    """The 8-byte surrogate of df's id column: the id cast to long for
-    integral ids (byte, short, int, long), else xxhash64(id). A plain
-    projection, so a size estimate over it stays trusted."""
-    if isinstance(df.schema[id_col].dataType, IntegralType):
-        return F.col(id_col).cast("long")
-    return F.xxhash64(id_col)
+def _integral(df: DataFrame, id_col: str) -> bool:
+    return isinstance(df.schema[id_col].dataType, IntegralType)
 
 
-def attach_ids(pairs: DataFrame, df: DataFrame, id_col: str = "id") -> DataFrame:
-    """(src, dst, *rest) sid pairs -> (src, dst, *rest) pairs of df's ids
-    in (least, greatest) order. Integral ids come back by a cast, with no
-    join: the pair generators emit src < dst in sid order, which is id
-    order. Other ids come back by two joins on the (sid, id) map."""
-    id_type = df.schema[id_col].dataType
-    rest = [c for c in pairs.columns if c not in ("src", "dst")]
-    if isinstance(id_type, IntegralType):
+def sid_rows(df: DataFrame, *cols, id_col: str = "id") -> DataFrame:
+    """(sid, *cols) for each row of df with a non-null id: the id cast to
+    long for integral ids (byte, short, int, long), else xxhash64(id).
+    cols are any columns or expressions of df, e.g. an exploded band
+    key."""
+    sid = F.col(id_col).cast("long") if _integral(df, id_col) else F.xxhash64(id_col)
+    return df.where(F.col(id_col).isNotNull()).select(sid.alias("sid"), *cols)
+
+
+def join_rows(
+    pairs: DataFrame, rows: DataFrame, *cols: str,
+    index: DataFrame | None = None, id_col: str = "id",
+) -> DataFrame:
+    """pairs with their two sid columns (the first two; the rest ride
+    along) joined back to the rows they name: two rows of `rows`, or a
+    probe row of `rows` and a row of `index`. Each sid column comes back
+    as its row's id under the same name, symmetric pairs in (least,
+    greatest) id order. The named cols of the two rows come as <col>_a
+    (the first sid column's row) and <col>_b, for a symmetric score.
+
+    Without cols each id pair comes once: integral ids come back by a
+    cast, with no join (sid order is id order), others by joins on the
+    distinct (sid, id) map. With cols each row pair comes once, so a
+    duplicated id brings every one of its rows, and the operator keeps
+    one row per id pair."""
+    a, b = pairs.columns[:2]
+    rest = pairs.columns[2:]
+    sym = index is None
+    index = rows if sym else index
+    if not cols and _integral(rows, id_col) and _integral(index, id_col):
         return pairs.select(
-            F.col("src").cast(id_type).alias("src"),
-            F.col("dst").cast(id_type).alias("dst"),
+            F.col(a).cast(rows.schema[id_col].dataType).alias(a),
+            F.col(b).cast(index.schema[id_col].dataType).alias(b),
             *rest,
         )
-    m = df.select(sid_col(df, id_col).alias("sid"), F.col(id_col).alias("id"))
-    ma = m.select(F.col("sid").alias("src"), F.col("id").alias("src_id"))
-    mb = m.select(F.col("sid").alias("dst"), F.col("id").alias("dst_id"))
-    return (
-        pairs.join(ma, "src")
-        .join(mb, "dst")
-        .select(
-            F.least("src_id", "dst_id").alias("src"),
-            F.greatest("src_id", "dst_id").alias("dst"),
-            *rest,
+
+    def side(df: DataFrame, p: str, tag: str) -> DataFrame:
+        m = sid_rows(df, F.col(id_col).alias("_id"), *cols, id_col=id_col)
+        if not cols:
+            # repartitioned on the join key first, so the dedup and the
+            # join share one exchange
+            m = m.repartition("sid").distinct()
+        return m.select(
+            F.col("sid").alias(p), F.col("_id").alias("_" + p),
+            *[F.col(c).alias(f"{c}_{tag}") for c in cols],
         )
+
+    out = pairs.join(side(rows, a, "a"), a).join(side(index, b, "b"), b)
+    ia, ib = F.col("_" + a), F.col("_" + b)
+    if sym:
+        ia, ib = F.least(ia, ib), F.greatest(ia, ib)
+    return out.select(
+        ia.alias(a), ib.alias(b), *rest, *[f"{c}_{t}" for c in cols for t in "ab"]
     )
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import LongType
 
 from gaoya_spark.config import SimHashConfig
-from gaoya_spark.operators._bucket_pairs import sid_col, sid_cross_pairs_from_buckets
+from gaoya_spark.operators._bucket_pairs import join_rows, sid_cross_pairs_from_buckets
 from gaoya_spark.operators.simhash_lsh import SimHashLSH
 
 # rp_lsh_topk's bucket limits: a bucket whose probe x index product is
@@ -104,35 +104,29 @@ def rp_lsh_topk(
     near-zero embedding repeated across the corpus hashing every copy to
     one sign pattern) block-joined, buckets whose index side is over
     _BUCKET_CAP excluded. rp_bucket_stats with the same signature
-    parameters counts the excluded buckets — the cap is never silent."""
+    parameters counts the excluded buckets — the cap is never silent.
+    The vectors come back in the joins that restore the ids, one row per
+    index row; a null id is in no candidate."""
     cfg = SimHashConfig(nbits=nbits, num_blocks=num_blocks, max_distance=max_distance)
     lsh = SimHashLSH(cfg)
     udf = _rp_signature_udf(dim, nbits, seed)
 
-    def sigs(frame, name):
+    def sigs(frame):
         return frame.select(
-            F.col(id_col).alias(name),
-            F.col(vec_col).alias(f"v_{name}"),
+            F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
             udf(F.col(vec_col)).alias("sig"),
         )
 
-    index = sigs(df, "id")
-    probe = sigs(probes or df, "qid")
-    im = lsh.sid_tables(index.select("id", "sig"))
-    qm = lsh.sid_tables(probe.select(F.col("qid").alias("id"), "sig"))
+    index, probe = sigs(df), sigs(probes or df)
     cand = sid_cross_pairs_from_buckets(
-        qm.withColumnRenamed("tk", "bk"), im.withColumnRenamed("tk", "bk"),
+        lsh.sid_tables(probe).withColumnRenamed("tk", "bk"),
+        lsh.sid_tables(index).withColumnRenamed("tk", "bk"),
         array_bucket_limit=_ARRAY_LIMIT, drop_cap=_BUCKET_CAP,
     )
-    # the vectors ride the sid -> id joins
-    pmap = probe.select(sid_col(probe, "qid").alias("sq"), "qid", "v_qid")
-    imap = index.select(sid_col(index).alias("si"), "id", "v_id")
     scored = (
-        cand.select(F.col("qid").alias("sq"), F.col("id").alias("si"))
-        .join(pmap, "sq")
-        .join(imap, "si")
+        join_rows(cand.select("qid", "id"), probe, "v", index=index)
         .where(F.col("qid") != F.col("id"))
-        .withColumn("cosine", cosine_col("v_qid", "v_id"))
+        .withColumn("cosine", cosine_col("v_a", "v_b"))
     )
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("id"))
     return (
@@ -295,30 +289,20 @@ def ivf_topk(
 
 def cosine_dedup_pairs(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    threshold: float = 0.95, use_lsh: bool = True, **lsh_kw,
+    threshold: float = 0.95, use_lsh: bool = True,
 ) -> DataFrame:
-    """(src, dst, cosine) embedding near-duplicate pairs. No window sort —
-    a plain threshold filter over candidates (LSH buckets or cross join)."""
+    """(src, dst, cosine) embedding near-duplicate pairs, src < dst. No
+    window sort — a plain threshold filter over candidates: rp_lsh_topk's
+    default signatures and Hamming-ball tables (use_lsh), whose vectors
+    come back in the joins that restore the ids, or a cross join. Each id
+    pair comes once, at the largest cosine of its row pairs."""
     if use_lsh:
-        dim = lsh_kw.pop("dim", 64)
-        nbits = lsh_kw.pop("nbits", 64)
-        seed = lsh_kw.pop("seed", 17)
-        cfg = SimHashConfig(
-            nbits=nbits,
-            num_blocks=lsh_kw.pop("num_blocks", 8),
-            max_distance=lsh_kw.pop("max_distance", 4),
-        )
-        lsh = SimHashLSH(cfg)
-        udf = _rp_signature_udf(dim, nbits, seed)
+        lsh = SimHashLSH(SimHashConfig(nbits=64, num_blocks=8, max_distance=4))
         sigs = df.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-            udf(F.col(vec_col)).alias("sig"),
+            _rp_signature_udf(64, 64, 17)(F.col(vec_col)).alias("sig"),
         )
-        cand = lsh.candidate_pairs(sigs.select("id", "sig"))
-        scored = (
-            cand.join(sigs.select(F.col("id").alias("src"), F.col("v").alias("v_a")), "src")
-            .join(sigs.select(F.col("id").alias("dst"), F.col("v").alias("v_b")), "dst")
-        )
+        scored = join_rows(lsh._sid_dist_pairs(sigs).select("src", "dst"), sigs, "v")
     else:
         s = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
         scored = (
@@ -332,5 +316,6 @@ def cosine_dedup_pairs(
     return (
         scored.withColumn("cosine", F.round(cosine_col("v_a", "v_b"), 6))
         .where(F.col("cosine") >= threshold)
-        .select("src", "dst", "cosine")
+        .groupBy("src", "dst")
+        .agg(F.max("cosine").alias("cosine"))
     )

@@ -15,14 +15,15 @@ Scale notes (100TB / 10^12 rows):
   compression trick as the reference's BandKey (minhash_index.rs:21-27):
   the shuffle carries 8 bytes per band instead of the r-element slice;
   false band collisions are removed by the full-signature verify step.
-- the JVM routes generate candidates on 8-byte id surrogates (sid_col
-  in _bucket_pairs.py: the id itself for integral ids, else
-  xxhash64(id)), so the pair shuffle carries 16-byte rows regardless of
-  id type; original ids come back only on final (verified) pairs. A
-  hashed-sid collision merges two ids (probability ~n^2/2^65: ~27
-  expected at 10^12 rows, 0 at any test scale): they are never paired
-  with each other, and each is tried against the other's candidates,
-  which the full-signature verify still checks. The numpy routes make no
+- the JVM routes generate candidates on 8-byte id surrogates (sids,
+  made and joined back by _bucket_pairs.py: the id itself for integral
+  ids, else xxhash64(id)), so the pair shuffle carries 16-byte rows
+  regardless of id type; ids and signatures come back in one join per
+  side. A hashed-sid collision merges two ids (~n^2/2^65 merged pairs:
+  ~27,000 expected at 10^12 rows, 0 at any test scale): they are never
+  paired with each other, and each is tried against the other's
+  candidates, which the full-signature verify checks row by row, so a
+  merge adds work, never a wrong pair. The numpy routes make no
   surrogate: they index the rows of a broadcast (signature matrix, ids)
   table. Null ids are dropped from the band rows and from the broadcast,
   so they are in no pair and no match.
@@ -49,11 +50,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from gaoya_spark.config import MinHashConfig
 from gaoya_spark.operators._bucket_pairs import (
-    attach_ids,
     is_materialized,
-    sid_col,
+    join_rows,
     sid_cross_pairs_from_buckets,
     sid_pairs_from_buckets,
+    sid_rows,
 )
 from gaoya_spark.functions.signatures import (
     make_minhash_udf,
@@ -372,11 +373,7 @@ class MinHashLSH:
         no Python stage; the Arrow keys of sid_bands, which the routes
         group, put the same rows in one bucket, up to key collisions."""
         bucket = (
-            sig_df.where(F.col("id").isNotNull())
-            .select(
-                sid_col(sig_df).alias("sid"),
-                F.posexplode(self._band_hashes()).alias("band_idx", "bk"),
-            )
+            sid_rows(sig_df, F.posexplode(self._band_hashes()).alias("band_idx", "bk"))
             .groupBy("band_idx", "bk")
             .agg(F.countDistinct("sid").alias("bucket_size"))
         )
@@ -394,13 +391,11 @@ class MinHashLSH:
         """(sid, bk) via the JVM banding (_band_hashes). No route uses it:
         it is the independent reference the Arrow banding (sid_bands) is
         tested against."""
-        return sig_df.where(F.col("id").isNotNull()).select(
-            sid_col(sig_df).alias("sid"), F.explode(self._band_hashes()).alias("bk")
-        )
+        return sid_rows(sig_df, F.explode(self._band_hashes()).alias("bk"))
 
     def sid_bands(self, sig_df: DataFrame) -> DataFrame:
-        """(sid, bk): one 16-byte row per (signature row, band), sid_col's
-        surrogate of the row's id next to the band key. Null-id rows have
+        """(sid, bk): one 16-byte row per (signature row, band), the id
+        surrogate (sid_rows) next to the band key. Null-id rows have
         no band row. The keys are the ones every route of dedup_pairs and
         query computes for itself (_band_keys), in one vectorized Arrow
         pass: the batch's signatures stack into an (n, k) matrix and each
@@ -431,11 +426,7 @@ class MinHashLSH:
                     }
                 )
 
-        return (
-            sig_df.where(F.col("id").isNotNull())
-            .select(sid_col(sig_df).alias("sid"), "sig")
-            .mapInPandas(kernel, "sid long, bk long")
-        )
+        return sid_rows(sig_df, "sig").mapInPandas(kernel, "sid long, bk long")
 
     def sid_candidates(self, sig_df: DataFrame) -> DataFrame:
         """(src, dst, m) candidate pairs in sid space, m = #matching bands
@@ -452,8 +443,7 @@ class MinHashLSH:
     def candidate_pairs(self, sig_df: DataFrame) -> DataFrame:
         """All-corpus candidate pairs (src < dst by id value), deduped across
         bands — public id-space wrapper over sid_candidates."""
-        cand = self.sid_candidates(sig_df)
-        return attach_ids(cand.select("src", "dst"), sig_df)
+        return join_rows(self.sid_candidates(sig_df).select("src", "dst"), sig_df)
 
     # byte budget for the numpy routes' broadcast signature matrix:
     # bytes-aware, not just rows — k varies 128..512 across configs, so a
@@ -725,30 +715,18 @@ class MinHashLSH:
                 return out
         if not is_materialized(sig_df):
             sig_df = sig_df.persist()
-        cand = self.sid_candidates(sig_df)
-        k = self.cfg.num_hashes
+        k, h = self.cfg.num_hashes, self.cfg.hash_size
         # signatures ride the verify joins packed two-per-long: half the
         # broadcast build bytes, half the kernel elements (similarity.py)
-        s = sig_df.select(
-            sid_col(sig_df).alias("sid"), "id",
-            pack_signature_col(F.col("sig"), k, self.cfg.hash_size).alias("psig"),
-        )
-        va = s.select(
-            F.col("sid").alias("src"), F.col("id").alias("src_id"), F.col("psig").alias("pa")
-        )
-        vb = s.select(
-            F.col("sid").alias("dst"), F.col("id").alias("dst_id"), F.col("psig").alias("pb")
-        )
         pairs = (
-            cand.join(va, "src")
-            .join(vb, "dst")
-            .withColumn("sim", minhash_similarity_packed("pa", "pb", k, self.cfg.hash_size))
-            .where(F.col("sim") >= t)
-            .select(
-                F.least("src_id", "dst_id").alias("src"),
-                F.greatest("src_id", "dst_id").alias("dst"),
-                *(["sim"] if keep_sim else []),
+            join_rows(
+                self.sid_candidates(sig_df).select("src", "dst"),
+                sig_df.select("id", pack_signature_col(F.col("sig"), k, h).alias("psig")),
+                "psig",
             )
+            .withColumn("sim", minhash_similarity_packed("psig_a", "psig_b", k, h))
+            .where(F.col("sim") >= t)
+            .select("src", "dst", *(["sim"] if keep_sim else []))
         )
         # one row per id pair: a duplicated id joins every row of its sid
         if keep_sim:
@@ -776,6 +754,9 @@ class MinHashLSH:
         dataflow. Both return the same matches, and the choice is
         recorded as self.last_route: ("broadcast_probe", "fits
         broadcast") or ("jvm", <guard reason>).
+
+        Matches are per index row: an index id held by several rows
+        returns a (qid, id) match once per row that clears the threshold.
 
         sorted_by_similarity=True mirrors Q4's similarity-descending return
         (minhash_index.rs:637 sorts matches best-first) as a
@@ -891,26 +872,15 @@ class MinHashLSH:
             self.sid_bands(index_sigs),
             drop_cap=self._BUCKET_CAP,
         )
-        k = self.cfg.num_hashes
-        qs = probe_sigs.select(
-            sid_col(probe_sigs).alias("qid"),
-            F.col("id").alias("qid_orig"),
-            pack_signature_col(F.col("sig"), k, self.cfg.hash_size).alias("sig_q"),
-        )
-        ix = index_sigs.select(
-            sid_col(index_sigs).alias("id"),
-            F.col("id").alias("id_orig"),
-            pack_signature_col(F.col("sig"), k, self.cfg.hash_size).alias("sig_i"),
-        )
-        return (
-            cand.join(qs, "qid")
-            .join(ix, "id")
-            .withColumn("sim", minhash_similarity_packed("sig_q", "sig_i", k, self.cfg.hash_size))
-            .select(
-                F.col("qid_orig").alias("qid"),
-                F.col("id_orig").alias("id"),
-                "sim",
-            )
+        k, h = self.cfg.num_hashes, self.cfg.hash_size
+        psig = pack_signature_col(F.col("sig"), k, h).alias("psig")
+        return join_rows(
+            cand.select("qid", "id"),
+            probe_sigs.select("id", psig),
+            "psig",
+            index=index_sigs.select("id", psig),
+        ).select(
+            "qid", "id", minhash_similarity_packed("psig_a", "psig_b", k, h).alias("sim")
         )
 
     def query_by_id(
@@ -931,7 +901,8 @@ class MinHashLSH:
 
     def query_one(self, index_sigs: DataFrame, probe_sigs: DataFrame,
                   threshold: float | None = None) -> DataFrame:
-        """Q3: best match per query, strict '>' (minhash_index.rs:542)."""
+        """Q3: best match per query, strict '>' (minhash_index.rs:542). An
+        index id held by several rows is scored by its best row."""
         matches = self.query(index_sigs, probe_sigs, threshold, strict=True, keep_sim=True)
         w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("id"))
         return (
@@ -942,7 +913,9 @@ class MinHashLSH:
 
     def query_top_k(self, index_sigs: DataFrame, probe_sigs: DataFrame, k: int) -> DataFrame:
         """Q5: top-k per query by distance asc — NO threshold filter
-        (minhash_index.rs:643-658 applies no filter)."""
+        (minhash_index.rs:643-658 applies no filter). Matches are per index
+        row, so an index id held by several rows can take several of a
+        query's k places."""
         scored = self._query_scored(index_sigs, probe_sigs)
         w = Window.partitionBy("qid").orderBy(
             (F.lit(1.0) - F.col("sim")).asc(), F.col("id").asc()

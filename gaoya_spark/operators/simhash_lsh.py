@@ -24,11 +24,11 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from gaoya_spark.config import SimHashConfig
 from gaoya_spark.operators._bucket_pairs import (
-    attach_ids,
     is_materialized,
+    join_rows,
     pairs_from_sorted_ids,
-    sid_col,
     sid_cross_pairs_from_buckets,
+    sid_rows,
     triangle_block_pairs,
 )
 from gaoya_spark.functions.signatures import make_simhash_udf, make_simhash_tokens_udf
@@ -139,12 +139,10 @@ class SimHashLSH:
         ])
 
     def _sid_tables(self, sig_df: DataFrame) -> DataFrame:
-        """(sid, sig, tk): the id surrogate (sid_col), the signature
+        """(sid, sig, tk): the id surrogate (sid_rows), the signature
         itself, and one row per table key (_table_keys). Null-id rows have
         no table row."""
-        return sig_df.where(F.col("id").isNotNull()).select(
-            sid_col(sig_df).alias("sid"), "sig", F.explode(self._table_keys()).alias("tk")
-        )
+        return sid_rows(sig_df, "sig", F.explode(self._table_keys()).alias("tk"))
 
     def _sid_dist_pairs(
         self, sig_df: DataFrame, max_distance: int | None = None
@@ -197,8 +195,7 @@ class SimHashLSH:
     def candidate_pairs(self, sig_df: DataFrame) -> DataFrame:
         """(src, dst) ids co-bucketed in >=1 table, deduped — public
         id-space wrapper (no distance filter)."""
-        cand = self._sid_dist_pairs(sig_df)
-        return attach_ids(cand.select("src", "dst"), sig_df)
+        return join_rows(self._sid_dist_pairs(sig_df).select("src", "dst"), sig_df)
 
     def bucket_stats(self, sig_df: DataFrame) -> DataFrame:
         """C5/O9: per-table skew of sig_df's table keys — (table_idx,
@@ -214,8 +211,7 @@ class SimHashLSH:
         sid_cross_pairs_from_buckets count against their caps."""
         size = F.col("n")
         return (
-            sig_df.where(F.col("id").isNotNull())
-            .select(F.posexplode(self._table_keys()).alias("table_idx", "tk"))
+            sid_rows(sig_df, F.posexplode(self._table_keys()).alias("table_idx", "tk"))
             .groupBy("table_idx", "tk")
             .agg(F.count("*").alias("n"))
             .groupBy("table_idx")
@@ -231,19 +227,21 @@ class SimHashLSH:
         """(src, dst, dist) pairs with hamming distance strictly below
         max_distance (Q8 strict '<'). The distance filter runs map-side
         inside pair generation — only true pairs reach a shuffle. Ids come
-        back through attach_ids: a cast for integral ids (no join; at
-        scale the attach joins are candidate-set shuffles), two joins on
-        the (sid, id) map otherwise."""
+        back through join_rows: a cast for integral ids (no join; at scale
+        the joins are candidate-set shuffles), two joins on the distinct
+        (sid, id) map otherwise, so a duplicated id gives each pair once.
+        A hashed-sid collision (see _bucket_pairs.py) hands the merged
+        sid's pairs to both ids with no check."""
         d = self.cfg.max_distance if max_distance is None else max_distance
         if not is_materialized(sig_df):
             sig_df = sig_df.persist()
-        return attach_ids(self._sid_dist_pairs(sig_df, max_distance=d), sig_df)
+        return join_rows(self._sid_dist_pairs(sig_df, max_distance=d), sig_df)
 
     # ----------------------------------------------------------------- query
     def sid_tables(self, sig_df: DataFrame) -> DataFrame:
         """(sid, tk): one 16-byte row per (signature row, enumerated mask),
         the table keys dedup_pairs and query compute for themselves, next
-        to sid_col's surrogate of the row's id (the SimHash counterpart of
+        to the id surrogate (sid_rows) of the row (the SimHash counterpart of
         MinHashLSH.sid_bands). Null-id rows have no table row."""
         return self._sid_tables(sig_df).select("sid", "tk")
 
@@ -259,6 +257,8 @@ class SimHashLSH:
         Candidates come from the bipartite bucket machinery (side-tagged
         groupBy over the union of probe and index table keys, cross pairs
         in sid space), ids/signatures attached only to candidates.
+        Matches are per index row: an index id held by several rows
+        returns a (qid, id) match once per row within the distance.
 
         sorted_by_distance=True mirrors the reference's ascending sort of
         each query's matches (sim_hash_index.rs:203 `matches.sort_by(...)`)
@@ -271,26 +271,10 @@ class SimHashLSH:
             self._sid_tables(probe_sigs).select("sid", F.col("tk").alias("bk")),
             self._sid_tables(index_sigs).select("sid", F.col("tk").alias("bk")),
         )
-        qs = probe_sigs.select(
-            sid_col(probe_sigs).alias("qid"),
-            F.col("id").alias("qid_orig"),
-            F.col("sig").alias("sig_q"),
-        )
-        ix = index_sigs.select(
-            sid_col(index_sigs).alias("id"),
-            F.col("id").alias("id_orig"),
-            F.col("sig").alias("sig_i"),
-        )
         out = (
-            cand.join(qs, "qid")
-            .join(ix, "id")
-            .withColumn("dist", self._dist(F.col("sig_q"), F.col("sig_i")))
+            join_rows(cand.select("qid", "id"), probe_sigs, "sig", index=index_sigs)
+            .withColumn("dist", self._dist(F.col("sig_a"), F.col("sig_b")))
             .where(F.col("dist") < d)
-            .select(
-                F.col("qid_orig").alias("qid"),
-                F.col("id_orig").alias("id"),
-                "dist",
-            )
         )
         cols = (
             ["qid", "id", "dist"]
@@ -304,7 +288,8 @@ class SimHashLSH:
 
     def query_one(self, index_sigs: DataFrame, probe_sigs: DataFrame,
                   max_distance: int | None = None) -> DataFrame:
-        """Best (minimum-distance) match per query, deterministic tie-break."""
+        """Best (minimum-distance) match per query, deterministic tie-break.
+        An index id held by several rows is scored by its nearest row."""
         m = self.query(index_sigs, probe_sigs, max_distance, keep_distance=True)
         w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("id"))
         return m.withColumn("rn", F.row_number().over(w)).where("rn = 1").select(
@@ -321,7 +306,8 @@ class SimHashLSH:
         """k best (lowest-distance) matches per query within the Hamming
         ball, ties broken by id — the distributed form of the reference's
         distance-ascending match list (sim_hash_index.rs:203) truncated to
-        k per probe."""
+        k per probe. Matches are per index row, so an index id held by
+        several rows can take several of a query's k places."""
         m = self.query(index_sigs, probe_sigs, max_distance, keep_distance=True)
         w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("id"))
         return (

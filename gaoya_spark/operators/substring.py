@@ -38,11 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from gaoya_spark.operators._bucket_pairs import (
-    attach_ids,
-    sid_col,
-    sid_pairs_from_buckets,
-)
+from gaoya_spark.operators._bucket_pairs import join_rows, sid_pairs_from_buckets, sid_rows
 
 # largest gram bucket candidate_gram_pairs pairs per bucket instance by
 # array combinatorics; larger ones take _bucket_pairs' collapsed tiers
@@ -143,17 +139,15 @@ def _gram_fp128_sorted(text_col, min_len: int):
 def _gram_members(df: DataFrame, id_col: str, text_col: str, min_len: int) -> DataFrame:
     """(sid, bk) bucket membership rows of the gram join: one row per
     distinct 128-bit L-gram fingerprint of each doc with a non-null id,
-    next to sid_col's surrogate of the id. Texts shorter than min_len
+    next to the id surrogate (sid_rows). Texts shorter than min_len
     have no row."""
-    has_len = df.where(
-        (F.length(text_col) >= min_len) & F.col(id_col).isNotNull()
-    )
     # two-step select so the sorted gram array is a named column: the
     # adjacent-dedup filter references it twice (element and predecessor)
     # and a named projection guarantees single evaluation of the sort
-    gs = has_len.select(
-        sid_col(df, id_col).alias("sid"),
+    gs = sid_rows(
+        df.where(F.length(text_col) >= min_len),
         _gram_fp128_sorted(F.col(text_col), min_len).alias("gs"),
+        id_col=id_col,
     )
     dedup = F.filter(
         F.col("gs"),
@@ -162,20 +156,26 @@ def _gram_members(df: DataFrame, id_col: str, text_col: str, min_len: int) -> Da
     return gs.select("sid", F.explode(dedup).alias("bk"))
 
 
+def _sid_gram_pairs(df: DataFrame, id_col: str, text_col: str, min_len: int) -> DataFrame:
+    """(src, dst) sid pairs sharing >=1 128-bit gram fingerprint. Grams
+    shared by more than _BUCKET_CAP docs (boilerplate at web scale) are
+    dropped, and gram_stats counts them."""
+    return sid_pairs_from_buckets(
+        _gram_members(df, id_col, text_col, min_len),
+        array_bucket_limit=_ARRAY_LIMIT, drop_cap=_BUCKET_CAP,
+    ).select("src", "dst")
+
+
 def candidate_gram_pairs(
     df: DataFrame, id_col: str, text_col: str, min_len: int = 24,
 ) -> DataFrame:
-    """(src, dst) pairs sharing >=1 exact L-gram (by 128-bit gram
-    fingerprint), deduped. Grams shared by more than _BUCKET_CAP docs
-    (boilerplate at web scale) are dropped, and gram_stats counts them.
-    Docs travel as sid_col surrogates and attach_ids puts the ids back: a
-    cast for integral ids, otherwise two joins (at web scale, two
-    shuffles of every candidate row). Null-id docs are in no pair."""
-    cand = sid_pairs_from_buckets(
-        _gram_members(df, id_col, text_col, min_len),
-        array_bucket_limit=_ARRAY_LIMIT, drop_cap=_BUCKET_CAP,
-    )
-    return attach_ids(cand.select("src", "dst"), df, id_col)
+    """(src, dst) id pairs sharing >=1 exact L-gram (by 128-bit gram
+    fingerprint), each once. Docs travel as surrogates and join_rows puts
+    the ids back: a cast for integral ids, otherwise two joins (at web
+    scale, two shuffles of every candidate row). A hashed-surrogate
+    collision (see _bucket_pairs.py) hands the merged surrogate's pairs to
+    both ids with no check. Null-id docs are in no pair."""
+    return join_rows(_sid_gram_pairs(df, id_col, text_col, min_len), df, id_col=id_col)
 
 
 def substring_pairs(
@@ -190,22 +190,27 @@ def substring_pairs(
     TRUE gram strings (arrays_overlap, JVM, no Python). verify="lcs":
     attach the exact shared-substring length as lcs_len via the suffix
     automaton (per-pair Python — the expensive path; only for callers that
-    need the length)."""
-    cand = candidate_gram_pairs(df, id_col, text_col, min_len)
-    if verify == "fp128":
-        return cand
-    texts_a = df.select(F.col(id_col).alias("src"), F.col(text_col).alias("text_a"))
-    texts_b = df.select(F.col(id_col).alias("dst"), F.col(text_col).alias("text_b"))
-    joined = cand.join(texts_a, "src").join(texts_b, "dst")
+    need the length).
 
+    The verify modes bring the texts in the joins that restore the ids,
+    one row per row pair, and return each id pair once: an id held by
+    several rows is kept when any of its rows passes, with the longest
+    lcs_len."""
+    if verify == "fp128":
+        return candidate_gram_pairs(df, id_col, text_col, min_len)
+    if verify not in ("grams", "lcs"):
+        raise ValueError(f"verify must be 'fp128' | 'grams' | 'lcs', got {verify!r}")
+    joined = join_rows(
+        _sid_gram_pairs(df, id_col, text_col, min_len),
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text")),
+        "text",
+    )
     if verify == "grams":
         overlap = F.arrays_overlap(
             _gram_strings(F.col("text_a"), min_len),
             _gram_strings(F.col("text_b"), min_len),
         )
-        return joined.where(overlap).select("src", "dst")
-    if verify != "lcs":
-        raise ValueError(f"verify must be 'fp128' | 'grams' | 'lcs', got {verify!r}")
+        return joined.where(overlap).select("src", "dst").distinct()
 
     id_type = df.schema[id_col].dataType
     schema = StructType([
@@ -227,6 +232,8 @@ def substring_pairs(
     return (
         joined.mapInPandas(run, schema)
         .where(F.col("lcs_len") >= min_len)
+        .groupBy("src", "dst")
+        .agg(F.max("lcs_len").alias("lcs_len"))
     )
 
 

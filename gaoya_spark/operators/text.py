@@ -15,7 +15,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from gaoya_spark.operators._bucket_pairs import sid_col, sid_pairs_from_buckets
+from gaoya_spark.operators._bucket_pairs import join_rows, sid_pairs_from_buckets, sid_rows
 
 # largest shingle bucket ngram_jaccard_pairs pairs per bucket instance by
 # array combinatorics; larger ones take _bucket_pairs' collapsed tiers
@@ -176,12 +176,10 @@ def _ngram_shingle_docs(df: DataFrame, id_col: str, text_col: str, n: int) -> Da
 
 
 def _shingle_members(docs: DataFrame) -> DataFrame:
-    """(bk, sid) bucket membership rows of ngram_jaccard_pairs: one row
-    per distinct shingle of each doc of _ngram_shingle_docs with a
-    non-null id, next to sid_col's surrogate of the id."""
-    return docs.where(F.col("id").isNotNull()).select(
-        F.explode("sh").alias("bk"), sid_col(docs).alias("sid")
-    )
+    """(sid, bk) bucket membership rows of ngram_jaccard_pairs: one row
+    per distinct shingle of each row of _ngram_shingle_docs with a
+    non-null id, next to the id surrogate (sid_rows)."""
+    return sid_rows(docs, F.explode("sh").alias("bk"))
 
 
 def ngram_shingle_stats(
@@ -232,39 +230,28 @@ def ngram_jaccard_pairs(
     _BUCKET_CAP docs are excluded from pairing entirely (recorded by
     ngram_shingle_stats, never silently); below that cap jaccard is exact.
 
-    Docs travel as 8-byte sid_col surrogates (the id itself for integral
-    ids, else xxhash64(id)); original ids re-attach only to surviving
-    pairs, in the join that brings each doc's shingle count. A hashed
-    surrogate collision (~n^2/2^65) would merge two docs' intersection
-    counts — negligible at any real scale and impossible at oracle scale.
-    Null-id docs are in no pair.
+    An id held by several rows is one doc whose shingle set is the union
+    of its rows' shingles: the set m intersects, since a bucket holds a
+    doc once. Its shingle count comes from one groupBy of the docs by id,
+    and the pair comes back once, with jaccard <= 1.
+
+    Docs travel as 8-byte surrogates (the id itself for integral ids,
+    else xxhash64(id)); ids come back only to candidate pairs, in the
+    join that brings each doc's shingle count. A hashed-surrogate
+    collision (see _bucket_pairs.py) counts the two merged docs' shingles
+    as one set's in m. Null-id docs are in no pair.
     """
     docs = _ngram_shingle_docs(df, id_col, text_col, n).persist()
     pairs = sid_pairs_from_buckets(
         _shingle_members(docs), array_bucket_limit=_ARRAY_LIMIT, drop_cap=_BUCKET_CAP
     )
-    m = docs.select(sid_col(docs).alias("sid"), "id", F.size("sh").alias("n_sh"))
-    ma = m.select(
-        F.col("sid").alias("src"), F.col("id").alias("a_id"), F.col("n_sh").alias("na")
+    sizes = docs.groupBy("id").agg(
+        F.size(F.array_distinct(F.flatten(F.collect_list("sh")))).alias("n_sh")
     )
-    mb = m.select(
-        F.col("sid").alias("dst"), F.col("id").alias("b_id"), F.col("n_sh").alias("nb")
-    )
+    m, na, nb = F.col("m"), F.col("n_sh_a"), F.col("n_sh_b")
     return (
-        pairs.join(ma, "src")
-        .join(mb, "dst")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("m").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("m")),
-                6,
-            ),
-        )
+        join_rows(pairs, sizes, "n_sh")
+        .withColumn("jaccard", F.round(m.cast("double") / (na + nb - m), 6))
         .where(F.col("jaccard") >= threshold)
-        .select(
-            F.least("a_id", "b_id").alias("src"),
-            F.greatest("a_id", "b_id").alias("dst"),
-            "jaccard",
-        )
+        .select("src", "dst", "jaccard")
     )

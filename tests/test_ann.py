@@ -160,3 +160,47 @@ def test_rp_lsh_hot_bucket_capped_and_recorded(spark, monkeypatch):
     stats = rp_bucket_stats(df).collect()
     assert len(stats) > 0
     assert all(r["n_dropped"] >= 1 for r in stats)
+
+
+# the ANN operators that join sid candidates (or a cross join) back to
+# their rows, as df (vec_id, embedding) -> (qid, id, ...) or (src, dst, ...)
+ANN_OPERATORS = {
+    "rp_lsh_topk": lambda df: rp_lsh_topk(df, k=2),
+    "cosine_dedup_pairs.lsh": lambda df: cosine_dedup_pairs(df, threshold=0.95),
+    "cosine_dedup_pairs.cross": lambda df: cosine_dedup_pairs(
+        df, threshold=0.95, use_lsh=False
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(ANN_OPERATORS))
+def test_ann_id_types_and_null_ids(spark, op):
+    """Long and string ids give the same rows, and a null id is in no
+    pair or match: the null-id row holds a copy of the planted base
+    vector, so without the drop it would pair with the base and its near
+    copy. The string names order differently from the numeric ids."""
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal(64)
+    near = base + rng.standard_normal(64) * 0.01
+    nums = [30, 4, 200, None]
+    vecs = [base, near, rng.standard_normal(64), base]
+    results = {}
+    for dtype, to_id in (("long", int), ("string", lambda n: f"v{n}")):
+        df = spark.createDataFrame(
+            [(None if n is None else to_id(n), v.tolist()) for n, v in zip(nums, vecs)],
+            f"vec_id {dtype}, embedding array<double>",
+        )
+        out = ANN_OPERATORS[op](df)
+        rows = [tuple(r) for r in out.collect()]
+        assert all(None not in r[:2] for r in rows), rows
+        back = {to_id(n): n for n in nums if n is not None}
+        got = []
+        for r in rows:
+            ns = (back[r[0]], back[r[1]])
+            if out.columns[0] == "src":  # a pair, canonical in its own id type
+                assert r[0] < r[1]
+                ns = tuple(sorted(ns))
+            got.append(ns + r[2:])
+        results[dtype] = sorted(got)
+    assert results["long"] == results["string"]
+    assert (4, 30) in {r[:2] for r in results["long"]}

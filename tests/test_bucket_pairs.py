@@ -1,9 +1,10 @@
 """Property tests for the shared bucket->pairs machinery: the candidate
 set and the matching-bucket count m must equal a naive per-bucket
 enumeration for random memberships, across the array path, the triangle
-hot path, and the drop cap. The id surrogate (sid_col / attach_ids) is
+hot path, and the drop cap. The id surrogate (sid_rows / join_rows) is
 checked through every operator that uses it: null ids are in no pair and
-no match, and int, long and string ids give the same pairs."""
+no match, a duplicated id gives each pair once, and int, long and string
+ids give the same pairs."""
 
 import itertools
 from collections import Counter
@@ -212,6 +213,8 @@ SURROGATE_OPERATORS = {
     "simhash.candidate_pairs": lambda df: _on_sigs(_sh(), "candidate_pairs", df),
     "simhash.query": lambda df: _on_sigs(_sh(), "query", df, keep_distance=True),
     "substring_pairs": lambda df: substring_pairs(df, "id", "text"),
+    "substring_pairs.grams": lambda df: substring_pairs(df, "id", "text", verify="grams"),
+    "substring_pairs.lcs": lambda df: substring_pairs(df, "id", "text", verify="lcs"),
     "ngram_jaccard_pairs": lambda df: ngram_jaccard_pairs(df, "id", "text", threshold=0.5),
     "minhash.dedup_pairs": lambda df: _on_sigs(_mh(), "dedup_pairs", df, keep_sim=False),
     "minhash.dedup_pairs.keep_sim": lambda df: _on_sigs(_mh(), "dedup_pairs", df),
@@ -260,22 +263,28 @@ PAIR_OPERATORS = sorted(op for op in SURROGATE_OPERATORS if not op.endswith(".qu
 )
 @pytest.mark.parametrize("op", PAIR_OPERATORS)
 def test_duplicated_id_no_self_pair(spark, op, dtype, ids):
-    """Rows (x, t), (x, t), (y, t): the two rows of x share every bucket,
-    but a pair operator pairs an id with no copy of itself, so the only
-    pair is (x, y). A bucket collects each surrogate once, and SimHash
-    drops a member pair whose two surrogates are equal."""
-    text = "the same caption text for all three rows of this test"
+    """Rows (x, t), (x, t), (y, t), then (x, t), (x, t'), (y, t) with t'
+    one word off t: the rows of x share buckets, but a pair operator
+    pairs an id with no copy of itself and returns each id pair once, so
+    the only row is (x, y), for every id type. A bucket collects each
+    surrogate once, SimHash drops a member pair whose two surrogates are
+    equal, ids come back through a distinct (sid, id) map, and an
+    operator that joins rows keeps one row per id pair."""
+    text = "a quick brown fox jumps over the lazy dog"
     x, y = ids
-    df = spark.createDataFrame([(x, text), (x, text), (y, text)], f"id {dtype}, text string")
-    out = SURROGATE_OPERATORS[op](df)
-    assert out.columns[0] == "src"
-    assert {r[:2] for r in _id_rows(out)} == {(x, y)}
+    for other in (text, "a quick brown fox jumps over the lazy cat"):
+        df = spark.createDataFrame(
+            [(x, text), (x, other), (y, text)], f"id {dtype}, text string"
+        )
+        out = SURROGATE_OPERATORS[op](df)
+        assert out.columns[0] == "src"
+        assert [r[:2] for r in _id_rows(out)] == [(x, y)], (other, _id_rows(out))
 
 
 @pytest.mark.parametrize("op", sorted(SURROGATE_OPERATORS))
 def test_id_types_give_same_pairs(spark, op):
-    """Integral ids are their own surrogates (cast to long and back, no
-    attach join); string ids are hashed and joined back. Over the same
+    """Integral ids are their own surrogates (cast to long and back);
+    string ids are hashed and joined back. Over the same
     texts, int, long and string ids give the same pairs (with the same
     distances or similarities), each in (least, greatest) order of its own
     id type, and the output ids keep the input id type: int ids come back

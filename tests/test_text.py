@@ -76,6 +76,20 @@ def test_ngram_jaccard_pairs_exact(spark):
     assert abs(pairs[(1, 3)] - 7 / 9) < 1e-6
 
 
+def test_ngram_jaccard_duplicated_id_is_one_doc(spark):
+    """An id held by several rows is one doc whose shingle set is the
+    union of its rows' shingles. Id 1's rows are a text and a suffix of
+    it, so its union is the text's own set: the pair (1, 2) comes once, at
+    jaccard 1.0, for long and string ids alike."""
+    text = "a quick brown fox jumps over the lazy dog"
+    for dtype, one, two in (("long", 1, 2), ("string", "1", "2")):
+        df = spark.createDataFrame(
+            [(one, text), (one, "lazy dog"), (two, text)], f"id {dtype}, text string"
+        )
+        got = [tuple(r) for r in ngram_jaccard_pairs(df, "id", "text", threshold=0.5).collect()]
+        assert got == [(one, two, 1.0)], got
+
+
 def test_ngram_jaccard_pairs_on_documents(spark, docs):
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.9)
     # word-salad docs share vocabulary but not 90% of char 3-grams

@@ -86,7 +86,9 @@ def sections(images):
          lambda: sh.bucket_stats(sh.signatures(images, "image_id", "caption"))),
         ("simhash dedup (EXPECT: one collect_list aggregate carrying "
          "(sid, sig) structs; hamming distance filtered map-side during "
-         "pair explosion, before any pair exchange)",
+         "pair explosion, before any pair exchange; the string ids joined "
+         "back on the distinct (sid, id) map, deduplicated right after "
+         "its one exchange and reused by both sides)",
          lambda: sh.dedup_pairs(sh.signatures(images, "image_id", "caption"))),
         ("substring gram candidates (EXPECT: 128-bit fingerprint struct key; "
          "same single-aggregate bucket plan as minhash)",
